@@ -164,18 +164,18 @@ def main() -> int:
         # re-learns — the word-frequency session index stays warm, the
         # same index-amortized footing as every other headline query.
         if name == "txt_bpe_merges":
-            from task_hive_spark.operators.textops import _BPE_MERGE_CACHE
+            from task_hive_spark.materialize import drop_memo
 
-            _BPE_MERGE_CACHE.clear()
+            drop_memo(spark, ("bpe_merges", sf_dir))
         # the LSH pair frame is a shared session index (dd_split_leakage
         # reads it warm — its bench number is the marginal audit cost,
         # like txt_tokenized_dataset's warm-trainer precedent); timing
         # the builder itself on the cache would be fake, so rebuild it
         # every measured run
         if name == "dd_minhash_lsh_pairs":
-            from task_hive_spark.materialize import drop_index
+            from task_hive_spark.materialize import drop_memo
 
-            drop_index(spark, sf_dir, "lsh_pairs")
+            drop_memo(spark, ("index", sf_dir, "lsh_pairs"))
 
     for _ in range(2):
         for name in names:

@@ -13,9 +13,9 @@ REF = ['dd_simhash', 'rel_q1_pricing_summary', 'sk_hll_distinct']
 
 def pre_run(name):
     if name == 'txt_bpe_merges':
-        from task_hive_spark.operators.textops import _BPE_MERGE_CACHE; _BPE_MERGE_CACHE.clear()
+        from task_hive_spark.materialize import drop_memo; drop_memo(spark, ('bpe_merges', SF))
     if name == 'dd_minhash_lsh_pairs':
-        from task_hive_spark.materialize import drop_index; drop_index(spark, SF, 'lsh_pairs')
+        from task_hive_spark.materialize import drop_memo; drop_memo(spark, ('index', SF, 'lsh_pairs'))
 
 def t(name, n=3):
     best=float('inf')

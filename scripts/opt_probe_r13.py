@@ -44,13 +44,13 @@ def _executed_plan(df) -> str:
 def _pre_run(spark, name: str) -> None:
     """bench.py's per-run cache resets (its _pre_run is main()-local)."""
     if name == "txt_bpe_merges":
-        from task_hive_spark.operators.textops import _BPE_MERGE_CACHE
+        from task_hive_spark.materialize import drop_memo
 
-        _BPE_MERGE_CACHE.clear()
+        drop_memo(spark, ("bpe_merges", SF_DIR))
     if name == "dd_minhash_lsh_pairs":
-        from task_hive_spark.materialize import drop_index
+        from task_hive_spark.materialize import drop_memo
 
-        drop_index(spark, SF_DIR, "lsh_pairs")
+        drop_memo(spark, ("index", SF_DIR, "lsh_pairs"))
 
 
 def probe(spark, name: str, fn, n_runs: int, dump_tag: str | None) -> dict:

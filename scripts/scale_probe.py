@@ -475,10 +475,11 @@ def served_probe() -> int:
 
     from task_hive_spark.session import get_spark
     from task_hive_spark.operators.dedup import (
-        dedup_served_of,
-        materialize_dedup_index,
+        dedup_served_pruned_of,
+        materialize_dedup_index_clustered,
         new_batch_df,
     )
+    from task_hive_spark.plans.catalog import file_column_stats
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
     sf1_dir = _gen_sf1_dir()
@@ -487,11 +488,12 @@ def served_probe() -> int:
     for d in ["/root/testdata/sf0.01", "/root/testdata/sf0.1", sf1_dir]:
         out = tempfile.mkdtemp(prefix="servedidx_", dir=_scratch_root())
         t0 = time.perf_counter()
-        summary = materialize_dedup_index(spark, d, out)
+        summary = materialize_dedup_index_clustered(spark, d, out)
         build_s = round(time.perf_counter() - t0, 3)
+        stats = file_column_stats(os.path.join(out, "buckets"), "bucket")
         batch = new_batch_df(spark, d)
         n_batch = batch.count()
-        served = lambda: dedup_served_of(spark, out, batch)  # noqa: E731
+        served = lambda: dedup_served_pruned_of(spark, out, stats, batch)[0]  # noqa: E731
         served().write.format("noop").mode("overwrite").save()  # warm
         t0 = time.perf_counter()
         n_cands = served().count()
@@ -622,7 +624,6 @@ def served_pruned_probe() -> int:
         LSH_BANDS,
         NEW_OFFSET,
         PROBE_DOC_BASE,
-        dedup_served_of,
         dedup_served_pruned_of,
         materialize_dedup_index_clustered,
         new_batch_df,
@@ -634,6 +635,11 @@ def served_pruned_probe() -> int:
     )
     from task_hive_spark.plans.catalog import file_column_stats
     from task_hive_spark.streaming.lifecycle import _scratch_root
+
+    def unpruned(index_dir, stats, batch):
+        # the same manifest with no footer ranges: every file is kept
+        everything = [{**s, "min": None, "max": None} for s in stats]
+        return dedup_served_pruned_of(spark, index_dir, everything, batch)[0]
 
     sf1_dir = _gen_sf1_dir()
     spark = get_spark("scale_probe_served_pruned")
@@ -656,7 +662,7 @@ def served_pruned_probe() -> int:
         serve_s = round(time.perf_counter() - t0, 3)
         ok = (
             0 < len(kept) <= LSH_BANDS < total
-            and rows == dedup_served_of(spark, out, probe).collect()
+            and rows == unpruned(out, stats, probe).collect()
         )
         bad += 0 if ok else 1
         print(json.dumps({
@@ -681,7 +687,7 @@ def served_pruned_probe() -> int:
         bserve_s = round(time.perf_counter() - t0, 3)
         bok = (
             0 < len(bkept) <= min(n_bprobe * LSH_BANDS, btotal)
-            and brows == sorted(map(tuple, dedup_served_of(spark, out, bprobe).collect()))
+            and brows == sorted(map(tuple, unpruned(out, stats, bprobe).collect()))
         )
         bad += 0 if bok else 1
         print(json.dumps({
@@ -715,7 +721,7 @@ def served_pruned_probe() -> int:
         append_ok = (
             n_delta >= 2
             and len(akept) <= LSH_BANDS + n_delta
-            and aserved.collect() == dedup_served_of(spark, out, probe).collect()
+            and aserved.collect() == unpruned(out, astats, probe).collect()
         )
         mstats = recluster_dedup_index(spark, out, n_files=n_files)
         _m, mkept, mtotal = dedup_served_pruned_of(spark, out, mstats, probe)

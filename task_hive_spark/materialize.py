@@ -1,4 +1,5 @@
-"""Session-scoped materialization of derived indexes.
+"""Session-scoped memos: materialized indexes and every other
+build-once-per-session artifact.
 
 Dedup/similarity pipelines share expensive derived tables: the MinHash
 signature matrix, the SimHash signature column, the LSH band buckets.
@@ -6,8 +7,16 @@ Each is O(|docs|) fixed-width rows — an *index*, not a data expansion —
 so persisting it is scale-safe (a production pipeline materializes
 signatures once, then runs every consumer against them; reference
 behavior recomputes per query only because it streams one query at a
-time). Keyed by (applicationId, sf_dir, name) so a new session or a
-different dataset rebuilds instead of serving stale frames.
+time).
+
+Those indexes are one case of a wider pattern: built once per
+(session, key) and reused by every later consumer — on-disk serve
+indexes, converged stream runs, catalog tables, trained vocabularies.
+All of them live in ONE registry, ``session_memo``, keyed by
+(applicationId, *key). Keys carry the sf_dir, so a new session or a
+different dataset rebuilds instead of serving stale state, and one
+registry gives every entry the same two lifecycle paths: dead-session
+eviction and ``clear_indexes`` teardown.
 
 The gram/shingle EXPLOSION is deliberately never cached: at corpus
 scale it is a multi-PB intermediate and recomputing it per consumer is
@@ -16,23 +25,29 @@ cheaper than spilling it to storage.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+T = TypeVar("T")
 
-# Auxiliary session caches owned by other modules (e.g. textops'
-# _BPE_MERGE_CACHE). Contract: keys are tuples whose FIRST element is
-# the applicationId; values are a DataFrame or a tuple that may contain
-# DataFrames. Registering here gives them the same two lifecycle paths
-# as _CACHE — dead-session eviction and clear_indexes teardown — so no
-# module-level cache can pin executor blocks past its session.
-_AUX_CACHES: list[dict] = []
+# (applicationId, *key) → (value, release). Guarded by _LOCK for
+# insert/evict (the benchmark builds a stream feed on a second thread);
+# builds run outside the lock so they may nest.
+_MEMO: dict[tuple, tuple[object, Callable[[object], None]]] = {}
+_LOCK = threading.Lock()
 
 
-def register_aux_cache(cache: dict) -> None:
-    _AUX_CACHES.append(cache)
+def _checkpoint_plan(df: DataFrame):
+    """The LogicalRDD leaf a localCheckpoint'ed frame analyzes to, else
+    None."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        return plan if plan.getClass().getSimpleName() == "LogicalRDD" else None
+    except Exception:
+        return None  # session stopped / non-JVM frame
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -43,73 +58,121 @@ def _release_checkpoint(df: DataFrame) -> None:
     (bench.py re-times builders this way) would transiently hold two
     copies of its checkpoint storage. Unpersisting a never-persisted RDD
     is a no-op, so probing every dropped frame is safe."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
+    plan = _checkpoint_plan(df)
+    if plan is not None:
+        try:
             plan.rdd().unpersist(False)
-    except Exception:
-        pass  # session stopped / non-JVM frame — nothing to release
+        except Exception:
+            pass  # session stopped — nothing to release
+
+
+def _frames(val: object) -> list[DataFrame]:
+    items = val if isinstance(val, (list, tuple)) else (val,)
+    return [item for item in items if isinstance(item, DataFrame)]
 
 
 def _unpersist_value(val: object) -> None:
-    items = val if isinstance(val, (list, tuple)) else (val,)
-    for item in items:
-        if isinstance(item, DataFrame):
-            try:
-                item.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to unpersist
-            _release_checkpoint(item)
+    """The default release: unpersist every DataFrame in ``val`` (a
+    frame, or a list/tuple holding some) and free its checkpoint
+    blocks. Other values (paths, dicts) hold nothing to release."""
+    for item in _frames(val):
+        try:
+            item.unpersist()
+        except Exception:
+            pass  # session already stopped — nothing to unpersist
+        _release_checkpoint(item)
+
+
+def _release(entry: tuple[object, Callable[[object], None]]) -> None:
+    val, release = entry
+    try:
+        release(val)
+    except Exception:
+        pass  # a stopped session's resources are already gone
+
+
+def warn_local_checkpoint(spark: SparkSession, what: str, value: object = None) -> None:
+    """Warn when a localCheckpoint would run under dynamic allocation.
+    A checkpoint trades lineage for a LogicalRDD leaf; with
+    ``spark.dynamicAllocation.enabled`` executors are reclaimed
+    routinely and the blocks die with them — a failed query (rebuild in
+    a fresh session), not a recompute. local[*] and static-executor
+    deployments are unaffected. This is a Python warning, so the
+    default filters show it once per call site. ``value``: warn only
+    if it holds a checkpointed frame."""
+    if spark.conf.get("spark.dynamicAllocation.enabled", "false") != "true":
+        return
+    if value is not None and all(_checkpoint_plan(f) is None for f in _frames(value)):
+        return
+    import warnings
+
+    warnings.warn(
+        f"{what}: localCheckpoint under dynamic allocation — its blocks "
+        "die with reclaimed executors; prefer persist for this deployment",
+        stacklevel=3,
+    )
 
 
 def _evict_dead_sessions() -> None:
-    """Drop entries whose SparkContext is gone — a stopped session's
-    applicationId would otherwise pin dead DataFrame references for the
-    life of the process (long-lived drivers cycling sessions leak)."""
+    """Release and drop entries whose SparkContext is gone — a stopped
+    session's applicationId would otherwise pin dead DataFrame
+    references for the life of the process (long-lived drivers cycling
+    sessions leak)."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    live = {sc.applicationId} if sc is not None else set()
-    for key in [k for k in _CACHE if k[0] not in live]:
-        del _CACHE[key]
-    for aux in _AUX_CACHES:
-        for key in [k for k in aux if k[0] not in live]:
-            del aux[key]
+    live = sc.applicationId if sc is not None else None
+    with _LOCK:
+        dead = [_MEMO.pop(k) for k in list(_MEMO) if k[0] != live]
+    for entry in dead:
+        _release(entry)
+
+
+def session_memo(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], T],
+    release: Callable[[T], None] | None = None,
+) -> T:
+    """Return the value memoized for (applicationId, *key), calling
+    ``build()`` on first use. ``release(value)`` runs when the entry is
+    dropped (``clear_indexes``, ``drop_memo``, dead-session eviction);
+    the default unpersists any DataFrame the value holds. By convention
+    ``key`` is (kind, sf_dir, ...) so a pass over another directory
+    never hits this one's memo."""
+    _evict_dead_sessions()
+    k = (spark.sparkContext.applicationId, *key)
+    entry = _MEMO.get(k)
+    if entry is None:
+        val = build()
+        warn_local_checkpoint(spark, f"session memo {key!r}", val)
+        new = (val, release or _unpersist_value)
+        with _LOCK:
+            entry = _MEMO.setdefault(k, new)
+        if entry is not new:  # a concurrent build won — keep one copy
+            _release(new)
+    return entry[0]
 
 
 def clear_indexes(spark: SparkSession | None = None) -> None:
-    """Unpersist and forget materialized indexes — all of them, or only
-    the given session's. Call from session teardown (tests do) or when a
-    long-lived session is done with one sf_dir and moving to another.
-    Covers registered auxiliary caches too."""
+    """Release and forget session memos — all of them, or only the
+    given session's. Call from session teardown (tests do) or when a
+    long-lived session is done with one sf_dir and moving to another."""
     app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_CACHE):
-        if app is None or key[0] == app:
-            df = _CACHE.pop(key)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to unpersist
-            _release_checkpoint(df)
-    for aux in _AUX_CACHES:
-        for key in list(aux):
-            if app is None or key[0] == app:
-                _unpersist_value(aux.pop(key))
+    with _LOCK:
+        gone = [_MEMO.pop(k) for k in list(_MEMO) if app is None or k[0] == app]
+    for entry in gone:
+        _release(entry)
 
 
-def drop_index(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Unpersist and forget ONE materialized index so the next consumer
-    rebuilds it — bench.py uses this to keep a benched builder query an
-    honest measurement when its output is also a shared session index
-    (the _BPE_MERGE_CACHE precedent)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _CACHE.pop(key, None)
-    if df is not None:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to unpersist
-        _release_checkpoint(df)
+def drop_memo(spark: SparkSession, key: tuple) -> None:
+    """Release and forget ONE memo so the next consumer rebuilds it —
+    bench.py uses this to keep a benched builder query an honest
+    measurement when its output is also shared session state."""
+    with _LOCK:
+        entry = _MEMO.pop((spark.sparkContext.applicationId, *key), None)
+    if entry is not None:
+        _release(entry)
 
 
 def session_index(
@@ -119,9 +182,10 @@ def session_index(
     build: Callable[[], DataFrame],
     checkpoint: bool = False,
 ) -> DataFrame:
-    """Return the per-session materialized index `name` for `sf_dir`,
-    building and persisting it on first use (MEMORY_AND_DISK, so an
-    oversized index spills instead of evicting or OOMing).
+    """The per-session materialized index `name` for `sf_dir` (memo key
+    ("index", sf_dir, name)), built and persisted on first use
+    (MEMORY_AND_DISK, so an oversized index spills instead of evicting
+    or OOMing).
 
     The cache is materialized EAGERLY (one count() job at build): an
     unmaterialized persist under AQE reports UnknownPartitioning
@@ -133,49 +197,25 @@ def session_index(
     ``checkpoint=True`` materializes via ``localCheckpoint(eager)``
     instead of persist: the frame becomes a LogicalRDD LEAF, so
     consumers reference the stored blocks directly rather than through
-    CacheManager plan-matching. NOTE (r13 ADVICE item 3): this trades
-    lineage recovery for the leaf — on executor loss the index is gone
-    for good (rebuild in a fresh session), and under dynamic
-    allocation (spark.dynamicAllocation.enabled) localCheckpoint is
-    explicitly unsafe because executors are reclaimed routinely; a
-    deployment enabling dynamic allocation must keep such indexes on
-    the persist path (the assertion below makes the trade loud). Use it for indexes consumed under a
-    Union: Spark 4.1's cache lookup silently misses when the SAME
-    cached plan (built here via multi-branch SQL unions + keyed
-    repartition) appears in several Union branches — measured on
-    txt_clean_corpus_stats as 866 parquet re-scans / 14.5 s for a query
-    whose branches each run sub-second against the index (the
-    union-of-aggregates replanned every stage pipeline from the raw
-    parquet). Storage class is the same MEMORY_AND_DISK family; the
-    trade is lineage truncation (no executor-loss recovery for the
-    index — rebuild in a fresh session), the trade dd_duplicate_clusters
-    already documents for its fixpoint."""
-    _evict_dead_sessions()
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _CACHE.get(key)
-    if df is None:
-        if checkpoint:
-            # localCheckpoint under dynamic allocation loses blocks as
-            # executors are reclaimed — permanent failure, not a
-            # recompute. Warn loudly rather than take the trade
-            # silently (r13 ADVICE item 3); local[- and static-executor
-            # deployments are unaffected.
-            if (
-                spark.conf.get("spark.dynamicAllocation.enabled", "false")
-                == "true"
-            ):
-                import warnings
+    CacheManager plan-matching. This trades lineage recovery for the
+    leaf — on executor loss the index is gone for good (rebuild in a
+    fresh session), and under dynamic allocation localCheckpoint is
+    unsafe because executors are reclaimed routinely; a deployment
+    enabling dynamic allocation must keep such indexes on the persist
+    path (``warn_local_checkpoint`` warns when it does not). Use it for
+    indexes consumed under a Union: Spark 4.1's cache lookup silently
+    misses when the SAME cached plan (built here via multi-branch SQL
+    unions + keyed repartition) appears in several Union branches —
+    measured on txt_clean_corpus_stats as 866 parquet re-scans / 14.5 s
+    for a query whose branches each run sub-second against the index
+    (the union-of-aggregates replanned every stage pipeline from the raw
+    parquet). Storage class is the same MEMORY_AND_DISK family."""
 
-                warnings.warn(
-                    f"session_index({name!r}, checkpoint=True) under "
-                    "dynamic allocation: localCheckpoint blocks die with "
-                    "reclaimed executors; prefer persist for this "
-                    "deployment",
-                    stacklevel=2,
-                )
-            df = build().localCheckpoint(eager=True)
-        else:
-            df = build().persist()
-            df.count()
-        _CACHE[key] = df
-    return df
+    def materialize() -> DataFrame:
+        if checkpoint:
+            return build().localCheckpoint(eager=True)
+        df = build().persist()
+        df.count()
+        return df
+
+    return session_memo(spark, ("index", sf_dir, name), materialize)

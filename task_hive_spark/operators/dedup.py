@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.components import min_label_components
 from task_hive_spark.functions.text import fingerprint, portable_hash64, ws_tokens
-from task_hive_spark.materialize import register_aux_cache, session_index
+from task_hive_spark.materialize import session_index, session_memo
 from task_hive_spark.functions.report import report_sort
 from task_hive_spark.sources.fixtures import load_table, register_fixture_views
 
@@ -425,7 +425,7 @@ def _lsh_pairs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≪ corpus by the banding construction, so persisting them is
     index-sized. bench.py drops this index before timing
     dd_minhash_lsh_pairs so the builder's bench number stays an honest
-    measurement (materialize.drop_index).
+    measurement (materialize.drop_memo).
 
     Shape at K=128: the banded self-join carries ONLY (doc_id, bucket)
     — 32 narrow rows per doc — and the K-wide arrays are joined back
@@ -501,166 +501,11 @@ def new_batch_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(NEW_BATCH_SQL)
 
 
-def materialize_dedup_index(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """WRITE the MinHash/LSH dedup index as parquet artifacts — the
-    cross-snapshot production layout (each new crawl batch is deduped
-    against ALL prior dumps without re-reading their text; the
-    materialize_ann_index companion on the dedup side):
-
-      signatures/  (doc_id, sig ARRAY<BIGINT>[K])   [N rows, fixed width]
-      buckets/     (doc_id, bucket) LSH band rows   [N·LSH_BANDS rows]
-      summary.json row counts per artifact
-
-    After this runs, dedup of a new batch touches only the artifacts:
-    the historical TEXT (and the gram explosion under it) is never
-    scanned again. At cluster scale buckets/ is written bucketed by
-    ``bucket`` so a probe prunes to colliding files; the flat layout
-    here keeps the fixture write cheap while the probe plan is already
-    the broadcast-new-side shape that never shuffles history."""
-    import json as _json
-    import os as _os
-
-    sigs = _minhash_sig_array(spark, sf_dir)
-    sigs.write.mode("overwrite").parquet(_os.path.join(out_dir, "signatures"))
-    band_buckets_of(sigs).write.mode("overwrite").parquet(
-        _os.path.join(out_dir, "buckets")
-    )
-    # materializer-reads-back discipline (similarity.materialize_ann_index)
-    summary = {
-        name: spark.read.parquet(_os.path.join(out_dir, name)).count()
-        for name in ("signatures", "buckets")
-    }
-    with open(_os.path.join(out_dir, "summary.json"), "w") as f:
-        _json.dump(summary, f, indent=2)
-    return summary
-
-
-def update_dedup_index(
-    spark: SparkSession, index_dir: str, new_docs: DataFrame
-) -> dict:
-    """APPEND a batch's signatures + band rows to a persisted dedup
-    index — the write half of the cross-snapshot loop: probe today's
-    crawl with dd_dedup_served, keep the novel docs, fold exactly those
-    back in so tomorrow's batch dedups against them too. Pure parquet
-    appends (no rewrite of historical artifacts — the index grows by
-    |batch| fixed-width rows); the caller passes only the docs it KEPT.
-    Returns the refreshed summary (re-counted from disk, the
-    materializer-reads-back discipline)."""
-    import json as _json
-    import os as _os
-
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # one materialization feeds both appends (the dd_dedup_served
-    # probe-signature rationale)
-    sigs = minhash_sigs_of(new_docs.repartition(nshuf, "doc_id")).localCheckpoint()
-    sigs.write.mode("append").parquet(_os.path.join(index_dir, "signatures"))
-    band_buckets_of(sigs).write.mode("append").parquet(
-        _os.path.join(index_dir, "buckets")
-    )
-    summary = {
-        name: spark.read.parquet(_os.path.join(index_dir, name)).count()
-        for name in ("signatures", "buckets")
-    }
-    # the two appends are not transactional: a failure between them
-    # would leave docs with signatures but no band rows — silently
-    # unfindable by every future probe. The read-back counts make the
-    # invariant checkable for free, so enforce it before publishing the
-    # summary (a skewed index must fail loudly, not dedup partially).
-    if summary["buckets"] != summary["signatures"] * LSH_BANDS:
-        raise RuntimeError(
-            f"dedup index skewed after append: {summary['buckets']} bucket "
-            f"rows != {summary['signatures']} signatures x {LSH_BANDS} bands "
-            f"— rebuild the index at {index_dir}"
-        )
-    with open(_os.path.join(index_dir, "summary.json"), "w") as f:
-        _json.dump(summary, f, indent=2)
-    return summary
-
-
-# registered with the shared eviction machinery so dead-session entries
-# are reclaimed like every other per-session cache (values are scratch
-# paths, not DataFrames — _unpersist_value ignores them; the dirs
-# themselves live under _scratch_root and die with the process)
-_DD_IDX_RAN: dict[tuple[str, str], str] = {}
-register_aux_cache(_DD_IDX_RAN)
-
-
-def _dedup_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the on-disk dedup index once per (session, sf_dir)."""
-    import tempfile
-
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DD_IDX_RAN:
-        out = tempfile.mkdtemp(prefix="ddidx_", dir=_scratch_root())
-        materialize_dedup_index(spark, sf_dir, out)
-        _DD_IDX_RAN[key] = out
-    return _DD_IDX_RAN[key]
-
-
-def dd_dedup_served(
-    spark: SparkSession, sf_dir: str, index_dir: str | None = None
-) -> DataFrame:
-    """Cross-snapshot dedup served from the persisted index: signature
-    the NEW batch only, probe its band rows into the STORED buckets,
-    and score candidates against the STORED signatures — the most
-    common production dedup workflow (today's crawl vs all prior
-    dumps). Historical text is never re-read: the only text scanned is
-    the new batch, materialized once behind the probe-signature
-    checkpoint, so the served plan reads index artifacts ONLY (tests
-    pin inputFiles() to the index dir).
-
-    Scale shape: new batch ≪ accumulated history, so the new-side band
-    rows and probe signatures are BROADCAST — history's buckets/
-    streams through a map-side join, never shuffles; the
-    candidate→stored-signature fetch is AQE-planned (broadcast when
-    small, graceful shuffle fallback when not). Output:
-    every (new_doc_id, hist_doc_id) LSH candidate with its MinHash
-    Jaccard estimate; a pipeline drops new docs with any
-    est_jaccard ≥ threshold partner."""
-    idx = index_dir if index_dir is not None else _dedup_index_dir(spark, sf_dir)
-    return dedup_served_of(spark, idx, new_batch_df(spark, sf_dir))
-
-
-def dedup_served_of(
-    spark: SparkSession, index_dir: str, batch: DataFrame
-) -> DataFrame:
-    """The serve core over an arbitrary (doc_id, text) batch — shared by
-    the driver-contract query and the update-loop test so the probe
-    plan cannot drift between them."""
-    import os as _os
-
-    new_sigs = _probe_sigs_literal(spark, batch)
-    hist_buckets = spark.read.parquet(_os.path.join(index_dir, "buckets"))
-    hist_sigs = spark.read.parquet(_os.path.join(index_dir, "signatures"))
-    return _serve_join(new_sigs, hist_buckets, hist_sigs)
-
-
-def _probe_sigs_literal(spark: SparkSession, batch: DataFrame) -> DataFrame:
-    """Signature the probe batch ONCE, materialized via localCheckpoint
-    so both consumers (banding, scoring) reuse the computed rows. The
-    frame is |new batch| fixed-width rows — bounded, and paid INSIDE
-    the call so the measured cost of serving stays honest (this is
-    per-call data, not a session index: each crawl batch is new).
-
-    Measured r13 dead end, kept as a warning: rebuilding the collected
-    rows with spark.createDataFrame is NOT a LocalTableScan in classic
-    PySpark — it parallelizes a Python RDD (Scan ExistingRDD, 32
-    partitions) whose pickle→JVM conversion re-runs as Python worker
-    tasks under EVERY downstream subtree, turning each serve from
-    0.27 s into 0.73 s at sf0.1. localCheckpoint keeps the materialized
-    rows as JVM block-manager blocks instead."""
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return minhash_sigs_of(batch.repartition(nshuf, "doc_id")).localCheckpoint()
-
-
 def _serve_join(
     new_sigs: DataFrame, hist_buckets: DataFrame, hist_sigs: DataFrame
 ) -> DataFrame:
-    """The candidate-generate + score join shared by the flat and the
-    file-pruned serve paths (identical plan shape either way — the
-    pruned path differs only in WHICH bucket files feed the scan)."""
+    """The candidate-generate + score join of the file-pruned serve
+    (the pruned path chooses WHICH bucket files feed the scan)."""
     cands = (
         F.broadcast(
             band_buckets_of(new_sigs).withColumnRenamed("doc_id", "new_doc_id")
@@ -688,9 +533,12 @@ def _serve_join(
     )
 
 
-# --- clustered serving index: file-pruned probes -------------------------
-# The layout tier (plans/catalog.py) applied to the serve path itself:
-# the buckets/ artifact is range-CLUSTERED on the 64-bit band bucket
+# --- served cross-snapshot dedup: the clustered, file-pruned index ------
+# Each new crawl batch is deduped against ALL prior dumps without
+# re-reading their text: the index is the MinHash signatures plus the
+# LSH band buckets, written as parquet. The layout tier
+# (plans/catalog.py) applies to the serve path itself: the buckets/
+# artifact is range-CLUSTERED on the 64-bit band bucket
 # (repartitionByRange + sortWithinPartitions, the cluster_by recipe),
 # so every index file carries a tight disjoint bucket range in its
 # parquet footer. A probe then intersects ITS band buckets with the
@@ -706,11 +554,19 @@ DEDUP_INDEX_FILES = 64  # bucket files per index level at fixture scale
 def materialize_dedup_index_clustered(
     spark: SparkSession, sf_dir: str, out_dir: str, n_files: int = DEDUP_INDEX_FILES
 ) -> dict:
-    """materialize_dedup_index with the buckets artifact range-clustered
-    on ``bucket`` into ``n_files`` tight-footer files + the per-file
-    manifest in the summary. At cluster scale n_files derives from
-    bytes/target like compact_table; the fixture pins it so the pruning
-    ratio is deterministic."""
+    """WRITE the MinHash/LSH dedup index as parquet artifacts:
+
+      signatures/  (doc_id, sig ARRAY<BIGINT>[K])   [N rows, fixed width]
+      buckets/     (doc_id, bucket) LSH band rows   [N·LSH_BANDS rows],
+                   range-clustered on ``bucket`` into ``n_files``
+                   tight-footer files
+      summary.json row counts per artifact, read back from disk
+
+    After this runs, dedup of a new batch touches only the artifacts:
+    the historical TEXT (and the gram explosion under it) is never
+    scanned again. At cluster scale n_files derives from bytes/target
+    like compact_table; the fixture pins it so the pruning ratio is
+    deterministic."""
     import json as _json
     import os as _os
 
@@ -750,7 +606,12 @@ def update_dedup_index_clustered(
     probe — correct immediately, at a growing read tax that
     ``dedup_index_debt`` + ``recluster_dedup_index`` pay down (the
     catalog tier's recluster-debt policy applied to the serving
-    index). Same skew invariant as update_dedup_index."""
+    index). The caller passes only the docs it KEPT, so tomorrow's
+    batch dedups against them too. The two appends are not
+    transactional: a failure between them would leave docs with
+    signatures but no band rows — silently unfindable by every future
+    probe — so the read-back counts are checked before the summary is
+    published."""
     import json as _json
     import os as _os
 
@@ -857,28 +718,22 @@ def serve_dedup_with_policy(
     }
 
 
-_DD_CIDX_RAN: dict[tuple[str, str], tuple[str, list[dict]]] = {}
-register_aux_cache(_DD_CIDX_RAN)
-
-
 def _dedup_index_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:
     """(index_dir, bucket-file manifest) once per (session, sf_dir) —
     the manifest is footer stats, read once at materialize time the way
     a real catalog would cache it."""
+    import os as _os
     import tempfile
 
     from task_hive_spark.plans.catalog import file_column_stats
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DD_CIDX_RAN:
+    def build() -> tuple[str, list[dict]]:
         out = tempfile.mkdtemp(prefix="ddcidx_", dir=_scratch_root())
         materialize_dedup_index_clustered(spark, sf_dir, out)
-        import os as _os
+        return out, file_column_stats(_os.path.join(out, "buckets"), "bucket")
 
-        stats = file_column_stats(_os.path.join(out, "buckets"), "bucket")
-        _DD_CIDX_RAN[key] = (out, stats)
-    return _DD_CIDX_RAN[key]
+    return session_memo(spark, ("dedup_index", sf_dir), build)
 
 
 # Probe batches at or under this row count come back as a VALUES
@@ -941,9 +796,32 @@ def dedup_served_pruned_of(
     hist_sigs = spark.read.parquet(_os.path.join(index_dir, "signatures"))
     if not kept:  # no file overlaps any probe bucket: zero candidates
         hist_buckets = spark.createDataFrame([], "doc_id long, bucket long")
+    elif len(kept) == total:
+        # every file kept (a large batch): read the directory — a list of
+        # more than 32 paths makes Spark list them in a parallel job,
+        # measured 0.5 s of a 1.5 s whole-batch serve at sf0.1 on 4 cores
+        hist_buckets = spark.read.parquet(_os.path.join(index_dir, "buckets"))
     else:
         hist_buckets = spark.read.parquet(*kept)
     return _serve_join(new_sigs, hist_buckets, hist_sigs), kept, total
+
+
+def dd_dedup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-snapshot dedup of the WHOLE new crawl batch served from the
+    clustered index: signature the new batch only, probe its band rows
+    into the STORED buckets (manifest-pruned to the colliding files),
+    and score candidates against the STORED signatures — the most
+    common production dedup workflow (today's crawl vs all prior
+    dumps). Historical text is never re-read. The batch (385 rows at
+    sf0.1) fits SERVE_SIG_LITERAL_MAX, so its signatures enter the plan
+    as a VALUES literal. Output: every (new_doc_id, hist_doc_id) LSH
+    candidate with its MinHash Jaccard estimate; a pipeline drops new
+    docs with any est_jaccard ≥ threshold partner."""
+    idx, stats = _dedup_index_clustered(spark, sf_dir)
+    out, _kept, _total = dedup_served_pruned_of(
+        spark, idx, stats, new_batch_df(spark, sf_dir)
+    )
+    return out
 
 
 # The registered pruned-serve probe: ONE verbatim re-crawl (base doc 13
@@ -955,11 +833,11 @@ PROBE_DOC_BASE = 13
 
 
 def dd_dedup_served_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-snapshot dedup served from the CLUSTERED index with
-    manifest file pruning: identical answer to dd_dedup_served for the
-    same probe (the oracle hash is the no-false-negative proof), but
-    the bucket scan touches only the ≤ LSH_BANDS files whose footer
-    range collides with the probe's band buckets — the serve path reads
+    """Cross-snapshot dedup of ONE re-crawled doc served from the
+    clustered index: identical answer to dd_dedup_served's rows for the
+    same doc (the oracle hash is the no-false-negative proof), and the
+    bucket scan touches only the ≤ LSH_BANDS files whose footer range
+    collides with the probe's band buckets — the serve path reads
     O(probe), not O(index)."""
     idx, stats = _dedup_index_clustered(spark, sf_dir)
     probe = new_batch_df(spark, sf_dir).where(
@@ -1781,8 +1659,8 @@ ORACLES = {k: corpus_cte(v) for k, v in _RAW_ORACLES.items()}
 # agree (the dd_minhash_lsh_pairs argument).
 def _served_oracle_sql(newb_sql: str) -> str:
     """The served-dedup oracle parameterized by the probe batch — shared
-    by the flat and the file-pruned serve queries so the no-false-
-    negative proof of pruning IS the hash gate itself."""
+    by the whole-batch, single-doc and batched serve queries so the
+    no-false-negative proof of pruning IS the hash gate itself."""
     return f"""
 WITH corpus AS ({CORPUS_SQL}),
 {_GRAMS_CTE}, {_SIGS_CTE},

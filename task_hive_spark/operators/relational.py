@@ -75,6 +75,32 @@ _REV_E4_SQL = (
 )
 
 
+# Exact money sums are rounded to whole cents in the INTEGER domain,
+# HALF_UP with ties away from zero (sum_profit can be negative), and
+# only then turned into dollars as cents / 100.0 — identical on both
+# engines. Rounding the double sum / 10^k instead lets a half-cent tie
+# go either way: Spark's round(double) rounds the shortest decimal
+# repr (0.145 → 0.15) where DuckDB rounds the binary double
+# (0.14499999… → 0.14).
+def _dollars(total, unit: int):
+    """Dollars (double) from an exact integer sum ``total`` in
+    1/``unit``-dollar units (unit = 10**4 or 10**6)."""
+    per_cent, half = unit // 100, unit // 200
+    cents = F.when(total >= 0, F.floor((total + half) / per_cent)).otherwise(
+        -F.floor((half - total) / per_cent)
+    )
+    return cents.cast("double") / 100.0
+
+
+def _dollars_sql(total: str, unit: int) -> str:
+    """The DuckDB twin of _dollars over a SQL integer sum expression."""
+    per_cent, half = unit // 100, unit // 200
+    return (
+        f"CAST(CASE WHEN ({total}) >= 0 THEN (({total}) + {half}) // {per_cent}"
+        f" ELSE -(({half} - ({total})) // {per_cent}) END AS DOUBLE) / 100.0"
+    )
+
+
 # --- aggregation ---------------------------------------------------------
 
 
@@ -151,8 +177,8 @@ def rel_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(dec("q").cast("double") / 100.0, 2).alias("sum_qty"),
             F.round(dec("p").cast("double") / 100.0, 2).alias("sum_base_price"),
-            F.round(dec("r").cast("double") / 10000.0, 2).alias("sum_disc_price"),
-            F.round(dec("ch").cast("double") / 1000000.0, 2).alias("sum_charge"),
+            _dollars(dec("r"), 10**4).alias("sum_disc_price"),
+            _dollars(dec("ch"), 10**6).alias("sum_charge"),
             F.round(dec("q").cast("double") / (100.0 * cnt), 6).alias("avg_qty"),
             F.round(dec("p").cast("double") / (100.0 * cnt), 6).alias("avg_price"),
             F.round(dec("d").cast("double") / (100.0 * cnt), 6).alias("avg_disc"),
@@ -175,14 +201,13 @@ def rel_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.round(
+            _dollars(
                 F.sum(
                     (_cents("l_extendedprice") * _cents("l_discount")).cast(
                         "decimal(18,0)"
                     )
-                ).cast("double")
-                / 10000.0,
-                2,
+                ),
+                10**4,
             ).alias("revenue")
         )
     )
@@ -328,7 +353,7 @@ def rel_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.round(F.sum(_rev_e4()).cast("double") / 10000.0, 2).alias("revenue")
+            _dollars(F.sum(_rev_e4()), 10**4).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
@@ -357,7 +382,7 @@ def rel_q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), (o.o_custkey == c.c_custkey) & (c.c_nationkey == dims.s_nationkey))
         .groupBy("n_name")
         .agg(
-            F.round(F.sum(_rev_e4()).cast("double") / 10000.0, 2).alias("revenue")
+            _dollars(F.sum(_rev_e4()), 10**4).alias("revenue")
         )
     )
     return report_sort(out, F.desc("revenue"), "n_name")
@@ -752,7 +777,7 @@ def rel_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(
-            F.round(F.sum(_rev_e4()).cast("double") / 10000.0, 2).alias("revenue")
+            _dollars(F.sum(_rev_e4()), 10**4).alias("revenue")
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
@@ -813,7 +838,7 @@ def rel_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cn), o.o_custkey == cn.c_custkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(F.sum(rev_e4) / 10000.0, 2).alias("revenue"),
+            _dollars(F.sum(rev_e4), 10**4).alias("revenue"),
             F.round(F.first("c_acctbal"), 2).alias("c_acctbal"),
             F.count("*").alias("n_items"),
         )
@@ -843,7 +868,7 @@ def rel_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum(rev_e4),
             6,
         ).alias("promo_revenue_pct"),
-        F.round(F.sum(rev_e4) / 10000.0, 2).alias("total_revenue"),
+        _dollars(F.sum(rev_e4), 10**4).alias("total_revenue"),
         F.count("*").alias("n_items"),
     )
 
@@ -1037,7 +1062,7 @@ def rel_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey",
             "s_name",
-            F.round(F.col("total_e4").cast("double") / 10000.0, 2).alias("total_revenue"),
+            _dollars(F.col("total_e4"), 10**4).alias("total_revenue"),
         )
         .orderBy("s_suppkey")
     )
@@ -1101,7 +1126,7 @@ def rel_q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return j.where(band).agg(
-        F.round(F.sum(_rev_e4()).cast("double") / 10000.0, 2).alias("revenue")
+        _dollars(F.sum(_rev_e4()), 10**4).alias("revenue")
     )
 
 
@@ -1246,7 +1271,7 @@ def rel_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(o, l.l_orderkey == o.o_orderkey)
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         .agg(
-            F.round(F.sum(profit_e4).cast("double") / 10000.0, 2).alias("sum_profit")
+            _dollars(F.sum(profit_e4), 10**4).alias("sum_profit")
         )
         .orderBy("nation", F.desc("o_year"))
     )
@@ -1450,8 +1475,8 @@ ORACLES = {
         SELECT l_returnflag, l_linestatus,
                ROUND(CAST(SUM(qty_c) AS DOUBLE) / 100.0, 2) AS sum_qty,
                ROUND(CAST(SUM(price_c) AS DOUBLE) / 100.0, 2) AS sum_base_price,
-               ROUND(CAST(SUM(rev_e4) AS DOUBLE) / 10000.0, 2) AS sum_disc_price,
-               ROUND(CAST(SUM(charge_e6) AS DOUBLE) / 1000000.0, 2) AS sum_charge,
+               {_dollars_sql("SUM(rev_e4)", 10**4)} AS sum_disc_price,
+               {_dollars_sql("SUM(charge_e6)", 10**6)} AS sum_charge,
                ROUND(CAST(SUM(qty_c) AS DOUBLE) / (100.0 * COUNT(*)), 6) AS avg_qty,
                ROUND(CAST(SUM(price_c) AS DOUBLE) / (100.0 * COUNT(*)), 6) AS avg_price,
                ROUND(CAST(SUM(disc_c) AS DOUBLE) / (100.0 * COUNT(*)), 6) AS avg_disc,
@@ -1469,11 +1494,10 @@ ORACLES = {
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
         """,
-    "rel_q6_forecast_revenue": """
-        SELECT ROUND(CAST(SUM(
-                 CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                 * CAST(ROUND(l_discount * 100) AS BIGINT)
-               ) AS DOUBLE) / 10000.0, 2) AS revenue
+    "rel_q6_forecast_revenue": f"""
+        SELECT {_dollars_sql(
+                 "SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
+                 " * CAST(ROUND(l_discount * 100) AS BIGINT))", 10**4)} AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
@@ -1525,7 +1549,7 @@ ORACLES = {
         """,
     "rel_q3_shipping_priority": f"""
         SELECT l_orderkey, o_orderdate, o_orderpriority,
-               ROUND(CAST(SUM({_REV_E4_SQL}) AS DOUBLE) / 10000.0, 2) AS revenue
+               {_dollars_sql(f"SUM({_REV_E4_SQL})", 10**4)} AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -1536,7 +1560,7 @@ ORACLES = {
         ORDER BY revenue DESC, l_orderkey LIMIT 10
         """,
     "rel_q5_regional_revenue": f"""
-        SELECT n_name, ROUND(CAST(SUM({_REV_E4_SQL}) AS DOUBLE) / 10000.0, 2) AS revenue
+        SELECT n_name, {_dollars_sql(f"SUM({_REV_E4_SQL})", 10**4)} AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -1744,7 +1768,7 @@ ORACLES = {
     "rel_q7_volume": f"""
         SELECT sn.supp_nation, cn.cust_nation,
                CAST(YEAR(l_shipdate) AS INT) AS l_year,
-               ROUND(CAST(SUM({_REV_E4_SQL}) AS DOUBLE) / 10000.0, 2) AS revenue
+               {_dollars_sql(f"SUM({_REV_E4_SQL})", 10**4)} AS revenue
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN (SELECT s_suppkey, n_name AS supp_nation FROM supplier
@@ -1774,11 +1798,9 @@ ORACLES = {
           AND o_orderdate <  TIMESTAMP '1997-01-01'
         GROUP BY 1 ORDER BY 1
         """,
-    "rel_q10_returned_revenue": """
+    "rel_q10_returned_revenue": f"""
         SELECT c_custkey, c_name, n_name,
-               ROUND(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                         * (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
-                     / 10000.0, 2) AS revenue,
+               {_dollars_sql(f"SUM({_REV_E4_SQL})", 10**4)} AS revenue,
                ROUND(ANY_VALUE(c_acctbal), 2) AS c_acctbal,
                COUNT(*) AS n_items
         FROM lineitem l
@@ -1795,7 +1817,7 @@ ORACLES = {
     "rel_q14_promo_effect": f"""
         SELECT ROUND(100.0 * SUM(CASE WHEN p_type = 'PROMO' THEN rev_e4 ELSE 0 END)
                      / SUM(rev_e4), 6) AS promo_revenue_pct,
-               ROUND(SUM(rev_e4) / 10000.0, 2) AS total_revenue,
+               {_dollars_sql("SUM(rev_e4)", 10**4)} AS total_revenue,
                COUNT(*) AS n_items
         FROM (
           SELECT p_type,
@@ -1889,7 +1911,7 @@ ORACLES = {
           GROUP BY l_suppkey
         )
         SELECT s_suppkey, s_name,
-               ROUND(CAST(total_e4 AS DOUBLE) / 10000.0, 2) AS total_revenue
+               {_dollars_sql("total_e4", 10**4)} AS total_revenue
         FROM rev JOIN supplier ON supplier_no = s_suppkey
         WHERE total_e4 = (SELECT MAX(total_e4) FROM rev)
         ORDER BY s_suppkey
@@ -1907,7 +1929,7 @@ ORACLES = {
         ) g WHERE 5 * qty_c * n_lines < sum_qty_c
         """,
     "rel_q19_disjunctive_join": f"""
-        SELECT ROUND(CAST(SUM({_REV_E4_SQL}) AS DOUBLE) / 10000.0, 2) AS revenue
+        SELECT {_dollars_sql(f"SUM({_REV_E4_SQL})", 10**4)} AS revenue
         FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
                AND l_quantity BETWEEN 1 AND 11)
@@ -1962,11 +1984,11 @@ ORACLES = {
     "rel_q9_product_profit": f"""
         WITH {_PS_SQL}
         SELECT n_name AS nation, CAST(YEAR(o_orderdate) AS INT) AS o_year,
-               ROUND(CAST(SUM(
-                 CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-                 - CAST(ROUND(l_quantity * 100) AS BIGINT) * ps_supplycost_c
-               ) AS DOUBLE) / 10000.0, 2) AS sum_profit
+               {_dollars_sql(
+                 "SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
+                 " * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))"
+                 " - CAST(ROUND(l_quantity * 100) AS BIGINT) * ps_supplycost_c)",
+                 10**4)} AS sum_profit
         FROM lineitem
         JOIN partsupp ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
         JOIN part ON l_partkey = p_partkey

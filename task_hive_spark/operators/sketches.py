@@ -33,6 +33,7 @@ from pyspark.sql.window import Window as W
 
 from task_hive_spark.functions.text import portable_hash32, portable_hash64
 from task_hive_spark.functions.report import report_sort
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
 
 # --- KMV (K-minimum-values) distinct estimator --------------------------
@@ -843,8 +844,8 @@ def materialize_sketch_store(spark: SparkSession, sf_dir: str, out_dir: str) -> 
                             register state; any date-range distinct is
                             answered by register MAX over the days
 
-    The serving-tier companion of materialize_dedup_index /
-    materialize_ann_index; returns the read-back summary."""
+    The serving-tier companion of materialize_dedup_index_clustered /
+    materialize_ann_index_clustered; returns the read-back summary."""
     import json as _json
     import os as _os
 
@@ -872,26 +873,18 @@ def materialize_sketch_store(spark: SparkSession, sf_dir: str, out_dir: str) -> 
     return summary
 
 
-_SK_STORE_RAN: dict[tuple[str, str], str] = {}
-# dead-session eviction via the shared registry (values are scratch
-# paths; _unpersist_value ignores non-DataFrames)
-from task_hive_spark.materialize import register_aux_cache  # noqa: E402
-
-register_aux_cache(_SK_STORE_RAN)
-
-
 def _sketch_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the on-disk sketch store once per (session, sf_dir)."""
     import tempfile
 
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SK_STORE_RAN:
+    def build() -> str:
         out = tempfile.mkdtemp(prefix="skstore_", dir=_scratch_root())
         materialize_sketch_store(spark, sf_dir, out)
-        _SK_STORE_RAN[key] = out
-    return _SK_STORE_RAN[key]
+        return out
+
+    return session_memo(spark, ("sketch_store", sf_dir), build)
 
 
 def sk_quantiles_served(

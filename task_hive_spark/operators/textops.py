@@ -23,7 +23,7 @@ from task_hive_spark.functions.text import (
 )
 from task_hive_spark.functions.report import report_sort
 from task_hive_spark.functions.prefix import bucketed_prefix
-from task_hive_spark.materialize import register_aux_cache, session_index
+from task_hive_spark.materialize import session_index, session_memo
 from task_hive_spark.sources.fixtures import load_table
 
 
@@ -805,8 +805,6 @@ FILTER_MIN_TOKENS = 5  # shorter docs carry no training signal
 # driver time, zero jobs — profiled r13-opt session 3), re-paid by
 # every consumer (txt_tokenized_dataset re-builds it per call). Plan
 # objects are immutable, so sharing one is semantics-free.
-_GATE_ROSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-register_aux_cache(_GATE_ROSTER_CACHE)
 
 
 def txt_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -830,10 +828,12 @@ def txt_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _bigram_scores (defined on ntok ≥ 2) is total over the surviving
     rows — the coalesce default can only ever apply to rows an earlier
     gate already dropped."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    got = _GATE_ROSTER_CACHE.get(memo_key)
-    if got is not None:
-        return got
+    return session_memo(
+        spark, ("gate_roster", sf_dir), lambda: _gate_roster(spark, sf_dir)
+    )
+
+
+def _gate_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = doc_stats(spark, sf_dir).select(
         "doc_id",
         "lang",
@@ -868,7 +868,7 @@ def txt_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(low_likelihood, "low_likelihood")
         .otherwise("kept")
     )
-    out = (
+    return (
         j.select(
             "doc_id",
             "lang",
@@ -878,8 +878,6 @@ def txt_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    _GATE_ROSTER_CACHE[memo_key] = out
-    return out
 
 
 # BPE merge learning (Sennrich et al. 2016): the tokenizer-training
@@ -998,20 +996,6 @@ def txt_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# learned merge lists AND the final segmented vocab state, memoized per
-# (session, sf_dir): the trainer and the tokenizer (txt_bpe_tokenize)
-# share one learning run — 8 rows of driver state plus the
-# localCheckpointed vocab frame the loop ends on, so application never
-# re-runs the merge folds (one application path, no drift). Registered
-# with materialize so clear_indexes / dead-session eviction cover the
-# pinned checkpoint blocks like every session_index frame. The
-# localCheckpoint trades executor-loss recovery for O(1) plans (the
-# same trade dd_duplicate_clusters documents); after a lost executor,
-# re-run the query in a fresh session to re-learn.
-_BPE_MERGE_CACHE: dict[tuple[str, str], tuple[list, "DataFrame"]] = {}
-register_aux_cache(_BPE_MERGE_CACHE)
-
-
 def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = token_index(spark, sf_dir)
 
@@ -1059,21 +1043,26 @@ _BPE_DRIVER_HEADROOM = 0.10
 
 
 def _bpe_local_limit(spark: SparkSession) -> int:
-    """BPE_LOCAL_VOCAB_LIMIT capped by the driver-heap budget."""
+    """BPE_LOCAL_VOCAB_LIMIT capped by the driver-heap budget.
+    ``spark.driver.memory`` is a Spark byte string: a bare number is
+    MiB, a unit letter may carry a trailing ``b`` (``16g``, ``16gb``,
+    ``512mb``), and a lone ``b`` means bytes."""
+    import re
+
     try:
         mem = str(spark.conf.get("spark.driver.memory")).strip().lower()
     except Exception:
         mem = "1g"  # Spark's driver-memory default when unset
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    try:
-        if mem and mem[-1] in units:
-            heap = int(float(mem[:-1]) * units[mem[-1]])
-        else:
-            heap = int(mem)
-    except (ValueError, IndexError):
+    units = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "p": 1024**5}
+    m = re.fullmatch(r"(\d+(?:\.\d+)?)\s*([kmgtp]?)(b?)", mem)
+    if m is None:
         heap = 1024**3
+    else:
+        unit = m[2] or ("b" if m[3] else "m")
+        heap = int(float(m[1]) * units[unit])
     budget_rows = int(heap * _BPE_DRIVER_HEADROOM) // _BPE_ROW_EST_BYTES
     return max(1, min(BPE_LOCAL_VOCAB_LIMIT, budget_rows))
+
 
 # schema of the final (w, freq, syms) vocab state BOTH trainer paths
 # return: the distributed path's groupBy-count + transform() shape,
@@ -1146,7 +1135,22 @@ def _learn_merges_local(
 def _learn_merges(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Returns (merge list, final (w, freq, syms) vocab state).
+    """(merge list, final (w, freq, syms) vocab state), memoized per
+    (session, sf_dir): the trainer and the tokenizer (txt_bpe_tokenize)
+    share one learning run — 8 rows of driver state plus the
+    localCheckpointed vocab frame the loop ends on, so application
+    never re-runs the merge folds (one application path, no drift).
+    The memo's release frees the pinned checkpoint blocks. The
+    localCheckpoint trades executor-loss recovery for O(1) plans (the
+    same trade dd_duplicate_clusters documents); after a lost executor,
+    re-run the query in a fresh session to re-learn."""
+    return session_memo(spark, ("bpe_merges", sf_dir), lambda: _train_bpe(spark, sf_dir))
+
+
+def _train_bpe(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """One BPE learning run, unmemoized.
 
     Dispatch: vocabularies at or under BPE_LOCAL_VOCAB_LIMIT words run
     the driver-local trainer (one bounded collect of the warm word-freq
@@ -1154,9 +1158,6 @@ def _learn_merges(
     back — 2 jobs total); larger ones run the distributed per-round
     loop (the 100 TB fallback). Identical results by construction,
     pinned by the parity test and the oracle gate."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
     vocab_tbl = _bpe_vocab(spark, sf_dir)
     # limit+1 bounds the driver transfer even on a huge vocabulary
     # (components.py's probe pattern); ≤ limit rows means `head` IS the
@@ -1180,16 +1181,14 @@ def _learn_merges(
         v = spark.createDataFrame(
             [(w, f, s) for w, f, s in out], _BPE_VOCAB_SCHEMA
         ).localCheckpoint(eager=True)
-        _BPE_MERGE_CACHE[key] = (merges, v)
         return merges, v
-    return _learn_merges_distributed(spark, sf_dir, vocab_tbl)
+    return _learn_merges_distributed(spark, vocab_tbl)
 
 
 def _learn_merges_distributed(
-    spark: SparkSession, sf_dir: str, vocab_tbl: DataFrame
+    spark: SparkSession, vocab_tbl: DataFrame
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """The distributed per-round merge loop — the over-limit path."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     vstats = vocab_tbl.agg(
         F.max(F.length("w")).alias("mw"), F.count("*").alias("n")
     ).collect()[0]
@@ -1291,7 +1290,6 @@ def _learn_merges_distributed(
     # consumer (txt_bpe_tokenize, txt_tokenized_dataset), which must not
     # replay the fold chain per use.
     v = v.localCheckpoint(eager=True)
-    _BPE_MERGE_CACHE[key] = (merges, v)
     return merges, v
 
 

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from task_hive_spark.operators.textops import _bpe_vocab, token_index
-from task_hive_spark.materialize import register_aux_cache
+from task_hive_spark.materialize import session_memo
 
 MAX_PIECE_LEN = 4
 SEED_MULTI = 96  # multi-char pieces seeded into the initial vocabulary
@@ -137,16 +137,13 @@ def _em_counts(words: DataFrame, costs: dict[str, int]) -> DataFrame:
     )
 
 
-# (vocab rows, final word→pieces frame) per (applicationId, sf_dir) —
-# trainer and fertility query share one EM run, like the BPE cache.
-_ULM_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-register_aux_cache(_ULM_CACHE)
-
-
 def _train(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ULM_CACHE:
-        return _ULM_CACHE[key]
+    """(vocab rows, final word→pieces frame) once per (session, sf_dir)
+    — trainer and fertility query share one EM run, like the BPE memo."""
+    return session_memo(spark, ("unigram_lm", sf_dir), lambda: _train_em(spark, sf_dir))
+
+
+def _train_em(spark: SparkSession, sf_dir: str):
     words = _bpe_vocab(spark, sf_dir)
     max_len = words.agg(F.max(F.length("w"))).collect()[0][0]
     assert max_len <= W_MAX, (
@@ -188,8 +185,7 @@ def _train(spark: SparkSession, sf_dir: str):
         (p, len(p), int(v0.get(p, 0)), int(c2.get(p, 0)), int(cost1[p]))
         for p in sorted(v1)
     ]
-    _ULM_CACHE[key] = (vocab_rows, segmented)
-    return _ULM_CACHE[key]
+    return vocab_rows, segmented
 
 
 def txt_unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:

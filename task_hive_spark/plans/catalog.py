@@ -28,11 +28,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
 
 DB = "task_hive"
-
-_TABLES_READY: set[tuple[str, str]] = set()
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -52,20 +51,20 @@ def tasks_table_name(sf_dir: str) -> str:
 def ensure_tasks_table(spark: SparkSession, sf_dir: str) -> str:
     """Create (once per session × sf_dir) the persistent tasks table,
     partitioned by status. Returns the qualified table name."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     name = tasks_table_name(sf_dir)
-    if key in _TABLES_READY:
+
+    def build() -> str:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
+        (
+            tasks_df(spark, sf_dir)
+            .write.mode("overwrite")
+            .partitionBy("status")
+            .format("parquet")
+            .saveAsTable(name)
+        )
         return name
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
-    (
-        tasks_df(spark, sf_dir)
-        .write.mode("overwrite")
-        .partitionBy("status")
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    _TABLES_READY.add(key)
-    return name
+
+    return session_memo(spark, ("tasks_table", sf_dir), build)
 
 
 def pruned_status_scan(spark: SparkSession, sf_dir: str, status: str) -> DataFrame:
@@ -97,8 +96,6 @@ def cat_pending_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_BUCKETS = 16
 
-_BUCKETED_READY: set[tuple[str, str]] = set()
-
 
 def meta_table_name(sf_dir: str) -> str:
     return f"{DB}.task_meta_{_sf_tag(sf_dir)}"
@@ -114,31 +111,31 @@ def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     co-locate equal join keys at WRITE time, so the join below runs with
     zero Exchange — the 100 TB shape for any repeatedly-joined pair
     (shuffle cost paid once at ingest, every downstream join free)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     t_name, m_name = bucketed_tasks_name(sf_dir), meta_table_name(sf_dir)
-    if key in _BUCKETED_READY:
-        return t_name, m_name
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
-    t = tasks_df(spark, sf_dir)
-    (
-        t.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "id")
-        .sortBy("id")
-        .format("parquet")
-        .saveAsTable(t_name)
-    )
-    from pyspark.sql import functions as F
 
-    meta = t.select("id", F.length("payload").cast("long").alias("payload_len"))
-    (
-        meta.write.mode("overwrite")
-        .bucketBy(N_BUCKETS, "id")
-        .sortBy("id")
-        .format("parquet")
-        .saveAsTable(m_name)
-    )
-    _BUCKETED_READY.add(key)
-    return t_name, m_name
+    def build() -> tuple[str, str]:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
+        t = tasks_df(spark, sf_dir)
+        (
+            t.write.mode("overwrite")
+            .bucketBy(N_BUCKETS, "id")
+            .sortBy("id")
+            .format("parquet")
+            .saveAsTable(t_name)
+        )
+        from pyspark.sql import functions as F
+
+        meta = t.select("id", F.length("payload").cast("long").alias("payload_len"))
+        (
+            meta.write.mode("overwrite")
+            .bucketBy(N_BUCKETS, "id")
+            .sortBy("id")
+            .format("parquet")
+            .saveAsTable(m_name)
+        )
+        return t_name, m_name
+
+    return session_memo(spark, ("bucketed_tables", sf_dir), build)
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,36 +313,27 @@ def compact_table(
     return plan
 
 
-_COMPACTED: dict[tuple[str, str], tuple[str, dict]] = {}
-# dead-session eviction via the shared registry (values are
-# (path, plan-dict) tuples; _unpersist_value ignores non-DataFrames)
-from task_hive_spark.materialize import register_aux_cache  # noqa: E402
-
-register_aux_cache(_COMPACTED)
-
-
 def compacted_tasks_dir(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     """Once per (session, sf_dir): write the tasks table FRAGMENTED
     (FRAGMENT_PARTS files per status partition — the streaming-append
     pathology), compact it, and return (compacted_dir, plan)."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _COMPACTED:
-        return _COMPACTED[key]
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    root = tempfile.mkdtemp(prefix="compact_", dir=_scratch_root())
-    frag, comp = os.path.join(root, "fragmented"), os.path.join(root, "compacted")
-    (
-        tasks_df(spark, sf_dir)
-        .repartition(FRAGMENT_PARTS)
-        .write.partitionBy("status")
-        .parquet(frag)
-    )
-    plan = compact_table(spark, frag, comp)
-    _COMPACTED[key] = (comp, plan)
-    return _COMPACTED[key]
+    def build() -> tuple[str, dict]:
+        root = tempfile.mkdtemp(prefix="compact_", dir=_scratch_root())
+        frag, comp = os.path.join(root, "fragmented"), os.path.join(root, "compacted")
+        (
+            tasks_df(spark, sf_dir)
+            .repartition(FRAGMENT_PARTS)
+            .write.partitionBy("status")
+            .parquet(frag)
+        )
+        plan = compact_table(spark, frag, comp)
+        return comp, plan
+
+    return session_memo(spark, ("compacted_tasks", sf_dir), build)
 
 
 def cat_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -515,9 +503,6 @@ def prune_files_any(stats: list[dict], values) -> tuple[list[str], int]:
 CLUSTER_TARGET_BYTES = 64 << 10  # force multi-file clustering at fixture scale
 CLUSTER_COL = "create_time"
 
-_CLUSTERED: dict[tuple[str, str], tuple[str, str, list[dict]]] = {}
-register_aux_cache(_CLUSTERED)
-
 
 def clustered_tasks_dir(
     spark: SparkSession, sf_dir: str
@@ -528,28 +513,27 @@ def clustered_tasks_dir(
     footer manifest. Returns (fragmented_dir, clustered_dir, stats)."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CLUSTERED:
-        return _CLUSTERED[key]
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    root = tempfile.mkdtemp(prefix="cluster_", dir=_scratch_root())
-    frag = os.path.join(root, "fragmented")
-    clus = os.path.join(root, "clustered")
-    # round-robin repartition scatters rows across files — the
-    # streaming-append pathology where every file's [min, max] covers
-    # the whole key range and no manifest can prune anything
-    tasks_df(spark, sf_dir).repartition(FRAGMENT_PARTS).write.parquet(frag)
-    compact_table(
-        spark,
-        frag,
-        clus,
-        target_bytes=CLUSTER_TARGET_BYTES,
-        cluster_by=[CLUSTER_COL],
-    )
-    stats = file_column_stats(clus, CLUSTER_COL)
-    _CLUSTERED[key] = (frag, clus, stats)
-    return _CLUSTERED[key]
+    def build() -> tuple[str, str, list[dict]]:
+        root = tempfile.mkdtemp(prefix="cluster_", dir=_scratch_root())
+        frag = os.path.join(root, "fragmented")
+        clus = os.path.join(root, "clustered")
+        # round-robin repartition scatters rows across files — the
+        # streaming-append pathology where every file's [min, max] covers
+        # the whole key range and no manifest can prune anything
+        tasks_df(spark, sf_dir).repartition(FRAGMENT_PARTS).write.parquet(frag)
+        compact_table(
+            spark,
+            frag,
+            clus,
+            target_bytes=CLUSTER_TARGET_BYTES,
+            cluster_by=[CLUSTER_COL],
+        )
+        stats = file_column_stats(clus, CLUSTER_COL)
+        return frag, clus, stats
+
+    return session_memo(spark, ("clustered_tasks", sf_dir), build)
 
 
 # the demo range window: one year out of the ~7 the fixture spans, so a
@@ -631,38 +615,33 @@ def _delta_split(spark: SparkSession, sf_dir: str):
     return t.where(~is_delta), t.where(is_delta)
 
 
-_DELTA: dict[tuple[str, str], tuple[str, str, list[dict]]] = {}
-register_aux_cache(_DELTA)
-
-
 def delta_table_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str, list[dict]]:
     """Once per (session, sf_dir): clustered BASE + raw 2-file DELTA,
     with the manifest built over BOTH levels. Returns
     (base_dir, delta_dir, stats)."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DELTA:
-        return _DELTA[key]
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    root = tempfile.mkdtemp(prefix="delta_", dir=_scratch_root())
-    base_frag = os.path.join(root, "base_frag")
-    base = os.path.join(root, "base")
-    delta = os.path.join(root, "delta")
-    base_df, delta_df = _delta_split(spark, sf_dir)
-    base_df.repartition(FRAGMENT_PARTS).write.parquet(base_frag)
-    compact_table(
-        spark, base_frag, base,
-        target_bytes=CLUSTER_TARGET_BYTES, cluster_by=[CLUSTER_COL],
-    )
-    # the append path: tiny unclustered files, no rewrite of base
-    delta_df.repartition(2).write.parquet(delta)
-    stats = file_column_stats(base, CLUSTER_COL) + file_column_stats(
-        delta, CLUSTER_COL
-    )
-    _DELTA[key] = (base, delta, stats)
-    return _DELTA[key]
+    def build() -> tuple[str, str, list[dict]]:
+        root = tempfile.mkdtemp(prefix="delta_", dir=_scratch_root())
+        base_frag = os.path.join(root, "base_frag")
+        base = os.path.join(root, "base")
+        delta = os.path.join(root, "delta")
+        base_df, delta_df = _delta_split(spark, sf_dir)
+        base_df.repartition(FRAGMENT_PARTS).write.parquet(base_frag)
+        compact_table(
+            spark, base_frag, base,
+            target_bytes=CLUSTER_TARGET_BYTES, cluster_by=[CLUSTER_COL],
+        )
+        # the append path: tiny unclustered files, no rewrite of base
+        delta_df.repartition(2).write.parquet(delta)
+        stats = file_column_stats(base, CLUSTER_COL) + file_column_stats(
+            delta, CLUSTER_COL
+        )
+        return base, delta, stats
+
+    return session_memo(spark, ("delta_tables", sf_dir), build)
 
 
 def recluster_dirs(
@@ -871,10 +850,6 @@ def _zvalue(day, pri):
     return z
 
 
-_ZORDERED: dict[tuple[str, str], tuple[str, list[dict], list[dict]]] = {}
-register_aux_cache(_ZORDERED)
-
-
 def zordered_tasks_dir(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, list[dict], list[dict]]:
@@ -886,33 +861,32 @@ def zordered_tasks_dir(
 
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ZORDERED:
-        return _ZORDERED[key]
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    root = tempfile.mkdtemp(prefix="zorder_", dir=_scratch_root())
-    out = os.path.join(root, "zordered")
-    t = tasks_df(spark, sf_dir)
-    zval = _zvalue(
-        F.datediff(F.col(CLUSTER_COL), F.lit(Z_EPOCH)), F.col("priority")
-    )
-    n_rows = t.count()
-    # ~same file count the linear demo produces at this sf
-    n_bins = max(4, math.ceil(n_rows / 1250))
-    (
-        t.withColumn("_z", zval)
-        .repartitionByRange(n_bins, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.parquet(out)
-    )
-    _ZORDERED[key] = (
-        out,
-        file_column_stats(out, CLUSTER_COL),
-        file_column_stats(out, "priority"),
-    )
-    return _ZORDERED[key]
+    def build() -> tuple[str, list[dict], list[dict]]:
+        root = tempfile.mkdtemp(prefix="zorder_", dir=_scratch_root())
+        out = os.path.join(root, "zordered")
+        t = tasks_df(spark, sf_dir)
+        zval = _zvalue(
+            F.datediff(F.col(CLUSTER_COL), F.lit(Z_EPOCH)), F.col("priority")
+        )
+        n_rows = t.count()
+        # ~same file count the linear demo produces at this sf
+        n_bins = max(4, math.ceil(n_rows / 1250))
+        (
+            t.withColumn("_z", zval)
+            .repartitionByRange(n_bins, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+            .write.parquet(out)
+        )
+        return (
+            out,
+            file_column_stats(out, CLUSTER_COL),
+            file_column_stats(out, "priority"),
+        )
+
+    return session_memo(spark, ("zordered_tasks", sf_dir), build)
 
 
 ZPRUNE_PRI_LO, ZPRUNE_PRI_HI = 8, 10  # the priority slice of the 2D window

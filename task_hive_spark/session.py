@@ -98,8 +98,9 @@ def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None)
         # out of whole-stage codegen into interpreted aggregation
         # (measured 13.6s vs 2.0s on the signature build at sf0.1)
         .config("spark.sql.codegen.maxFields", "256")
-        # Driver fixtures use parquet TIMESTAMP(NANOS); read as long and
-        # convert to micros in sources.fixtures.load_table.
+        # Parquet TIMESTAMP(NANOS) from other writers reads as long and
+        # is converted to micros in sources.fixtures.load_table (the
+        # fixtures themselves store timestamp[us]).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -720,8 +720,6 @@ def read_arrowipc_dir(spark: SparkSession, in_dir: str) -> DataFrame:
 
 # --- round-trip query (banked; registration when a slot opens) -------------
 
-_AIPC_WRITTEN: dict[tuple[str, str], str] = {}
-
 
 def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow IPC ingest: the shared escaping-probe corpus through the
@@ -733,15 +731,16 @@ def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     meanwhile."""
     import tempfile
 
+    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AIPC_WRITTEN:
+    def build() -> str:
         out = tempfile.mkdtemp(prefix="ingest_aipc_", dir=_scratch_root())
         write_arrowipc_dir(_derived(spark, sf_dir), out)
-        _AIPC_WRITTEN[key] = out
-    return _profile(read_arrowipc_dir(spark, _AIPC_WRITTEN[key]))
+        return out
+
+    return _profile(read_arrowipc_dir(spark, session_memo(spark, ("arrowipc_ingest", sf_dir), build)))
 
 
 def _oracle() -> str:

@@ -440,8 +440,6 @@ def read_avro_dir_split(
 
 # --- registered round-trip query -------------------------------------------
 
-_AVRO_WRITTEN: dict[tuple[str, str], str] = {}
-
 
 def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro OCF ingest: derive the shared escaping-probe corpus
@@ -461,15 +459,16 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Avro is the columnar-world analogue of its xlsx container."""
     import tempfile
 
+    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _AVRO_WRITTEN:
+    def build() -> str:
         out = tempfile.mkdtemp(prefix="ingest_avro_", dir=_scratch_root())
         write_avro_dir(_derived(spark, sf_dir), out, codec="deflate")
-        _AVRO_WRITTEN[key] = out
-    return _profile(read_avro_dir(spark, _AVRO_WRITTEN[key]))
+        return out
+
+    return _profile(read_avro_dir(spark, session_memo(spark, ("avro_ingest", sf_dir), build)))
 
 
 QUERIES = {"src_avro_roundtrip": src_avro_roundtrip}

@@ -29,10 +29,13 @@ FIXTURE_TABLES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Fixture parquet stores TIMESTAMP(NANOS); Spark reads them as long via
-# spark.sql.legacy.parquet.nanosAsLong (set in session.get_spark). These
-# are the ns-long columns to convert back to real timestamps (micros,
-# matching what DuckDB yields when reading the same files).
+# The fixtures at sf0.001–sf0.1 store these columns as timestamp[us],
+# which Spark reads as TIMESTAMP directly. The bigint branch in
+# load_table serves TIMESTAMP(NANOS) files from other writers: Spark
+# reads those as long via spark.sql.legacy.parquet.nanosAsLong (set in
+# session.get_spark), and the ns-long columns are converted back to
+# real timestamps (micros, matching what DuckDB yields when reading the
+# same files).
 _NANOS_TS_COLS = {
     "orders": ["o_orderdate"],
     "lineitem": ["l_shipdate"],

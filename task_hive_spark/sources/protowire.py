@@ -220,8 +220,6 @@ def read_protowire_dir(spark: SparkSession, in_dir: str) -> DataFrame:
 
 # --- round-trip query (r15 registration candidate) -------------------------
 
-_PW_WRITTEN: dict[tuple[str, str], str] = {}
-
 
 def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Protobuf wire-format ingest: the shared escaping-probe corpus
@@ -234,15 +232,16 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest gate covers it meanwhile."""
     import tempfile
 
+    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PW_WRITTEN:
+    def build() -> str:
         out = tempfile.mkdtemp(prefix="ingest_pw_", dir=_scratch_root())
         write_protowire_dir(_derived(spark, sf_dir), out)
-        _PW_WRITTEN[key] = out
-    return _profile(read_protowire_dir(spark, _PW_WRITTEN[key]))
+        return out
+
+    return _profile(read_protowire_dir(spark, session_memo(spark, ("protowire_ingest", sf_dir), build)))
 
 
 def _oracle() -> str:

@@ -27,6 +27,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
 from task_hive_spark.streaming.lifecycle import _scratch_root
 
@@ -45,8 +46,6 @@ _XML_TAIL = 'x & y <angle> "attr" &amp; entity end'
 
 _SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
 
-_WRITTEN: dict[tuple[str, str, str], str] = {}
-
 
 def _derived(spark: SparkSession, sf_dir: str, tail: str = _TAIL) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -64,8 +63,8 @@ def _derived(spark: SparkSession, sf_dir: str, tail: str = _TAIL) -> DataFrame:
 def _ingest_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Write the derived corpus once per (session, sf_dir, format) via
     the distributed sink; returns the directory of part files."""
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    if key not in _WRITTEN:
+
+    def build() -> str:
         out = tempfile.mkdtemp(prefix=f"ingest_{fmt}_", dir=_scratch_root())
         shutil.rmtree(out)  # let Spark create it
         tail = _XML_TAIL if fmt == "xml" else _TAIL
@@ -78,8 +77,9 @@ def _ingest_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
             w.format("xml").option("rootTag", "docs").option("rowTag", "doc").save(out)
         else:
             w.option("header", True).option("quote", '"').option("escape", '"').csv(out)
-        _WRITTEN[key] = out
-    return _WRITTEN[key]
+        return out
+
+    return session_memo(spark, ("text_ingest", sf_dir, fmt), build)
 
 
 def _profile(d: DataFrame) -> DataFrame:

@@ -530,8 +530,6 @@ def read_warc_dir_split(
 
 # --- round-trip query (banked; registration when a slot opens) -------------
 
-_WARC_WRITTEN: dict[tuple[str, str], str] = {}
-
 
 def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-archive ingest: the shared escaping-probe corpus
@@ -544,15 +542,16 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pytest gate covers it meanwhile."""
     import tempfile
 
+    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WARC_WRITTEN:
+    def build() -> str:
         out = tempfile.mkdtemp(prefix="ingest_warc_", dir=_scratch_root())
         write_warc_dir(_derived(spark, sf_dir), out)
-        _WARC_WRITTEN[key] = out
-    return _profile(read_warc_dir(spark, _WARC_WRITTEN[key]))
+        return out
+
+    return _profile(read_warc_dir(spark, session_memo(spark, ("warc_ingest", sf_dir), build)))
 
 
 def _oracle() -> str:

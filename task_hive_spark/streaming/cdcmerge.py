@@ -39,6 +39,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.operators.queries import (
     CHANGES_SQL,
     ORACLES as _Q_ORACLES,
@@ -53,8 +54,6 @@ _CHANGE_SCHEMA = (
 )
 N_CHANGE_CHUNKS = 4
 REPLAY_MOD = 3  # a deterministic ~third of change rows is delivered twice
-
-_RAN: dict[tuple[str, str], str] = {}
 
 
 def _write_change_chunks(
@@ -170,11 +169,11 @@ def run_once(
 
 
 def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RAN:
-        work = tempfile.mkdtemp(prefix="cdcmerge_", dir=_scratch_root())
-        _RAN[key] = run_once(spark, sf_dir, work)
-    return _RAN[key]
+    return session_memo(
+        spark,
+        ("cdcmerge_run", sf_dir),
+        lambda: run_once(spark, sf_dir, tempfile.mkdtemp(prefix="cdcmerge_", dir=_scratch_root())),
+    )
 
 
 def st_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

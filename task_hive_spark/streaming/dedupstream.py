@@ -27,6 +27,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import session_memo, warn_local_checkpoint
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
 from task_hive_spark.streaming.lifecycle import N_CHUNKS, _scratch_root, with_chunk
 
@@ -34,10 +35,6 @@ _EVENT_SCHEMA = (
     "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
 )
 REPLAY_MOD = 3  # events with event_s % 3 == 0 are delivered twice
-
-# keyed by applicationId (not id(spark): CPython reuses object ids, so a
-# dead session's id could serve a stale output path to a new session)
-_RAN: dict[tuple[str, str, str], str] = {}
 
 
 def _write_replay_chunks(
@@ -53,6 +50,7 @@ def _write_replay_chunks(
     # materialize.session_index rule) — a miss re-derives the events SQL
     # per branch. with_chunk's driver-folded aggregations materialize it
     # eagerly either way.
+    warn_local_checkpoint(spark, "dedupstream replay feed")
     ev = events_df(spark, sf_dir).localCheckpoint(eager=True)
     ranked = with_chunk(ev, n_chunks)  # partitioned chunk assignment — see lifecycle
     replays = ranked.where(F.col("event_s") % REPLAY_MOD == 0).withColumn(
@@ -174,11 +172,11 @@ def run_once_bounded(spark: SparkSession, sf_dir: str, work: str, n_chunks: int)
 def _ensure_run(
     spark: SparkSession, sf_dir: str, runner=run_once, tag: str = ""
 ) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _RAN:
+    def build() -> str:
         work = tempfile.mkdtemp(prefix=f"dedupstream{tag}_", dir=_scratch_root())
-        _RAN[key] = runner(spark, sf_dir, work, N_CHUNKS)
-    return _RAN[key]
+        return runner(spark, sf_dir, work, N_CHUNKS)
+
+    return session_memo(spark, ("dedupstream_run", sf_dir, tag), build)
 
 
 def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,6 +62,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.prefix import bucketed_prefix
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
 
 MAX_RETRIES = 3  # common/constants.go:20
@@ -293,20 +294,17 @@ def _dispatch_assignments(ev: DataFrame) -> DataFrame:
 
 # --- runner ---------------------------------------------------------------
 
-_CONVERGED: dict[tuple[str, str], dict[str, str]] = {}
-_FEEDS: dict[tuple[str, str, int], str] = {}
-
 
 def shared_feed(spark: SparkSession, sf_dir: str, n_chunks: int = N_CHUNKS) -> str:
     """One chunked feed per (session, sf_dir, n_chunks) — the feed is a
     read-only input, so every streaming consumer (lifecycle, stateful)
     can share it instead of re-materializing the event log."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_chunks)
-    if key not in _FEEDS:
+    def build() -> str:
         feed = os.path.join(tempfile.mkdtemp(prefix="feed_", dir=_scratch_root()), "feed")
         _write_chunks(spark, sf_dir, feed, n_chunks)
-        _FEEDS[key] = feed
-    return _FEEDS[key]
+        return feed
+
+    return session_memo(spark, ("feed", sf_dir, n_chunks), build)
 
 
 def with_chunk(df: DataFrame, n_chunks: int) -> DataFrame:
@@ -507,13 +505,11 @@ def run_lifecycle(
 
 def converged_state(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Run (or reuse) the lifecycle pipeline for this session × sf_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CONVERGED:
+    def build() -> dict[str, str]:
         work_dir = tempfile.mkdtemp(prefix="lifecycle_", dir=_scratch_root())
-        _CONVERGED[key] = run_lifecycle(
-            spark, sf_dir, work_dir, feed_dir=shared_feed(spark, sf_dir)
-        )
-    return _CONVERGED[key]
+        return run_lifecycle(spark, sf_dir, work_dir, feed_dir=shared_feed(spark, sf_dir))
+
+    return session_memo(spark, ("lifecycle_run", sf_dir), build)
 
 
 _SCRATCH_SWEPT = False

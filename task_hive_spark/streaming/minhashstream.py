@@ -43,6 +43,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import session_memo, warn_local_checkpoint
 from task_hive_spark.operators.dedup import (
     CORPUS_SQL,
     ORACLES as _DD_ORACLES,
@@ -55,8 +56,6 @@ from task_hive_spark.streaming.lifecycle import _scratch_root
 
 _DOC_SCHEMA = "doc_id BIGINT, text STRING"
 N_DOC_CHUNKS = 4
-
-_RAN: dict[tuple[str, str], str] = {}
 
 
 def _write_doc_chunks(
@@ -110,6 +109,7 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
     sig_idx = os.path.join(work, "index_sigs")
     out = os.path.join(work, "pairs")
     n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    warn_local_checkpoint(spark, "minhashstream batch signatures")
 
     def fold(batch_df: DataFrame, bid: int) -> None:
         # All three sinks write OVERWRITE into a batch-scoped subdir
@@ -217,11 +217,11 @@ def clustered_index_from_stream(
 
 
 def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RAN:
-        work = tempfile.mkdtemp(prefix="mhstream_", dir=_scratch_root())
-        _RAN[key] = run_once(spark, sf_dir, work)
-    return _RAN[key]
+    return session_memo(
+        spark,
+        ("minhashstream_run", sf_dir),
+        lambda: run_once(spark, sf_dir, tempfile.mkdtemp(prefix="mhstream_", dir=_scratch_root())),
+    )
 
 
 def st_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

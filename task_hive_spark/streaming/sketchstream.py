@@ -41,7 +41,7 @@ from task_hive_spark.operators.sketches import (
     hll_estimate,
     hll_registers,
 )
-from task_hive_spark.materialize import register_aux_cache
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
 from task_hive_spark.streaming.lifecycle import _scratch_root
 
@@ -49,9 +49,6 @@ _EVENT_SCHEMA = "event_id BIGINT, user_id BIGINT, event_type STRING, day DATE"
 _DOC_SCHEMA = "doc_id BIGINT, text STRING"
 N_EVENT_CHUNKS = 4
 N_DOC_CHUNKS = 4
-
-_RAN: dict[tuple[str, str], str] = {}
-_CMS_RAN: dict[tuple[str, str], str] = {}
 
 
 def _write_chunks(
@@ -126,14 +123,14 @@ def _event_feed(spark: SparkSession, sf_dir: str, work: str, n_chunks: int) -> s
     return feed
 
 
-def _memoized_run(cache: dict, spark: SparkSession, sf_dir: str, prefix: str, runner):
-    """One converged run per (session, sf_dir) — shared by all three
+def _memoized_run(spark: SparkSession, sf_dir: str, prefix: str, runner):
+    """One converged run per (session, sf_dir) — shared by all the
     incremental sketches (the scaffold was triplicating)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in cache:
-        work = tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
-        cache[key] = runner(spark, sf_dir, work)
-    return cache[key]
+    return session_memo(
+        spark,
+        ("sketchstream_run", sf_dir, prefix),
+        lambda: runner(spark, sf_dir, tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())),
+    )
 
 
 # --- incremental HLL over the event stream -------------------------------
@@ -183,7 +180,7 @@ def run_once(
 
 
 def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(_RAN, spark, sf_dir, "hllstream_", run_once)
+    return _memoized_run(spark, sf_dir, "hllstream_", run_once)
 
 
 def st_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,8 +200,6 @@ def st_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental KMV over the event stream -------------------------------
-
-_KMV_RAN: dict[tuple[str, str], str] = {}
 
 
 def run_kmv_stream(spark: SparkSession, work: str, feed: str) -> str:
@@ -239,7 +234,7 @@ def run_kmv_once(
 
 
 def _ensure_kmv_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(_KMV_RAN, spark, sf_dir, "kmvstream_", run_kmv_once)
+    return _memoized_run(spark, sf_dir, "kmvstream_", run_kmv_once)
 
 
 def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,7 +309,7 @@ def run_cms_once(
 
 
 def _ensure_cms_run(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return _memoized_run(_CMS_RAN, spark, sf_dir, "cmsstream_", run_cms_once)
+    return _memoized_run(spark, sf_dir, "cmsstream_", run_cms_once)
 
 
 def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,7 +327,6 @@ def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental quantile histogram over the lineitem stream -------------
 
-_QSK_RAN: dict[tuple[str, str], str] = {}
 _LINEITEM_SCHEMA = (
     "l_orderkey BIGINT, l_returnflag STRING, l_extendedprice DOUBLE, m DATE"
 )
@@ -390,7 +384,7 @@ def run_qsk_once(
 
 
 def _ensure_qsk_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(_QSK_RAN, spark, sf_dir, "qskstream_", run_qsk_once)
+    return _memoized_run(spark, sf_dir, "qskstream_", run_qsk_once)
 
 
 def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +409,7 @@ def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- the sketch store assembled from STREAM artifacts ---------------------
 # The build-once/serve-forever closure the dedup index got in r10
-# (minhashstream → dedup_served_of), now for sketches: the converged
+# (minhashstream → the clustered serve index), now for sketches: the converged
 # incremental states are written into the batch store's exact layout
 # (quantiles_monthly / hll_daily_registers) and the SAME serving
 # queries (sketches.sk_quantiles_served / sk_hll_daily_served) answer
@@ -425,28 +419,25 @@ def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the retention tier can be fed by ingest-time folds and never needs a
 # batch rebuild pass over the facts.
 
-_STREAM_STORE_RAN: dict[tuple[str, str], str] = {}
-register_aux_cache(_STREAM_STORE_RAN)
-
 
 def stream_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Assemble (once per session × sf_dir) a sketch store from the
     converged STREAM states — no fact table is read here: both inputs
     are the incremental runs' checkpointed state files."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _STREAM_STORE_RAN:
-        return _STREAM_STORE_RAN[key]
-    store = tempfile.mkdtemp(prefix="skstream_store_", dir=_scratch_root())
-    hll_root = _ensure_run(spark, sf_dir)
-    latest_state(spark, hll_root).write.mode("overwrite").parquet(
-        os.path.join(store, "hll_daily_registers")
-    )
-    qsk_root = _ensure_qsk_run(spark, sf_dir)
-    spark.read.parquet(_latest_batch_dir(qsk_root)).select(
-        "g", "m", "lb", "cnt"
-    ).write.mode("overwrite").parquet(os.path.join(store, "quantiles_monthly"))
-    _STREAM_STORE_RAN[key] = store
-    return store
+
+    def build() -> str:
+        store = tempfile.mkdtemp(prefix="skstream_store_", dir=_scratch_root())
+        hll_root = _ensure_run(spark, sf_dir)
+        latest_state(spark, hll_root).write.mode("overwrite").parquet(
+            os.path.join(store, "hll_daily_registers")
+        )
+        qsk_root = _ensure_qsk_run(spark, sf_dir)
+        spark.read.parquet(_latest_batch_dir(qsk_root)).select(
+            "g", "m", "lb", "cnt"
+        ).write.mode("overwrite").parquet(os.path.join(store, "quantiles_monthly"))
+        return store
+
+    return session_memo(spark, ("stream_sketch_store", sf_dir), build)
 
 
 def sk_quantiles_stream_served(spark: SparkSession, sf_dir: str) -> DataFrame:

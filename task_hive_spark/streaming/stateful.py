@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.streaming.events import oracle_events_cte
 from task_hive_spark.streaming.lifecycle import (
     N_CHUNKS,
@@ -60,8 +61,6 @@ WINDOW_S = 60
 SESSION_GAP_S = 120  # worker-activity session: new session after 120 s idle
 DISPATCH_BOUND_S = 60  # assign must land within 60 s of its submit
 SLA_BOUND_S = 3  # fast-dispatch SLA: assign within 3 s of submit
-
-_RAN: dict[tuple[str, str], dict[str, str]] = {}
 
 
 def _update_counter(
@@ -86,12 +85,12 @@ def _update_counter(
 def _run_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Build the chunked feed once per (session, sf_dir) and run both
     streaming jobs to completion (Trigger.AvailableNow)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RAN:
-        return _RAN[key]
-    work = tempfile.mkdtemp(prefix="stateful_", dir=_scratch_root())
-    _RAN[key] = run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
-    return _RAN[key]
+
+    def build() -> dict[str, str]:
+        work = tempfile.mkdtemp(prefix="stateful_", dir=_scratch_root())
+        return run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
+
+    return session_memo(spark, ("stateful_run", sf_dir), build)
 
 
 def run_once(

@@ -67,6 +67,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from task_hive_spark.materialize import session_memo
 from task_hive_spark.streaming.events import oracle_events_cte
 from task_hive_spark.streaming.lifecycle import (
     MAX_RETRIES,
@@ -82,8 +83,6 @@ _EVENT_SCHEMA = (
 # state: retry counter + the armed-but-unfired (ready_s, retry_n) entries
 _STATE_SCHEMA = "rc INT, armed_ready ARRAY<BIGINT>, armed_rc ARRAY<INT>"
 _OUT_SCHEMA = "task_id STRING, ready_s BIGINT, retry_n INT"
-
-_RAN: dict[tuple[str, str], str] = {}
 
 
 def _timer_fold(
@@ -181,11 +180,11 @@ def run_once(
 
 
 def _run(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RAN:
+    def build() -> str:
         work = tempfile.mkdtemp(prefix="timers_", dir=_scratch_root())
-        _RAN[key] = run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
-    return _RAN[key]
+        return run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
+
+    return session_memo(spark, ("timers_run", sf_dir), build)
 
 
 def st_timer_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:

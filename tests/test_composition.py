@@ -71,31 +71,138 @@ def test_sequence_pack_conserves_tokens(spark):
 
 
 def test_aux_cache_lifecycle(spark):
-    """Module-level session caches registered with materialize share the
-    session_index lifecycle: dead-session keys are evicted and
-    clear_indexes drops (and unpersists) a session's entries — so the
-    BPE trainer's checkpointed vocab can't outlive its session."""
+    """Every session memo shares one lifecycle: dead-session keys are
+    evicted (and released), live ones survive the sweep, and
+    clear_indexes drops and unpersists a session's entries — so e.g.
+    the BPE trainer's checkpointed vocab can't outlive its session."""
     from task_hive_spark import materialize as m
-    from task_hive_spark.operators.textops import _BPE_MERGE_CACHE
 
-    assert _BPE_MERGE_CACHE in m._AUX_CACHES
+    live_app = spark.sparkContext.applicationId
+    released = []
+    dead = spark.range(2).persist()
+    m._MEMO[("app-dead-123", "test_memo", "sfX")] = (([1, 2], dead), m._unpersist_value)
+    live = m.session_memo(
+        spark, ("test_memo", "sfX"), lambda: ([3], spark.range(3).persist())
+    )
+    path = m.session_memo(
+        spark, ("test_memo_path", "sfX"), lambda: "/scratch/x", release=released.append
+    )
+    assert ("app-dead-123", "test_memo", "sfX") not in m._MEMO, "dead session not evicted"
+    assert not dead.is_cached, "evicted DataFrame left persisted"
+    assert m.session_memo(spark, ("test_memo", "sfX"), lambda: None) is live
+    assert live[1].is_cached
 
-    fake: dict = {}
-    m.register_aux_cache(fake)
+    m.drop_memo(spark, ("test_memo_path", "sfX"))
+    assert released == [path]
+    m.clear_indexes(spark)
+    assert not any(k[0] == live_app for k in m._MEMO), "clear_indexes left live entries"
+    assert not live[1].is_cached
+
+
+def test_session_memo_keeps_one_value_per_key_under_threads(spark):
+    """Threads building and dropping memos at once (the benchmark builds
+    a stream feed on a second thread) must leave one value per key and
+    never lose an entry: more threads than cores, a tiny switch
+    interval, every thread's view of a key checked for identity."""
+    import sys
+    import threading
+    import types
+
+    from task_hive_spark import materialize as m
+
+    app = spark.sparkContext.applicationId
+    stub = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(applicationId=app),
+        conf=types.SimpleNamespace(get=lambda _k, default=None: default),
+    )
+    seen: dict = {}
+    errors: list = []
+
+    def worker(t: int) -> None:
+        try:
+            for i in range(300):
+                key = ("stress", i % 8)
+                val = m.session_memo(stub, key, object)
+                seen.setdefault((t, key), set()).add(id(val))
+                if t == 0 and i % 50 == 49:
+                    m.drop_memo(stub, ("stress_dropped", i))
+                m.session_memo(stub, ("stress_dropped", i), object)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
     try:
-        live_app = spark.sparkContext.applicationId
-        probe = spark.range(1)
-        fake[("app-dead-123", "sfX")] = ([1, 2], probe)
-        fake[(live_app, "sfX")] = ([3], probe)
-
-        m._evict_dead_sessions()
-        assert ("app-dead-123", "sfX") not in fake, "dead session not evicted"
-        assert (live_app, "sfX") in fake, "live session wrongly evicted"
-
-        m.clear_indexes(spark)
-        assert fake == {}, "clear_indexes left live-session aux entries"
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+        assert not any(th.is_alive() for th in threads)
     finally:
-        m._AUX_CACHES.remove(fake)
+        sys.setswitchinterval(old)
+    try:
+        assert not errors, errors
+        held = {k[1:]: v[0] for k, v in m._MEMO.items() if k[0] == app and k[1] == "stress"}
+        assert len(held) == 8
+        for (_t, key), ids in seen.items():
+            assert ids == {id(held[key])}, key  # one copy per key, never replaced
+    finally:
+        for k in [k for k in m._MEMO if k[0] == app and k[1].startswith("stress")]:
+            m.drop_memo(stub, k[1:])
+
+
+def test_session_memo_entries_die_with_their_session(tmp_path):
+    """Stop a session that holds every memo kind — a persisted index, a
+    localCheckpoint frame and a scratch path — and the next registry
+    sweep must evict every entry, unpersist every DataFrame, free the
+    checkpoint blocks and run the path's release. Runs in its own
+    driver process: stopping the suite's shared session would end every
+    later test."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    body = f"""
+import json
+from task_hive_spark import materialize as m
+from task_hive_spark.session import get_spark
+
+spark = get_spark("memo_stop")
+idx = m.session_index(spark, "sfX", "persisted", lambda: spark.range(10))
+ckpt = m.session_memo(spark, ("ckpt", "sfX"), lambda: spark.range(5).localCheckpoint())
+released = []
+path = m.session_memo(
+    spark, ("scratch", "sfX"), lambda: {str(tmp_path)!r}, release=released.append
+)
+freed = []
+real = m._release_checkpoint
+m._release_checkpoint = lambda df: (freed.append(df), real(df))
+before = len(m._MEMO)
+cached = idx.is_cached
+spark.stop()
+m._evict_dead_sessions()
+print("RESULT " + json.dumps({{
+    "before": before, "after": len(m._MEMO), "was_cached": cached,
+    "idx_cached": idx.is_cached,
+    "ckpt_freed": any(f is ckpt for f in freed),
+    "released": released == [path],
+}}))
+"""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import sys; sys.path.insert(0, {repo!r})\n" + body],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    line = [x for x in proc.stdout.splitlines() if x.startswith("RESULT ")]
+    assert line, proc.stdout[-2000:] + proc.stderr[-2000:]
+    got = json.loads(line[0][len("RESULT "):])
+    assert got == {
+        "before": 3, "after": 0, "was_cached": True, "idx_cached": False,
+        "ckpt_freed": True, "released": True,
+    }, got
 
 
 def test_crawl_to_corpus_pipeline(spark, tmp_path):

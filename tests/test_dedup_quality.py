@@ -249,29 +249,30 @@ def test_served_index_answers_equal_refined_and_never_touch_embeddings(
     spark, sf_dir, tmp_path
 ):
     """The persisted-index serving path must (a) write every artifact,
-    (b) return exactly the session-index refine answer, and (c) plan
-    only over index-dir files — the source embeddings parquet must not
-    appear in the served query's scan set."""
+    (b) return exactly the session-index refine answer for the K_PROBES
+    probes, and (c) plan only over index-dir files — the source
+    embeddings parquet must not appear in the served query's scan set."""
     import os
 
     from task_hive_spark.operators.similarity import (
-        materialize_ann_index,
+        K_PROBES,
+        PQ_M,
+        ann_served_pruned_of,
+        materialize_ann_index_clustered,
         sim_topk_pq_refined,
-        sim_topk_pq_served,
     )
+    from task_hive_spark.plans.catalog import file_column_stats
 
     out = str(tmp_path / "annidx")
-    summary = materialize_ann_index(spark, sf_dir, out)
-    for name in ("centroids", "cells", "codes", "codebook", "vectors"):
+    summary = materialize_ann_index_clustered(spark, sf_dir, out)
+    for name in ("centroids", "cellcodes", "codebook", "vectors"):
         assert summary[name] > 0
         assert os.path.isdir(os.path.join(out, name))
-    assert summary["cells"] == summary["vectors"]  # one cell per vector
+    assert summary["cellcodes"] == PQ_M * summary["vectors"]  # M codes per vector
     assert os.path.isfile(os.path.join(out, "summary.json"))
 
-    # serve from THE index just built and validated (the explicit
-    # index_dir path the quickstart documents; also spares a second
-    # full artifact write into .scratch)
-    served = sim_topk_pq_served(spark, sf_dir, index_dir=out)
+    stats = file_column_stats(os.path.join(out, "cellcodes"), "cell")
+    served, _kept, _total = ann_served_pruned_of(spark, out, stats, n_probes=K_PROBES)
     refined = sim_topk_pq_refined(spark, sf_dir)
     assert served.collect() == refined.collect()
     scans = served.inputFiles()
@@ -324,8 +325,9 @@ def test_clustered_ann_index_serves_from_pruned_cell_files(spark, sf_dir, tmp_pa
 def test_clustered_dedup_index_append_debt_and_recluster(spark, sf_dir, tmp_path):
     """The LSM loop on the SERVING index: (a) appends land as loose
     delta files, no clustered file rewritten, skew invariant enforced;
-    (b) the pruned serve stays answer-identical to the flat serve over
-    the two-level index (conservative keeps — no false negative);
+    (b) the pruned serve stays answer-identical to the read-everything
+    serve over the two-level index (conservative keeps — no false
+    negative);
     (c) the probe's kept set now includes every delta file, the read
     tax the debt metric measures; (d) once debt crosses the threshold
     the policy serve reclusters first — answers invariant, kept back
@@ -340,7 +342,6 @@ def test_clustered_dedup_index_append_debt_and_recluster(spark, sf_dir, tmp_path
         NEW_OFFSET,
         PROBE_DOC_BASE,
         dedup_index_debt,
-        dedup_served_of,
         dedup_served_pruned_of,
         materialize_dedup_index_clustered,
         new_batch_df,
@@ -380,8 +381,11 @@ def test_clustered_dedup_index_append_debt_and_recluster(spark, sf_dir, tmp_path
         assert n_delta >= wave  # appends accumulate
         served, kept, total = dedup_served_pruned_of(spark, out, stats, probe)
         rows = served.collect()
-        # conservative two-level serve == flat serve, nothing dropped
-        assert rows == dedup_served_of(spark, out, probe).collect()
+        # conservative two-level serve == reading every bucket file
+        # through the same serve, nothing dropped
+        all_stats = [dict(s, min=None, max=None) for s in stats]
+        served_all, _, _ = dedup_served_pruned_of(spark, out, all_stats, probe)
+        assert rows == served_all.collect()
         assert any(
             r["hist_doc_id"] == PROBE_DOC_BASE and r["est_jaccard"] == 1.0
             for r in rows
@@ -517,26 +521,31 @@ def test_clustered_ann_index_append_debt_and_recluster(spark, sf_dir, tmp_path):
 def test_dedup_served_probes_index_without_rescanning_history(spark, sf_dir, tmp_path):
     """The cross-snapshot served dedup must (a) write both artifacts,
     (b) find every exact re-crawl at est_jaccard = 1.0 and every mutated
-    re-crawl as a near candidate, and (c) scan the documents parquet
-    exactly once — the NEW batch; history enters only through the index
-    artifacts (the production pattern: today's crawl vs all prior dumps
-    without re-reading historical text)."""
+    re-crawl as a near candidate, and (c) read no documents parquet —
+    the whole new batch enters as a signature literal, history only
+    through the index artifacts (the production pattern: today's crawl
+    vs all prior dumps without re-reading historical text)."""
     import os
 
     from task_hive_spark.operators.dedup import (
         LSH_BANDS,
         NEW_OFFSET,
-        dd_dedup_served,
-        materialize_dedup_index,
+        dedup_served_pruned_of,
+        materialize_dedup_index_clustered,
+        new_batch_df,
     )
+    from task_hive_spark.plans.catalog import file_column_stats
 
     out = str(tmp_path / "ddidx")
-    summary = materialize_dedup_index(spark, sf_dir, out)
+    summary = materialize_dedup_index_clustered(spark, sf_dir, out)
     assert summary["signatures"] > 0
     assert summary["buckets"] == summary["signatures"] * LSH_BANDS  # rows/doc
     assert os.path.isfile(os.path.join(out, "summary.json"))
 
-    served = dd_dedup_served(spark, sf_dir, index_dir=out)
+    stats = file_column_stats(os.path.join(out, "buckets"), "bucket")
+    served, _kept, _total = dedup_served_pruned_of(
+        spark, out, stats, new_batch_df(spark, sf_dir)
+    )
     rows = served.collect()
     assert rows, "re-crawled batch must collide with history"
     by_new: dict[int, list] = {}
@@ -560,10 +569,10 @@ def test_dedup_served_probes_index_without_rescanning_history(spark, sf_dir, tmp
     ]
     assert mutated_hits, "mutated re-crawls must still collide in some band"
 
-    # plan shape: history text is never re-scanned — the only text read
-    # is the new batch, materialized ONCE behind the probe-signature
-    # checkpoint, so the final plan holds ZERO documents scans and both
-    # index artifacts
+    # plan shape: history text is never re-scanned — the new batch's
+    # signatures are computed in one collect and enter the plan as a
+    # VALUES literal, so the final plan holds ZERO documents scans and
+    # both index artifacts
     scans = served.inputFiles()
     assert scans, "served plan must read the index artifacts"
     assert all(out in f for f in scans), scans  # index files ONLY — no text
@@ -574,8 +583,9 @@ def test_dedup_served_probes_index_without_rescanning_history(spark, sf_dir, tmp
 def test_clustered_dedup_index_serves_from_pruned_files(spark, sf_dir, tmp_path):
     """The layout tier applied to the serve path: the bucket artifact is
     range-clustered on the 64-bit band bucket, so a single-document
-    probe (32 band buckets) must (a) answer IDENTICALLY to the flat
-    serve, (b) keep at most LSH_BANDS of the bucket files — O(probe),
+    probe (32 band buckets) must (a) answer IDENTICALLY to the serve
+    that reads every bucket file, (b) keep at most LSH_BANDS of the
+    bucket files — O(probe),
     not O(index) — and (c) read ONLY the kept files plus signatures."""
     import os
 
@@ -583,7 +593,6 @@ def test_clustered_dedup_index_serves_from_pruned_files(spark, sf_dir, tmp_path)
         LSH_BANDS,
         NEW_OFFSET,
         PROBE_DOC_BASE,
-        dedup_served_of,
         dedup_served_pruned_of,
         materialize_dedup_index_clustered,
         new_batch_df,
@@ -607,8 +616,11 @@ def test_clustered_dedup_index_serves_from_pruned_files(spark, sf_dir, tmp_path)
     assert any(
         r["hist_doc_id"] == PROBE_DOC_BASE and r["est_jaccard"] == 1.0 for r in rows
     )
-    # answer-invariance vs the flat serve of the SAME probe
-    assert rows == dedup_served_of(spark, out, probe).collect()
+    # answer-invariance vs the unpruned serve of the SAME probe: the
+    # same manifest without footer ranges keeps every file
+    all_stats = [dict(s, min=None, max=None) for s in stats]
+    served_all, _, _ = dedup_served_pruned_of(spark, out, all_stats, probe)
+    assert rows == served_all.collect()
     # pruning is structural: ≤ one file per probe bucket, strictly
     # fewer than the index holds
     assert 0 < len(kept) <= LSH_BANDS < total == len(stats)
@@ -631,9 +643,9 @@ def test_clustered_dedup_index_serves_from_pruned_files(spark, sf_dir, tmp_path)
 def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp_path):
     """The full production loop: probe batch 1 against the historical
     index, keep only the NOVEL docs, fold exactly those back in
-    (update_dedup_index), then probe batch 2 — re-crawls of batch-1
-    docs must now hit their batch-1 ids at est_jaccard 1.0 (the index
-    grew), while the historical artifacts were appended, never
+    (update_dedup_index_clustered), then probe batch 2 — re-crawls of
+    batch-1 docs must now hit their batch-1 ids at est_jaccard 1.0 (the
+    index grew), while the historical artifacts were appended, never
     rewritten."""
     import os
 
@@ -643,14 +655,19 @@ def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp
         JACCARD_THRESHOLD,
         LSH_BANDS,
         NEW_OFFSET,
-        dedup_served_of,
-        materialize_dedup_index,
+        dedup_served_pruned_of,
+        materialize_dedup_index_clustered,
         new_batch_df,
-        update_dedup_index,
+        update_dedup_index_clustered,
     )
+    from task_hive_spark.plans.catalog import file_column_stats
+
+    def served(batch):
+        stats = file_column_stats(os.path.join(out, "buckets"), "bucket")
+        return dedup_served_pruned_of(spark, out, stats, batch)[0]
 
     out = str(tmp_path / "ddidx")
-    base = materialize_dedup_index(spark, sf_dir, out)
+    base = materialize_dedup_index_clustered(spark, sf_dir, out)
     hist_files = set(os.listdir(os.path.join(out, "signatures")))
 
     # batch 1 = the derived re-crawls (all near/exact dups of history)
@@ -665,7 +682,7 @@ def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp
     )
     batch1 = new_batch_df(spark, sf_dir).unionByName(fresh)
     hits = (
-        dedup_served_of(spark, out, batch1)
+        served(batch1)
         .where(F.col("est_jaccard") >= JACCARD_THRESHOLD)
         .select(F.col("new_doc_id").alias("doc_id"))
         .distinct()
@@ -675,7 +692,7 @@ def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp
     assert 0 < n_novel < batch1.count()  # some dups found, some novel
     assert n_novel >= 5  # at least the synthetic fresh docs survive
 
-    updated = update_dedup_index(spark, out, novel)
+    updated = update_dedup_index_clustered(spark, out, novel)
     assert updated["signatures"] == base["signatures"] + n_novel
     assert updated["buckets"] == base["buckets"] + n_novel * LSH_BANDS
     # append-only: every original signature file still present untouched
@@ -685,7 +702,7 @@ def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp
     batch2 = novel.select(
         (F.col("doc_id") + NEW_OFFSET).alias("doc_id"), "text"
     )
-    rows = dedup_served_of(spark, out, batch2).collect()
+    rows = served(batch2).collect()
     partners = {(r["new_doc_id"], r["hist_doc_id"]): r["est_jaccard"] for r in rows}
     for nid in [r["doc_id"] for r in novel.select("doc_id").collect()]:
         assert partners.get((nid + NEW_OFFSET, nid)) == 1.0, nid
@@ -694,37 +711,35 @@ def test_dedup_index_update_completes_the_cross_snapshot_loop(spark, sf_dir, tmp
 def test_ann_index_update_routes_and_encodes_against_frozen_artifacts(
     spark, sf_dir, tmp_path
 ):
-    """update_ann_index must append WITHOUT retraining: exact copies of
-    existing vectors under fresh ids route to the SAME cell and encode
-    to the SAME PQ codes as their originals (frozen centroids/codebook
-    arithmetic), counts grow by exactly the batch, and the historical
-    artifact files are untouched."""
+    """update_ann_index_clustered must append WITHOUT retraining: exact
+    copies of existing vectors under fresh ids route to the SAME cell
+    and encode to the SAME PQ codes as their originals (frozen
+    centroids/codebook arithmetic), counts grow by exactly the batch,
+    and the historical artifact files are untouched."""
     import os
 
     from pyspark.sql import functions as F
 
     from task_hive_spark.operators.similarity import (
         PQ_M,
-        materialize_ann_index,
-        update_ann_index,
+        materialize_ann_index_clustered,
+        update_ann_index_clustered,
     )
     from task_hive_spark.sources.fixtures import load_table
 
     out = str(tmp_path / "annidx")
-    base = materialize_ann_index(spark, sf_dir, out)
-    pre_files = {
-        a: set(os.listdir(os.path.join(out, a))) for a in ("cells", "codes", "vectors")
-    }
-    orig_cells = {
-        r["vec_id"]: r["cell"]
-        for r in spark.read.parquet(os.path.join(out, "cells")).collect()
-    }
-    orig_codes = {
-        (r["vec_id"], r["sub"]): r["code"]
-        for r in spark.read.parquet(os.path.join(out, "codes")).collect()
-    }
+    base = materialize_ann_index_clustered(spark, sf_dir, out)
+    pre_files = {a: set(os.listdir(os.path.join(out, a))) for a in ("cellcodes", "vectors")}
+
+    def cells_and_codes(where):
+        rows = spark.read.parquet(os.path.join(out, "cellcodes")).where(where).collect()
+        return (
+            {r["vec_id"]: r["cell"] for r in rows},
+            {(r["vec_id"], r["sub"]): r["code"] for r in rows},
+        )
 
     OFF = 10_000_000
+    orig_cells, orig_codes = cells_and_codes(F.col("vec_id") < OFF)
     sample = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") % 17 == 0
     )
@@ -732,27 +747,15 @@ def test_ann_index_update_routes_and_encodes_against_frozen_artifacts(
     assert n_new > 0
     new_vecs = sample.select((F.col("vec_id") + OFF).alias("vec_id"), "embedding")
 
-    summary = update_ann_index(spark, out, new_vecs)
-    assert summary["cells"] == base["cells"] + n_new
-    assert summary["codes"] == base["codes"] + n_new * PQ_M
+    summary = update_ann_index_clustered(spark, out, new_vecs)
+    assert summary["cellcodes"] == base["cellcodes"] + n_new * PQ_M
     assert summary["vectors"] == base["vectors"] + n_new
     assert summary["centroids"] == base["centroids"]  # frozen
     assert summary["codebook"] == base["codebook"]  # frozen
     for a, files in pre_files.items():
         assert files <= set(os.listdir(os.path.join(out, a))), a  # append-only
 
-    new_cells = {
-        r["vec_id"]: r["cell"]
-        for r in spark.read.parquet(os.path.join(out, "cells"))
-        .where(F.col("vec_id") >= OFF)
-        .collect()
-    }
-    new_codes = {
-        (r["vec_id"], r["sub"]): r["code"]
-        for r in spark.read.parquet(os.path.join(out, "codes"))
-        .where(F.col("vec_id") >= OFF)
-        .collect()
-    }
+    new_cells, new_codes = cells_and_codes(F.col("vec_id") >= OFF)
     assert len(new_cells) == n_new
     for nid, cell in new_cells.items():
         assert cell == orig_cells[nid - OFF], nid
@@ -762,43 +765,50 @@ def test_ann_index_update_routes_and_encodes_against_frozen_artifacts(
 
 def test_stream_built_index_is_servable(spark, sf_dir, tmp_path):
     """The online indexer's on-disk artifacts ARE a servable dedup
-    index: probing a new batch against the stream-accumulated
-    signatures/buckets (dedup_served_of over the streamed dirs) returns
-    exactly the answer the batch-built index gives — continuous
-    ingestion and cross-snapshot serving are one storage format, not
-    two."""
+    index as written: probing a new batch against the stream-accumulated
+    signatures/buckets (every streamed bucket file kept — its footer
+    ranges are not clustered) returns exactly the answer the batch-built
+    index gives — continuous ingestion and cross-snapshot serving are
+    one storage format, not two."""
     import os
 
     from task_hive_spark.operators.dedup import (
-        dedup_served_of,
-        materialize_dedup_index,
+        dedup_served_pruned_of,
+        materialize_dedup_index_clustered,
         new_batch_df,
     )
+    from task_hive_spark.plans.catalog import file_column_stats
     from task_hive_spark.streaming.minhashstream import run_once
 
     work = str(tmp_path / "mh")
     run_once(spark, sf_dir, work)  # stream the corpus through the indexer
 
     # map the streamed artifact layout onto the serve layout (the
-    # batch= partition column is dropped by dedup_served_of's column
+    # batch= partition column is dropped by the serve's column
     # selection, so the partitioned dirs read directly)
     idx = tmp_path / "served_view"
     idx.mkdir()
     os.symlink(os.path.join(work, "index_buckets"), str(idx / "buckets"))
     os.symlink(os.path.join(work, "index_sigs"), str(idx / "signatures"))
+    streamed = [
+        dict(s, min=None, max=None)
+        for s in file_column_stats(os.path.join(work, "index_buckets"), "bucket")
+    ]
 
     batch = new_batch_df(spark, sf_dir)
-    from_stream = dedup_served_of(spark, str(idx), batch).collect()
+    from_stream = dedup_served_pruned_of(spark, str(idx), streamed, batch)[0].collect()
 
     out = str(tmp_path / "batchidx")
-    materialize_dedup_index(spark, sf_dir, out)
-    from_batch = dedup_served_of(spark, out, batch).collect()
+    materialize_dedup_index_clustered(spark, sf_dir, out)
+    stats = file_column_stats(os.path.join(out, "buckets"), "bucket")
+    from_batch = dedup_served_pruned_of(spark, out, stats, batch)[0].collect()
     assert from_stream == from_batch and from_stream
 
 
 def test_dedup_index_update_raises_on_append_skew(spark, sf_dir, tmp_path):
     """The r11 invariant: the two appends (signatures, band buckets) are
-    not transactional, so update_dedup_index re-counts from disk and
+    not transactional, so update_dedup_index_clustered re-counts from
+    disk and
     must REFUSE to publish a summary when buckets != signatures x
     LSH_BANDS — a half-applied append would otherwise make those docs
     silently unfindable by every future probe. Simulate the failure by
@@ -808,12 +818,12 @@ def test_dedup_index_update_raises_on_append_skew(spark, sf_dir, tmp_path):
     import pytest
 
     from task_hive_spark.operators.dedup import (
-        materialize_dedup_index,
-        update_dedup_index,
+        materialize_dedup_index_clustered,
+        update_dedup_index_clustered,
     )
 
     out = str(tmp_path / "skewidx")
-    materialize_dedup_index(spark, sf_dir, out)
+    materialize_dedup_index_clustered(spark, sf_dir, out)
     # orphan signatures: rows in signatures/ with no buckets/ partner —
     # exactly what a crash between the two appends leaves behind
     spark.read.parquet(os.path.join(out, "signatures")).limit(3).write.mode(
@@ -824,4 +834,4 @@ def test_dedup_index_update_raises_on_append_skew(spark, sf_dir, tmp_path):
 
     batch = corpus_df(spark, sf_dir).limit(4)
     with pytest.raises(RuntimeError, match="skewed"):
-        update_dedup_index(spark, out, batch)
+        update_dedup_index_clustered(spark, out, batch)

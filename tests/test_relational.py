@@ -4,6 +4,7 @@ rel_approx_distinct gate query asserts the same bound cross-engine)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from task_hive_spark.sources.fixtures import load_table
@@ -165,3 +166,64 @@ def test_money_domains_nonnegative(spark):
     assert all(v >= 0 for v in row), row
     o = load_table(spark, sf, "orders")
     assert o.agg(F.min("o_totalprice")).collect()[0][0] >= 0
+
+
+def test_money_sum_half_cent_tie_rounds_alike_on_both_engines(spark, tmp_path):
+    """An exact revenue sum of 1450e-4 dollars is a half-cent tie. Spark's
+    round(double) rounds it up and DuckDB's rounds the binary double
+    0.14499… down, so the engine and its oracle used to disagree. Both
+    now round HALF_UP in the integer domain: 0.15 on both."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from task_hive_spark.operators.relational import ORACLES, rel_q6_forecast_revenue
+
+    # one Q6-qualifying line: 290 cents x 5 percent = 1450e-4 dollars
+    pq.write_table(
+        pa.table({
+            "l_shipdate": pa.array([datetime.datetime(1996, 6, 1)], pa.timestamp("us")),
+            "l_discount": [0.05],
+            "l_quantity": [1.0],
+            "l_extendedprice": [2.90],
+        }),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    engine = rel_q6_forecast_revenue(spark, str(tmp_path)).collect()[0]["revenue"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'")
+    oracle = con.execute(ORACLES["rel_q6_forecast_revenue"]).fetchone()[0]
+    assert engine == oracle == 0.15
+
+
+@pytest.mark.parametrize(
+    "total, unit, dollars",
+    [
+        (1450, 10**4, 0.15),  # the tie
+        (1449, 10**4, 0.14),
+        (-1450, 10**4, -0.15),  # ties go away from zero (sum_profit < 0)
+        (-1449, 10**4, -0.14),
+        (145_000, 10**6, 0.15),
+        (-145_000, 10**6, -0.15),
+        (123_456_785_000, 10**6, 123_456.79),
+        (0, 10**4, 0.0),
+    ],
+)
+def test_money_rounding_helpers_agree(spark, total, unit, dollars):
+    """The engine helper and its DuckDB twin give the same HALF_UP cents
+    for any sign and both units."""
+    import duckdb
+
+    from task_hive_spark.operators.relational import _dollars, _dollars_sql
+
+    engine = (
+        spark.range(1)
+        .select(_dollars(F.lit(total).cast("decimal(28,0)"), unit).alias("d"))
+        .collect()[0]["d"]
+    )
+    oracle = duckdb.connect().execute(
+        f"SELECT {_dollars_sql(f'CAST({total} AS HUGEINT)', unit)}"
+    ).fetchone()[0]
+    assert engine == oracle == dollars

@@ -163,22 +163,18 @@ def test_bpe_local_and_distributed_trainers_agree(spark, sf_dir):
     (order, counts), same final (w, freq, syms) vocab state, same
     frame schema — so the dispatch threshold can never change what
     txt_bpe_merges / txt_bpe_tokenize / txt_tokenized_dataset compute."""
+    from task_hive_spark.materialize import _unpersist_value
     from task_hive_spark.operators.textops import (
         _bpe_vocab,
         _learn_merges_distributed,
         _learn_merges_local,
     )
 
-    # snapshot/restore the session merge memo: the distributed trainer
-    # writes it unconditionally, which would otherwise overwrite a
-    # local-path vocab checkpoint cached earlier in the suite (without
-    # unpersisting it) and leave this test's frame cached afterwards
-    from tests.test_round14_opt import _bpe_cache_snapshot
-
     vocab_tbl = _bpe_vocab(spark, sf_dir)
     merges_l, out_l = _learn_merges_local(vocab_tbl.collect())
-    with _bpe_cache_snapshot(spark, sf_dir):
-        merges_d, v_d = _learn_merges_distributed(spark, sf_dir, vocab_tbl)
+    # the trainers are unmemoized; free this test's checkpoint after
+    merges_d, v_d = _learn_merges_distributed(spark, vocab_tbl)
+    try:
         assert merges_l == merges_d
         # rebuild the local frame exactly as _learn_merges does, to pin
         # the schema equality (nullability included) alongside the rows
@@ -191,6 +187,8 @@ def test_bpe_local_and_distributed_trainers_agree(spark, sf_dir):
         rows_l = sorted((r["w"], r["freq"], tuple(r["syms"])) for r in v_l.collect())
         rows_d = sorted((r["w"], r["freq"], tuple(r["syms"])) for r in v_d.collect())
         assert rows_l == rows_d
+    finally:
+        _unpersist_value(v_d)
 
 
 def test_clean_corpus_stats_reads_checkpointed_stages(spark, sf_dir):
@@ -220,14 +218,15 @@ def test_clean_corpus_stats_reads_checkpointed_stages(spark, sf_dir):
 
 
 def test_aux_cache_keys_honor_eviction_contract(spark, sf_dir):
-    """Session-3 codebook-memo fix: materialize's aux-cache eviction
-    checks key[0] against the live applicationId, so every registered
-    cache must use TUPLE keys whose first element is the appId — a
-    bare-string key's [0] is its first character, which made
-    _evict_dead_sessions silently drop the PQ codebook frame on every
-    session_index call (each ADC LUT construction re-built and
-    re-checkpointed it: ~5-8 s of driver overhead per
-    sim_topk_ivf_pq/_pq_refined call)."""
+    """Session-3 codebook-memo fix: dead-session eviction checks key[0]
+    against the live applicationId, so every memo key must be a TUPLE
+    whose first element is the appId — a bare-string key's [0] is its
+    first character, which made _evict_dead_sessions silently drop the
+    PQ codebook frame on every session_index call (each ADC LUT
+    construction re-built and re-checkpointed it: ~5-8 s of driver
+    overhead per sim_topk_ivf_pq/_pq_refined call). session_memo
+    builds every key itself, so the contract now holds by
+    construction."""
     from task_hive_spark import materialize as M
     from task_hive_spark.operators import similarity as S
 
@@ -238,9 +237,8 @@ def test_aux_cache_keys_honor_eviction_contract(spark, sf_dir):
         "its cache key no longer honors the tuple contract"
     )
     app = spark.sparkContext.applicationId
-    for aux in M._AUX_CACHES:
-        for key in aux:
-            assert isinstance(key, tuple) and key and key[0] == app, (
-                f"aux cache key {key!r} violates the (applicationId, ...) "
-                "tuple contract - _evict_dead_sessions will drop it live"
-            )
+    for key in M._MEMO:
+        assert isinstance(key, tuple) and key and key[0] == app, (
+            f"memo key {key!r} violates the (applicationId, ...) "
+            "tuple contract - _evict_dead_sessions will drop it live"
+        )

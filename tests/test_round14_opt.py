@@ -8,7 +8,7 @@ oracle gate."""
 
 from __future__ import annotations
 
-import contextlib
+import pytest
 
 
 def _plan(df) -> str:
@@ -20,35 +20,14 @@ def _plan(df) -> str:
     )
 
 
-@contextlib.contextmanager
-def _bpe_cache_snapshot(spark, sf_dir):
-    """Snapshot/restore the BPE merge memo around a test that calls a
-    trainer path directly: the trainers write _BPE_MERGE_CACHE for the
-    session unconditionally, which would otherwise overwrite (without
-    unpersisting) a vocab checkpoint cached by an earlier test and
-    leave the test-created frame cached for later ones (r13 ADVICE)."""
-    from task_hive_spark.materialize import _unpersist_value
-    from task_hive_spark.operators.textops import _BPE_MERGE_CACHE
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    saved = _BPE_MERGE_CACHE.pop(key, None)
-    try:
-        yield key
-    finally:
-        created = _BPE_MERGE_CACHE.pop(key, None)
-        if created is not None and created is not saved:
-            _unpersist_value(created)
-        if saved is not None:
-            _BPE_MERGE_CACHE[key] = saved
-
-
 def test_bpe_over_budget_vocab_takes_distributed_path(spark, sf_dir, monkeypatch):
     """r13 verdict item 8: when the driver-heap budget cannot hold the
-    vocabulary, _learn_merges must fall through to the distributed
-    trainer (never the local collect). Forced here by shrinking the
+    vocabulary, the trainer must fall through to the distributed
+    loop (never the local collect). Forced here by shrinking the
     budgeted limit to 1 row; the local trainer is poisoned so any
     dispatch regression fails loudly. Result parity between the two
     paths is pinned by test_bpe_local_and_distributed_trainers_agree."""
+    from task_hive_spark.materialize import _unpersist_value
     from task_hive_spark.operators import textops as T
 
     monkeypatch.setattr(T, "_bpe_local_limit", lambda _spark: 1)
@@ -57,10 +36,27 @@ def test_bpe_over_budget_vocab_takes_distributed_path(spark, sf_dir, monkeypatch
         raise AssertionError("local trainer ran despite an over-budget vocab")
 
     monkeypatch.setattr(T, "_learn_merges_local", _boom)
-    with _bpe_cache_snapshot(spark, sf_dir):
-        merges, v = T._learn_merges(spark, sf_dir)
+    # the unmemoized trainer, so the session's BPE memo is untouched
+    merges, v = T._train_bpe(spark, sf_dir)
+    try:
         assert merges and merges[0][0] == 1  # distributed path produced merges
         assert v.count() > 1
+    finally:
+        _unpersist_value(v)
+
+
+class _DriverMemSession:
+    """A session stand-in whose conf holds only spark.driver.memory
+    (``None``: unset, so conf.get raises like Spark's)."""
+
+    def __init__(self, mem):
+        self.conf = self
+        self._mem = mem
+
+    def get(self, _key):
+        if self._mem is None:
+            raise Exception("unset")
+        return self._mem
 
 
 def test_bpe_local_limit_tracks_driver_memory():
@@ -68,19 +64,7 @@ def test_bpe_local_limit_tracks_driver_memory():
     BPE_LOCAL_VOCAB_LIMIT."""
     from task_hive_spark.operators import textops as T
 
-    class _Conf:
-        def __init__(self, mem):
-            self._mem = mem
-
-        def get(self, _key):
-            if self._mem is None:
-                raise Exception("unset")
-            return self._mem
-
-    class _Stub:
-        def __init__(self, mem):
-            self.conf = _Conf(mem)
-
+    _Stub = _DriverMemSession
     budget = T._BPE_DRIVER_HEADROOM / T._BPE_ROW_EST_BYTES
     assert T._bpe_local_limit(_Stub("64g")) == T.BPE_LOCAL_VOCAB_LIMIT
     assert T._bpe_local_limit(_Stub("1g")) == int(1024**3 * budget)
@@ -88,6 +72,30 @@ def test_bpe_local_limit_tracks_driver_memory():
     assert T._bpe_local_limit(_Stub(None)) == int(1024**3 * budget)  # unset → 1g default
     assert T._bpe_local_limit(_Stub("garbage")) == int(1024**3 * budget)
     assert T._bpe_local_limit(_Stub("0")) == 1  # floor
+
+
+@pytest.mark.parametrize(
+    "mem, heap",
+    [
+        ("4096", 4096 * 1024**2),  # a bare number is MiB, as Spark reads it
+        ("512", 512 * 1024**2),
+        ("16gb", 16 * 1024**3),  # a unit letter may carry a trailing b
+        ("512mb", 512 * 1024**2),
+        ("512MB", 512 * 1024**2),
+        ("2048kb", 2048 * 1024),
+        ("1073741824b", 1024**3),  # a lone b is bytes
+    ],
+)
+def test_bpe_local_limit_parses_spark_byte_strings(mem, heap):
+    """spark.driver.memory is a Spark byte string: before the fix a bare
+    number was read as bytes and a two-letter suffix fell back to the
+    1g default, silently shrinking the local-trainer budget."""
+    from task_hive_spark.operators import textops as T
+
+    want = int(heap * T._BPE_DRIVER_HEADROOM) // T._BPE_ROW_EST_BYTES
+    assert T._bpe_local_limit(_DriverMemSession(mem)) == max(
+        1, min(T.BPE_LOCAL_VOCAB_LIMIT, want)
+    )
 
 
 def test_ann_pruned_serve_routing_is_a_values_literal(spark, sf_dir):
@@ -183,3 +191,74 @@ def test_no_fat_parquet_subtrees_under_unions(spark, sf_dir):
         f"index is likely being consumed under a Union without "
         f"checkpoint=True (see materialize.session_index): {offenders}"
     )
+
+
+# Session markers keyed by the session OBJECT, not by applicationId:
+# temp views and table scans belong to one SparkSession (a sibling
+# newSession() shares the applicationId but not them), so they cannot
+# live in the applicationId-keyed materialize registry.
+_SESSION_OBJECT_MARKERS = {
+    ("task_hive_spark/sources/fixtures.py", "_TABLES"),
+    ("task_hive_spark/sources/fixtures.py", "_REGISTERED"),
+    ("task_hive_spark/operators/taskmodel.py", "_TASK_VIEWS_REGISTERED"),
+}
+# Process-wide plugin registries filled by register_* calls — keyed by
+# task type, never by session, so nothing in them is session state.
+_PLUGIN_REGISTRIES = {
+    ("task_hive_spark/operators/processors.py", "TASK_PROCESSORS"),
+    ("task_hive_spark/operators/processors.py", "TASK_GENERATORS"),
+}
+
+
+def test_no_module_level_memo_outside_materialize():
+    """Build-once-per-session state has ONE owner, materialize's
+    session_memo registry, which dead-session eviction and
+    clear_indexes both cover. A module-level dict or set that starts
+    empty is a memo filled at run time; any new one outside
+    materialize.py would be skipped by both lifecycle paths. Constant
+    tables (QUERIES, ORACLES, codebooks) start non-empty and are not
+    flagged."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    empty_ctors = {
+        "dict", "set", "defaultdict", "OrderedDict",
+        "WeakKeyDictionary", "WeakValueDictionary", "WeakSet",
+    }
+
+    def starts_empty(v) -> bool:
+        if isinstance(v, ast.Dict):
+            return not v.keys
+        if isinstance(v, ast.Call) and not v.args and not v.keywords:
+            f = v.func
+            return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")) in empty_ctors
+        return False
+
+    found = set()
+    for dirpath, _dirs, files in os.walk(os.path.join(root, "task_hive_spark")):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root)
+            if rel == os.path.join("task_hive_spark", "materialize.py"):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in tree.body:
+                if isinstance(node, ast.Assign):
+                    targets, value = node.targets, node.value
+                elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                    targets, value = [node.target], node.value
+                else:
+                    continue
+                if starts_empty(value):
+                    found |= {(rel, t.id) for t in targets if isinstance(t, ast.Name)}
+    offenders = found - _SESSION_OBJECT_MARKERS - _PLUGIN_REGISTRIES
+    assert not offenders, (
+        "module-level memo outside materialize.py — use "
+        f"materialize.session_memo instead: {sorted(offenders)}"
+    )
+    # the allow-list stays honest: every entry still exists
+    assert _SESSION_OBJECT_MARKERS | _PLUGIN_REGISTRIES <= found

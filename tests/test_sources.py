@@ -139,8 +139,7 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
     textfiles.src_xml_roundtrip(spark, sf_dir).collect()
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "xml")
-    path = textfiles._WRITTEN[key]
+    path = textfiles._ingest_dir(spark, sf_dir, "xml")  # the memoized write
     raw = b"".join(
         open(os.path.join(path, f), "rb").read()
         for f in os.listdir(path)

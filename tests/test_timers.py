@@ -78,30 +78,3 @@ def test_timer_fires_with_non_fail_tail(spark):
     fired = _fired(spark, timers.run_once(spark, None, work, 0, feed=feed))
     assert fired == {("t1", 102, 1)}
 
-
-def test_timer_requeue_tws_parity_or_gate(spark, sf_dir):
-    """Successor-API parity contract (timers_tws.py): on Spark builds
-    with a working protobuf runtime, transformWithStateInPandas'
-    per-lease timers must fire exactly the applyInPandasWithState set;
-    in this container the state server's protobuf import is broken
-    (probed at module level), so the test documents the gate instead of
-    silently passing."""
-    import pytest
-
-    from task_hive_spark.streaming import timers_tws
-
-    if not timers_tws.has_tws_support():
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (the state"
-            " server's wire format); the container ships a broken google"
-            " namespace without it — gate documented in timers_tws.py"
-        )
-    got = {
-        (r.task_id, r.ready_s, r.retry_n)
-        for r in timers_tws.st_timer_requeue_tws(spark, sf_dir).collect()
-    }
-    base = {
-        (r.task_id, r.ready_s, r.retry_n)
-        for r in timers.st_timer_requeue(spark, sf_dir).collect()
-    }
-    assert got == base
