@@ -3,7 +3,8 @@
 ``entry(spark)`` smoke-runs the flagship query on sf0.001;
 ``queries()`` maps every implemented SURVEY §2 operator to a
 (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for the correctness gate.
+DuckDB-equivalent SQL for the correctness gate. Both are plain unions
+of the ``QUERIES``/``ORACLES`` dicts of the modules below.
 """
 
 from __future__ import annotations
@@ -12,134 +13,73 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-# Round-13 front-50 (policy: scripts/evidence_age.py derives and asserts
-# it from the CORRECTNESS_r0*.json ledgers):
-#   1. ALL 47 queries whose latest driver grade is r9 (age 4, the
-#      structural bound — named for the r13 front by the r12 verdict:
-#      the st_ lifecycle family, the th_ r9 core, the remaining src_
-#      round-trips, the r9 dd/sim/sk/txt additions).
-#   2. the 3 never-graded round-13 additions filling the remaining
-#      slots exactly as the r12 verdict sized them:
-#      sim_topk_pq_served_batch (the batched pruned serve that
-#      amortizes the serve floor — verdict task 2),
-#      src_avro_roundtrip (the Avro source's first driver grade —
-#      verdict task 4), and mm_decode_mp3_sideinfo (the MP3 side-info
-#      bit-exact decode — verdict task 5).
-#   The verdict also asked for a batched dd_dedup_served form; its API
-#   (dedup_served_pruned_of over a multi-doc batch) ships and is
-#   pytest-pinned this round, but its REGISTRATION is deferred to an
-#   r14 filler slot — the r14 age-4 cohort is 48, leaving exactly 2
-#   fillers, and the window cannot hold 47 + 4 this round.
-# BANKED registrations (built + held-out-oracle pytest-gated in r13,
-# waiting for filler slots; each gate lives in tests/test_round13.py):
-#   r14 (2 slots, cohort 48): dd_dedup_served_batch (dedup.py),
-#     mm_decode_mp3_scalefactors (multimodal.py).
-#   r15 (6 slots, cohort 44): gr_triangle_stats (graph.py),
-#     src_protowire_roundtrip (sources/protowire.py), mm_probe_ogg +
-#     mm_probe_flac (multimodal.py), sk_theta_anotb (sketches.py),
-#     src_warc_ingest (sources/warc.py) — 0 slots spare.
-#   r16/r17 cohorts are 50 (the r12/r13 fronts): NO filler slots
-#   BEFORE consolidation. AFTER the r16 swap below executes, the r17
-#   cohort shrinks to 48 (sk_quantiles + sk_quantiles_merged, both in
-#   _FRONT_R13, retire at r16) — r17 then has 2 filler slots, queued:
-#   sim_topk_sq8 (similarity.py — flat scalar-quantized ANN, the
-#   third quantization family) and dd_cdc_chunks (dedup.py —
-#   content-defined chunking, the insertion-robust production form of
-#   sub-document dedup) — 0 spare.
-#   Consolidation for r16 is PRE-BUILT (r13): sk_hll_family and
-#   sk_quantiles_family (sketches.py, held-out oracles
-#   SK_HLL_FAMILY_ORACLE / SK_QUANTILES_FAMILY_ORACLE, gates +
-#   variant-slice row-equality pins in tests/test_round13.py). The
-#   r16 swap: RETIRE sk_hll_distinct/daily/union + sk_quantiles +
-#   sk_quantiles_merged (their semantics grade on inside the
-#   families, like the r12 th_assign consolidation), REGISTER the two
-#   families. That shrinks the r16 age-4 cohort by 5 and the registry
-#   to 191, opening 5 front slots: the 2 families themselves plus the
-#   queued banked pair mm_decode_flac_pcm (multimodal.py — full
-#   Rice/fixed-predictor/decorrelation FLAC decode to exact PCM),
-#   txt_html_extract (operators/htmlextract.py — boilerplate-removal
-#   main-content extraction), and src_arrowipc_roundtrip
-#   (sources/arrowipc.py — stdlib flatbuffers Arrow IPC stream
-#   reader/writer, interop pinned BOTH directions against pyarrow),
-#   filling all 5. The families are
-#   also the better plans: one fact-table scan per family (quantiles:
-#   ReusedExchange over the monthly partials, plan-pinned).
-# Counts are asserted by scripts/evidence_age.py — derive the r14 front
-# from the script, not this comment.
-_FRONT_R13 = [
-    # --- age-4 core (last graded r9) ---
-    "dd_chunk_dedup",
-    "dd_dup_rate_by_source",
-    "dd_duplicate_clusters",
-    "dd_duplicate_spans",
-    "dd_exact_groups",
-    "dd_exact_keep_list",
-    "dd_minhash_lsh_pairs",
-    "dd_semdedup",
-    "dd_simhash",
-    "dd_simhash_near_pairs",
-    "mm_catalog_stats",
-    "mm_decode_features",
-    "mm_decode_real",
-    "sim_kmeans_step",
-    "sim_pq_codes",
-    "sim_topk_ivf_pq",
-    "sk_quantiles",
-    "sk_quantiles_merged",
-    "src_csv_roundtrip",
-    "src_jsonl_roundtrip",
-    "src_orc_roundtrip",
-    "src_xml_roundtrip",
-    "st_dispatch_assignments",
-    "st_final_tasks",
-    "st_minhash_incremental",
-    "st_quantiles_incremental",
-    "st_requeued_pending",
-    "st_retry_backoff",
-    "st_status_counts",
-    "st_timer_requeue",
-    "st_unmatched_submits",
-    "st_windowed_throughput",
-    "st_worker_state",
-    "th_api_json",
-    "th_list_all_union",
-    "th_list_by_status",
-    "th_point_get",
-    "th_snapshot_merge",
-    "th_stats",
-    "th_unknown_type_failed",
-    "txt_bm25_topk",
-    "txt_bpe_merges",
-    "txt_bpe_tokenize",
-    "txt_importance_sample",
-    "txt_sentiment",
-    "txt_training_mix",
-    "xp_taskgen_summary",
-    # --- never-graded r13 additions ---
-    "sim_topk_pq_served_batch",
-    "src_avro_roundtrip",
-    "mm_decode_mp3_sideinfo",
-]
+from task_hive_spark.session import RUNTIME_CONF
 
 
-# The driver's grading window; the front set must fill it exactly so no
-# grading slot is wasted and no front query silently falls off the end.
-GRADING_WINDOW = 50
+def _registry_modules() -> tuple:
+    """Every module that registers queries, each imported once."""
+    from task_hive_spark.operators import (
+        assign,
+        dedup,
+        graph,
+        htmlextract,
+        multimodal,
+        pipeline,
+        processors,
+        queries as q,
+        relational,
+        similarity,
+        sketches,
+        textops,
+        unigram_lm,
+    )
+    from task_hive_spark.plans import catalog
+    from task_hive_spark.sources import arrowipc, avro, protowire, textfiles, warc
+    from task_hive_spark.streaming import (
+        cdcmerge,
+        dedupstream,
+        lifecycle,
+        minhashstream,
+        sketchstream,
+        stateful,
+        timers,
+    )
+
+    return (
+        q,
+        assign,
+        processors,
+        multimodal,
+        catalog,
+        relational,
+        textops,
+        htmlextract,
+        similarity,
+        dedup,
+        graph,
+        lifecycle,
+        stateful,
+        timers,
+        dedupstream,
+        cdcmerge,
+        minhashstream,
+        textfiles,
+        avro,
+        protowire,
+        warc,
+        arrowipc,
+        pipeline,
+        unigram_lm,
+        sketches,
+        sketchstream,
+    )
 
 
 def _ensure_session_conf(spark: SparkSession) -> None:
-    """Apply runtime-settable confs the engine relies on (the driver may
+    """Apply the runtime confs ``get_spark`` builds with (the driver may
     hand us a session built without them)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # keep CPU-dense small-byte stages cluster-wide (see session.py)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    # keep the 128-field MinHash aggregate inside whole-stage codegen
-    spark.conf.set("spark.sql.codegen.maxFields", "256")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static conf on some builds; fixtures loader still handles it
+    for k, v in RUNTIME_CONF.items():
+        spark.conf.set(k, v)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -151,72 +91,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from task_hive_spark.operators import (
-        assign,
-        dedup,
-        graph,
-        multimodal,
-        pipeline,
-        processors,
-        queries as q,
-        relational,
-        similarity,
-        sketches,
-        textops,
-        unigram_lm,
-    )
-    from task_hive_spark.plans import catalog
-    from task_hive_spark.sources import avro, textfiles
-    from task_hive_spark.streaming import (
-        cdcmerge,
-        dedupstream,
-        lifecycle,
-        minhashstream,
-        sketchstream,
-        stateful,
-        timers,
-    )
-
-    # Register evidence-first (see _FRONT_R13): queries whose driver
-    # evidence is stalest fill the 50 graded slots; the freshly-graded
-    # set rotates to the back.
-    out: dict[str, Callable] = {}
-    out.update(q.QUERIES)
-    out.update(assign.QUERIES)
-    out.update(processors.QUERIES)
-    out.update(multimodal.QUERIES)
-    out.update(catalog.QUERIES)
-    out.update(relational.QUERIES)
-    out.update(textops.QUERIES)
-    out.update(similarity.QUERIES)
-    out.update(dedup.QUERIES)
-    out.update(graph.QUERIES)
-    out.update(lifecycle.QUERIES)
-    out.update(stateful.QUERIES)
-    out.update(timers.QUERIES)
-    out.update(dedupstream.QUERIES)
-    out.update(cdcmerge.QUERIES)
-    out.update(minhashstream.QUERIES)
-    out.update(textfiles.QUERIES)
-    out.update(avro.QUERIES)
-    out.update(pipeline.QUERIES)
-    out.update(unigram_lm.QUERIES)
-    out.update(sketches.QUERIES)
-    out.update(sketchstream.QUERIES)
-
-    missing = [k for k in _FRONT_R13 if k not in out]
-    assert not missing, f"front names not registered: {missing}"
-    # distinct-count, not list-length: a pasted duplicate would pass a
-    # len() check while silently shrinking the graded front below the
-    # window (review finding r7)
-    assert len(set(_FRONT_R13)) == len(_FRONT_R13) == GRADING_WINDOW, (
-        f"front set must fill the driver's grading window exactly: "
-        f"{len(set(_FRONT_R13))} distinct != {GRADING_WINDOW} — re-balance _FRONT_R13"
-    )
-    front = {k: out[k] for k in _FRONT_R13}
-    back = {k: v for k, v in out.items() if k not in front}
-    ordered = {**front, **back}
-
     def _wrap(fn):
         def inner(spark, sf_dir):
             _ensure_session_conf(spark)
@@ -224,107 +98,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return inner
 
-    return {k: _wrap(v) for k, v in ordered.items()}
+    return {
+        k: _wrap(v) for m in _registry_modules() for k, v in m.QUERIES.items()
+    }
 
 
 def oracle_sql() -> dict[str, str]:
-    from task_hive_spark.operators import (
-        assign,
-        dedup,
-        graph,
-        multimodal,
-        pipeline,
-        processors,
-        queries as q,
-        relational,
-        similarity,
-        sketches,
-        textops,
-        unigram_lm,
-    )
-    from task_hive_spark.plans import catalog
-    from task_hive_spark.sources import avro, textfiles
-    from task_hive_spark.streaming import (
-        cdcmerge,
-        dedupstream,
-        lifecycle,
-        minhashstream,
-        sketchstream,
-        stateful,
-        timers,
-    )
-
-    out: dict[str, str] = {}
-    out.update(q.ORACLES)
-    out.update(assign.ORACLES)
-    out.update(processors.ORACLES)
-    out.update(multimodal.ORACLES)
-    out.update(catalog.ORACLES)
-    out.update(relational.ORACLES)
-    out.update(textops.ORACLES)
-    out.update(similarity.ORACLES)
-    out.update(lifecycle.ORACLES)
-    out.update(stateful.ORACLES)
-    out.update(timers.ORACLES)
-    out.update(dedupstream.ORACLES)
-    out.update(cdcmerge.ORACLES)
-    out.update(minhashstream.ORACLES)
-    out.update(dedup.ORACLES)
-    out.update(graph.ORACLES)
-    out.update(textfiles.ORACLES)
-    out.update(avro.ORACLES)
-    out.update(pipeline.ORACLES)
-    out.update(unigram_lm.ORACLES)
-    out.update(sketches.ORACLES)
-    out.update(sketchstream.ORACLES)
-    return out
-
-
-def banked() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
-    """The held-out-oracle queries built ahead of their registration
-    slots (the roadmap in _FRONT_R13's comment): name → (callable,
-    oracle SQL). NOT part of the driver contract — the driver grades
-    queries()/oracle_sql() only — but future rounds register an entry
-    by moving it into those maps verbatim, and
-    scripts/verify_banked.py value-checks this whole surface at any
-    sf_dir (the pytest gates cover it per-query meanwhile)."""
-    from task_hive_spark.operators import (
-        dedup,
-        graph,
-        htmlextract,
-        multimodal,
-        similarity,
-        sketches,
-    )
-    from task_hive_spark.sources import arrowipc, protowire, warc
-
-    return {
-        # r14 filler slots
-        "dd_dedup_served_batch": (
-            dedup.dd_dedup_served_batch, dedup.DD_SERVED_BATCH_ORACLE),
-        "mm_decode_mp3_scalefactors": (
-            multimodal.mm_decode_mp3_scalefactors, multimodal.MM_SF_ORACLE),
-        # r15 filler slots
-        "gr_triangle_stats": (
-            graph.gr_triangle_stats, graph.GR_TRIANGLE_ORACLE),
-        "src_protowire_roundtrip": (
-            protowire.src_protowire_roundtrip, protowire.SRC_PROTOWIRE_ORACLE),
-        "mm_probe_ogg": (multimodal.mm_probe_ogg, multimodal.MM_OGG_ORACLE),
-        "mm_probe_flac": (multimodal.mm_probe_flac, multimodal.MM_FLAC_ORACLE),
-        "sk_theta_anotb": (sketches.sk_theta_anotb, sketches.SK_THETA_ANOTB_ORACLE),
-        "src_warc_ingest": (warc.src_warc_ingest, warc.SRC_WARC_ORACLE),
-        # r16: consolidation families + the queue for their freed slots
-        "sk_hll_family": (sketches.sk_hll_family, sketches.SK_HLL_FAMILY_ORACLE),
-        "sk_quantiles_family": (
-            sketches.sk_quantiles_family, sketches.SK_QUANTILES_FAMILY_ORACLE),
-        "mm_decode_flac_pcm": (
-            multimodal.mm_decode_flac_pcm, multimodal.MM_FLAC_PCM_ORACLE),
-        "txt_html_extract": (
-            htmlextract.txt_html_extract, htmlextract.TXT_HTML_ORACLE),
-        "src_arrowipc_roundtrip": (
-            arrowipc.src_arrowipc_roundtrip, arrowipc.SRC_ARROWIPC_ORACLE),
-        # r17 filler slots (2, opened by the r16 consolidation retiring
-        # sk_quantiles + sk_quantiles_merged out of the r17 cohort)
-        "sim_topk_sq8": (similarity.sim_topk_sq8, similarity.SIM_SQ8_ORACLE),
-        "dd_cdc_chunks": (dedup.dd_cdc_chunks, dedup.DD_CDC_ORACLE),
-    }
+    return {k: v for m in _registry_modules() for k, v in m.ORACLES.items()}

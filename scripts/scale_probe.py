@@ -672,13 +672,12 @@ def served_pruned_probe() -> int:
             "kept_bound": LSH_BANDS, "serve_seconds": serve_s,
             "bounds_ok": ok,
         }))
-        # the BATCHED serve at this scale (r13 headline shape): kept is
-        # bounded by |batch| x bands — O(batch), still never O(index) —
-        # and the answer matches the unpruned serve for the same batch
-        from task_hive_spark.operators.dedup import BATCH_PROBE_MOD
-
+        # a BATCHED serve at this scale (every 104th re-crawled doc):
+        # kept is bounded by |batch| x bands — O(batch), still never
+        # O(index) — and the answer matches the unpruned serve for the
+        # same batch
         bprobe = new_batch_df(spark, d).where(
-            f"(doc_id - {NEW_OFFSET}) % {BATCH_PROBE_MOD} = 0"
+            f"(doc_id - {NEW_OFFSET}) % 104 = 0"
         )
         n_bprobe = bprobe.count()
         t0 = time.perf_counter()

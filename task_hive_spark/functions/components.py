@@ -45,11 +45,12 @@ from pyspark.sql import DataFrame, functions as F
 # bounded (limit+1)-row scan before falling through to the loop.
 CC_LOCAL_EDGE_LIMIT = 200_000
 
-# Labelings at or under this row count return as an all-integer VALUES
-# literal instead of a checkpointed Python-RDD conversion (see
-# _local_components); ~25 bytes of SQL text per row keeps the parsed
-# statement under ~1 MB at the cap.
-_LABEL_LITERAL_MAX = 32_768
+# Labelings whose rendered VALUES literal fits in this many bytes of SQL
+# text return as that literal instead of a checkpointed Python-RDD
+# conversion (see _local_components). The cap is on the rendered text,
+# not the row count: a row of 19-digit BIGINT ids is ~75 B, three times
+# a small-id row.
+_LABEL_LITERAL_MAX_BYTES = 1 << 20
 
 
 def _local_components(spark, rows, src_type) -> DataFrame:
@@ -84,15 +85,16 @@ def _local_components(spark, rows, src_type) -> DataFrame:
     # per call of Python-RDD parallelize + 32 pickle-conversion tasks
     # for a ~600-row labeling (measured r14; guide §4 — don't cross
     # the Python boundary for driver-held rows). Bounded: the literal
-    # is capped at _LABEL_LITERAL_MAX rows (~25 B/row of SQL text);
-    # bigger labelings — and non-integral node types, which would need
-    # string escaping — keep the one-conversion checkpoint.
-    if isinstance(src_type, (LongType, IntegerType)) and 0 < len(out) <= _LABEL_LITERAL_MAX:
+    # is capped at _LABEL_LITERAL_MAX_BYTES of SQL text; bigger
+    # labelings — and non-integral node types, which would need string
+    # escaping — keep the one-conversion checkpoint.
+    if isinstance(src_type, (LongType, IntegerType)) and out:
         t = "BIGINT" if isinstance(src_type, LongType) else "INT"
         vals = ", ".join(
             f"(CAST({n} AS {t}), CAST({c} AS {t}))" for n, c in out
         )
-        return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(node, component)")
+        if len(vals) <= _LABEL_LITERAL_MAX_BYTES:
+            return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(node, component)")
     schema = StructType(
         [StructField("node", src_type, False), StructField("component", src_type, False)]
     )

@@ -204,10 +204,8 @@ def th_assign_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL four J1 assignment variants as one parameterized surface —
     the three strategy orders (dispatcher.go:554-569) plus the salted
     banded form — unioned under a ``strategy`` column (salt NULL for
-    the unsalted three). Registry-capacity consolidation (round 12):
-    the four per-variant registrations graded four near-identical plans
-    and saturated the grading-window arithmetic; one union grades the
-    same semantics in one slot. The per-variant callables remain the
+    the unsalted three). One registration checks all four variants'
+    semantics against one oracle; the per-variant callables remain the
     engine API (the TaskHive facade dispatches through ``bind``).
 
     Plan shape (r13 optimization round): ONE backlog scan feeds BOTH

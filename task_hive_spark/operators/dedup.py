@@ -847,31 +847,6 @@ def dd_dedup_served_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# The batched serve shape (the sim_topk_pq_served_batch twin): probe a
-# SMALL RE-CRAWL BATCH — every 8th member of the 13-multiple re-crawl —
-# so the fixed serve floor (signature job, bucket-routing collect,
-# candidate/score join) amortizes across the batch while the manifest
-# still prunes: kept files ≤ |batch| · LSH_BANDS colliding buckets,
-# O(batch) at any index size. Registration deferred to an r14 filler
-# slot (the r13 front is exactly 47 age-4 + 3 new, see
-# __spark_entry__._FRONT_R13); pytest pins it hash-identical to the
-# per-doc pruned serves until then.
-BATCH_PROBE_MOD = 104
-
-
-def dd_dedup_served_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-snapshot dedup for a SMALL RE-CRAWL BATCH served from the
-    clustered index with manifest file pruning — the production serve
-    shape (batches, not single docs). Identical per-doc answers to
-    dd_dedup_served for the same probe set."""
-    idx, stats = _dedup_index_clustered(spark, sf_dir)
-    probe = new_batch_df(spark, sf_dir).where(
-        (F.col("doc_id") - NEW_OFFSET) % BATCH_PROBE_MOD == 0
-    )
-    out, _kept, _total = dedup_served_pruned_of(spark, idx, stats, probe)
-    return out
-
-
 def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) signature column, materialized once per
     (session, sf_dir): near-pair bucketing and duplicate clustering
@@ -1695,14 +1670,6 @@ ORACLES["dd_dedup_served_pruned"] = _served_oracle_sql(
     f"WHERE doc_id = {NEW_OFFSET + PROBE_DOC_BASE}"
 )
 
-# dd_dedup_served_batch's oracle — held OUT of the registered ORACLES
-# dict until its r14 registration (front-capacity note at the query);
-# the pytest gate runs it against this SQL meanwhile.
-DD_SERVED_BATCH_ORACLE = _served_oracle_sql(
-    f"SELECT * FROM ({NEW_BATCH_SQL}) nb_all "
-    f"WHERE (doc_id - {NEW_OFFSET}) % {BATCH_PROBE_MOD} = 0"
-)
-
 # Connected components need WITH RECURSIVE, which must lead the whole
 # CTE list — composed here instead of through corpus_cte. The recursive
 # member is the transitive min-label closure (UNION dedupes, so it
@@ -1809,7 +1776,7 @@ ORDER BY kind, split_a, split_b
 """
 
 
-# --- content-defined chunking (banked for an r17 slot) ---------------------
+# --- content-defined chunking ----------------------------------------------
 # LBFS-style CDC (Muthitacharoen et al. 2001, the rsync/dedup-storage
 # family): chunk boundaries are decided by a rolling hash of the text
 # itself, so an insertion re-synchronizes within one window and the
@@ -1879,9 +1846,7 @@ def dd_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     _band_buckets megamorphic-lambda lesson). One shuffle partitions
     chars by doc for the window; the cut-list groupBy and the
     text re-join reuse that partitioning; then ONE shuffle on the
-    chunk fingerprint. Banked for an r17 filler slot
-    (__spark_entry__._FRONT_R13 roadmap); pytest gates it against
-    DD_CDC_ORACLE meanwhile."""
+    chunk fingerprint."""
     g_lit = F.array(*[F.lit(v) for v in CDC_GEAR])
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
@@ -1964,13 +1929,13 @@ def dd_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CDC_GEAR_SQL = "[" + ", ".join(str(v) for v in CDC_GEAR) + "]"
 
-# dd_cdc_chunks' oracle — held OUT of ORACLES until its r17 slot; the
-# pytest gate runs it meanwhile. Same closed-form hash, same span and
-# canonical rules, transcribed over DuckDB list lambdas.
 _CDC_LAG_SQL = "gv * 1 + COALESCE(LAG(gv, 1) OVER w, 0) * 2 + COALESCE(LAG(gv, 2) OVER w, 0) * 4 + COALESCE(LAG(gv, 3) OVER w, 0) * 8 + COALESCE(LAG(gv, 4) OVER w, 0) * 16 + COALESCE(LAG(gv, 5) OVER w, 0) * 32 + COALESCE(LAG(gv, 6) OVER w, 0) * 64 + COALESCE(LAG(gv, 7) OVER w, 0) * 128 + COALESCE(LAG(gv, 8) OVER w, 0) * 256 + COALESCE(LAG(gv, 9) OVER w, 0) * 512 + COALESCE(LAG(gv, 10) OVER w, 0) * 1024 + COALESCE(LAG(gv, 11) OVER w, 0) * 2048 + COALESCE(LAG(gv, 12) OVER w, 0) * 4096 + COALESCE(LAG(gv, 13) OVER w, 0) * 8192 + COALESCE(LAG(gv, 14) OVER w, 0) * 16384 + COALESCE(LAG(gv, 15) OVER w, 0) * 32768"
 
 
-DD_CDC_ORACLE = corpus_cte(
+QUERIES["dd_cdc_chunks"] = dd_cdc_chunks
+# dd_cdc_chunks' oracle: the same closed-form hash, span and canonical
+# rules, transcribed over DuckDB list lambdas.
+ORACLES["dd_cdc_chunks"] = corpus_cte(
     f"""
     WITH base AS (
       SELECT doc_id, text, length(text) AS n, string_split(text, '') AS cs

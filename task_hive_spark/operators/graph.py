@@ -141,10 +141,7 @@ def gr_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degrees bounded by the graph's arboricity-ish ordering — the
     standard reason this survives power-law graphs where the naive
     per-node C(deg,2) join melts on hubs. Three node-keyed shuffles
-    (degree, two joins); nothing reaches the driver but the row.
-    Registration deferred to an r15 filler slot (front capacity, see
-    __spark_entry__._FRONT_R13); pytest gates it against the held-out
-    GR_TRIANGLE_ORACLE meanwhile."""
+    (degree, two joins); nothing reaches the driver but the row."""
     und = _und_edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = (
         und.select(F.col("u").alias("node"))
@@ -197,6 +194,7 @@ def gr_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES = {
     "gr_pagerank": gr_pagerank,
+    "gr_triangle_stats": gr_triangle_stats,
 }
 
 
@@ -242,11 +240,6 @@ def _pr_oracle() -> str:
         LIMIT {PR_TOP}
         """
     )
-
-
-ORACLES = {
-    "gr_pagerank": _pr_oracle(),
-}
 
 
 def _triangle_oracle() -> str:
@@ -301,6 +294,7 @@ def _triangle_oracle() -> str:
     """
 
 
-# gr_triangle_stats' oracle — held OUT of ORACLES until its r15
-# registration; the pytest gate runs it meanwhile.
-GR_TRIANGLE_ORACLE = _triangle_oracle()
+ORACLES = {
+    "gr_pagerank": _pr_oracle(),
+    "gr_triangle_stats": _triangle_oracle(),
+}

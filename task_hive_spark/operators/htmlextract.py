@@ -160,7 +160,7 @@ def extract_main_text(page: str) -> tuple[str, str]:
     return ex.lang, " ".join(p for p in ex.paragraphs if p)
 
 
-# --- gated query (banked; registration when a slot opens) ------------------
+# --- registered query --------------------------------------------------------
 
 
 def txt_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,9 +170,7 @@ def txt_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, and profile per language. The oracle is the shared profile
     SQL over the derivation, so a green hash proves extraction is
     EXACT: every entity decoded, every chrome subtree and link-dense
-    block dropped, no content word lost. Held OUT of the registered
-    QUERIES until a filler slot opens (__spark_entry__._FRONT_R13);
-    the pytest gate covers it meanwhile."""
+    block dropped, no content word lost."""
     import pandas as pd
 
     from task_hive_spark.sources.textfiles import _XML_TAIL, _derived, _profile
@@ -199,10 +197,13 @@ def txt_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _profile(back)
 
 
-def _oracle() -> str:
+QUERIES = {"txt_html_extract": txt_html_extract}
+
+
+def _oracles() -> dict[str, str]:
     from task_hive_spark.sources.textfiles import _XML_TAIL, _profile_sql
 
-    return _profile_sql(_XML_TAIL)
+    return {"txt_html_extract": _profile_sql(_XML_TAIL)}
 
 
-TXT_HTML_ORACLE = _oracle()
+ORACLES = _oracles()

@@ -2823,10 +2823,7 @@ def mm_decode_mp3_scalefactors(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout, scfsi granule-1 reuse, exact part2 bit accounting
     (_codec_roundtrip shape). The oracle rebuilds every sum from the
     shared field formulas; a decoder with the wrong slen table, band
-    grouping, scfsi bit order, or bit accounting hash-fails.
-    Registration deferred to an r14 filler slot (front capacity, see
-    __spark_entry__._FRONT_R13); pytest gates it against
-    MM_SF_ORACLE meanwhile."""
+    grouping, scfsi bit order, or bit accounting hash-fails."""
     return _codec_roundtrip(
         spark,
         sf_dir,
@@ -2844,9 +2841,7 @@ def mm_probe_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Ogg page walk — with per-page CRC-32 recomputation — for
     the wav-format audio assets re-containered as Ogg streams (the
     container grammar is what's probed; the codec inside is opaque
-    payload like every other probe). Registration deferred to an r15
-    filler slot (front capacity, __spark_entry__._FRONT_R13); pytest
-    gates it against MM_OGG_ORACLE meanwhile."""
+    payload like every other probe)."""
     return _codec_roundtrip(
         spark,
         sf_dir,
@@ -2863,9 +2858,7 @@ def mm_probe_ogg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_probe_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL FLAC metadata-chain walk + non-byte-aligned STREAMINFO
     bit-unpack for the wav-format audio assets re-containered as FLAC
-    streams. Registration deferred to an r15 filler slot (front
-    capacity, __spark_entry__._FRONT_R13); pytest gates it against
-    MM_FLAC_ORACLE meanwhile."""
+    streams."""
     return _codec_roundtrip(
         spark,
         sf_dir,
@@ -2888,9 +2881,7 @@ def mm_decode_flac_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded waveform's exact aggregates against the closed-form signal
     the encoder consumed — the lossless-codec analogue of
     mm_decode_jpeg_coeffs' dequantized-coefficient check, with no
-    oracle-less float stage left behind. Banked (held-out oracle,
-    pytest-gated) until a filler slot opens — see
-    __spark_entry__._FRONT_R13."""
+    oracle-less float stage left behind."""
     return _codec_roundtrip(
         spark,
         sf_dir,
@@ -3247,6 +3238,10 @@ QUERIES = {
     "mm_decode_jpeg_coeffs": mm_decode_jpeg_coeffs,
     "mm_probe_mp3": mm_probe_mp3,
     "mm_decode_mp3_sideinfo": mm_decode_mp3_sideinfo,
+    "mm_decode_mp3_scalefactors": mm_decode_mp3_scalefactors,
+    "mm_probe_ogg": mm_probe_ogg,
+    "mm_probe_flac": mm_probe_flac,
+    "mm_decode_flac_pcm": mm_decode_flac_pcm,
     "mm_probe_webm": mm_probe_webm,
     "mm_frame_sample": mm_frame_sample,
     "mm_audio_segments": mm_audio_segments,
@@ -3606,14 +3601,12 @@ ORACLES["mm_decode_mp3_sideinfo"] = _oracle_assets_cte(
     """
 )
 
-# mm_decode_mp3_scalefactors' oracle — held OUT of the registered
-# ORACLES dict until its r14 registration (front-capacity note at the
-# query); the pytest gate runs it against this SQL meanwhile. Every sum
-# rebuilt from the shared field formulas over the (frame, channel,
-# band) grid with the slen table and scfsi reuse inlined.
+# mm_decode_mp3_scalefactors' oracle: every sum rebuilt from the shared
+# field formulas over the (frame, channel, band) grid with the slen
+# table and scfsi reuse inlined.
 _SL1 = "[" + ", ".join(str(x) for x in _MP3_SLEN1) + "]"
 _SL2 = "[" + ", ".join(str(x) for x in _MP3_SLEN2) + "]"
-MM_SF_ORACLE = _oracle_assets_cte(
+ORACLES["mm_decode_mp3_scalefactors"] = _oracle_assets_cte(
     f"""
     , aud AS (
       SELECT asset_id, 4 + asset_id % 8 AS nf
@@ -3671,12 +3664,11 @@ MM_SF_ORACLE = _oracle_assets_cte(
     """
 )
 
-# mm_probe_ogg's oracle — held OUT of ORACLES until its r15
-# registration; the pytest gate runs it meanwhile. Every probed field
-# rebuilt from the synth geometry; the capture pattern, LE field
-# layout, lacing table, and the RFC 3533 CRC are encoding artifacts
-# the prober must exactly parse (and recompute) to reach these values.
-MM_OGG_ORACLE = _oracle_assets_cte(
+# mm_probe_ogg's oracle: every probed field rebuilt from the synth
+# geometry; the capture pattern, LE field layout, lacing table, and the
+# RFC 3533 CRC are encoding artifacts the prober must exactly parse (and
+# recompute) to reach these values.
+ORACLES["mm_probe_ogg"] = _oracle_assets_cte(
     """
     , aud AS (
       SELECT asset_id, 4096 + asset_id % 9000 AS serial,
@@ -3719,12 +3711,10 @@ MM_OGG_ORACLE = _oracle_assets_cte(
     """
 )
 
-# mm_probe_flac's oracle — held OUT of ORACLES until its r15
-# registration; the pytest gate runs it meanwhile. The 20-bit sample
-# rate, 3/5-bit channel/bps fields and the 36-bit sample count share
-# bytes with their neighbors, so only a bit-exact unpack reaches these
-# values.
-MM_FLAC_ORACLE = _oracle_assets_cte(
+# mm_probe_flac's oracle: the 20-bit sample rate, 3/5-bit channel/bps
+# fields and the 36-bit sample count share bytes with their neighbors,
+# so only a bit-exact unpack reaches these values.
+ORACLES["mm_probe_flac"] = _oracle_assets_cte(
     """
     , aud AS (
       SELECT asset_id,
@@ -3758,13 +3748,11 @@ MM_FLAC_ORACLE = _oracle_assets_cte(
     """
 )
 
-# mm_decode_flac_pcm's oracle — held OUT of ORACLES until its
-# registration slot; the pytest gate runs it meanwhile. It aggregates
-# the CLOSED-FORM signal the encoder consumed, so a green hash proves
-# the Rice/fixed-predictor/decorrelation decode recovered every sample
-# exactly (the in-stream MD5 check is the decoder's own belt; this is
-# the independent suspenders).
-MM_FLAC_PCM_ORACLE = _oracle_assets_cte(
+# mm_decode_flac_pcm's oracle aggregates the CLOSED-FORM signal the
+# encoder consumed, so a green hash proves the Rice/fixed-predictor/
+# decorrelation decode recovered every sample exactly (the in-stream MD5
+# check is the decoder's own belt; this is the independent suspenders).
+ORACLES["mm_decode_flac_pcm"] = _oracle_assets_cte(
     """
     , aud AS (
       SELECT asset_id,

@@ -1475,6 +1475,7 @@ QUERIES = {
     "sim_topk_pq_served": sim_topk_pq_served,
     "sim_topk_pq_served_pruned": sim_topk_pq_served_pruned,
     "sim_topk_pq_served_batch": sim_topk_pq_served_batch,
+    "sim_topk_sq8": sim_topk_sq8,
     "sim_label_centroids": sim_label_centroids,
     "dd_embedding_cosine_pairs": dd_embedding_cosine_pairs,
     "dd_semdedup": dd_semdedup,
@@ -1981,12 +1982,9 @@ ORACLES["sim_topk_pq_served_batch"] = ORACLES["sim_topk_pq_refined"].replace(
 )
 
 
-# sim_topk_sq8's oracle — held OUT of ORACLES until its r17 filler
-# slot (opened by the r16 consolidation retiring the two quantile
-# registrations out of the r17 cohort); the pytest gate runs it
-# meanwhile. The affine/floor arithmetic is transcribed identically:
+# sim_topk_sq8's oracle transcribes the affine/floor arithmetic identically:
 # mn + floor((x - mn) * 255 / span + 0.5) * span / 255.
-SIM_SQ8_ORACLE = f"""
+ORACLES["sim_topk_sq8"] = f"""
         WITH {_DE},
         dims AS (
           SELECT s.pos AS pos, MIN(d.v[s.pos]) AS mn, MAX(d.v[s.pos]) AS mx

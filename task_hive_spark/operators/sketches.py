@@ -405,10 +405,7 @@ def sk_theta_anotb(spark: SparkSession, sf_dir: str) -> DataFrame:
     θ = min(θ_A, θ_B), |A\\B| ≈ |{h ∈ S_A : h < θ, h ∉ S_B}| · D/θ and
     symmetrically for B\\A; the symmetric difference is their sum. Same
     scale shape as sk_theta_intersect: both sides sketched
-    independently, the algebra runs on ≤ 2·K rows. Registration
-    deferred to an r15 filler slot (front capacity,
-    __spark_entry__._FRONT_R13); pytest gates it against the held-out
-    SK_THETA_ANOTB_ORACLE meanwhile."""
+    independently, the algebra runs on ≤ 2·K rows."""
     ev = load_table(spark, sf_dir, "events")
 
     def side(event_type: str) -> DataFrame:
@@ -931,6 +928,7 @@ QUERIES = {
     "sk_hll_daily": sk_hll_daily,
     "sk_hll_union": sk_hll_union,
     "sk_theta_intersect": sk_theta_intersect,
+    "sk_theta_anotb": sk_theta_anotb,
     "sk_cms_heavy_hitters": sk_cms_heavy_hitters,
     "sk_bloom_semi_join": sk_bloom_semi_join,
     "sk_quantiles": sk_quantiles,
@@ -1291,11 +1289,9 @@ ORACLES = {
 ORACLES["sk_hll_daily_served"] = ORACLES["sk_hll_daily"]
 
 
-# sk_theta_anotb's oracle — held OUT of ORACLES until its r15
-# registration; the pytest gate runs it meanwhile. Shares the
-# intersect oracle's whole sketch-construction chain; only the counts
+# sk_theta_anotb's oracle shares the intersect oracle's whole sketch-construction chain; only the counts
 # block differs (anti-membership under the common theta).
-SK_THETA_ANOTB_ORACLE = f"""
+ORACLES["sk_theta_anotb"] = f"""
     WITH ha AS (
       SELECT DISTINCT
         CAST(concat('0x', substr(md5('kmv-' || CAST(user_id AS VARCHAR)),
@@ -1349,179 +1345,3 @@ SK_THETA_ANOTB_ORACLE = f"""
     FROM stats, counts
 """
 
-
-# --- registry-capacity consolidation families (banked for r16) ------------
-# The th_assign_strategies recipe applied to the sketch sweeps: ONE
-# parameterized registration grades a whole family's semantics in one
-# slot, freeing front capacity at the r16/r17 zero-filler wall
-# (__spark_entry__._FRONT_R13's roadmap). Each family is also the
-# BETTER plan: the per-variant registrations scanned the fact table
-# once per variant; the family scans it once TOTAL and derives every
-# variant from the shared sketch state (the mergeability property the
-# per-variant docstrings advertise, now load-bearing in the plan).
-
-
-def sk_hll_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sk_hll_distinct + sk_hll_daily + sk_hll_union as one
-    parameterized surface under a ``variant`` column. The per-type and
-    union variants share ONE register build (the union is a register-
-    wise MAX over it — the mergeability story executed in-plan); the
-    daily variant widens the grouping keys, which genuinely changes
-    the register state and therefore scans once more. Superset output
-    schema; inapplicable columns are NULL (day for the non-daily
-    variants, the union summary columns elsewhere)."""
-    ev = load_table(spark, sf_dir, "events")
-    regs = hll_registers(ev)
-    per_type = hll_estimate(spark, regs)
-    daily = hll_estimate(
-        spark,
-        hll_registers(
-            ev.select(F.to_date("ts").alias("day"), "event_type", "user_id"),
-            ["day", "event_type"],
-        ),
-        ["day", "event_type"],
-    )
-    union_regs = (
-        regs.groupBy("j").agg(F.max("m").alias("m")).withColumn("event_type", F.lit("all"))
-    )
-    union_est = hll_estimate(spark, union_regs)
-    summary = per_type.agg(
-        F.count("*").cast("bigint").alias("n_groups"),
-        F.sum("est_distinct").cast("bigint").alias("sum_group_ests"),
-    )
-
-    nul = lambda t: F.lit(None).cast(t)  # noqa: E731
-    parts = [
-        per_type.select(
-            F.lit("per_type").alias("variant"),
-            nul("date").alias("day"),
-            "event_type",
-            "v_zero",
-            "sum_scaled",
-            "est_distinct",
-            nul("bigint").alias("n_groups"),
-            nul("bigint").alias("sum_group_ests"),
-            nul("bigint").alias("est_union"),
-        ),
-        daily.select(
-            F.lit("daily").alias("variant"),
-            "day",
-            "event_type",
-            "v_zero",
-            "sum_scaled",
-            "est_distinct",
-            nul("bigint").alias("n_groups"),
-            nul("bigint").alias("sum_group_ests"),
-            nul("bigint").alias("est_union"),
-        ),
-        union_est.crossJoin(F.broadcast(summary)).select(
-            F.lit("union").alias("variant"),
-            nul("date").alias("day"),
-            "event_type",
-            "v_zero",
-            "sum_scaled",
-            "est_distinct",
-            "n_groups",
-            "sum_group_ests",
-            F.col("est_distinct").alias("est_union"),
-        ),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return report_sort(out, "variant", F.asc_nulls_first("day"), "event_type")
-
-
-def sk_quantiles_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sk_quantiles + sk_quantiles_merged as one parameterized
-    surface. The direct variant's state is derived by folding the
-    monthly partials over the month key — the additive-merge-is-exact
-    property the merged query pins, now used to make the family scan
-    lineitem ONCE for both variants (the monthly exchange is planned
-    once and reused; the two per-variant registrations scanned twice)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_shipdate", "l_extendedprice"
-    )
-    vals = qsk_lineitem_vals(
-        li, F.trunc(F.to_date("l_shipdate"), "month").alias("m")
-    )
-    monthly = qsk_state(vals, ["g", "m"])
-
-    direct_state = monthly.groupBy("g", "lb").agg(
-        F.sum("cnt").cast("bigint").alias("cnt")
-    )
-    direct = qsk_estimate(direct_state, ["g"]).select(
-        F.col("g").alias("l_returnflag"),
-        "n_rows",
-        "n_buckets",
-        *[f"p{q}_cents" for q in QSK_QS],
-    )
-    merged = _merged_quantile_estimate(monthly)
-
-    nul = F.lit(None).cast("bigint")
-    out = direct.select(
-        F.lit("direct").alias("variant"),
-        "l_returnflag",
-        nul.alias("n_parts"),
-        "n_rows",
-        "n_buckets",
-        *[f"p{q}_cents" for q in QSK_QS],
-    ).unionByName(
-        merged.select(
-            F.lit("merged").alias("variant"),
-            "l_returnflag",
-            F.col("n_parts").cast("bigint").alias("n_parts"),
-            "n_rows",
-            "n_buckets",
-            *[f"p{q}_cents" for q in QSK_QS],
-        )
-    )
-    return report_sort(out, "variant", "l_returnflag")
-
-
-# Held OUT of ORACLES until the r16 consolidation swaps the per-variant
-# registrations for the families; the pytest gates run them meanwhile.
-SK_HLL_FAMILY_ORACLE = f"""
-        WITH {_HLL_REGS_CTES},
-        {_hll_regs_ctes(
-            "dregs",
-            "CAST(ts AS DATE) AS day, event_type",
-            ("day", "event_type"),
-        )},
-        uregs AS (
-          SELECT 'all' AS event_type, j, MAX(m) AS m FROM regs GROUP BY j
-        ),{_hll_est_tail("regs", "events")},{_hll_est_tail(
-            "dregs", "dregs", ("day", "event_type")
-        )},{_hll_est_tail("uregs", "uregs")}
-        SELECT 'per_type' AS variant, CAST(NULL AS DATE) AS day, event_type,
-               v_zero, sum_scaled, est_distinct,
-               CAST(NULL AS BIGINT) AS n_groups,
-               CAST(NULL AS BIGINT) AS sum_group_ests,
-               CAST(NULL AS BIGINT) AS est_union
-        FROM est_regs
-        UNION ALL
-        SELECT 'daily', day, event_type, v_zero, sum_scaled, est_distinct,
-               NULL, NULL, NULL
-        FROM est_dregs
-        UNION ALL
-        SELECT 'union', CAST(NULL AS DATE), event_type, v_zero, sum_scaled,
-               est_distinct,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM est_regs),
-               (SELECT CAST(SUM(est_distinct) AS BIGINT) FROM est_regs),
-               est_distinct
-        FROM est_uregs
-        ORDER BY variant, day NULLS FIRST, event_type
-"""
-
-SK_QUANTILES_FAMILY_ORACLE = f"""
-        SELECT 'direct' AS variant, s.l_returnflag,
-               CAST(NULL AS BIGINT) AS n_parts,
-               s.n_rows, s.n_buckets,
-               {", ".join(f"s.p{q}_cents" for q in QSK_QS)}
-        FROM ({_QSK_SQL}) s
-        UNION ALL
-        SELECT 'merged', m.l_returnflag, m.n_parts, m.n_rows, m.n_buckets,
-               {", ".join(f"m.p{q}_cents" for q in QSK_QS)}
-        FROM ({_QSK_MERGED_SQL}) m
-        ORDER BY variant, l_returnflag
-"""

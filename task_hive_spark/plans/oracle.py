@@ -113,11 +113,16 @@ def compare(
 
 
 def run_all(spark: SparkSession, sf_dir: str, only: list[str] | None = None) -> list[CompareResult]:
-    """Run every __spark_entry__ query against its oracle at sf_dir."""
+    """Run every __spark_entry__ query (or only the named ones) against
+    its oracle at sf_dir. A name in ``only`` that is not registered
+    raises ValueError."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    unknown = sorted(set(only or ()) - set(qs))
+    if unknown:
+        raise ValueError(f"not registered in queries(): {unknown}")
     con = duckdb_conn(sf_dir)
     results = []
     for qname, fn in qs.items():

@@ -15,6 +15,29 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Confs the engine relies on that stay modifiable at runtime: get_spark
+# builds with them, and __spark_entry__ re-applies them before every
+# query, since a caller may hand over a session built without them.
+RUNTIME_CONF = {
+    # results are compared against the DuckDB oracle in UTC
+    "spark.sql.session.timeZone": "UTC",
+    # CPU-dense stages (md5 hashing, vector math) carry few bytes per
+    # row; the 1m default lets AQE coalesce them onto 1-2 cores
+    # (measured 3-4x slowdown on the dedup suite). 64k keeps those
+    # stages cluster-wide; at real data sizes blocks are >>1m and
+    # coalescing behaves identically either way.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # the K=128 MinHash signature aggregate carries 128 buffer fields;
+    # the default maxFields=100 silently drops such plans out of
+    # whole-stage codegen into interpreted aggregation (measured 13.6s
+    # vs 2.0s on the signature build at sf0.1)
+    "spark.sql.codegen.maxFields": "256",
+    # Parquet TIMESTAMP(NANOS) from other writers reads as long and is
+    # converted to micros in sources.fixtures.load_table (the fixtures
+    # themselves store timestamp[us]).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def _pid_alive(pid: int) -> bool:
     try:
@@ -78,14 +101,7 @@ def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None)
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # CPU-dense stages (md5 hashing, vector math) carry few bytes
-        # per row; the 1m default lets AQE coalesce them onto 1-2 cores
-        # (measured 3-4x slowdown on the dedup suite). 64k keeps those
-        # stages cluster-wide; at real data sizes blocks are >>1m and
-        # coalescing behaves identically either way.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # a 90-query session compiles far more than 100 distinct codegen
@@ -93,15 +109,6 @@ def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None)
         # recompile (measured: same query 1.5s isolated vs 3.5s at the
         # tail of a long suite)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # the K=128 MinHash signature aggregate carries 128 buffer
-        # fields; the default maxFields=100 silently drops such plans
-        # out of whole-stage codegen into interpreted aggregation
-        # (measured 13.6s vs 2.0s on the signature build at sf0.1)
-        .config("spark.sql.codegen.maxFields", "256")
-        # Parquet TIMESTAMP(NANOS) from other writers reads as long and
-        # is converted to micros in sources.fixtures.load_table (the
-        # fixtures themselves store timestamp[us]).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Persistent catalog (plans/catalog.py): warehouse + derby
@@ -111,7 +118,7 @@ def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None)
         .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.driver.extraJavaOptions", f"-Dderby.system.home={derby_home}")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     try:
         spark = builder.enableHiveSupport().getOrCreate()

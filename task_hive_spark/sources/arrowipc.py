@@ -718,17 +718,14 @@ def read_arrowipc_dir(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
-# --- round-trip query (banked; registration when a slot opens) -------------
+# --- round-trip query ------------------------------------------------------
 
 
 def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow IPC ingest: the shared escaping-probe corpus through the
     stdlib flatbuffers writer and back through the stdlib reader,
     profiled per language against the shared profile SQL; pytest
-    additionally pins BOTH interop directions against pyarrow. Held
-    OUT of the registered QUERIES until a filler slot opens
-    (__spark_entry__._FRONT_R13); the pytest gate covers it
-    meanwhile."""
+    additionally pins BOTH interop directions against pyarrow."""
     import tempfile
 
     from task_hive_spark.materialize import session_memo
@@ -743,10 +740,13 @@ def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _profile(read_arrowipc_dir(spark, session_memo(spark, ("arrowipc_ingest", sf_dir), build)))
 
 
-def _oracle() -> str:
+QUERIES = {"src_arrowipc_roundtrip": src_arrowipc_roundtrip}
+
+
+def _oracles() -> dict[str, str]:
     from task_hive_spark.sources.textfiles import _PROFILE_SQL
 
-    return _PROFILE_SQL
+    return {"src_arrowipc_roundtrip": _PROFILE_SQL}
 
 
-SRC_ARROWIPC_ORACLE = _oracle()
+ORACLES = _oracles()

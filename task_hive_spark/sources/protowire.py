@@ -218,7 +218,7 @@ def read_protowire_dir(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
-# --- round-trip query (r15 registration candidate) -------------------------
+# --- round-trip query ------------------------------------------------------
 
 
 def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,9 +227,7 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and back, profiled per language against the shared profile SQL — a
     green hash proves the varint/UTF-8 wire encode → decode is
     byte-lossless, including proto3 default omission for the corpus's
-    doc_id 0 row. Held OUT of the registered QUERIES until an r15
-    filler slot (front capacity, __spark_entry__._FRONT_R13); the
-    pytest gate covers it meanwhile."""
+    doc_id 0 row."""
     import tempfile
 
     from task_hive_spark.materialize import session_memo
@@ -244,10 +242,13 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _profile(read_protowire_dir(spark, session_memo(spark, ("protowire_ingest", sf_dir), build)))
 
 
-def _oracle() -> str:
+QUERIES = {"src_protowire_roundtrip": src_protowire_roundtrip}
+
+
+def _oracles() -> dict[str, str]:
     from task_hive_spark.sources.textfiles import _PROFILE_SQL
 
-    return _PROFILE_SQL
+    return {"src_protowire_roundtrip": _PROFILE_SQL}
 
 
-SRC_PROTOWIRE_ORACLE = _oracle()
+ORACLES = _oracles()

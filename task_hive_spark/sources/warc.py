@@ -528,7 +528,7 @@ def read_warc_dir_split(
     )
 
 
-# --- round-trip query (banked; registration when a slot opens) -------------
+# --- round-trip query ------------------------------------------------------
 
 
 def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,9 +537,7 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiled per language against the shared profile SQL — a green
     hash proves the gzip-member + record-grammar + HTTP + utf-8 path
     is byte-lossless end to end, with BOTH spec digests verified on
-    every record read. Held OUT of the registered QUERIES until a
-    filler slot opens (front capacity, __spark_entry__._FRONT_R13);
-    the pytest gate covers it meanwhile."""
+    every record read."""
     import tempfile
 
     from task_hive_spark.materialize import session_memo
@@ -554,10 +552,13 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _profile(read_warc_dir(spark, session_memo(spark, ("warc_ingest", sf_dir), build)))
 
 
-def _oracle() -> str:
+QUERIES = {"src_warc_ingest": src_warc_ingest}
+
+
+def _oracles() -> dict[str, str]:
     from task_hive_spark.sources.textfiles import _PROFILE_SQL
 
-    return _PROFILE_SQL
+    return {"src_warc_ingest": _PROFILE_SQL}
 
 
-SRC_WARC_ORACLE = _oracle()
+ORACLES = _oracles()

@@ -11,7 +11,7 @@ import struct
 
 import pytest
 
-from task_hive_spark.plans.oracle import compare, duckdb_conn
+from task_hive_spark.plans.oracle import run_all
 
 RECS = [
     (i, "en" if i % 2 else "fr", f'doc {i} üñïçødé "quoted" back\\slash')
@@ -148,17 +148,7 @@ def test_arrowipc_distributed_round_trip_is_lossless(spark, sf_dir, tmp_path):
 
 
 def test_arrowipc_roundtrip_matches_profile_oracle(spark, sf_dir):
-    from task_hive_spark.sources.arrowipc import (
-        SRC_ARROWIPC_ORACLE,
-        src_arrowipc_roundtrip,
-    )
-
-    res = compare(
-        "src_arrowipc_roundtrip",
-        src_arrowipc_roundtrip(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SRC_ARROWIPC_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["src_arrowipc_roundtrip"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 

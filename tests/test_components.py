@@ -51,3 +51,22 @@ def test_chain_and_star_shapes(spark):
 
 def test_limit_constant_is_sane():
     assert CC_LOCAL_EDGE_LIMIT >= 100_000
+
+
+def test_labeling_literal_is_capped_by_rendered_bytes(spark):
+    """Full-range 19-digit BIGINT ids render ~75 B of VALUES text per
+    row, so 20,000 labels (far under any row cap sized for small ids)
+    would be a ~1.5 MB statement: over the byte budget the labeling
+    takes the checkpoint path (LogicalRDD leaf), not the literal
+    (LocalRelation), with the same answer; small ids keep the literal."""
+    base = 9_000_000_000_000_000_000
+    edges = [(base + 2 * i, base + 2 * i + 1) for i in range(10_000)]
+    comps = min_label_components(spark.createDataFrame(edges, "a bigint, b bigint"))
+    plan = comps._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "LocalRelation" not in plan
+    got = {(r["node"], r["component"]) for r in comps.collect()}
+    assert got == {(n, a) for a, b in edges for n in (a, b)}
+
+    small = [(2 * i, 2 * i + 1) for i in range(5_000)]
+    comps = min_label_components(spark.createDataFrame(small, "a bigint, b bigint"))
+    assert "LocalRelation" in comps._jdf.queryExecution().optimizedPlan().toString()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from task_hive_spark.plans.oracle import compare, duckdb_conn
+from task_hive_spark.plans.oracle import run_all
 
 
 def test_html_roundtrip_is_exact():
@@ -79,16 +79,6 @@ def test_html_extractor_tolerates_hostile_markup():
 
 
 def test_html_extract_matches_profile_oracle(spark, sf_dir):
-    from task_hive_spark.operators.htmlextract import (
-        TXT_HTML_ORACLE,
-        txt_html_extract,
-    )
-
-    res = compare(
-        "txt_html_extract",
-        txt_html_extract(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        TXT_HTML_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["txt_html_extract"])
     assert res.ok, res.detail
     assert res.spark_rows > 0

@@ -1,7 +1,6 @@
 """Round-13 additions: batched serves, swap-crash recovery, atomic Avro
-sink, tz-aware debt metric, MP3 side-info decode — plus the session-2
-banked surface's gates: FLAC PCM decode, the sketch consolidation
-families, SQ8 scalar-quantized ANN, content-defined chunking, and the
+sink, tz-aware debt metric, MP3 side-info decode — plus FLAC PCM
+decode, SQ8 scalar-quantized ANN, content-defined chunking, and the
 sink retry-idempotence pins."""
 
 from __future__ import annotations
@@ -10,34 +9,18 @@ import os
 
 import pytest
 
-from task_hive_spark.plans.oracle import compare, duckdb_conn
+from task_hive_spark.plans.oracle import run_all
 
 
-# --- batched dedup serve (registered r14; gated here meanwhile) -----------
-
-
-def test_dd_served_batch_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.dedup import (
-        DD_SERVED_BATCH_ORACLE,
-        dd_dedup_served_batch,
-    )
-
-    res = compare(
-        "dd_dedup_served_batch",
-        dd_dedup_served_batch(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        DD_SERVED_BATCH_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0  # 5 probe docs at fixture scale
+# --- batched dedup serve ---------------------------------------------------
 
 
 def test_dd_served_batch_prunes_to_batch_bound(spark, sf_dir):
-    """kept files ≤ |batch| · LSH_BANDS — the serve reads O(batch)."""
+    """kept files ≤ |batch| · LSH_BANDS — the serve reads O(batch) for a
+    re-crawl batch of every 104th new doc."""
     from pyspark.sql import functions as F
 
     from task_hive_spark.operators.dedup import (
-        BATCH_PROBE_MOD,
         LSH_BANDS,
         NEW_OFFSET,
         _dedup_index_clustered,
@@ -47,7 +30,7 @@ def test_dd_served_batch_prunes_to_batch_bound(spark, sf_dir):
 
     idx, stats = _dedup_index_clustered(spark, sf_dir)
     probe = new_batch_df(spark, sf_dir).where(
-        (F.col("doc_id") - NEW_OFFSET) % BATCH_PROBE_MOD == 0
+        (F.col("doc_id") - NEW_OFFSET) % 104 == 0
     )
     n_probe = probe.count()
     _out, kept, total = dedup_served_pruned_of(spark, idx, stats, probe)
@@ -208,19 +191,7 @@ def test_mp3_sideinfo_rejects_hostile_streams():
 
 
 def test_mp3_scalefactors_spark_vs_oracle(spark, sf_dir):
-    """The r14-deferred registration gated here meanwhile (like the
-    batched dedup serve): Spark decode vs the arithmetic oracle."""
-    from task_hive_spark.operators.multimodal import (
-        MM_SF_ORACLE,
-        mm_decode_mp3_scalefactors,
-    )
-
-    res = compare(
-        "mm_decode_mp3_scalefactors",
-        mm_decode_mp3_scalefactors(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        MM_SF_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["mm_decode_mp3_scalefactors"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
@@ -270,19 +241,13 @@ def test_mp3_sideinfo_bit_positions_are_load_bearing():
     assert got[4:] == base[4:]  # every later field still decodes intact
 
 
-# --- triangle census (registered r15; gated here meanwhile) -----------------
+# --- triangle census -------------------------------------------------------
 
 
 def test_triangle_stats_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.graph import GR_TRIANGLE_ORACLE, gr_triangle_stats
-
-    res = compare(
-        "gr_triangle_stats",
-        gr_triangle_stats(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        GR_TRIANGLE_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["gr_triangle_stats"])
     assert res.ok, res.detail
+    assert res.spark_rows > 0
 
 
 def test_triangle_stats_matches_bruteforce_model(spark, sf_dir):
@@ -369,7 +334,7 @@ def test_ann_partial_append_is_invisible_not_wrong(spark, sf_dir, tmp_path):
         update_ann_index_clustered(spark, out, nxt)
 
 
-# --- protobuf wire-format source (registered r15; gated here meanwhile) -----
+# --- protobuf wire-format source -------------------------------------------
 
 
 def test_protowire_message_grammar_is_real():
@@ -414,29 +379,16 @@ def test_protowire_message_grammar_is_real():
 
 
 def test_protowire_roundtrip_matches_profile_oracle(spark, sf_dir):
-    from task_hive_spark.sources.protowire import (
-        SRC_PROTOWIRE_ORACLE,
-        src_protowire_roundtrip,
-    )
-
-    res = compare(
-        "src_protowire_roundtrip",
-        src_protowire_roundtrip(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SRC_PROTOWIRE_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["src_protowire_roundtrip"])
     assert res.ok, res.detail
+    assert res.spark_rows > 0
 
 
-# --- Ogg page probe (registered r15; gated here meanwhile) ------------------
+# --- Ogg page probe --------------------------------------------------------
 
 
 def test_ogg_probe_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.multimodal import MM_OGG_ORACLE, mm_probe_ogg
-
-    res = compare(
-        "mm_probe_ogg", mm_probe_ogg(spark, sf_dir), duckdb_conn(sf_dir), MM_OGG_ORACLE
-    )
+    (res,) = run_all(spark, sf_dir, only=["mm_probe_ogg"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
@@ -481,22 +433,13 @@ def test_ogg_probe_rejects_hostile_framing():
         probe_ogg(bytes(page) + bytes(clean[27 + n_segs + body :]))
 
 
-# --- theta A-not-B (registered r15; gated here meanwhile) -------------------
+# --- theta A-not-B ---------------------------------------------------------
 
 
 def test_theta_anotb_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.sketches import (
-        SK_THETA_ANOTB_ORACLE,
-        sk_theta_anotb,
-    )
-
-    res = compare(
-        "sk_theta_anotb",
-        sk_theta_anotb(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SK_THETA_ANOTB_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["sk_theta_anotb"])
     assert res.ok, res.detail
+    assert res.spark_rows > 0
 
 
 def test_theta_set_algebra_is_consistent(spark, sf_dir):
@@ -512,18 +455,11 @@ def test_theta_set_algebra_is_consistent(spark, sf_dir):
     )
 
 
-# --- FLAC STREAMINFO probe (registered r15; gated here meanwhile) -----------
+# --- FLAC STREAMINFO probe -------------------------------------------------
 
 
 def test_flac_probe_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.multimodal import MM_FLAC_ORACLE, mm_probe_flac
-
-    res = compare(
-        "mm_probe_flac",
-        mm_probe_flac(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        MM_FLAC_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["mm_probe_flac"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
@@ -556,21 +492,11 @@ def test_flac_probe_rejects_hostile_streams():
     assert got[:4] == base[:4] and got[5:] == base[5:]
 
 
-# --- FLAC frame decode to exact PCM (banked; gated here meanwhile) ----------
+# --- FLAC frame decode to exact PCM ----------------------------------------
 
 
 def test_flac_pcm_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.multimodal import (
-        MM_FLAC_PCM_ORACLE,
-        mm_decode_flac_pcm,
-    )
-
-    res = compare(
-        "mm_decode_flac_pcm",
-        mm_decode_flac_pcm(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        MM_FLAC_PCM_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["mm_decode_flac_pcm"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
@@ -724,93 +650,6 @@ def test_flac_constant_and_wasted_bits_subframes():
             _decode_flac_subframe(_FlacBitReader(bw3.done()), 1, 8)
 
 
-# --- consolidation families (banked for the r16 swap; gated here) ----------
-
-
-def test_sk_hll_family_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.sketches import SK_HLL_FAMILY_ORACLE, sk_hll_family
-
-    res = compare(
-        "sk_hll_family",
-        sk_hll_family(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SK_HLL_FAMILY_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 3  # per_type rows + daily rows + the union row
-
-
-def test_sk_hll_family_rows_equal_the_per_variant_queries(spark, sf_dir):
-    """The consolidation is a re-arrangement, not a re-derivation: the
-    family's variant slices must equal the standing registrations'
-    answers row for row."""
-    from pyspark.sql import functions as F
-
-    from task_hive_spark.operators.sketches import (
-        sk_hll_daily,
-        sk_hll_distinct,
-        sk_hll_family,
-        sk_hll_union,
-    )
-
-    fam = sk_hll_family(spark, sf_dir).cache()
-    try:
-        per_type = [
-            tuple(r)
-            for r in fam.where(F.col("variant") == "per_type")
-            .select("event_type", "v_zero", "sum_scaled", "est_distinct")
-            .collect()
-        ]
-        assert per_type == [tuple(r) for r in sk_hll_distinct(spark, sf_dir).collect()]
-        daily = [
-            tuple(r)
-            for r in fam.where(F.col("variant") == "daily")
-            .select("day", "event_type", "v_zero", "sum_scaled", "est_distinct")
-            .collect()
-        ]
-        assert daily == [tuple(r) for r in sk_hll_daily(spark, sf_dir).collect()]
-        union = [
-            tuple(r)
-            for r in fam.where(F.col("variant") == "union")
-            .select("n_groups", "sum_group_ests", "est_union")
-            .collect()
-        ]
-        assert union == [tuple(r) for r in sk_hll_union(spark, sf_dir).collect()]
-    finally:
-        fam.unpersist()
-
-
-def test_sk_quantiles_family_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.sketches import (
-        SK_QUANTILES_FAMILY_ORACLE,
-        sk_quantiles_family,
-    )
-
-    res = compare(
-        "sk_quantiles_family",
-        sk_quantiles_family(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SK_QUANTILES_FAMILY_ORACLE,
-    )
-    assert res.ok, res.detail
-    assert res.spark_rows > 0
-
-
-def test_sk_quantiles_family_scans_lineitem_once(spark, sf_dir):
-    """The family's one-scan claim, plan-asserted on the FINAL adaptive
-    plan (exchange reuse is an AQE runtime decision): the direct
-    variant folds the monthly partials instead of re-scanning, so the
-    shared monthly exchange is read twice and the scan stage runs
-    once."""
-    from task_hive_spark.operators.sketches import sk_quantiles_family
-
-    df = sk_quantiles_family(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    assert "ReusedExchange" in plan
-
-
 def test_protowire_sink_retry_overwrites_not_duplicates(spark, tmp_path):
     """The avro/warc/arrow retry discipline for the protobuf stream
     sink too: deterministic part names, stranded .tmp invisible."""
@@ -837,18 +676,11 @@ def test_protowire_sink_retry_overwrites_not_duplicates(spark, tmp_path):
     assert read_protowire_dir(spark, out).count() == 100
 
 
-# --- SQ8 scalar-quantized ANN (banked for an r17 slot) ----------------------
+# --- SQ8 scalar-quantized ANN ----------------------------------------------
 
 
 def test_sim_topk_sq8_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.similarity import SIM_SQ8_ORACLE, sim_topk_sq8
-
-    res = compare(
-        "sim_topk_sq8",
-        sim_topk_sq8(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SIM_SQ8_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["sim_topk_sq8"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
@@ -875,18 +707,11 @@ def test_sim_topk_sq8_quantization_is_real_but_faithful(spark, sf_dir):
     assert overlap >= 0.8, f"SQ8 recall vs brute collapsed: {overlap:.2f}"
 
 
-# --- content-defined chunking (banked for the second r17 slot) --------------
+# --- content-defined chunking ----------------------------------------------
 
 
 def test_dd_cdc_chunks_matches_oracle(spark, sf_dir):
-    from task_hive_spark.operators.dedup import DD_CDC_ORACLE, dd_cdc_chunks
-
-    res = compare(
-        "dd_cdc_chunks",
-        dd_cdc_chunks(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        DD_CDC_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["dd_cdc_chunks"])
     assert res.ok, res.detail
     assert res.spark_rows > 0  # the augmented corpus guarantees dup chunks
 

@@ -122,7 +122,7 @@ def test_bucketed_prefix_materializes_input_once(spark):
 def test_components_labeling_is_materialized(spark):
     """fe0d29d / r14: the driver-local union-find labeling must never
     plan a re-pickled Python-RDD scan under its consumers. r14 shape:
-    integral labelings within _LABEL_LITERAL_MAX come back as a VALUES
+    integral labelings within _LABEL_LITERAL_MAX_BYTES come back as a VALUES
     literal (LocalRelation — no job at all); bigger or non-integral
     ones keep the r13 eager localCheckpoint (LogicalRDD)."""
     from task_hive_spark.functions.components import min_label_components
@@ -150,7 +150,7 @@ def test_components_labeling_over_literal_cap_checkpoints(spark, monkeypatch):
     )
     lit_rows = {(r["node"], r["component"])
                 for r in C.min_label_components(pairs).collect()}
-    monkeypatch.setattr(C, "_LABEL_LITERAL_MAX", 2)
+    monkeypatch.setattr(C, "_LABEL_LITERAL_MAX_BYTES", 50)
     comps = C.min_label_components(pairs)
     assert {(r["node"], r["component"]) for r in comps.collect()} == lit_rows
     assert "LogicalRDD" in _plan(comps)

@@ -10,7 +10,7 @@ import os
 
 import pytest
 
-from task_hive_spark.plans.oracle import compare, duckdb_conn
+from task_hive_spark.plans.oracle import run_all
 
 
 def _roundtrip(recs):
@@ -179,14 +179,7 @@ def test_warc_distributed_round_trip_is_lossless(spark, sf_dir, tmp_path):
 
 
 def test_warc_ingest_matches_profile_oracle(spark, sf_dir):
-    from task_hive_spark.sources.warc import SRC_WARC_ORACLE, src_warc_ingest
-
-    res = compare(
-        "src_warc_ingest",
-        src_warc_ingest(spark, sf_dir),
-        duckdb_conn(sf_dir),
-        SRC_WARC_ORACLE,
-    )
+    (res,) = run_all(spark, sf_dir, only=["src_warc_ingest"])
     assert res.ok, res.detail
     assert res.spark_rows > 0
 
