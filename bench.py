@@ -143,62 +143,17 @@ def main() -> int:
     spark = get_spark("bench")
     qs = entrymod.queries()
     names = [n for n in HEADLINE if n in qs]
-
-    # Warm the JVM, fixture views and parquet footers once so per-query
-    # numbers measure the query, not session setup.
-    qs["th_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Two unmeasured passes per query at the TARGET sf_dir, then the
-    # timed pass: the timed run measures warm steady-state throughput —
-    # codegen classes compiled AND C2-JITed (the md5-dense dedup queries
-    # need several thousand invocations before HotSpot promotes the
-    # generated code; measured 9s -> 1.5s over six runs), parquet
-    # footers read, AQE runtime statistics planned — the same
-    # warm-session methodology the DuckDB baseline is timed under.
-    # Cold-start cost is a per-session constant, not a per-query
-    # property of the plan.
-    def _pre_run(name: str) -> None:
-        # txt_bpe_merges memoizes its ENTIRE learned result per session
-        # (the trainer/tokenizer share one learning run); timing the
-        # cached list would be fake. Clear it so every measured run
-        # re-learns — the word-frequency session index stays warm, the
-        # same index-amortized footing as every other headline query.
-        if name == "txt_bpe_merges":
-            from task_hive_spark.materialize import drop_memo
-
-            drop_memo(spark, ("bpe_merges", sf_dir))
-        # the LSH pair frame is a shared session index (dd_split_leakage
-        # reads it warm — its bench number is the marginal audit cost,
-        # like txt_tokenized_dataset's warm-trainer precedent); timing
-        # the builder itself on the cache would be fake, so rebuild it
-        # every measured run
-        if name == "dd_minhash_lsh_pairs":
-            from task_hive_spark.materialize import drop_memo
-
-            drop_memo(spark, ("index", sf_dir, "lsh_pairs"))
-
-    for _ in range(2):
-        for name in names:
-            try:
-                _pre_run(name)
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass  # warm-up is best-effort; the timed run surfaces real errors
+    warm_up(spark, qs, sf_dir, names)
 
     # Best-of-3 per query: a single local-mode run is hostage to GC /
     # broadcast-cleanup timing noise (measured swings up to 2x on the
     # CPU-dense dedup queries) plus host-tenancy contention; the min of
     # three warm runs is the plan's actual cost — the same N the DuckDB
     # baseline (scripts/duckdb_baseline.py N_RUNS=3) is timed under.
-    timings: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            _pre_run(name)
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 4)
+    timings = {
+        name: round(min(timed_run(spark, qs, sf_dir, name) for _ in range(3)), 4)
+        for name in names
+    }
 
     # Scheduling-sim throughput (BASELINE.md contract: the reference's
     # implied ceiling is 5 tasks/s/worker): tasks dispatched through the
@@ -223,6 +178,61 @@ def main() -> int:
         )
     )
     return 0
+
+
+def noop(df) -> None:
+    """Materialize every column of ``df`` without collecting it."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def pre_run(spark, sf_dir: str, name: str) -> None:
+    """Drop the session memos that would let a measured run of ``name``
+    time a cached answer instead of the query."""
+    from task_hive_spark.materialize import drop_memo
+
+    # txt_bpe_merges memoizes its ENTIRE learned result per session
+    # (the trainer/tokenizer share one learning run); timing the
+    # cached list would be fake. Clear it so every measured run
+    # re-learns — the word-frequency session index stays warm, the
+    # same index-amortized footing as every other headline query.
+    if name == "txt_bpe_merges":
+        drop_memo(spark, ("bpe_merges", sf_dir))
+    # the LSH pair frame is a shared session index (dd_split_leakage
+    # reads it warm — its bench number is the marginal audit cost,
+    # like txt_tokenized_dataset's warm-trainer precedent); timing
+    # the index build itself on the cache would be fake, so rebuild it
+    # every measured run
+    if name == "dd_minhash_lsh_pairs":
+        drop_memo(spark, ("index", sf_dir, "lsh_pairs"))
+
+
+def warm_up(spark, qs: dict, sf_dir: str, names: list[str]) -> None:
+    """Warm the JVM, fixture views and parquet footers once, then run
+    two unmeasured passes per query at the TARGET sf_dir, so a timed
+    run measures warm steady-state throughput — codegen classes
+    compiled AND C2-JITed (the md5-dense dedup queries need several
+    thousand invocations before HotSpot promotes the generated code;
+    measured 9s -> 1.5s over six runs), parquet footers read, AQE
+    runtime statistics planned — the same warm-session methodology the
+    DuckDB baseline is timed under. Cold-start cost is a per-session
+    constant, not a per-query property of the plan."""
+    noop(qs["th_stats"](spark, sf_dir))
+    for _ in range(2):
+        for name in names:
+            try:
+                pre_run(spark, sf_dir, name)
+                noop(qs[name](spark, sf_dir))
+            except Exception:
+                pass  # warm-up is best-effort; the timed run surfaces real errors
+
+
+def timed_run(spark, qs: dict, sf_dir: str, name: str) -> float:
+    """Seconds of one measured run: plan construction (serve and fit
+    queries do eager driver work there) plus the noop write."""
+    pre_run(spark, sf_dir, name)
+    t0 = time.perf_counter()
+    noop(qs[name](spark, sf_dir))
+    return time.perf_counter() - t0
 
 
 def _calibrate(spark) -> float:

@@ -43,6 +43,7 @@ def main() -> int:
     names = sys.argv[2:] or DEFAULT_QUERIES
 
     import __spark_entry__ as entrymod
+    from bench import timed_run, warm_up
     from task_hive_spark.plans.oracle import duckdb_conn
     from task_hive_spark.session import get_spark
 
@@ -56,20 +57,11 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     con = duckdb_conn(SF1_DIR)
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
+    # Spark: bench.py's warm-up and its timed run, best-of-3
+    warm_up(spark, qs, SF1_DIR, names)
     results: dict[str, dict] = {}
     for name in names:
-        # Spark: two unmeasured warm passes (codegen + C2 + AQE stats +
-        # session indexes), then best-of-3 — bench.py's methodology.
-        for _ in range(2):
-            noop(qs[name](spark, SF1_DIR))
-        s_best = float("inf")
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            noop(qs[name](spark, SF1_DIR))
-            s_best = min(s_best, time.perf_counter() - t0)
+        s_best = min(timed_run(spark, qs, SF1_DIR, name) for _ in range(N_RUNS))
         # DuckDB: warm once, then best-of-3 (duckdb_baseline.py's N).
         sql = oracles[name]
         con.execute(sql).fetchall()

@@ -261,7 +261,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     # set to functions.text.shingles, which keeps the per-row HOF form
     # for column-level use). The interpreted transform(slice) HOF this
     # replaces measured ~30% slower on the gram stage and ~45% slower
-    # on the downstream signature aggregations (scripts/perf_probe.py).
+    # on the downstream signature aggregations (staged sub-plans at sf0.1).
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return _doc_shingles_of(corpus_df(spark, sf_dir).repartition(nshuf, "doc_id"), n)
 
@@ -851,7 +851,7 @@ def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) signature column, materialized once per
     (session, sf_dir): near-pair bucketing and duplicate clustering
     both consume it, and the gram explode + md5 underneath is ~70% of
-    the query's cost (measured via scripts/perf_probe.py). Per shingle
+    the query's cost (staged sub-plans timed at sf0.1). Per shingle
     hash each bit votes ±1 and the sign of the per-bit sum forms the
     signature; the vote sum is folded as set-bit COUNTS (sign(Σ±1) ⟺
     2·popcount > n), which drops the per-row CASE branch from all 32
