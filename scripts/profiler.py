@@ -106,11 +106,8 @@ def profile_queries(spark, tracer: Tracer, qs: dict, sf_dir: str, names: list[st
 
 
 def drain_table(spark, sf_dir: str) -> tuple[dict, dict]:
-    """(feed -> writer(feed_dir), drain -> (feed, untimed setup(work) or
-    None, drain(work, feed_dir)))."""
-    from pyspark.sql import functions as F
-
-    from task_hive_spark.sources.fixtures import load_table
+    """(feed -> its builder, called as builder(spark, sf_dir, feed_dir);
+    drain -> (feed, untimed setup(work) or None, drain(work, feed_dir)))."""
     from task_hive_spark.streaming import (
         cdcmerge,
         dedupstream,
@@ -123,35 +120,13 @@ def drain_table(spark, sf_dir: str) -> tuple[dict, dict]:
 
     n = lifecycle.N_CHUNKS
     feeds = {
-        "events": lambda d: lifecycle._write_chunks(spark, sf_dir, d, n),
-        "replay": lambda d: dedupstream._write_replay_chunks(spark, sf_dir, d, n),
-        "changes": lambda d: cdcmerge._write_change_chunks(
-            spark, sf_dir, d, cdcmerge.N_CHANGE_CHUNKS
-        ),
-        "docs": lambda d: minhashstream._write_doc_chunks(
-            spark, sf_dir, d, minhashstream.N_DOC_CHUNKS
-        ),
-        "sketch_events": lambda d: sketchstream._event_feed(
-            spark, sf_dir, os.path.dirname(d), sketchstream.N_EVENT_CHUNKS
-        ),
-        # the two feeds sketchstream.run_cms_once / run_qsk_once write
-        "sketch_docs": lambda d: sketchstream._write_chunks(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            "doc_id",
-            d,
-            sketchstream.N_DOC_CHUNKS,
-        ),
-        "lineitem": lambda d: sketchstream._write_chunks(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey",
-                "l_returnflag",
-                "l_extendedprice",
-                F.trunc(F.to_date("l_shipdate"), "month").alias("m"),
-            ),
-            "l_orderkey",
-            d,
-            sketchstream.N_LINEITEM_CHUNKS,
-        ),
+        "events": lifecycle.event_feed,
+        "replay": dedupstream.replay_feed,
+        "changes": cdcmerge.change_feed,
+        "docs": minhashstream.doc_feed,
+        "sketch_events": sketchstream.event_feed,
+        "sketch_docs": sketchstream.doc_feed,
+        "lineitem": sketchstream.lineitem_feed,
     }
     drains = {
         "lifecycle": (
@@ -190,7 +165,7 @@ def profile_drains(spark, tracer: Tracer, sf_dir: str, names: list[str]):
             feed, setup, drain = drains[name]
             if feed not in built:
                 built[feed] = tempfile.mkdtemp(prefix=f"profile_feed_{feed}_", dir=_scratch_root())
-                feeds[feed](os.path.join(built[feed], "feed"))
+                feeds[feed](spark, sf_dir, os.path.join(built[feed], "feed"))
             work = tempfile.mkdtemp(prefix=f"profile_drain_{name}_", dir=_scratch_root())
             try:
                 if setup is not None:

@@ -23,6 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
+
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 DEFAULT = [
@@ -907,12 +909,12 @@ def main() -> int:
         rows: dict[str, int] = {}
         for sf_dir in SF_DIRS:
             tag = os.path.basename(sf_dir)
-            # warm run compiles codegen; timed run measures the query
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            n = qs[name](spark, sf_dir).count()
-            secs[tag] = round(time.perf_counter() - t0, 3)
-            rows[tag] = n
+            # warm run compiles codegen; the timed run is bench's (memo
+            # reset, then plan construction plus the noop write); rows
+            # are counted in a separate, untimed run
+            bench.noop(qs[name](spark, sf_dir))
+            secs[tag] = round(bench.timed_run(spark, qs, sf_dir, name), 3)
+            rows[tag] = qs[name](spark, sf_dir).count()
         growth_time = round(secs["sf0.1"] / max(secs["sf0.01"], 1e-9), 2)
         growth_rows = round(rows["sf0.1"] / max(rows["sf0.01"], 1), 2)
         print(

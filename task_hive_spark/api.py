@@ -55,8 +55,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window as W, functions as F
 
+from task_hive_spark.materialize import latest_committed_version
 from task_hive_spark.operators.assign import STRATEGIES, bind
 from task_hive_spark.operators.processors import (
+    BACKOFF_BASE_NS,
     MAX_RETRIES,
     N_BUCKETS,
     _DISPATCH_SCHEMA,
@@ -77,7 +79,7 @@ def worker_is_active() -> F.Column:
         F.current_timestamp().cast("long") - F.col("last_heartbeat").cast("long")
         < LIVENESS_THRESHOLD_S
     ).alias("is_active")
-BACKOFF_BASE_NS = 2_000_000_000  # worker.go:73-79: 2s * 2^(n-1)
+
 
 _TASK_COLS = [
     "id",
@@ -138,14 +140,11 @@ class TaskHive:
         self._server = None  # lazy HTTP layer (serve() / config.api_port)
         # a work_dir that already holds snapshots is RESUMED, not reset
         # (the reference's etcd state outlives the process): adopt the
-        # highest version; only a fresh dir gets the empty v0
-        existing = [
-            int(d.rsplit("_v", 1)[1])
-            for d in (os.listdir(self.work_dir) if os.path.isdir(self.work_dir) else [])
-            if d.startswith("tasks_v") and d.rsplit("_v", 1)[1].isdigit()
-        ]
-        if existing:
-            self._version = max(existing)
+        # highest committed version — a snapshot whose write was cut
+        # short is not one; only a dir without any gets the empty v0
+        existing = latest_committed_version(self.work_dir, "tasks_v")
+        if existing is not None:
+            self._version = existing
         else:
             self._version = 0
             self._write_tasks(

@@ -12,7 +12,7 @@ The scalable shape is the textbook two-pass scan fan-out:
 3. each row's global prefix = its bucket's offset + a PARTITIONED
    running aggregate within the bucket.
 
-Consumers: ``streaming.lifecycle.with_chunk`` (row ranks → ntile
+Consumers: ``streaming.feed.with_chunk`` (row ranks → ntile
 numbering, hypothesis-property-tested) and
 ``operators.textops.txt_sequence_pack`` (token offsets → training
 bins). Both ride this one implementation so edge-case fixes (empty

@@ -25,6 +25,7 @@ cheaper than spilling it to storage.
 
 from __future__ import annotations
 
+import os
 import threading
 from collections.abc import Callable
 from typing import TypeVar
@@ -219,3 +220,17 @@ def session_index(
         return df
 
     return session_memo(spark, ("index", sf_dir, name), materialize)
+
+
+def latest_committed_version(root: str, prefix: str) -> int | None:
+    """Highest N such that ``root/{prefix}N`` holds the _SUCCESS marker
+    the parquet committer writes last, or None. A versioned snapshot
+    whose write was cut short has no marker and is never adopted."""
+    versions = [
+        int(d[len(prefix):])
+        for d in (os.listdir(root) if os.path.isdir(root) else [])
+        if d.startswith(prefix)
+        and d[len(prefix):].isdigit()
+        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
+    ]
+    return max(versions, default=None)

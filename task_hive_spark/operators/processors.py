@@ -51,6 +51,9 @@ from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
 TASK_PROCESSORS: dict[str, Callable[[dict], str]] = {}
 
 MAX_RETRIES = 3  # common/constants.go:20
+# the retry backoff 2s·2^(n−1) (worker.go:73-79)
+BACKOFF_BASE_S = 2
+BACKOFF_BASE_NS = BACKOFF_BASE_S * 1_000_000_000
 TASK_TIMEOUT_S = 300  # common/constants.go:21 (5 minutes)
 BASE_WORK_S = 2  # worker.go:231 fixed delay
 N_BUCKETS = 64  # dispatch fan-out; bounded group size at any scale

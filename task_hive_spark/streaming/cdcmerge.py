@@ -35,11 +35,10 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import session_memo
+from task_hive_spark.materialize import latest_committed_version
 from task_hive_spark.operators.queries import (
     CHANGES_SQL,
     ORACLES as _Q_ORACLES,
@@ -47,7 +46,13 @@ from task_hive_spark.operators.queries import (
     merge_profile,
 )
 from task_hive_spark.operators.taskmodel import tasks_df
-from task_hive_spark.streaming.lifecycle import _scratch_root
+from task_hive_spark.streaming.feed import (
+    drain,
+    memoized_run,
+    read_feed,
+    with_hash_chunk,
+    write_chunks,
+)
 
 _CHANGE_SCHEMA = (
     "id STRING, op STRING, new_status STRING, new_priority INT, new_worker_id STRING"
@@ -56,43 +61,25 @@ N_CHANGE_CHUNKS = 4
 REPLAY_MOD = 3  # a deterministic ~third of change rows is delivered twice
 
 
-def _write_change_chunks(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int
-) -> None:
-    """Chunk the change batch by id hash (ids are unique and unordered —
-    CDC chunking needs determinism, not time order) and re-deliver every
-    REPLAY_MOD-th row in the following chunk (wrapping), with strictly
-    increasing mtimes so the file source replays delivery order."""
+def change_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHANGE_CHUNKS
+) -> str:
+    """The change batch chunked by id hash (ids are unique and
+    unordered — CDC chunking needs determinism, not time order), with
+    every REPLAY_MOD-th row re-delivered in the following chunk
+    (wrapping)."""
     tasks_df(spark, sf_dir)  # registers the fixture views CHANGES_SQL reads
-    c = spark.sql(CHANGES_SQL)
-    # pmod, not abs-then-%: abs(Long.MIN_VALUE) is still negative
-    # (two's complement), and a negative chunk would match no chunk
-    # filter below — the row would silently vanish from the feed.
-    # Chunk and replay draws use independently-salted hashes so the
-    # replay subset is uniform across chunks for ANY n_chunks.
-    chunk = F.pmod(F.xxhash64("id"), F.lit(n_chunks))
+    ranked = with_hash_chunk(spark.sql(CHANGES_SQL), "id", n_chunks)
+    # chunk and replay draws use independently-salted hashes so the
+    # replay subset is uniform across chunks for ANY n_chunks
     replay = F.pmod(F.xxhash64(F.lit("replay"), F.col("id")), F.lit(REPLAY_MOD)) == 0
-    ranked = c.withColumn("chunk", chunk.cast("int"))
     replays = ranked.where(replay).withColumn(
-        "chunk", ((F.col("chunk") + 1) % n_chunks).cast("int")
+        "chunk", (F.col("chunk") % n_chunks + 1).cast("int")
     )
     delivered = ranked.union(replays).cache()
-    os.makedirs(feed_dir, exist_ok=True)
-    base = 1_700_000_000
-    for i in range(n_chunks):
-        # flat part-file per chunk (the lifecycle._write_chunks
-        # discipline — the file source does not recurse into nested
-        # directory-per-chunk layouts)
-        tmp = tempfile.mkdtemp(prefix="chunk", dir=feed_dir)
-        delivered.where(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+    write_chunks(delivered, feed_dir, n_chunks)
     delivered.unpersist()
+    return feed_dir
 
 
 def _state_path(work: str, version: int) -> str:
@@ -100,15 +87,9 @@ def _state_path(work: str, version: int) -> str:
 
 
 def _current_version(work: str) -> int | None:
-    """Highest COMPLETE snapshot version (dir carries the _SUCCESS
-    marker the parquet committer writes last) — the commit pointer.
+    """Highest COMPLETE snapshot version — the commit pointer.
     Incomplete leftovers from a crashed write are simply not candidates."""
-    versions = []
-    for d in os.listdir(work) if os.path.isdir(work) else []:
-        if d.startswith("state_v") and d.rsplit("_v", 1)[1].isdigit():
-            if os.path.exists(os.path.join(work, d, "_SUCCESS")):
-                versions.append(int(d.rsplit("_v", 1)[1]))
-    return max(versions) if versions else None
+    return latest_committed_version(work, "state_v")
 
 
 def run_stream(spark: SparkSession, work: str, feed: str) -> str:
@@ -131,20 +112,7 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
             if d.startswith("state_v") and d != f"state_v{v + 1}":
                 shutil.rmtree(os.path.join(work, d), ignore_errors=True)
 
-    src = (
-        spark.readStream.schema(_CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
-    )
-    q = (
-        src.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_feed(spark, feed, _CHANGE_SCHEMA), merge_batch, os.path.join(work, "ckpt"))
     return _state_path(work, _current_version(work))
 
 
@@ -162,18 +130,9 @@ def run_once(
 ) -> str:
     """Seed the snapshot, stream the change chunks through a
     foreachBatch copy-on-write MERGE, return the converged table dir."""
-    feed = os.path.join(work, "feed")
-    _write_change_chunks(spark, sf_dir, feed, n_chunks)
+    feed = change_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     seed_state(spark, sf_dir, work)
     return run_stream(spark, work, feed)
-
-
-def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    return session_memo(
-        spark,
-        ("cdcmerge_run", sf_dir),
-        lambda: run_once(spark, sf_dir, tempfile.mkdtemp(prefix="cdcmerge_", dir=_scratch_root())),
-    )
 
 
 def st_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,7 +140,9 @@ def st_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the one-shot batch MERGE (th_snapshot_merge): streaming
     and batch forms must agree bit-for-bit despite chunking AND
     re-delivery."""
-    state = _ensure_run(spark, sf_dir)
+    state = memoized_run(
+        spark, ("cdcmerge_run", sf_dir), lambda work: run_once(spark, sf_dir, work)
+    )
     return merge_profile(spark.read.parquet(state))
 
 

@@ -22,28 +22,31 @@ between triggers.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import session_memo, warn_local_checkpoint
+from task_hive_spark.materialize import _release_checkpoint, warn_local_checkpoint
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
-from task_hive_spark.streaming.lifecycle import N_CHUNKS, _scratch_root, with_chunk
-
-_EVENT_SCHEMA = (
-    "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
+from task_hive_spark.streaming.feed import (
+    EVENT_SCHEMA,
+    append_to,
+    drain,
+    memoized_run,
+    read_feed,
+    with_chunk,
+    write_chunks,
 )
+from task_hive_spark.streaming.lifecycle import N_CHUNKS
+
 REPLAY_MOD = 3  # events with event_s % 3 == 0 are delivered twice
 
 
-def _write_replay_chunks(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int
-) -> None:
-    """Time-ordered chunk files (lifecycle._write_chunks discipline:
-    strictly increasing mtimes → ordered file-source replay), except a
-    deterministic subset of every chunk is re-delivered in the NEXT
-    chunk — the at-least-once wire."""
+def replay_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHUNKS
+) -> str:
+    """The event feed's time-ordered chunks, except a deterministic
+    subset of every chunk is re-delivered in the NEXT chunk — the
+    at-least-once wire."""
     # checkpoint LEAF, not cache: `ranked` (and through it this frame)
     # is referenced in BOTH branches of the union below, and Spark 4.1's
     # CacheManager can miss a cached plan under a Union (the
@@ -52,31 +55,15 @@ def _write_replay_chunks(
     # eagerly either way.
     warn_local_checkpoint(spark, "dedupstream replay feed")
     ev = events_df(spark, sf_dir).localCheckpoint(eager=True)
-    ranked = with_chunk(ev, n_chunks)  # partitioned chunk assignment — see lifecycle
+    ranked = with_chunk(ev, n_chunks)
     replays = ranked.where(F.col("event_s") % REPLAY_MOD == 0).withColumn(
         "chunk", F.least(F.col("chunk") + 1, F.lit(n_chunks))
     )
     delivered = ranked.union(replays).cache()
-    os.makedirs(feed_dir, exist_ok=True)
-    base = 1_700_000_000
-    for i in range(1, n_chunks + 1):
-        tmp = tempfile.mkdtemp(prefix="chunk", dir=feed_dir)
-        (
-            delivered.where(F.col("chunk") == i)
-            .drop("chunk")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+    write_chunks(delivered, feed_dir, n_chunks)
     delivered.unpersist()
-    from task_hive_spark.materialize import _release_checkpoint
-
     _release_checkpoint(ev)  # free the checkpointed events blocks
+    return feed_dir
 
 
 def run_once(
@@ -89,24 +76,12 @@ def run_once(
     pre-built replay feed (the timers/stateful signature), so a drain
     can be timed without the feed build."""
     if feed is None:
-        feed = os.path.join(work, "feed")
-        _write_replay_chunks(spark, sf_dir, feed, n_chunks)
+        feed = replay_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     out = os.path.join(work, "deduped")
-    src = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
+    deduped = read_feed(spark, feed, EVENT_SCHEMA).dropDuplicates(
+        ["event_s", "op", "task_id", "worker_id"]
     )
-    deduped = src.dropDuplicates(["event_s", "op", "task_id", "worker_id"])
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _bid: df.write.mode("append").parquet(out))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(deduped, append_to(out), os.path.join(work, "ckpt"))
     return out
 
 
@@ -127,10 +102,9 @@ def run_once_bounded(spark: SparkSession, sf_dir: str, work: str, n_chunks: int)
     file's min and the bound covers (a) the late-data filter and (b)
     state retention until the replay arrives — the converged output
     still equals the clean feed, with provably bounded state."""
-    feed = os.path.join(work, "feed")
-    _write_replay_chunks(spark, sf_dir, feed, n_chunks)
+    feed = replay_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     bounds = (
-        spark.read.schema(_EVENT_SCHEMA)
+        spark.read.schema(EVENT_SCHEMA)
         .parquet(feed)
         .groupBy(F.input_file_name().alias("f"))  # chunk_%03d sorts in delivery order
         .agg(F.min("event_s").alias("mn"), F.max("event_s").alias("mx"))
@@ -143,47 +117,27 @@ def run_once_bounded(spark: SparkSession, sf_dir: str, work: str, n_chunks: int)
         frontier = max(frontier, int(nxt["mx"]))
     delay_s = max(regression, 0) + 10
     out = os.path.join(work, "deduped")
-    src = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
-    )
     # +1 day: the watermark starts at epoch 0 and the late-filter is
     # inclusive, so an event at exactly event_s=0 would be dropped on
     # arrival; shifting the synthetic clock is watermark-invariant
     deduped = (
-        src.withColumn("event_time", F.timestamp_seconds(F.col("event_s") + 86400))
+        read_feed(spark, feed, EVENT_SCHEMA)
+        .withColumn("event_time", F.timestamp_seconds(F.col("event_s") + 86400))
         .withWatermark("event_time", f"{delay_s} seconds")
         .dropDuplicatesWithinWatermark(["event_s", "op", "task_id", "worker_id"])
         .drop("event_time")
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _bid: df.write.mode("append").parquet(out))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(deduped, append_to(out), os.path.join(work, "ckpt"))
     return out
-
-
-def _ensure_run(
-    spark: SparkSession, sf_dir: str, runner=run_once, tag: str = ""
-) -> str:
-    def build() -> str:
-        work = tempfile.mkdtemp(prefix=f"dedupstream{tag}_", dir=_scratch_root())
-        return runner(spark, sf_dir, work, N_CHUNKS)
-
-    return session_memo(spark, ("dedupstream_run", sf_dir, tag), build)
 
 
 def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-op profile of the deduped stream: counts and time bounds
     must equal the CLEAN feed's despite ~1/3 of events arriving
     twice."""
-    out = _ensure_run(spark, sf_dir)
+    out = memoized_run(
+        spark, ("dedupstream_run", sf_dir), lambda work: run_once(spark, sf_dir, work, N_CHUNKS)
+    )
     return _op_profile(spark, out)
 
 
@@ -191,7 +145,11 @@ def st_stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same per-op profile through the BOUNDED-state dedup
     (dropDuplicatesWithinWatermark): identical converged output, state
     evicted as the watermark advances."""
-    out = _ensure_run(spark, sf_dir, runner=run_once_bounded, tag="wm")
+    out = memoized_run(
+        spark,
+        ("dedupstream_wm_run", sf_dir),
+        lambda work: run_once_bounded(spark, sf_dir, work, N_CHUNKS),
+    )
     return _op_profile(spark, out)
 
 

@@ -2,10 +2,10 @@
 (SURVEY §2.9: T1-T12 + S6).
 
 The scripted change-feed (events.py) is written as time-ordered parquet
-chunks and consumed with ``readStream`` + ``maxFilesPerTrigger=1`` — a
-file change-feed standing in for the etcd watch (S6,
-dispatcher.go:305-309). Each micro-batch folds its events into two
-state tables via MERGE-style DataFrame joins (``foreachBatch``):
+chunks and consumed one chunk per micro-batch (feed.py) — a file
+change-feed standing in for the etcd watch (S6, dispatcher.go:305-309).
+Each micro-batch folds its events into two state tables via
+MERGE-style DataFrame joins (``foreachBatch``):
 
 - T1  pending-dispatch stream: every submit is bound to a worker by the
   seeded-hash strategy inside the batch (dispatcher.go:312-328; the
@@ -56,17 +56,26 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import time
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.functions.prefix import bucketed_prefix
-from task_hive_spark.materialize import session_memo
+from task_hive_spark.operators.processors import (
+    BACKOFF_BASE_NS,
+    BACKOFF_BASE_S,
+    MAX_RETRIES,
+)
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
+from task_hive_spark.streaming.feed import (
+    AVAILABLE_NOW,
+    EVENT_SCHEMA,
+    _scratch_root,  # lazy importers and scratch-root redirects read it here
+    memoized_run,
+    read_feed,
+    start_fold,
+    with_chunk,
+    write_chunks,
+)
 
-MAX_RETRIES = 3  # common/constants.go:20
-BACKOFF_BASE_S = 2  # worker.go:73-79: 2s * 2^(rc-1)
 WORKER_CAPACITY = 10  # taskhive.go:53
 N_CHUNKS = 5
 
@@ -151,7 +160,7 @@ def _apply_task_events(state: DataFrame, ev: DataFrame) -> DataFrame:
         .otherwise(F.lit(None).cast("string"))
     )
     delay_ns = F.when(rc_new == 0, F.lit(0).cast("long")).otherwise(
-        (F.lit(BACKOFF_BASE_S * 1_000_000_000) * F.pow(F.lit(2.0), rc_new - 1)).cast("long")
+        (F.lit(BACKOFF_BASE_NS) * F.pow(F.lit(2.0), rc_new - 1)).cast("long")
     )
     # timer armed only while delayed: ready = fail time + backoff
     # seconds. A carried task (no events this batch) KEEPS its armed
@@ -299,81 +308,26 @@ def shared_feed(spark: SparkSession, sf_dir: str, n_chunks: int = N_CHUNKS) -> s
     """One chunked feed per (session, sf_dir, n_chunks) — the feed is a
     read-only input, so every streaming consumer (lifecycle, stateful)
     can share it instead of re-materializing the event log."""
-    def build() -> str:
-        feed = os.path.join(tempfile.mkdtemp(prefix="feed_", dir=_scratch_root()), "feed")
-        _write_chunks(spark, sf_dir, feed, n_chunks)
-        return feed
-
-    return session_memo(spark, ("feed", sf_dir, n_chunks), build)
-
-
-def with_chunk(df: DataFrame, n_chunks: int) -> DataFrame:
-    """Assign each event a chunk in 1..n_chunks respecting the total
-    order (event_s, op, task_id, worker_id), WITHOUT a global
-    single-partition window (the ntile-over-unpartitioned-order form
-    this replaces funneled the whole feed through one task and spammed
-    the bench tail with WindowExec warnings). The global row rank comes
-    from the shared distributed prefix sum (functions/prefix.py:
-    range-bucket + driver-folded offsets + partitioned window); chunk
-    numbering is exact ntile. Converged streaming state is
-    chunk-boundary invariant, so split points are free to move."""
-    order_cols = ["event_s", "op", "task_id", "worker_id"]
-    bucketed, off, n_total = bucketed_prefix(
-        df, "event_s", n_buckets=max(n_chunks * 8, 32)
+    return memoized_run(
+        spark,
+        ("feed", sf_dir, n_chunks),
+        lambda work: event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks),
     )
-    if n_total == 0:
-        return df.withColumn("chunk", F.lit(1))
-    rank = off + F.row_number().over(W.partitionBy("_bkt").orderBy(*order_cols))
-    # exact ntile numbering: the first (n % k) chunks hold ceil(n/k)
-    # rows, the rest floor(n/k) — consecutive chunk ids even when rows
-    # < chunks (a rank-stripe formula left gaps there, found by the
-    # hypothesis property test)
-    q, r = divmod(n_total, n_chunks)
-    if q == 0:
-        chunk = rank.cast("int")
-    else:
-        head = r * (q + 1)
-        chunk = (
-            F.when(rank <= head, ((rank - 1) / F.lit(q + 1)).cast("int") + 1)
-            .otherwise(F.lit(r) + ((rank - head - 1) / F.lit(q)).cast("int") + 1)
-            .cast("int")
-        )
-    return bucketed.withColumn("chunk", chunk).drop("_bkt")
 
 
-def _write_chunks(spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int) -> None:
-    """Materialize the change-feed as n time-ordered parquet files with
-    strictly increasing mtimes so the file source replays history in
-    order — the etcd watch's ordered delivery."""
+def event_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHUNKS
+) -> str:
+    """The scripted change-feed as n_chunks time-ordered chunk files."""
     # cache BEFORE with_chunk: its two driver-folded aggregations (range
     # stats + per-bucket counts) are eager actions that would otherwise
     # re-derive the events SQL twice before the per-chunk writes
     ev = events_df(spark, sf_dir).cache()
-    ranked = with_chunk(ev, n_chunks)
-    ranked = ranked.cache()
-    os.makedirs(feed_dir, exist_ok=True)
-    base = 1_700_000_000
-    for i in range(1, n_chunks + 1):
-        tmp = tempfile.mkdtemp(prefix="chunk", dir=feed_dir)
-        (
-            ranked.where(F.col("chunk") == i)
-            .drop("chunk")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+    ranked = with_chunk(ev, n_chunks).cache()
+    write_chunks(ranked, feed_dir, n_chunks)
     ranked.unpersist()
     ev.unpersist()
-
-
-EVENT_SCHEMA = (
-    "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
-)
+    return feed_dir
 
 
 def start_lifecycle(
@@ -387,12 +341,7 @@ def start_lifecycle(
     the etcd watch delivers new revisions. See start_lifecycle_stream
     for the returned (query, paths) contract; streaming/socketfeed.py
     plugs a push-based socket source into the same fold."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed_dir)
-    )
+    stream = read_feed(spark, feed_dir, EVENT_SCHEMA)
     return start_lifecycle_stream(spark, work_dir, stream, trigger)
 
 
@@ -477,13 +426,7 @@ def start_lifecycle_stream(
                     shutil.rmtree(stale, ignore_errors=True)
         ev.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-    return q, paths
+    return start_fold(stream, fold, ckpt_dir, trigger or AVAILABLE_NOW), paths
 
 
 def run_lifecycle(
@@ -496,8 +439,7 @@ def run_lifecycle(
     """Run the full streaming lifecycle to convergence; returns paths of
     the converged state tables."""
     if feed_dir is None:
-        feed_dir = os.path.join(work_dir, "feed")
-        _write_chunks(spark, sf_dir, feed_dir, n_chunks)
+        feed_dir = event_feed(spark, sf_dir, os.path.join(work_dir, "feed"), n_chunks)
     q, paths = start_lifecycle(spark, work_dir, feed_dir)
     q.awaitTermination()
     return dict(paths)
@@ -505,40 +447,11 @@ def run_lifecycle(
 
 def converged_state(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Run (or reuse) the lifecycle pipeline for this session × sf_dir."""
-    def build() -> dict[str, str]:
-        work_dir = tempfile.mkdtemp(prefix="lifecycle_", dir=_scratch_root())
-        return run_lifecycle(spark, sf_dir, work_dir, feed_dir=shared_feed(spark, sf_dir))
-
-    return session_memo(spark, ("lifecycle_run", sf_dir), build)
-
-
-_SCRATCH_SWEPT = False
-_SCRATCH_TTL_S = 48 * 3600  # stale feed/state dirs from dead sessions;
-# generous vs any live session's age (a round is ~6h) because mtimes are
-# stamped at creation, not on use — a sweep must never race a running
-# stream's feed or checkpoint
-
-
-def _scratch_root() -> str:
-    global _SCRATCH_SWEPT
-    root = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-    os.makedirs(root, exist_ok=True)
-    if not _SCRATCH_SWEPT:
-        # one sweep per process: scratch dirs outlive the session that
-        # made them (each verify/pytest run leaves feeds, checkpoints,
-        # state swaps), accumulating hundreds of MB across rounds. Any
-        # entry untouched for _SCRATCH_TTL_S belongs to a long-dead
-        # session — a live one re-stamps nothing older than its own run.
-        _SCRATCH_SWEPT = True
-        now = time.time()
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            try:
-                if now - os.path.getmtime(p) > _SCRATCH_TTL_S:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # concurrent sweep/removal — someone else got it
-    return root
+    return memoized_run(
+        spark,
+        ("lifecycle_run", sf_dir),
+        lambda work: run_lifecycle(spark, sf_dir, work, feed_dir=shared_feed(spark, sf_dir)),
+    )
 
 
 # --- converged end-state queries (driver-gradable) ------------------------
@@ -690,7 +603,7 @@ final AS (
          END AS status,
          p.rc AS retry_count,
          CASE WHEN p.nfails = 0 THEN CAST(0 AS BIGINT)
-              ELSE CAST({BACKOFF_BASE_S}000000000 * POW(2, p.rc - 1) AS BIGINT) END AS retry_delay_ns,
+              ELSE CAST({BACKOFF_BASE_NS} * POW(2, p.rc - 1) AS BIGINT) END AS retry_delay_ns,
          CASE WHEN l.last_op = 'assign' THEN l.last_worker END AS worker_id,
          p.create_s, p.last_fail_s,
          GREATEST(p.update_raw,

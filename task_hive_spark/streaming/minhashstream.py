@@ -38,12 +38,10 @@ parquet, not the state store, exactly like the CDC merge.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import session_memo, warn_local_checkpoint
+from task_hive_spark.materialize import _release_checkpoint, warn_local_checkpoint
 from task_hive_spark.operators.dedup import (
     CORPUS_SQL,
     ORACLES as _DD_ORACLES,
@@ -52,42 +50,28 @@ from task_hive_spark.operators.dedup import (
     minhash_sigs_of,
 )
 from task_hive_spark.sources.fixtures import register_fixture_views
-from task_hive_spark.streaming.lifecycle import _scratch_root
+from task_hive_spark.streaming.feed import (
+    DOC_SCHEMA,
+    drain,
+    memoized_run,
+    read_feed,
+    with_range_chunk,
+    write_chunks,
+)
 
-_DOC_SCHEMA = "doc_id BIGINT, text STRING"
 N_DOC_CHUNKS = 4
 
 
-def _write_doc_chunks(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int
-) -> None:
-    """The augmented dedup corpus as n doc_id-ranged parquet files with
-    increasing mtimes: ingestion order == doc_id order, so the injected
-    duplicate copies (+1e9 offsets) arrive AFTER their originals and
-    must be flagged against the index, not alongside it. Chunk
-    boundaries come from exact doc_id quantiles (deterministic;
-    converged output is chunk-invariant anyway, so balance is a
-    convenience, not a contract) — no global single-partition window."""
+def doc_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_DOC_CHUNKS
+) -> str:
+    """The augmented dedup corpus as n doc_id-ranged chunk files:
+    ingestion order == doc_id order, so the injected duplicate copies
+    (+1e9 offsets) arrive AFTER their originals and must be flagged
+    against the index, not alongside it."""
     register_fixture_views(spark, sf_dir)
     c = spark.sql(CORPUS_SQL)
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = c.stat.approxQuantile("doc_id", probs, 0.0) if probs else []
-    chunk = F.lit(1)
-    for b in bounds:
-        chunk = chunk + (F.col("doc_id") > b).cast("int")
-    c = c.withColumn("chunk", chunk)
-    os.makedirs(feed_dir, exist_ok=True)
-    base = 1_700_000_000
-    for i in range(1, n_chunks + 1):
-        tmp = tempfile.mkdtemp(prefix="chunk", dir=feed_dir)
-        c.where(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+    return write_chunks(with_range_chunk(c, "doc_id", n_chunks), feed_dir, n_chunks)
 
 
 def run_once(
@@ -95,9 +79,7 @@ def run_once(
 ) -> str:
     """Stream the corpus through the incremental indexer; returns the
     emitted-pairs dir."""
-    feed = os.path.join(work, "feed")
-    _write_doc_chunks(spark, sf_dir, feed, n_chunks)
-    return run_stream(spark, work, feed)
+    return run_stream(spark, work, doc_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks))
 
 
 def run_stream(spark: SparkSession, work: str, feed: str) -> str:
@@ -166,22 +148,9 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
         pairs.write.mode("overwrite").parquet(os.path.join(out, f"batch={bid}"))
         buckets.write.mode("overwrite").parquet(os.path.join(bucket_idx, f"batch={bid}"))
         sigs.write.mode("overwrite").parquet(os.path.join(sig_idx, f"batch={bid}"))
-        from task_hive_spark.materialize import _release_checkpoint
-
         _release_checkpoint(sigs)  # free the per-batch checkpoint blocks
 
-    q = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
-        .writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_feed(spark, feed, DOC_SCHEMA), fold, os.path.join(work, "ckpt"))
     return out
 
 
@@ -217,10 +186,8 @@ def clustered_index_from_stream(
 
 
 def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    return session_memo(
-        spark,
-        ("minhashstream_run", sf_dir),
-        lambda: run_once(spark, sf_dir, tempfile.mkdtemp(prefix="mhstream_", dir=_scratch_root())),
+    return memoized_run(
+        spark, ("minhashstream_run", sf_dir), lambda work: run_once(spark, sf_dir, work)
     )
 
 

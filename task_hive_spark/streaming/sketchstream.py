@@ -31,8 +31,6 @@ O(history) — at 100 TB of events per day the state file never grows.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -41,41 +39,61 @@ from task_hive_spark.operators.sketches import (
     hll_estimate,
     hll_registers,
 )
-from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
-from task_hive_spark.streaming.lifecycle import _scratch_root
+from task_hive_spark.streaming.feed import (
+    DOC_SCHEMA,
+    drain,
+    memoized_run,
+    read_feed,
+    with_range_chunk,
+    write_chunks,
+)
 
 _EVENT_SCHEMA = "event_id BIGINT, user_id BIGINT, event_type STRING, day DATE"
-_DOC_SCHEMA = "doc_id BIGINT, text STRING"
+_LINEITEM_SCHEMA = (
+    "l_orderkey BIGINT, l_returnflag STRING, l_extendedprice DOUBLE, m DATE"
+)
 N_EVENT_CHUNKS = 4
 N_DOC_CHUNKS = 4
+N_LINEITEM_CHUNKS = 4
 
 
-def _write_chunks(
-    df: DataFrame, id_col: str, feed_dir: str, n_chunks: int
-) -> None:
-    """A table as ``n_chunks`` id-ranged parquet files with increasing
-    mtimes (the ingestion clock). Convergence is batching-invariant
-    for both monoid classes, so boundaries only need to be
-    deterministic, not balanced."""
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    bounds = df.stat.approxQuantile(id_col, probs, 0.0) if probs else []
-    chunk = F.lit(1)
-    for b in bounds:
-        chunk = chunk + (F.col(id_col) > b).cast("int")
-    df = df.withColumn("chunk", chunk)
-    os.makedirs(feed_dir, exist_ok=True)
-    base = 1_700_000_000
-    for i in range(1, n_chunks + 1):
-        tmp = tempfile.mkdtemp(prefix="chunk", dir=feed_dir)
-        df.where(F.col("chunk") == i).drop("chunk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+# --- feed builders: each table as id-ranged chunks (the ingest order) ------
+
+
+def event_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_EVENT_CHUNKS
+) -> str:
+    """The events table as event_id-ranged chunk files."""
+    # day rides the feed so the register state keeps the store's grain
+    # (day, event_type) — the coarse per-type estimate coarsens from it
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", F.to_date("ts").alias("day")
+    )
+    return write_chunks(with_range_chunk(ev, "event_id", n_chunks), feed_dir, n_chunks)
+
+
+def doc_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_DOC_CHUNKS
+) -> str:
+    """The documents table as doc_id-ranged chunk files."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return write_chunks(with_range_chunk(d, "doc_id", n_chunks), feed_dir, n_chunks)
+
+
+def lineitem_feed(
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_LINEITEM_CHUNKS
+) -> str:
+    """The lineitem table as l_orderkey-ranged chunk files."""
+    # the ingest month rides the feed so the histogram state keeps the
+    # store's (g, m) grain
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_returnflag",
+        "l_extendedprice",
+        F.trunc(F.to_date("l_shipdate"), "month").alias("m"),
+    )
+    return write_chunks(with_range_chunk(li, "l_orderkey", n_chunks), feed_dir, n_chunks)
 
 
 def _latest_batch_dir(root: str, below: int | None = None) -> str | None:
@@ -90,47 +108,6 @@ def _latest_batch_dir(root: str, below: int | None = None) -> str | None:
     if not subs:
         return None
     return os.path.join(root, max(subs, key=lambda d: int(d.split("=", 1)[1])))
-
-
-def _drain(
-    spark: SparkSession, work: str, feed: str, schema: str, fold
-) -> None:
-    """Run the checkpointed availableNow file stream through ``fold``;
-    a later call with more files resumes where this one stopped."""
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
-        .writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _event_feed(spark: SparkSession, sf_dir: str, work: str, n_chunks: int) -> str:
-    """Write (or reuse) the chunked events feed under ``work``."""
-    feed = os.path.join(work, "feed")
-    # day rides the feed so the register state keeps the store's grain
-    # (day, event_type) — the coarse per-type estimate coarsens from it
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", F.to_date("ts").alias("day")
-    )
-    _write_chunks(ev, "event_id", feed, n_chunks)
-    return feed
-
-
-def _memoized_run(spark: SparkSession, sf_dir: str, prefix: str, runner):
-    """One converged run per (session, sf_dir) — shared by all the
-    incremental sketches (the scaffold was triplicating)."""
-    return session_memo(
-        spark,
-        ("sketchstream_run", sf_dir, prefix),
-        lambda: runner(spark, sf_dir, tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())),
-    )
 
 
 # --- incremental HLL over the event stream -------------------------------
@@ -163,7 +140,7 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
             os.path.join(state_root, f"batch={bid}")
         )
 
-    _drain(spark, work, feed, _EVENT_SCHEMA, fold)
+    drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
     return state_root
 
 
@@ -176,11 +153,15 @@ def latest_state(spark: SparkSession, state_root: str) -> DataFrame:
 def run_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_EVENT_CHUNKS
 ) -> str:
-    return run_stream(spark, work, _event_feed(spark, sf_dir, work, n_chunks))
+    return run_stream(
+        spark, work, event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
+    )
 
 
 def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(spark, sf_dir, "hllstream_", run_once)
+    return memoized_run(
+        spark, ("hllstream", sf_dir), lambda work: run_once(spark, sf_dir, work)
+    )
 
 
 def st_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,18 +204,22 @@ def run_kmv_stream(spark: SparkSession, work: str, feed: str) -> str:
             os.path.join(state_root, f"batch={bid}")
         )
 
-    _drain(spark, work, feed, _EVENT_SCHEMA, fold)
+    drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
     return state_root
 
 
 def run_kmv_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_EVENT_CHUNKS
 ) -> str:
-    return run_kmv_stream(spark, work, _event_feed(spark, sf_dir, work, n_chunks))
+    return run_kmv_stream(
+        spark, work, event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
+    )
 
 
 def _ensure_kmv_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(spark, sf_dir, "kmvstream_", run_kmv_once)
+    return memoized_run(
+        spark, ("kmvstream", sf_dir), lambda work: run_kmv_once(spark, sf_dir, work)
+    )
 
 
 def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,21 +280,22 @@ def run_cms_stream(spark: SparkSession, work: str, feed: str) -> tuple[str, str]
             os.path.join(vocab_root, f"batch={bid}")
         )
 
-    _drain(spark, work, feed, _DOC_SCHEMA, fold)
+    drain(read_feed(spark, feed, DOC_SCHEMA), fold, os.path.join(work, "ckpt"))
     return cms_root, vocab_root
 
 
 def run_cms_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_DOC_CHUNKS
 ) -> tuple[str, str]:
-    feed = os.path.join(work, "feed")
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    _write_chunks(d, "doc_id", feed, n_chunks)
-    return run_cms_stream(spark, work, feed)
+    return run_cms_stream(
+        spark, work, doc_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
+    )
 
 
 def _ensure_cms_run(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return _memoized_run(spark, sf_dir, "cmsstream_", run_cms_once)
+    return memoized_run(
+        spark, ("cmsstream", sf_dir), lambda work: run_cms_once(spark, sf_dir, work)
+    )
 
 
 def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,11 +312,6 @@ def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental quantile histogram over the lineitem stream -------------
-
-_LINEITEM_SCHEMA = (
-    "l_orderkey BIGINT, l_returnflag STRING, l_extendedprice DOUBLE, m DATE"
-)
-N_LINEITEM_CHUNKS = 4
 
 
 def run_qsk_stream(spark: SparkSession, work: str, feed: str) -> str:
@@ -363,28 +344,22 @@ def run_qsk_stream(spark: SparkSession, work: str, feed: str) -> str:
             os.path.join(state_root, f"batch={bid}")
         )
 
-    _drain(spark, work, feed, _LINEITEM_SCHEMA, fold)
+    drain(read_feed(spark, feed, _LINEITEM_SCHEMA), fold, os.path.join(work, "ckpt"))
     return state_root
 
 
 def run_qsk_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_LINEITEM_CHUNKS
 ) -> str:
-    feed = os.path.join(work, "feed")
-    # the ingest month rides the feed so the histogram state keeps the
-    # store's (g, m) grain
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_returnflag",
-        "l_extendedprice",
-        F.trunc(F.to_date("l_shipdate"), "month").alias("m"),
+    return run_qsk_stream(
+        spark, work, lineitem_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     )
-    _write_chunks(li, "l_orderkey", feed, n_chunks)
-    return run_qsk_stream(spark, work, feed)
 
 
 def _ensure_qsk_run(spark: SparkSession, sf_dir: str) -> str:
-    return _memoized_run(spark, sf_dir, "qskstream_", run_qsk_once)
+    return memoized_run(
+        spark, ("qskstream", sf_dir), lambda work: run_qsk_once(spark, sf_dir, work)
+    )
 
 
 def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,8 +400,7 @@ def stream_store_dir(spark: SparkSession, sf_dir: str) -> str:
     converged STREAM states — no fact table is read here: both inputs
     are the incremental runs' checkpointed state files."""
 
-    def build() -> str:
-        store = tempfile.mkdtemp(prefix="skstream_store_", dir=_scratch_root())
+    def build(store: str) -> str:
         hll_root = _ensure_run(spark, sf_dir)
         latest_state(spark, hll_root).write.mode("overwrite").parquet(
             os.path.join(store, "hll_daily_registers")
@@ -437,7 +411,7 @@ def stream_store_dir(spark: SparkSession, sf_dir: str) -> str:
         ).write.mode("overwrite").parquet(os.path.join(store, "quantiles_monthly"))
         return store
 
-    return session_memo(spark, ("stream_sketch_store", sf_dir), build)
+    return memoized_run(spark, ("stream_sketch_store", sf_dir), build)
 
 
 def sk_quantiles_stream_served(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,10 +37,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.streaming.lifecycle import (
-    EVENT_SCHEMA,
-    start_lifecycle_stream,
-)
+from task_hive_spark.streaming.feed import EVENT_SCHEMA
+from task_hive_spark.streaming.lifecycle import start_lifecycle_stream
 
 
 def event_lines_stream(raw: DataFrame, value_col: str = "value") -> DataFrame:

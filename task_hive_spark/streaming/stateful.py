@@ -35,7 +35,6 @@ no per-key files.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -44,18 +43,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from task_hive_spark.materialize import session_memo
 from task_hive_spark.streaming.events import oracle_events_cte
-from task_hive_spark.streaming.lifecycle import (
-    N_CHUNKS,
-    _scratch_root,
-    _write_chunks,
-    shared_feed,
+from task_hive_spark.streaming.feed import (
+    AVAILABLE_NOW,
+    EVENT_SCHEMA,
+    append_to,
+    memoized_run,
+    read_feed,
 )
+from task_hive_spark.streaming.lifecycle import N_CHUNKS, event_feed, shared_feed
 
-_EVENT_SCHEMA = (
-    "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
-)
 WATERMARK_S = 30
 WINDOW_S = 60
 SESSION_GAP_S = 120  # worker-activity session: new session after 120 s idle
@@ -83,14 +80,12 @@ def _update_counter(
 
 
 def _run_streams(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Build the chunked feed once per (session, sf_dir) and run both
-    streaming jobs to completion (Trigger.AvailableNow)."""
-
-    def build() -> dict[str, str]:
-        work = tempfile.mkdtemp(prefix="stateful_", dir=_scratch_root())
-        return run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
-
-    return session_memo(spark, ("stateful_run", sf_dir), build)
+    """Run every sink once per (session, sf_dir) over the shared feed."""
+    return memoized_run(
+        spark,
+        ("stateful_run", sf_dir),
+        lambda work: run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir)),
+    )
 
 
 def run_once(
@@ -107,8 +102,7 @@ def run_once(
     one operator shouldn't pay four unrelated checkpointed queries'
     start/commit overhead."""
     if feed is None:
-        feed = os.path.join(work, "feed")
-        _write_chunks(spark, sf_dir, feed, n_chunks)
+        feed = event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
 
     out = {
         "counter": os.path.join(work, "counter"),
@@ -135,16 +129,11 @@ def run_once(
             .format("parquet")
             .option("path", out[k])
             .option("checkpointLocation", os.path.join(work, f"ckpt_{k}"))
-            .trigger(availableNow=True)
+            .trigger(**AVAILABLE_NOW)
             .start()
         )
 
-    src = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
-    )
+    src = read_feed(spark, feed, EVENT_SCHEMA)
 
     counter = (
         src.where(F.col("worker_id").isNotNull() & F.col("op").isin("assign", "complete", "fail"))
@@ -160,11 +149,9 @@ def run_once(
     if want("counter"):
         started.append(
             counter.writeStream.outputMode("update")
-            .foreachBatch(
-                lambda df, _bid: df.write.mode("append").parquet(out["counter"])
-            )
+            .foreachBatch(append_to(out["counter"]))
             .option("checkpointLocation", os.path.join(work, "ckpt_counter"))
-            .trigger(availableNow=True)
+            .trigger(**AVAILABLE_NOW)
             .start()
         )
 

@@ -58,7 +58,6 @@ state, no per-key files.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -67,19 +66,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from task_hive_spark.materialize import session_memo
+from task_hive_spark.operators.processors import BACKOFF_BASE_S, MAX_RETRIES
 from task_hive_spark.streaming.events import oracle_events_cte
-from task_hive_spark.streaming.lifecycle import (
-    MAX_RETRIES,
-    N_CHUNKS,
-    _scratch_root,
-    _write_chunks,
-    shared_feed,
+from task_hive_spark.streaming.feed import (
+    EVENT_SCHEMA,
+    append_to,
+    drain,
+    memoized_run,
+    read_feed,
 )
+from task_hive_spark.streaming.lifecycle import N_CHUNKS, event_feed, shared_feed
 
-_EVENT_SCHEMA = (
-    "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
-)
 # state: retry counter + the armed-but-unfired (ready_s, retry_n) entries
 _STATE_SCHEMA = "rc INT, armed_ready ARRAY<BIGINT>, armed_rc ARRAY<INT>"
 _OUT_SCHEMA = "task_id STRING, ready_s BIGINT, retry_n INT"
@@ -103,7 +100,7 @@ def _timer_fold(
         for _, r in ev[ev["op"] == "fail"].iterrows():
             if rc < MAX_RETRIES:
                 rc += 1
-                armed.append((int(r["event_s"]) + 2 * 2 ** (rc - 1), rc))
+                armed.append((int(r["event_s"]) + BACKOFF_BASE_S * 2 ** (rc - 1), rc))
             # 4th+ failure: terminal, no lease (worker.go:113-135)
 
     fired = sorted((a, n) for a, n in armed if a <= wm_s)
@@ -128,15 +125,11 @@ def run_once(
     """Run the timer stream to completion (AvailableNow) against a
     chunked feed; returns the fired-re-entries output dir."""
     if feed is None:
-        feed = os.path.join(work, "feed")
-        _write_chunks(spark, sf_dir, feed, n_chunks)
+        feed = event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     out = os.path.join(work, "fired")
 
     src = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(feed)
+        read_feed(spark, feed, EVENT_SCHEMA)
         .withColumn("ts", F.timestamp_seconds("event_s"))
         .withWatermark("ts", "0 seconds")
         # Only fail events reach the fold — the state store then holds
@@ -168,30 +161,19 @@ def run_once(
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        fired.writeStream.outputMode("append")
-        .foreachBatch(lambda df, _bid: df.write.mode("append").parquet(out))
-        .option("checkpointLocation", os.path.join(work, "ckpt_timers"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(fired, append_to(out), os.path.join(work, "ckpt_timers"))
     return out
-
-
-def _run(spark: SparkSession, sf_dir: str) -> str:
-    def build() -> str:
-        work = tempfile.mkdtemp(prefix="timers_", dir=_scratch_root())
-        return run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir))
-
-    return session_memo(spark, ("timers_run", sf_dir), build)
 
 
 def st_timer_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every delayed-task re-entry the event-time timers fired (T2):
     (task, ready time, retry number). lt-stuck's lease (ready 9102 >
     final watermark 9100) correctly never appears."""
-    out = _run(spark, sf_dir)
+    out = memoized_run(
+        spark,
+        ("timers_run", sf_dir),
+        lambda work: run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir)),
+    )
     return (
         spark.read.schema(_OUT_SCHEMA)
         .parquet(out)

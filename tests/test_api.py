@@ -251,8 +251,11 @@ def test_capacity_bounds_per_round_dispatch(spark):
 
 
 def test_existing_work_dir_resumes(spark, tmp_path):
-    """Reopening a work_dir must adopt the highest snapshot version,
-    not reset to an empty v0 (etcd state outlives the process)."""
+    """Reopening a work_dir must adopt the highest COMMITTED snapshot
+    version, not reset to an empty v0 (etcd state outlives the
+    process), and not a newer snapshot whose write was cut short (no
+    _SUCCESS marker), which would report an empty table and let the
+    next write's GC delete the last complete one."""
     p = str(tmp_path / "hive_state")
     import os
 
@@ -262,10 +265,14 @@ def test_existing_work_dir_resumes(spark, tmp_path):
     th1.submit_task({"id": "pers-1", "type": "custom", "payload": "{}"})
     th1.start()
     v1 = th1._version
+    # a crash mid-write of the next snapshot leaves only the committer's
+    # staging dir behind
+    os.makedirs(os.path.join(p, f"tasks_v{v1 + 1}", "_temporary", "0"))
     th2 = TaskHive(spark, TaskHiveConfig(worker_count=1, work_dir=p))
     assert th2._version == v1
     row = th2.get_task_by_id("pers-1")
     assert row is not None and row.status == "completed"
+    assert th2.get_task_stats()["total"] == 1
 
 
 def test_vectorized_executor_matches_execute_one_on_huge_ids():

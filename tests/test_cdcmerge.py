@@ -44,7 +44,7 @@ def test_change_feed_replays_are_real(spark):
     from task_hive_spark.streaming.lifecycle import _scratch_root
 
     feed = tempfile.mkdtemp(prefix="cdc_feed_", dir=_scratch_root())
-    cdcmerge._write_change_chunks(spark, SF_DIR, feed, 4)
+    cdcmerge.change_feed(spark, SF_DIR, feed, 4)
     d = spark.read.schema(cdcmerge._CHANGE_SCHEMA).parquet(os.path.join(feed, "*"))
     n_rows = d.count()
     n_ids = d.select("id").distinct().count()
@@ -66,7 +66,7 @@ def test_streaming_merge_resumes_from_checkpoint(spark):
     work = tempfile.mkdtemp(prefix="cdc_resume_", dir=_scratch_root())
     feed = os.path.join(work, "feed")
     staged = os.path.join(work, "staged")
-    cdcmerge._write_change_chunks(spark, SF_DIR, staged, 4)
+    cdcmerge.change_feed(spark, SF_DIR, staged, 4)
     chunks = sorted(os.listdir(staged))
     assert len(chunks) == 4
     os.makedirs(feed)

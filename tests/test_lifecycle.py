@@ -193,11 +193,10 @@ def test_failover_second_driver_takes_over_after_kill(spark, sf_dir):
     import re
 
     from tests.conftest import VictimJVM
-    from task_hive_spark.streaming.lifecycle import _write_chunks
+    from task_hive_spark.streaming.lifecycle import event_feed
 
     work = tempfile.mkdtemp(prefix="lc_failover_", dir=_scratch_root())
-    feed = os.path.join(work, "feed")
-    _write_chunks(spark, sf_dir, feed, 8)
+    feed = event_feed(spark, sf_dir, os.path.join(work, "feed"), 8)
 
     victim = VictimJVM(
         "from task_hive_spark.session import get_spark\n"

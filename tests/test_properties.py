@@ -116,7 +116,7 @@ def test_with_chunk_matches_naive_ntile_properties(spark, times, k):
     total preserved, and chunk boundaries monotone in the total order."""
     from pyspark.sql import functions as F
 
-    from task_hive_spark.streaming.lifecycle import with_chunk
+    from task_hive_spark.streaming.feed import with_chunk
 
     df = spark.createDataFrame(
         [(t, "op", f"t{i}", "w") for i, t in enumerate(times)],

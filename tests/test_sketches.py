@@ -390,9 +390,9 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
 
     from tests.conftest import VictimJVM
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
+    from task_hive_spark.streaming.feed import with_range_chunk, write_chunks
     from task_hive_spark.streaming.sketchstream import (
         _latest_batch_dir,
-        _write_chunks,
         run_qsk_stream,
     )
 
@@ -402,7 +402,7 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
     os.makedirs(work, exist_ok=True)
-    _write_chunks(li, "l_orderkey", feed, 4)
+    write_chunks(with_range_chunk(li, "l_orderkey", 4), feed, 4)
 
     victim = VictimJVM(
         "from task_hive_spark.session import get_spark\n"

@@ -190,7 +190,7 @@ def test_incremental_minhash_resumes_from_checkpoint(spark):
     sf = "/root/testdata/sf0.001"
     work = tempfile.mkdtemp(prefix="mh_resume_", dir=_scratch_root())
     staged = os.path.join(work, "staged")
-    minhashstream._write_doc_chunks(spark, sf, staged, 4)
+    minhashstream.doc_feed(spark, sf, staged, 4)
     chunks = sorted(os.listdir(staged))
     feed = os.path.join(work, "feed")
     os.makedirs(feed)

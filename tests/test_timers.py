@@ -54,27 +54,17 @@ def test_timer_fires_with_non_fail_tail(spark):
     predicate is phrased to reference the event-time column so it
     stays above the watermark node."""
     import os
-    import shutil
+
+    from task_hive_spark.streaming.feed import EVENT_SCHEMA, write_chunks
 
     work = tempfile.mkdtemp(prefix="timers_tail_", dir=_scratch_root())
-    feed = os.path.join(work, "feed")
-    os.makedirs(feed)
-    chunks = [
-        [(100, "fail", "t1", None, None)],  # arms ready = 102
-        [(200, "complete", "t2", None, None)],
-        [(300, "complete", "t2", None, None)],  # watermark must reach 300
+    rows = [
+        (1, 100, "fail", "t1", None, None),  # arms ready = 102
+        (2, 200, "complete", "t2", None, None),
+        (3, 300, "complete", "t2", None, None),  # watermark must reach 300
     ]
-    base = 1_700_000_000
-    for i, rows in enumerate(chunks, 1):
-        tmp = tempfile.mkdtemp(prefix="c", dir=work)
-        spark.createDataFrame(rows, timers._EVENT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        dst = os.path.join(feed, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (base + i * 10, base + i * 10))
+    chunked = spark.createDataFrame(rows, f"chunk INT, {EVENT_SCHEMA}")
+    feed = write_chunks(chunked, os.path.join(work, "feed"), 3)
     fired = _fired(spark, timers.run_once(spark, None, work, 0, feed=feed))
     assert fired == {("t1", 102, 1)}
 
