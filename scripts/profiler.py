@@ -18,6 +18,8 @@ line is the fastest run's:
                  spans.FIELDS of the run span
     build_s      plan construction, including the eager driver work
                  (collects, checkpoints) serve and fit queries do there
+    py4j_calls   Python->JVM round trips the query's thread makes from
+                 plan construction to the end of the noop write
     stages       stage ids of the run's jobs, skipped stages included
     exchanges bcast py_eval smj bhj
                  operator counts in the frame's physical plan (AQE's
@@ -43,6 +45,7 @@ import re
 import shutil
 import sys
 import tempfile
+import threading
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -61,16 +64,39 @@ PLAN_NODES = {
 }
 
 
+def py4j_calls() -> int:
+    """Python->JVM round trips the main thread has made since the first
+    call, counted by wrapping py4j's send_command (the engine is not
+    touched). The tracer's listener callbacks call the JVM from py4j's
+    callback threads at times of their own, so they are not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    if hasattr(send, "calls"):
+        return send.calls
+
+    def counted(self, *args, **kwargs):
+        if threading.current_thread() is threading.main_thread():
+            counted.calls += 1
+        return send(self, *args, **kwargs)
+
+    counted.calls = 0
+    ClientServerConnection.send_command = counted
+    return 0
+
+
 def timed_runs(spark, tracer: Tracer, qs: dict, sf_dir: str, name: str) -> list:
     """N_RUNS measured runs of ``name``, resolved: (run span, build span,
-    frame) for each."""
+    frame) for each; the run span's attrs carry its ``py4j_calls``."""
     runs = []
     for _ in range(N_RUNS):
         bench.pre_run(spark, sf_dir, name)
         with tracer.span(name) as run:
+            calls = py4j_calls()
             with tracer.span("build") as build:
                 df = qs[name](spark, sf_dir)
             bench.noop(df)
+            run.attrs["py4j_calls"] = py4j_calls() - calls
         runs.append((run, build, df))
     # read Spark's figures while its status store still holds these jobs
     # (it keeps the last 1000), then drop the spans: resolve() rereads
@@ -93,6 +119,7 @@ def query_record(spark, runs: list) -> dict:
         "wall_s": run.wall_s,
         **{f: run.attrs[f] for f in FIELDS if f != "wall_s"},
         "build_s": build.wall_s,
+        "py4j_calls": run.attrs["py4j_calls"],
         "stages": sum(len(j.stageIds) for j in jobs if j is not None),
         **{k: len(re.findall(rf"^\(\d+\) (?:{p})\b", plan, re.M)) for k, p in PLAN_NODES.items()},
     }

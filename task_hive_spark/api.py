@@ -55,6 +55,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window as W, functions as F
 
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.materialize import latest_committed_version
 from task_hive_spark.operators.assign import STRATEGIES, bind
 from task_hive_spark.operators.processors import (
@@ -147,9 +148,8 @@ class TaskHive:
             self._version = existing
         else:
             self._version = 0
-            self._write_tasks(
-                spark.createDataFrame([], _TASK_SCHEMA), first=True
-            )  # empty v0 so queries work pre-start
+            # empty v0 so queries work pre-start
+            self._write_tasks(rows_frame(spark, [], _TASK_SCHEMA), first=True)
 
     # --- registries (taskhive.go:92-96, :252-255) -------------------------
 
@@ -217,7 +217,8 @@ class TaskHive:
                 t.get("type", "unknown"),
             )
         self.submit_frame(
-            self.spark.createDataFrame(
+            rows_frame(
+                self.spark,
                 list(last.values()),
                 "id string, payload string, priority int, type string",
             )

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from task_hive_spark.functions.rows import rows_frame
+
 # Edge count under which the component computation collapses to a
 # driver-local union-find: the near-dup graph is usually a small
 # fraction of the corpus (only flagged pairs), and the distributed
@@ -44,13 +46,6 @@ from pyspark.sql import DataFrame, functions as F
 # not 16 — review finding r7); a graph just over the limit pays one
 # bounded (limit+1)-row scan before falling through to the loop.
 CC_LOCAL_EDGE_LIMIT = 200_000
-
-# Labelings whose rendered VALUES literal fits in this many bytes of SQL
-# text return as that literal instead of a checkpointed Python-RDD
-# conversion (see _local_components). The cap is on the rendered text,
-# not the row count: a row of 19-digit BIGINT ids is ~75 B, three times
-# a small-id row.
-_LABEL_LITERAL_MAX_BYTES = 1 << 20
 
 
 def _local_components(spark, rows, src_type) -> DataFrame:
@@ -77,35 +72,8 @@ def _local_components(spark, rows, src_type) -> DataFrame:
         if m is None or n < m:
             comp_min[r] = n
     out = [(n, comp_min[find(n)]) for n in parent]
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    # Integral labelings return as a VALUES literal (exact, and a
-    # LocalTableScan under every consumer — no job at all): the r13
-    # createDataFrame + eager localCheckpoint shape still paid ~0.4 s
-    # per call of Python-RDD parallelize + 32 pickle-conversion tasks
-    # for a ~600-row labeling (measured r14; guide §4 — don't cross
-    # the Python boundary for driver-held rows). Bounded: the literal
-    # is capped at _LABEL_LITERAL_MAX_BYTES of SQL text; bigger
-    # labelings — and non-integral node types, which would need string
-    # escaping — keep the one-conversion checkpoint.
-    if isinstance(src_type, (LongType, IntegerType)) and out:
-        t = "BIGINT" if isinstance(src_type, LongType) else "INT"
-        vals = ", ".join(
-            f"(CAST({n} AS {t}), CAST({c} AS {t}))" for n, c in out
-        )
-        if len(vals) <= _LABEL_LITERAL_MAX_BYTES:
-            return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(node, component)")
-    schema = StructType(
-        [StructField("node", src_type, False), StructField("component", src_type, False)]
-    )
-    # materialize the labeling ONCE: a bare createDataFrame(list) plans
-    # a Python-RDD scan whose pickle→JVM conversion re-runs as Python
-    # worker tasks under EVERY consumer subtree — and both callers
-    # (dd_duplicate_clusters, dd_semdedup) consume the labeling twice
-    # (cluster-size aggregate + membership join). The checkpointed rows
-    # are component labels of FLAGGED pairs only (≤ local_edge_limit),
-    # bounded like the collect that produced them.
-    return spark.createDataFrame(out, schema).localCheckpoint(eager=True)
+    t = src_type.simpleString()
+    return rows_frame(spark, out, f"node {t} not null, component {t} not null")
 
 
 def min_label_components(

@@ -23,10 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.components import min_label_components
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.functions.text import fingerprint, portable_hash64, ws_tokens
-from task_hive_spark.materialize import session_index, session_memo
+from task_hive_spark.materialize import session_index
 from task_hive_spark.functions.report import report_sort
 from task_hive_spark.sources.fixtures import load_table, register_fixture_views
+from task_hive_spark.streaming.feed import memoized_run
 
 # K=128 / 32 bands / r=4 rows-per-band — the production family (the
 # Spark MinHashLSH default neighborhood; GPL-ish dedup papers use
@@ -723,24 +725,14 @@ def _dedup_index_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[
     the manifest is footer stats, read once at materialize time the way
     a real catalog would cache it."""
     import os as _os
-    import tempfile
 
     from task_hive_spark.plans.catalog import file_column_stats
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    def build() -> tuple[str, list[dict]]:
-        out = tempfile.mkdtemp(prefix="ddcidx_", dir=_scratch_root())
+    def build(out: str) -> tuple[str, list[dict]]:
         materialize_dedup_index_clustered(spark, sf_dir, out)
         return out, file_column_stats(_os.path.join(out, "buckets"), "bucket")
 
-    return session_memo(spark, ("dedup_index", sf_dir), build)
-
-
-# Probe batches at or under this row count come back as a VALUES
-# literal (all-integer — exact): ~2.6 KB of SQL text per row. Larger
-# request batches keep the r13 checkpoint shape (one bounded conversion)
-# rather than parse megabytes of literal SQL on the driver.
-SERVE_SIG_LITERAL_MAX = 512
+    return memoized_run(spark, ("dedup_index", sf_dir), build)
 
 
 def dedup_served_pruned_of(
@@ -761,11 +753,10 @@ def dedup_served_pruned_of(
     |batch| x LSH_BANDS buckets and additionally paid a signature
     localCheckpoint job plus a distinct shuffle on the bucket list).
     The driver dedupes buckets in a set; the signatures return to the
-    plan as a VALUES literal (LocalTableScan — its two broadcast builds
-    in _serve_join run driver-side with no scheduler round), falling
-    back to the r13 checkpointed conversion above
-    SERVE_SIG_LITERAL_MAX rows. All-integer rows, so the literal is
-    exact; the scoring arithmetic is unchanged."""
+    plan through rows_frame (a LocalTableScan for any batch whose
+    literal fits its cap — the two broadcast builds in _serve_join then
+    run driver-side with no scheduler round); the scoring arithmetic is
+    unchanged."""
     import os as _os
 
     from task_hive_spark.plans.catalog import prune_files_any
@@ -777,25 +768,13 @@ def dedup_served_pruned_of(
         .collect()
     )
     probe_buckets = sorted({b for r in rows for b in r["buckets"]})
-    if rows and len(rows) <= SERVE_SIG_LITERAL_MAX:
-        vals = ", ".join(
-            "(CAST({d} AS BIGINT), array({s}))".format(
-                d=r["doc_id"], s=", ".join(f"{v}L" for v in r["sig"])
-            )
-            for r in rows
-        )
-        new_sigs = spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(doc_id, sig)")
-    elif not rows:  # degenerate empty batch — keep the join schema
-        new_sigs = spark.createDataFrame([], "doc_id long, sig array<bigint>")
-    else:  # over-limit batch: one bounded conversion (components.py discipline)
-        new_sigs = spark.createDataFrame(
-            [(r["doc_id"], list(r["sig"])) for r in rows],
-            "doc_id long, sig array<bigint>",
-        ).localCheckpoint(eager=True)
+    new_sigs = rows_frame(
+        spark, [(r["doc_id"], r["sig"]) for r in rows], "doc_id long, sig array<bigint>"
+    )
     kept, total = prune_files_any(stats, probe_buckets)
     hist_sigs = spark.read.parquet(_os.path.join(index_dir, "signatures"))
     if not kept:  # no file overlaps any probe bucket: zero candidates
-        hist_buckets = spark.createDataFrame([], "doc_id long, bucket long")
+        hist_buckets = rows_frame(spark, [], "doc_id long, bucket long")
     elif len(kept) == total:
         # every file kept (a large batch): read the directory — a list of
         # more than 32 paths makes Spark list them in a parallel job,
@@ -813,10 +792,11 @@ def dd_dedup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     and score candidates against the STORED signatures — the most
     common production dedup workflow (today's crawl vs all prior
     dumps). Historical text is never re-read. The batch (385 rows at
-    sf0.1) fits SERVE_SIG_LITERAL_MAX, so its signatures enter the plan
-    as a VALUES literal. Output: every (new_doc_id, hist_doc_id) LSH
-    candidate with its MinHash Jaccard estimate; a pipeline drops new
-    docs with any est_jaccard ≥ threshold partner."""
+    sf0.1, ~0.63 MB of literal) fits rows_frame's cap, so its
+    signatures enter the plan as a VALUES literal. Output: every
+    (new_doc_id, hist_doc_id) LSH candidate with its MinHash Jaccard
+    estimate; a pipeline drops new docs with any est_jaccard ≥
+    threshold partner."""
     idx, stats = _dedup_index_clustered(spark, sf_dir)
     out, _kept, _total = dedup_served_pruned_of(
         spark, idx, stats, new_batch_df(spark, sf_dir)

@@ -61,6 +61,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.components import min_label_components
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.functions.text import (
     fingerprint,
     portable_hash32,
@@ -378,40 +379,14 @@ def _sampled(spark: SparkSession, sf_dir: str, clean: DataFrame) -> DataFrame:
     t_all = sum(tok for _, tok in prof)
     pw = {lang: (tok / t_all) ** MIX_ALPHA for lang, tok in prof}
     z = sum(pw[lang] for lang, _ in prof)
-    # VALUES literal, not createDataFrame(list): the ≤|langs|-row factor
-    # table is the broadcast side of the mix join, and the Python-RDD
-    # frame re-ran its pickle→JVM conversion inside every broadcast
-    # build (the f3e5f2c/92458a2 pattern); a LocalTableScan broadcasts
-    # straight from the driver. lang is data-derived, so it is escaped
-    # for the SQL literal rather than trusted like the asserted-alnum
-    # BPE symbols.
-    if prof:
-        # backslash-escaping is only an escape while the parser's
-        # legacy escapedStringLiterals stays off (its default); with it
-        # ON, \' is literal text and a quote in data would break or
-        # inject into the VALUES statement — fail loudly instead
-        # (r13 ADVICE item 1)
-        assert (
-            spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-            == "false"
-        ), "escaped VALUES literals require escapedStringLiterals=false"
-
-        def _lit(lang) -> str:  # NULL-lang group kept, like the old frame
-            if lang is None:
-                return "CAST(NULL AS STRING)"
-            esc = lang.replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{esc}'"
-
-        rows = ", ".join(
-            "({}, CAST({} AS BIGINT))".format(
-                _lit(lang),
-                math.floor(pw[lang] / z / (tok / t_all) * 1000000.0),
-            )
+    fac = rows_frame(
+        spark,
+        [
+            (lang, math.floor(pw[lang] / z / (tok / t_all) * 1000000.0))
             for lang, tok in prof
-        )
-        fac = spark.sql(f"SELECT * FROM (VALUES {rows}) AS t(lang, f_micro)")
-    else:
-        fac = spark.createDataFrame([], "lang string, f_micro bigint")
+        ],
+        "lang string, f_micro bigint",
+    )
     return (
         cl.join(F.broadcast(fac), "lang")
         .withColumn(

@@ -35,9 +35,11 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.components import min_label_components
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.functions.vectors import cosine, dot, norm
 from task_hive_spark.materialize import session_index, session_memo
 from task_hive_spark.sources.fixtures import load_table
+from task_hive_spark.streaming.feed import memoized_run
 
 DIM = 64
 # 8 bands × 4 bits: for neighbor cosine ≈ 0.7 the per-bit collision
@@ -130,19 +132,11 @@ def _band_buckets(df: DataFrame, vec_col: str) -> DataFrame:
     1e-15 of the sign boundary."""
     key = df.columns[0]
     spark = df.sparkSession
-    # VALUES literal, not createDataFrame(list): the plane matrix is a
-    # driver-held constant and the Python-RDD frame re-ran its
-    # pickle→JVM conversion under the index build (the f3e5f2c
-    # pattern; cold path — once per session — but the same shape).
-    # Entries are exactly ±1.0, so the D-suffixed literal is exact.
-    rows = ", ".join(
-        "(" + str(pos) + ", "
-        + ", ".join(f"{PLANES[p][pos]!r}D" for p in range(N_PLANES))
-        + ")"
-        for pos in range(DIM)
+    planes = rows_frame(
+        spark,
+        [(pos, *(PLANES[p][pos] for p in range(N_PLANES))) for pos in range(DIM)],
+        "pos int, " + ", ".join(f"c{p} double" for p in range(N_PLANES)),
     )
-    cols = ", ".join(f"c{p}" for p in range(N_PLANES))
-    planes = spark.sql(f"SELECT * FROM (VALUES {rows}) AS t(pos, {cols})")
     x = df.select(key, F.posexplode(vec_col).alias("pos", "xv")).select(
         key, "pos", F.col("xv").cast("double").alias("xv")
     )
@@ -755,26 +749,16 @@ PQ_BOOK = _pq_codebook()
 
 
 def _pq_book_df(spark: SparkSession) -> DataFrame:
-    """The codebook as a session-held checkpointed frame: a bare
-    createDataFrame(list) plans a Python-RDD scan whose pickle
-    conversion re-runs under every consumer subtree (broadcast builds
-    included); checkpointing the 1,024 rows once per session makes
-    every PQ encode/LUT read a JVM-cached block (a rebuild costs ~5-8 s
-    of driver time per sim_topk_ivf_pq/_pq_refined call, measured)."""
-
-    def build() -> DataFrame:
-        # VALUES literal, not createDataFrame(list): no Python-RDD
-        # conversion at build either. Entries are exact multiples of
-        # 1/64, so their repr is a terminating decimal and the
-        # decimal→double cast is bit-exact.
-        rows = ", ".join(
-            f"({m}, {k}, {d}, CAST({c!r} AS DOUBLE))" for m, k, d, c in PQ_BOOK
-        )
-        return spark.sql(
-            f"SELECT * FROM (VALUES {rows}) AS t(sub, code, d, c)"
-        ).localCheckpoint(eager=True)
-
-    return session_memo(spark, ("pq_book",), build)
+    """The codebook as a session-held checkpointed frame: checkpointing
+    the 1,024 rows once per session makes every PQ encode/LUT read a
+    JVM-cached block (a rebuild costs ~5-8 s of driver time per
+    sim_topk_ivf_pq/_pq_refined call, measured)."""
+    return session_memo(
+        spark,
+        ("pq_book",),
+        lambda: rows_frame(spark, PQ_BOOK, "sub int, code int, d int, c double")
+        .localCheckpoint(eager=True),
+    )
 
 
 def _pq_dist_table(
@@ -1248,17 +1232,14 @@ def recluster_ann_index(
 def _ann_index_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:
     """(index_dir, cellcodes manifest) once per (session, sf_dir)."""
     import os as _os
-    import tempfile
 
     from task_hive_spark.plans.catalog import file_column_stats
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    def build() -> tuple[str, list[dict]]:
-        out = tempfile.mkdtemp(prefix="anncidx_", dir=_scratch_root())
+    def build(out: str) -> tuple[str, list[dict]]:
         materialize_ann_index_clustered(spark, sf_dir, out)
         return out, file_column_stats(_os.path.join(out, "cellcodes"), "cell")
 
-    return session_memo(spark, ("ann_index", sf_dir), build)
+    return memoized_run(spark, ("ann_index", sf_dir), build)
 
 
 # (session, index_dir) → (centroids, codebook) as localCheckpoint'ed
@@ -1276,13 +1257,8 @@ def _ann_index_constants(spark: SparkSession, index_dir: str) -> tuple:
     in the JVM block manager, so every serve call's routing and LUT
     subtrees scan cached blocks in one task instead of re-reading and
     re-joining the index parquet (the FAISS in-RAM index posture).
-
-    Measured r13 dead end, kept as a warning: holding collect()ed rows
-    and rebuilding them per call with spark.createDataFrame is NOT a
-    LocalTableScan in classic PySpark — it parallelizes a Python RDD
-    (Scan ExistingRDD, defaultParallelism partitions) whose pickle→JVM
-    conversion re-runs as Python worker tasks under EVERY downstream
-    subtree; that shape ~doubled the serve wall time at sf0.1."""
+    Collecting them to rebuild per call is the dead end r13 measured:
+    its Python-RDD shape ~doubled the serve wall time at sf0.1."""
     import os as _os
 
     def build() -> tuple[DataFrame, DataFrame]:
@@ -1330,7 +1306,7 @@ def ann_served_pruned_of(
     cent, book = _ann_index_constants(spark, index_dir)
     # job 1: the probe batch — TakeOrdered keeps n_probes rows per scan
     # split, so the materialized frame is request-sized at any corpus
-    # size; localCheckpoint (not collect + createDataFrame — see
+    # size; localCheckpoint (not collect + rows_frame — see
     # _ann_index_constants) keeps the rows JVM-side for the three
     # consumers (routing, LUT, refine)
     probes = (
@@ -1344,8 +1320,8 @@ def ann_served_pruned_of(
     # rows, one task), collected DIRECTLY — the ≤ n_probes · NPROBE
     # routing rows serve both consumers from one action: the driver's
     # file-pruning list, and the scoring join's probe_cells side as a
-    # VALUES literal (all-integer rows — exact; a LocalTableScan whose
-    # broadcast build runs driver-side with no extra job). r13's shape
+    # rows_frame (a LocalTableScan whose broadcast build runs
+    # driver-side with no extra job). r13's shape
     # checkpointed the routed frame and THEN collected it: one more
     # scheduler round per serve plus a block-manager scan under the
     # broadcast, for rows the driver was about to hold anyway
@@ -1359,19 +1335,10 @@ def ann_served_pruned_of(
     cell_t = dict(routed.dtypes)["cell"]
     rows = routed.collect()
     probed = sorted({r["cell"] for r in rows})
-    if rows:
-        vals = ", ".join(
-            f"(CAST({r['probe_id']} AS BIGINT), CAST({r['cell']} AS {cell_t}))"
-            for r in rows
-        )
-        probe_cells = spark.sql(
-            f"SELECT * FROM (VALUES {vals}) AS t(probe_id, cell)"
-        )
-    else:  # degenerate empty probe set — keep the join schema
-        probe_cells = spark.createDataFrame([], f"probe_id bigint, cell {cell_t}")
+    probe_cells = rows_frame(spark, rows, f"probe_id bigint, cell {cell_t}")
     kept, total = prune_files_any(stats, probed)
     if not kept:
-        cc = spark.createDataFrame([], "cell long, vec_id long, sub int, code int")
+        cc = rows_frame(spark, [], "cell long, vec_id long, sub int, code int")
     else:
         cc = spark.read.parquet(*kept)
     lut = _adc_lut_of(_pq_dist_table(spark, probes, book=book))

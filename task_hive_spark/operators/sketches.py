@@ -33,8 +33,8 @@ from pyspark.sql.window import Window as W
 
 from task_hive_spark.functions.text import portable_hash32, portable_hash64
 from task_hive_spark.functions.report import report_sort
-from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
+from task_hive_spark.streaming.feed import memoized_run
 
 # --- KMV (K-minimum-values) distinct estimator --------------------------
 # Bar-Yossef et al. 2002: keep the K smallest distinct hash values; if
@@ -872,16 +872,12 @@ def materialize_sketch_store(spark: SparkSession, sf_dir: str, out_dir: str) -> 
 
 def _sketch_store_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the on-disk sketch store once per (session, sf_dir)."""
-    import tempfile
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="skstore_", dir=_scratch_root())
+    def build(out: str) -> str:
         materialize_sketch_store(spark, sf_dir, out)
         return out
 
-    return session_memo(spark, ("sketch_store", sf_dir), build)
+    return memoized_run(spark, ("sketch_store", sf_dir), build)
 
 
 def sk_quantiles_served(

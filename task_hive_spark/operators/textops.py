@@ -23,6 +23,7 @@ from task_hive_spark.functions.text import (
 )
 from task_hive_spark.functions.report import report_sort
 from task_hive_spark.functions.prefix import bucketed_prefix
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.materialize import session_index, session_memo
 from task_hive_spark.sources.fixtures import load_table
 
@@ -976,24 +977,9 @@ def txt_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent implementations of greedy BPE whose agreement the
     value gate checks end-to-end."""
     merges, _v = _learn_merges(spark, sf_dir)
-    # literal VALUES frame, NOT createDataFrame(list): the classic
-    # PySpark path parallelizes a Python RDD (Scan ExistingRDD, 32
-    # partitions) whose pickle→JVM conversion re-runs as Python worker
-    # tasks under every action — 0.60 s to emit these rows at sf0.1,
-    # vs a LocalTableScan the noop sink drains in one task. Symbols are
-    # asserted [a-z0-9]+ at selection, so inline quoting is safe.
-    if not merges:  # exhausted-vocab corpus: empty frame, same schema
-        return spark.createDataFrame(
-            [], "merge_round int, lft string, rgt string, pair_count bigint"
-        )
-    rows = ", ".join(
-        f"({i}, '{lft}', '{rgt}', CAST({c} AS BIGINT))"
-        for i, lft, rgt, c in merges
-    )
-    return spark.sql(
-        f"SELECT * FROM (VALUES {rows})"
-        " AS t(merge_round, lft, rgt, pair_count) ORDER BY merge_round"
-    )
+    return rows_frame(
+        spark, merges, "merge_round int, lft string, rgt string, pair_count bigint"
+    ).orderBy("merge_round")
 
 
 def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1138,12 +1124,12 @@ def _learn_merges(
     """(merge list, final (w, freq, syms) vocab state), memoized per
     (session, sf_dir): the trainer and the tokenizer (txt_bpe_tokenize)
     share one learning run — 8 rows of driver state plus the
-    localCheckpointed vocab frame the loop ends on, so application
-    never re-runs the merge folds (one application path, no drift).
-    The memo's release frees the pinned checkpoint blocks. The
-    localCheckpoint trades executor-loss recovery for O(1) plans (the
-    same trade dd_duplicate_clusters documents); after a lost executor,
-    re-run the query in a fresh session to re-learn."""
+    materialized vocab frame the loop ends on, so application never
+    re-runs the merge folds (one application path, no drift). The
+    memo's release frees any pinned checkpoint blocks. A checkpoint
+    trades executor-loss recovery for O(1) plans (the same trade
+    dd_duplicate_clusters documents); after a lost executor, re-run the
+    query in a fresh session to re-learn."""
     return session_memo(spark, ("bpe_merges", sf_dir), lambda: _train_bpe(spark, sf_dir))
 
 
@@ -1154,8 +1140,8 @@ def _train_bpe(
 
     Dispatch: vocabularies at or under BPE_LOCAL_VOCAB_LIMIT words run
     the driver-local trainer (one bounded collect of the warm word-freq
-    index, pure-Python merge loop, ONE conversion of the final state
-    back — 2 jobs total); larger ones run the distributed per-round
+    index, pure-Python merge loop, the final state back through
+    rows_frame); larger ones run the distributed per-round
     loop (the 100 TB fallback). Identical results by construction,
     pinned by the parity test and the oracle gate."""
     vocab_tbl = _bpe_vocab(spark, sf_dir)
@@ -1173,15 +1159,7 @@ def _train_bpe(
             f"(2 x _BPE_ORACLE_REPS = {2 * _BPE_ORACLE_REPS}) - raise it"
         )
         merges, out = _learn_merges_local(head)
-        # ONE bounded conversion of the vocab-sized final state, eagerly
-        # checkpointed so every downstream consumer (txt_bpe_tokenize,
-        # txt_tokenized_dataset) scans materialized JVM blocks — the
-        # _local_components discipline (a bare createDataFrame(list)
-        # would re-run its pickle→JVM conversion under every consumer).
-        v = spark.createDataFrame(
-            [(w, f, s) for w, f, s in out], _BPE_VOCAB_SCHEMA
-        ).localCheckpoint(eager=True)
-        return merges, v
+        return merges, rows_frame(spark, out, _BPE_VOCAB_SCHEMA)
     return _learn_merges_distributed(spark, vocab_tbl)
 
 
@@ -1522,8 +1500,8 @@ def txt_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
     )
     if total == 0:
-        return spark.createDataFrame(
-            [], "bin_id bigint, n_docs bigint, total_tokens bigint,"
+        return rows_frame(
+            spark, [], "bin_id bigint, n_docs bigint, total_tokens bigint,"
             " first_doc_id bigint, last_doc_id bigint"
         )
     run = F.sum("n_tokens").over(W.partitionBy("_bkt").orderBy("doc_id"))
@@ -2045,19 +2023,10 @@ def txt_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     tk = sum(r["ck"] for r in cls_rows)  # exact ints — no float drift
     td = sum(r["cd"] for r in cls_rows)
-    # VALUES literal, not createDataFrame(list): the weight table is the
-    # broadcast side of the scoring join, and the classic path's
-    # Python-RDD scan re-ran its pickle→JVM conversion as worker tasks
-    # inside every broadcast build (the dedup.py:644 dead end). All
-    # integers — a true LocalTableScan.
-    cls_lit = spark.sql(
-        "SELECT * FROM (VALUES "
-        + ", ".join(
-            f"({int(r['f'])}, CAST({int(r['ck'])} AS BIGINT),"
-            f" CAST({int(r['cd'])} AS BIGINT))"
-            for r in cls_rows
-        )
-        + ") AS t(f, ck, cd)"
+    cls_lit = rows_frame(
+        spark,
+        [(int(r["f"]), int(r["ck"]), int(r["cd"])) for r in cls_rows],
+        "f int, ck bigint, cd bigint",
     )
     w = cls_lit.select(
         "f",
@@ -2186,8 +2155,8 @@ def txt_tokenized_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
     )
     if total == 0:
-        return spark.createDataFrame(
-            [], "bin_id bigint, n_docs bigint, n_bpe_tokens bigint,"
+        return rows_frame(
+            spark, [], "bin_id bigint, n_docs bigint, n_bpe_tokens bigint,"
             " first_doc_id bigint, last_doc_id bigint"
         )
     run = F.sum("n_bpe").over(W.partitionBy("_bkt").orderBy("doc_id"))

@@ -53,6 +53,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.operators.textops import _bpe_vocab, token_index
 from task_hive_spark.materialize import session_memo
 
@@ -192,34 +193,12 @@ def txt_unigram_lm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned unigram-LM vocabulary: every surviving piece with its
     seed count, final (post-EM) usage count, and integer micro-cost."""
     rows, _ = _train(spark, sf_dir)
-    # VALUES literal, not createDataFrame(list): the vocab is a bounded
-    # driver-held table and the Python-RDD frame re-ran its pickle→JVM
-    # conversion under every action (the f3e5f2c pattern). piece is
-    # data-derived, so it is escaped for the SQL literal.
-    if not rows:
-        return spark.createDataFrame(
-            [],
-            "piece string, piece_len int, seed_count bigint,"
-            " em_count bigint, cost_micro bigint",
-        )
-    # the backslash escapes below are only escapes while the parser's
-    # legacy escapedStringLiterals conf stays off (its default) —
-    # fail loudly otherwise (r13 ADVICE item 1)
-    assert (
-        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        == "false"
-    ), "escaped VALUES literals require escapedStringLiterals=false"
-    lits = ", ".join(
-        "('{}', {}, CAST({} AS BIGINT), CAST({} AS BIGINT), CAST({} AS BIGINT))".format(
-            p.replace("\\", "\\\\").replace("'", "\\'"), pl, sc, ec, cm
-        )
-        for p, pl, sc, ec, cm in rows
-    )
-    return spark.sql(
-        f"SELECT * FROM (VALUES {lits})"
-        " AS t(piece, piece_len, seed_count, em_count, cost_micro)"
-        " ORDER BY piece"
-    )
+    return rows_frame(
+        spark,
+        rows,
+        "piece string, piece_len int, seed_count bigint,"
+        " em_count bigint, cost_micro bigint",
+    ).orderBy("piece")
 
 
 def txt_unigram_lm_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:

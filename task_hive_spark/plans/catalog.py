@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from task_hive_spark.materialize import session_memo
 from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
+from task_hive_spark.streaming.feed import memoized_run
 
 DB = "task_hive"
 
@@ -317,12 +318,8 @@ def compacted_tasks_dir(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     """Once per (session, sf_dir): write the tasks table FRAGMENTED
     (FRAGMENT_PARTS files per status partition — the streaming-append
     pathology), compact it, and return (compacted_dir, plan)."""
-    import tempfile
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    def build() -> tuple[str, dict]:
-        root = tempfile.mkdtemp(prefix="compact_", dir=_scratch_root())
+    def build(root: str) -> tuple[str, dict]:
         frag, comp = os.path.join(root, "fragmented"), os.path.join(root, "compacted")
         (
             tasks_df(spark, sf_dir)
@@ -333,7 +330,7 @@ def compacted_tasks_dir(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
         plan = compact_table(spark, frag, comp)
         return comp, plan
 
-    return session_memo(spark, ("compacted_tasks", sf_dir), build)
+    return memoized_run(spark, ("compacted_tasks", sf_dir), build)
 
 
 def cat_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,12 +508,8 @@ def clustered_tasks_dir(
     unclustered (every file spans the full create_time range — nothing
     prunable), rewrite it sort-clustered on create_time, and build the
     footer manifest. Returns (fragmented_dir, clustered_dir, stats)."""
-    import tempfile
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    def build() -> tuple[str, str, list[dict]]:
-        root = tempfile.mkdtemp(prefix="cluster_", dir=_scratch_root())
+    def build(root: str) -> tuple[str, str, list[dict]]:
         frag = os.path.join(root, "fragmented")
         clus = os.path.join(root, "clustered")
         # round-robin repartition scatters rows across files — the
@@ -533,7 +526,7 @@ def clustered_tasks_dir(
         stats = file_column_stats(clus, CLUSTER_COL)
         return frag, clus, stats
 
-    return session_memo(spark, ("clustered_tasks", sf_dir), build)
+    return memoized_run(spark, ("clustered_tasks", sf_dir), build)
 
 
 # the demo range window: one year out of the ~7 the fixture spans, so a
@@ -619,12 +612,8 @@ def delta_table_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str, list[d
     """Once per (session, sf_dir): clustered BASE + raw 2-file DELTA,
     with the manifest built over BOTH levels. Returns
     (base_dir, delta_dir, stats)."""
-    import tempfile
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    def build() -> tuple[str, str, list[dict]]:
-        root = tempfile.mkdtemp(prefix="delta_", dir=_scratch_root())
+    def build(root: str) -> tuple[str, str, list[dict]]:
         base_frag = os.path.join(root, "base_frag")
         base = os.path.join(root, "base")
         delta = os.path.join(root, "delta")
@@ -641,7 +630,7 @@ def delta_table_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str, list[d
         )
         return base, delta, stats
 
-    return session_memo(spark, ("delta_tables", sf_dir), build)
+    return memoized_run(spark, ("delta_tables", sf_dir), build)
 
 
 def recluster_dirs(
@@ -857,14 +846,10 @@ def zordered_tasks_dir(
     on (create_time, priority) and build per-file manifests for BOTH
     columns from the footers. Returns (dir, time_stats, pri_stats)."""
     import math
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
-
-    def build() -> tuple[str, list[dict], list[dict]]:
-        root = tempfile.mkdtemp(prefix="zorder_", dir=_scratch_root())
+    def build(root: str) -> tuple[str, list[dict], list[dict]]:
         out = os.path.join(root, "zordered")
         t = tasks_df(spark, sf_dir)
         zval = _zvalue(
@@ -886,7 +871,7 @@ def zordered_tasks_dir(
             file_column_stats(out, "priority"),
         )
 
-    return session_memo(spark, ("zordered_tasks", sf_dir), build)
+    return memoized_run(spark, ("zordered_tasks", sf_dir), build)
 
 
 ZPRUNE_PRI_LO, ZPRUNE_PRI_HI = 8, 10  # the priority slice of the 2D window

@@ -726,18 +726,14 @@ def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stdlib flatbuffers writer and back through the stdlib reader,
     profiled per language against the shared profile SQL; pytest
     additionally pins BOTH interop directions against pyarrow."""
-    import tempfile
-
-    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.lifecycle import _scratch_root
+    from task_hive_spark.streaming.feed import memoized_run
 
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="ingest_aipc_", dir=_scratch_root())
+    def build(out: str) -> str:
         write_arrowipc_dir(_derived(spark, sf_dir), out)
         return out
 
-    return _profile(read_arrowipc_dir(spark, session_memo(spark, ("arrowipc_ingest", sf_dir), build)))
+    return _profile(read_arrowipc_dir(spark, memoized_run(spark, ("arrowipc_ingest", sf_dir), build)))
 
 
 QUERIES = {"src_arrowipc_roundtrip": src_arrowipc_roundtrip}

@@ -457,18 +457,14 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference tie: the ingestion family around tasks/spider.go:21-74 —
     Avro is the columnar-world analogue of its xlsx container."""
-    import tempfile
-
-    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.lifecycle import _scratch_root
+    from task_hive_spark.streaming.feed import memoized_run
 
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="ingest_avro_", dir=_scratch_root())
+    def build(out: str) -> str:
         write_avro_dir(_derived(spark, sf_dir), out, codec="deflate")
         return out
 
-    return _profile(read_avro_dir(spark, session_memo(spark, ("avro_ingest", sf_dir), build)))
+    return _profile(read_avro_dir(spark, memoized_run(spark, ("avro_ingest", sf_dir), build)))
 
 
 QUERIES = {"src_avro_roundtrip": src_avro_roundtrip}

@@ -26,6 +26,8 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.functions.rows import rows_frame
+
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _REL_NS = {"r": "http://schemas.openxmlformats.org/package/2006/relationships"}
 
@@ -113,7 +115,7 @@ def read_sheet(spark: SparkSession, path: str, skip_header: bool = True) -> Data
     if skip_header:
         matrix = matrix[1:]
     rows = [(i + 1, rec) for i, rec in enumerate(matrix)]
-    return spark.createDataFrame(rows, "row_id INT, row_data ARRAY<STRING>")
+    return rows_frame(spark, rows, "row_id INT, row_data ARRAY<STRING>")
 
 
 def sheet_rows_standin(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -228,18 +228,14 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     green hash proves the varint/UTF-8 wire encode → decode is
     byte-lossless, including proto3 default omission for the corpus's
     doc_id 0 row."""
-    import tempfile
-
-    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.lifecycle import _scratch_root
+    from task_hive_spark.streaming.feed import memoized_run
 
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="ingest_pw_", dir=_scratch_root())
+    def build(out: str) -> str:
         write_protowire_dir(_derived(spark, sf_dir), out)
         return out
 
-    return _profile(read_protowire_dir(spark, session_memo(spark, ("protowire_ingest", sf_dir), build)))
+    return _profile(read_protowire_dir(spark, memoized_run(spark, ("protowire_ingest", sf_dir), build)))
 
 
 QUERIES = {"src_protowire_roundtrip": src_protowire_roundtrip}

@@ -21,15 +21,10 @@ written once per (session, sf_dir, format) and reused.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import session_memo
 from task_hive_spark.sources.fixtures import load_table
-from task_hive_spark.streaming.lifecycle import _scratch_root
+from task_hive_spark.streaming.feed import memoized_run
 
 # Shared derivation (one source of truth, mirrored in the oracle CTE):
 # every 5th doc gets a tail that needs real escaping in both formats —
@@ -64,9 +59,7 @@ def _ingest_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
     """Write the derived corpus once per (session, sf_dir, format) via
     the distributed sink; returns the directory of part files."""
 
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix=f"ingest_{fmt}_", dir=_scratch_root())
-        shutil.rmtree(out)  # let Spark create it
+    def build(out: str) -> str:
         tail = _XML_TAIL if fmt == "xml" else _TAIL
         w = _derived(spark, sf_dir, tail).write.mode("overwrite")
         if fmt == "json":
@@ -79,7 +72,7 @@ def _ingest_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
             w.option("header", True).option("quote", '"').option("escape", '"').csv(out)
         return out
 
-    return session_memo(spark, ("text_ingest", sf_dir, fmt), build)
+    return memoized_run(spark, ("text_ingest", sf_dir, fmt), build)
 
 
 def _profile(d: DataFrame) -> DataFrame:

@@ -538,18 +538,14 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash proves the gzip-member + record-grammar + HTTP + utf-8 path
     is byte-lossless end to end, with BOTH spec digests verified on
     every record read."""
-    import tempfile
-
-    from task_hive_spark.materialize import session_memo
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.lifecycle import _scratch_root
+    from task_hive_spark.streaming.feed import memoized_run
 
-    def build() -> str:
-        out = tempfile.mkdtemp(prefix="ingest_warc_", dir=_scratch_root())
+    def build(out: str) -> str:
         write_warc_dir(_derived(spark, sf_dir), out)
         return out
 
-    return _profile(read_warc_dir(spark, session_memo(spark, ("warc_ingest", sf_dir), build)))
+    return _profile(read_warc_dir(spark, memoized_run(spark, ("warc_ingest", sf_dir), build)))
 
 
 QUERIES = {"src_warc_ingest": src_warc_ingest}

@@ -13,7 +13,9 @@ One decision, owned here and nowhere else:
   checkpoint, by default as a Trigger.AvailableNow drain that stops
   once the feed is exhausted (``start_fold``, ``drain``);
 - a converged run is built once per session in a fresh directory under
-  the scratch root (``memoized_run``, ``_scratch_root``).
+  the scratch root, deleted when its memo is dropped (``memoized_run``,
+  ``_scratch_root``); every other memo that writes under the scratch
+  root (ingests, serve indexes, catalog rewrites) is built the same way.
 
 Three chunking rules fill the 1-based ``chunk`` column the writer
 splits on:
@@ -43,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from task_hive_spark.functions.prefix import bucketed_prefix
-from task_hive_spark.materialize import session_memo
+from task_hive_spark.materialize import _unpersist_value, session_memo
 
 T = TypeVar("T")
 
@@ -184,12 +186,21 @@ def append_to(path: str) -> Callable[[DataFrame, int], None]:
 def memoized_run(spark: SparkSession, key: tuple, run: Callable[[str], T]) -> T:
     """``run(work)`` once per session and ``key`` ((kind, sf_dir, ...),
     the session_memo convention); ``work`` is a fresh directory under
-    the scratch root, named after the kind."""
-    return session_memo(
-        spark,
-        key,
-        lambda: run(tempfile.mkdtemp(prefix=f"{key[0]}_", dir=_scratch_root())),
-    )
+    the scratch root, named after the kind. Dropping the entry
+    (``clear_indexes``, ``drop_memo``, dead-session eviction)
+    unpersists the value and deletes ``work``."""
+    work: list[str] = []
+
+    def build() -> T:
+        work.append(tempfile.mkdtemp(prefix=f"{key[0]}_", dir=_scratch_root()))
+        return run(work[0])
+
+    def release(value: T) -> None:
+        _unpersist_value(value)
+        for d in work:
+            shutil.rmtree(d, ignore_errors=True)
+
+    return session_memo(spark, key, build, release)
 
 
 _SCRATCH_SWEPT = False

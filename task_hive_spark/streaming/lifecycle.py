@@ -59,6 +59,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.operators.processors import (
     BACKOFF_BASE_NS,
     BACKOFF_BASE_S,
@@ -107,7 +108,8 @@ def _as_task_state(df: DataFrame) -> DataFrame:
 
 
 def _empty_task_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         [],
         "task_id STRING, priority INT, status STRING, retry_count INT,"
         " retry_delay_ns BIGINT, worker_id STRING, ready_s BIGINT,"
@@ -116,8 +118,8 @@ def _empty_task_state(spark: SparkSession) -> DataFrame:
 
 
 def _empty_worker_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [], "worker_id STRING, task_count INT, last_heartbeat_s BIGINT, capacity INT"
+    return rows_frame(
+        spark, [], "worker_id STRING, task_count INT, last_heartbeat_s BIGINT, capacity INT"
     )
 
 

@@ -229,6 +229,26 @@ def test_resubmit_upserts_by_id(spark):
         th.close()
 
 
+def test_submit_task_keeps_hostile_text(spark):
+    """A submitted batch enters the plan as a VALUES literal, so its
+    text must survive SQL quoting: a quote, a backslash, a newline and
+    non-ASCII text read back byte-for-byte, and a value of the wrong
+    type is refused."""
+    th = TaskHive(spark, TaskHiveConfig(worker_count=1))
+    try:
+        task_id = "it's\\new\nline-é"
+        payload = json.dumps({"q": "'", "b": "\\", "n": "\n", "u": "héllo ✓"}, ensure_ascii=False)
+        th.submit_task({"id": task_id, "type": "cus'tom\\", "payload": payload, "priority": 4})
+        row = th.get_task_by_id(task_id)
+        assert (row.id, row.type, row.payload, row.priority) == (
+            task_id, "cus'tom\\", payload, 4
+        )
+        with pytest.raises(ValueError):
+            th.submit_task({"id": "bad-1", "type": "custom", "payload": {"not": "a string"}})
+    finally:
+        th.close()
+
+
 def test_capacity_bounds_per_round_dispatch(spark):
     """worker_capacity is a real throttle: one worker with capacity 2
     drains 5 tasks over ceil(5/2)=3 rounds, and a hard round lid of 1

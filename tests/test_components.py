@@ -54,13 +54,16 @@ def test_limit_constant_is_sane():
 
 
 def test_labeling_literal_is_capped_by_rendered_bytes(spark):
-    """Full-range 19-digit BIGINT ids render ~75 B of VALUES text per
-    row, so 20,000 labels (far under any row cap sized for small ids)
-    would be a ~1.5 MB statement: over the byte budget the labeling
-    takes the checkpoint path (LogicalRDD leaf), not the literal
-    (LocalRelation), with the same answer; small ids keep the literal."""
+    """Full-range 19-digit BIGINT ids render ~47 B of VALUES text per
+    label, so LITERAL_MAX_BYTES / 32 labels (far under any row cap sized
+    for small ids) would be a ~1.5x-cap statement: over the byte budget
+    the labeling takes the checkpoint path (LogicalRDD leaf), not the
+    literal (LocalRelation), with the same answer; small ids keep the
+    literal."""
+    from task_hive_spark.functions.rows import LITERAL_MAX_BYTES
+
     base = 9_000_000_000_000_000_000
-    edges = [(base + 2 * i, base + 2 * i + 1) for i in range(10_000)]
+    edges = [(base + 2 * i, base + 2 * i + 1) for i in range(LITERAL_MAX_BYTES // 64)]
     comps = min_label_components(spark.createDataFrame(edges, "a bigint, b bigint"))
     plan = comps._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan and "LocalRelation" not in plan

@@ -75,3 +75,21 @@ def test_scratch_root_has_one_binding():
     assert lifecycle._scratch_root is feed._scratch_root
     stray = sorted(n for n, f in bound.items() if f is not lifecycle._scratch_root)
     assert not stray, f"modules binding another _scratch_root: {stray}"
+
+
+def test_clear_indexes_deletes_memo_work_dirs(spark, sf_dir):
+    """A session memo that writes under the scratch root (an ingest, a
+    converged stream run) owns its directory: dropping the memo deletes
+    it, so a long-lived driver's scratch holds only live sessions'
+    work."""
+    from task_hive_spark.materialize import clear_indexes
+    from task_hive_spark.sources import textfiles
+    from task_hive_spark.streaming import minhashstream
+    from task_hive_spark.streaming.feed import _scratch_root
+
+    ingest = textfiles._ingest_dir(spark, sf_dir, "json")
+    stream = os.path.dirname(minhashstream._ensure_run(spark, sf_dir))
+    for d in (ingest, stream):
+        assert os.path.dirname(d) == _scratch_root() and os.path.isdir(d), d
+    clear_indexes(spark)
+    assert not os.path.exists(ingest) and not os.path.exists(stream)

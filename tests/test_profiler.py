@@ -54,11 +54,12 @@ def test_profile_records(spark, sf_dir, tracer):
     [rec] = prof.profile_queries(spark, tracer, qs, sf_dir, ["rel_q1_pricing_summary"])
     assert list(rec) == [
         "q", "wall_s", "plan_ms", "jobs", "exec_cpu_s", "shuffle_bytes",
-        "spill_bytes", "skew", "driver_s", "build_s", "stages",
+        "spill_bytes", "skew", "driver_s", "build_s", "py4j_calls", "stages",
         "exchanges", "bcast", "py_eval", "smj", "bhj",
     ]
     assert rec["q"] == "rel_q1_pricing_summary"
     assert rec["jobs"] > 0
+    assert rec["py4j_calls"] > 0
     assert 0 <= rec["driver_s"] <= rec["wall_s"]
 
     runs = prof.timed_runs(spark, tracer, qs, sf_dir, "txt_bpe_merges")

@@ -122,9 +122,9 @@ def test_bucketed_prefix_materializes_input_once(spark):
 def test_components_labeling_is_materialized(spark):
     """fe0d29d / r14: the driver-local union-find labeling must never
     plan a re-pickled Python-RDD scan under its consumers. r14 shape:
-    integral labelings within _LABEL_LITERAL_MAX_BYTES come back as a VALUES
-    literal (LocalRelation — no job at all); bigger or non-integral
-    ones keep the r13 eager localCheckpoint (LogicalRDD)."""
+    labelings within rows.LITERAL_MAX_BYTES come back as a VALUES
+    literal (LocalRelation — no job at all); bigger ones keep the r13
+    eager localCheckpoint (LogicalRDD)."""
     from task_hive_spark.functions.components import min_label_components
 
     pairs = spark.createDataFrame(
@@ -143,14 +143,14 @@ def test_components_labeling_is_materialized(spark):
 def test_components_labeling_over_literal_cap_checkpoints(spark, monkeypatch):
     """The over-cap fallback stays the one-conversion checkpoint
     (LogicalRDD leaf), and agrees with the literal path row-for-row."""
-    from task_hive_spark.functions import components as C
+    from task_hive_spark.functions import components as C, rows as R
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "a bigint, b bigint"
     )
     lit_rows = {(r["node"], r["component"])
                 for r in C.min_label_components(pairs).collect()}
-    monkeypatch.setattr(C, "_LABEL_LITERAL_MAX_BYTES", 50)
+    monkeypatch.setattr(R, "LITERAL_MAX_BYTES", 50)
     comps = C.min_label_components(pairs)
     assert {(r["node"], r["component"]) for r in comps.collect()} == lit_rows
     assert "LogicalRDD" in _plan(comps)

@@ -124,13 +124,14 @@ def test_dedup_pruned_serve_sigs_are_a_values_literal(spark, sf_dir):
     """r14 serve shape: the probe signatures re-enter the pruned dedup
     serve as a VALUES literal (its two broadcast builds are local), and
     the plan still reads index artifacts only."""
-    from task_hive_spark.operators.dedup import dd_dedup_served_pruned
+    from task_hive_spark.operators.dedup import _dedup_index_clustered, dd_dedup_served_pruned
 
     df = dd_dedup_served_pruned(spark, sf_dir)
     plan = _plan(df)
     assert "Scan ExistingRDD" not in plan
     assert "LocalRelation" in plan or "LocalTableScan" in plan, plan
-    assert all("ddcidx_" in f for f in df.inputFiles()), df.inputFiles()
+    idx, _stats = _dedup_index_clustered(spark, sf_dir)
+    assert all(idx in f for f in df.inputFiles()), df.inputFiles()
 
 
 def test_no_fat_parquet_subtrees_under_unions(spark, sf_dir):
