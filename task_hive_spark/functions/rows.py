@@ -22,12 +22,16 @@ the plan, a broadcast of them is built on the driver, and no job runs.
 Values render by their column's declared type, so the literal carries
 the schema: int as ``n``, bigint as ``nL``, double as ``repr(x)D``
 (exact for every finite double), string quoted with ``\\`` and ``'``
-escaped by a backslash, NULL as ``CAST(NULL AS t)``, and
-``array<bigint>`` / ``array<string>`` as ``array(...)``. Those types
-are the supported ones. Any other type, a non-finite double or a value
-whose Python type does not fit its column raises ``ValueError``: these
-rows may come from outside the program (a submitted task batch).
-Backslash escapes are escapes only while
+escaped by a backslash and ``$`` written ``\\u0024``, NULL as
+``CAST(NULL AS t)``, and ``array<bigint>`` / ``array<string>`` as
+``array(...)``. Those types are the supported ones. Any other type, a
+non-finite double or a value whose Python type does not fit its column
+raises ``ValueError``: these rows may come from outside the program (a
+submitted task batch).
+``spark.sql`` substitutes ``${...}`` variables (environment, conf) in
+its whole text, quoted literals included, before it parses; a ``$``
+that reaches it as ``\\u0024`` is never substituted and parses back
+to ``$``. Backslash escapes are escapes only while
 ``spark.sql.parser.escapedStringLiterals`` is off, its default; the
 conf is read only when a string needed one, and if it is on the rows
 take the checkpoint path.
@@ -42,8 +46,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 # 1 MiB of SQL text: a whole 385-row sf0.1 crawl batch of 128-value
-# MinHash signatures renders to ~0.63 MB, and the literal's driver-side
-# parse broke even with the checkpoint's job near this size.
+# MinHash signatures renders to ~0.63 MB. At the cap the literal is still
+# the cheaper path: a 50k-row small-id labeling (1.0 MB) built and read
+# twice took 1.8 s as a literal and 2.5 s checkpointed (4 cores); each
+# further read costs the literal ~0.1 s more planning.
 LITERAL_MAX_BYTES = 1 << 20
 
 _INT_BITS = {"int": 31, "bigint": 63}
@@ -77,7 +83,7 @@ def _render(v: object, t: str) -> str:
     if t == "string":
         if not isinstance(v, str):
             raise ValueError(f"{v!r} does not fit a string column")
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
     if t in ("array<bigint>", "array<string>"):
         if not isinstance(v, (list, tuple)):
             raise ValueError(f"{v!r} does not fit an {t} column")

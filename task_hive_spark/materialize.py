@@ -16,7 +16,10 @@ All of them live in ONE registry, ``session_memo``, keyed by
 (applicationId, *key). Keys carry the sf_dir, so a new session or a
 different dataset rebuilds instead of serving stale state, and one
 registry gives every entry the same two lifecycle paths: dead-session
-eviction and ``clear_indexes`` teardown.
+eviction and ``clear_indexes`` teardown. A memo that writes files
+(converged stream runs, ingests, serve indexes, catalog rewrites) is
+built by ``memoized_run`` in a fresh directory under ``_scratch_root()``
+and that directory is deleted when the entry is dropped.
 
 The gram/shingle EXPLOSION is deliberately never cached: at corpus
 scale it is a multi-PB intermediate and recomputing it per consumer is
@@ -26,7 +29,10 @@ cheaper than spilling it to storage.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import threading
+import time
 from collections.abc import Callable
 from typing import TypeVar
 
@@ -174,6 +180,55 @@ def drop_memo(spark: SparkSession, key: tuple) -> None:
         entry = _MEMO.pop((spark.sparkContext.applicationId, *key), None)
     if entry is not None:
         _release(entry)
+
+
+def memoized_run(spark: SparkSession, key: tuple, run: Callable[[str], T]) -> T:
+    """``run(work)`` once per session and ``key`` ((kind, sf_dir, ...),
+    the session_memo convention); ``work`` is a fresh directory under
+    the scratch root, named after the kind. Dropping the entry
+    (``clear_indexes``, ``drop_memo``, dead-session eviction)
+    unpersists the value and deletes ``work``."""
+    work: list[str] = []
+
+    def build() -> T:
+        work.append(tempfile.mkdtemp(prefix=f"{key[0]}_", dir=_scratch_root()))
+        return run(work[0])
+
+    def release(value: T) -> None:
+        _unpersist_value(value)
+        for d in work:
+            shutil.rmtree(d, ignore_errors=True)
+
+    return session_memo(spark, key, build, release)
+
+
+_SCRATCH_SWEPT = False
+_SCRATCH_TTL_S = 48 * 3600  # stale feed/state dirs from dead sessions;
+# generous vs any live session's age (a round is ~6h) because mtimes are
+# stamped at creation, not on use — a sweep must never race a running
+# stream's feed or checkpoint
+
+
+def _scratch_root() -> str:
+    global _SCRATCH_SWEPT
+    root = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".scratch")
+    os.makedirs(root, exist_ok=True)
+    if not _SCRATCH_SWEPT:
+        # one sweep per process: scratch dirs outlive the session that
+        # made them (each verify/pytest run leaves feeds, checkpoints,
+        # state swaps), accumulating hundreds of MB across rounds. Any
+        # entry untouched for _SCRATCH_TTL_S belongs to a long-dead
+        # session — a live one re-stamps nothing older than its own run.
+        _SCRATCH_SWEPT = True
+        now = time.time()
+        for name in os.listdir(root):
+            p = os.path.join(root, name)
+            try:
+                if now - os.path.getmtime(p) > _SCRATCH_TTL_S:
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass  # concurrent sweep/removal — someone else got it
+    return root
 
 
 def session_index(

@@ -25,10 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from task_hive_spark.functions.components import min_label_components
 from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.functions.text import fingerprint, portable_hash64, ws_tokens
-from task_hive_spark.materialize import session_index
+from task_hive_spark.materialize import memoized_run, session_index
 from task_hive_spark.functions.report import report_sort
 from task_hive_spark.sources.fixtures import load_table, register_fixture_views
-from task_hive_spark.streaming.feed import memoized_run
 
 # K=128 / 32 bands / r=4 rows-per-band — the production family (the
 # Spark MinHashLSH default neighborhood; GPL-ish dedup papers use

@@ -37,9 +37,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from task_hive_spark.functions.components import min_label_components
 from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.functions.vectors import cosine, dot, norm
-from task_hive_spark.materialize import session_index, session_memo
+from task_hive_spark.materialize import memoized_run, session_index, session_memo
 from task_hive_spark.sources.fixtures import load_table
-from task_hive_spark.streaming.feed import memoized_run
 
 DIM = 64
 # 8 bands × 4 bits: for neighbor cosine ≈ 0.7 the per-bit collision

@@ -33,8 +33,8 @@ from pyspark.sql.window import Window as W
 
 from task_hive_spark.functions.text import portable_hash32, portable_hash64
 from task_hive_spark.functions.report import report_sort
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.sources.fixtures import load_table
-from task_hive_spark.streaming.feed import memoized_run
 
 # --- KMV (K-minimum-values) distinct estimator --------------------------
 # Bar-Yossef et al. 2002: keep the K smallest distinct hash values; if

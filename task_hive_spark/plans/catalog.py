@@ -28,9 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from task_hive_spark.materialize import session_memo
+from task_hive_spark.materialize import memoized_run, session_memo
 from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
-from task_hive_spark.streaming.feed import memoized_run
 
 DB = "task_hive"
 

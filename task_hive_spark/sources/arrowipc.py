@@ -727,7 +727,7 @@ def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiled per language against the shared profile SQL; pytest
     additionally pins BOTH interop directions against pyarrow."""
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.feed import memoized_run
+    from task_hive_spark.materialize import memoized_run
 
     def build(out: str) -> str:
         write_arrowipc_dir(_derived(spark, sf_dir), out)

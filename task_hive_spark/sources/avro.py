@@ -458,7 +458,7 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference tie: the ingestion family around tasks/spider.go:21-74 —
     Avro is the columnar-world analogue of its xlsx container."""
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.feed import memoized_run
+    from task_hive_spark.materialize import memoized_run
 
     def build(out: str) -> str:
         write_avro_dir(_derived(spark, sf_dir), out, codec="deflate")

@@ -229,7 +229,7 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-lossless, including proto3 default omission for the corpus's
     doc_id 0 row."""
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.feed import memoized_run
+    from task_hive_spark.materialize import memoized_run
 
     def build(out: str) -> str:
         write_protowire_dir(_derived(spark, sf_dir), out)

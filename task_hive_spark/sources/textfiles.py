@@ -23,8 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.sources.fixtures import load_table
-from task_hive_spark.streaming.feed import memoized_run
 
 # Shared derivation (one source of truth, mirrored in the oracle CTE):
 # every 5th doc gets a tail that needs real escaping in both formats —

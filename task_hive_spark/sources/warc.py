@@ -539,7 +539,7 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is byte-lossless end to end, with BOTH spec digests verified on
     every record read."""
     from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.streaming.feed import memoized_run
+    from task_hive_spark.materialize import memoized_run
 
     def build(out: str) -> str:
         write_warc_dir(_derived(spark, sf_dir), out)

@@ -38,7 +38,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import latest_committed_version
+from task_hive_spark.materialize import latest_committed_version, memoized_run
 from task_hive_spark.operators.queries import (
     CHANGES_SQL,
     ORACLES as _Q_ORACLES,
@@ -48,7 +48,6 @@ from task_hive_spark.operators.queries import (
 from task_hive_spark.operators.taskmodel import tasks_df
 from task_hive_spark.streaming.feed import (
     drain,
-    memoized_run,
     read_feed,
     with_hash_chunk,
     write_chunks,

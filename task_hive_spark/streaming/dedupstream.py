@@ -25,13 +25,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import _release_checkpoint, warn_local_checkpoint
+from task_hive_spark.materialize import (
+    _release_checkpoint,
+    memoized_run,
+    warn_local_checkpoint,
+)
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
 from task_hive_spark.streaming.feed import (
     EVENT_SCHEMA,
     append_to,
     drain,
-    memoized_run,
     read_feed,
     with_chunk,
     write_chunks,

@@ -11,11 +11,7 @@ One decision, owned here and nowhere else:
   (``read_feed``);
 - a fold consumes the source through ``foreachBatch`` with a
   checkpoint, by default as a Trigger.AvailableNow drain that stops
-  once the feed is exhausted (``start_fold``, ``drain``);
-- a converged run is built once per session in a fresh directory under
-  the scratch root, deleted when its memo is dropped (``memoized_run``,
-  ``_scratch_root``); every other memo that writes under the scratch
-  root (ingests, serve indexes, catalog rewrites) is built the same way.
+  once the feed is exhausted (``start_fold``, ``drain``).
 
 Three chunking rules fill the 1-based ``chunk`` column the writer
 splits on:
@@ -37,17 +33,12 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
 from collections.abc import Callable
-from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from task_hive_spark.functions.prefix import bucketed_prefix
-from task_hive_spark.materialize import _unpersist_value, session_memo
-
-T = TypeVar("T")
 
 EVENT_SCHEMA = (
     "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
@@ -178,55 +169,3 @@ def append_to(path: str) -> Callable[[DataFrame, int], None]:
     """The fold that appends each micro-batch to the parquet dir
     ``path``."""
     return lambda df, _bid: df.write.mode("append").parquet(path)
-
-
-# --- one run per session --------------------------------------------------
-
-
-def memoized_run(spark: SparkSession, key: tuple, run: Callable[[str], T]) -> T:
-    """``run(work)`` once per session and ``key`` ((kind, sf_dir, ...),
-    the session_memo convention); ``work`` is a fresh directory under
-    the scratch root, named after the kind. Dropping the entry
-    (``clear_indexes``, ``drop_memo``, dead-session eviction)
-    unpersists the value and deletes ``work``."""
-    work: list[str] = []
-
-    def build() -> T:
-        work.append(tempfile.mkdtemp(prefix=f"{key[0]}_", dir=_scratch_root()))
-        return run(work[0])
-
-    def release(value: T) -> None:
-        _unpersist_value(value)
-        for d in work:
-            shutil.rmtree(d, ignore_errors=True)
-
-    return session_memo(spark, key, build, release)
-
-
-_SCRATCH_SWEPT = False
-_SCRATCH_TTL_S = 48 * 3600  # stale feed/state dirs from dead sessions;
-# generous vs any live session's age (a round is ~6h) because mtimes are
-# stamped at creation, not on use — a sweep must never race a running
-# stream's feed or checkpoint
-
-
-def _scratch_root() -> str:
-    global _SCRATCH_SWEPT
-    root = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-    os.makedirs(root, exist_ok=True)
-    if not _SCRATCH_SWEPT:
-        # one sweep per process: scratch dirs outlive the session that
-        # made them (each verify/pytest run leaves feeds, checkpoints,
-        # state swaps), accumulating hundreds of MB across rounds. Any
-        # entry untouched for _SCRATCH_TTL_S belongs to a long-dead
-        # session — a live one re-stamps nothing older than its own run.
-        _SCRATCH_SWEPT = True
-        now = time.time()
-        for name in os.listdir(root):
-            p = os.path.join(root, name)
-            try:
-                if now - os.path.getmtime(p) > _SCRATCH_TTL_S:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # concurrent sweep/removal — someone else got it
-    return root

@@ -60,6 +60,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from task_hive_spark.functions.rows import rows_frame
+from task_hive_spark.materialize import (
+    _scratch_root,  # lazy importers and scratch-root redirects read it here
+    memoized_run,
+)
 from task_hive_spark.operators.processors import (
     BACKOFF_BASE_NS,
     BACKOFF_BASE_S,
@@ -69,8 +73,6 @@ from task_hive_spark.streaming.events import events_df, oracle_events_cte
 from task_hive_spark.streaming.feed import (
     AVAILABLE_NOW,
     EVENT_SCHEMA,
-    _scratch_root,  # lazy importers and scratch-root redirects read it here
-    memoized_run,
     read_feed,
     start_fold,
     with_chunk,

@@ -41,7 +41,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import _release_checkpoint, warn_local_checkpoint
+from task_hive_spark.materialize import (
+    _release_checkpoint,
+    memoized_run,
+    warn_local_checkpoint,
+)
 from task_hive_spark.operators.dedup import (
     CORPUS_SQL,
     ORACLES as _DD_ORACLES,
@@ -53,7 +57,6 @@ from task_hive_spark.sources.fixtures import register_fixture_views
 from task_hive_spark.streaming.feed import (
     DOC_SCHEMA,
     drain,
-    memoized_run,
     read_feed,
     with_range_chunk,
     write_chunks,

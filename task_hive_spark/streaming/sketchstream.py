@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.operators.sketches import (
     ORACLES as _SK_ORACLES,
     hll_estimate,
@@ -43,7 +44,6 @@ from task_hive_spark.sources.fixtures import load_table
 from task_hive_spark.streaming.feed import (
     DOC_SCHEMA,
     drain,
-    memoized_run,
     read_feed,
     with_range_chunk,
     write_chunks,

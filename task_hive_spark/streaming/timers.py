@@ -66,13 +66,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.operators.processors import BACKOFF_BASE_S, MAX_RETRIES
 from task_hive_spark.streaming.events import oracle_events_cte
 from task_hive_spark.streaming.feed import (
     EVENT_SCHEMA,
     append_to,
     drain,
-    memoized_run,
     read_feed,
 )
 from task_hive_spark.streaming.lifecycle import N_CHUNKS, event_feed, shared_feed

@@ -231,17 +231,21 @@ def test_resubmit_upserts_by_id(spark):
 
 def test_submit_task_keeps_hostile_text(spark):
     """A submitted batch enters the plan as a VALUES literal, so its
-    text must survive SQL quoting: a quote, a backslash, a newline and
-    non-ASCII text read back byte-for-byte, and a value of the wrong
-    type is refused."""
+    text must survive SQL quoting and spark.sql's ${...} variable
+    substitution: a quote, a backslash, a newline, non-ASCII text and
+    ${env:HOME} / ${x} read back byte-for-byte, and a value of the
+    wrong type is refused."""
     th = TaskHive(spark, TaskHiveConfig(worker_count=1))
     try:
-        task_id = "it's\\new\nline-é"
-        payload = json.dumps({"q": "'", "b": "\\", "n": "\n", "u": "héllo ✓"}, ensure_ascii=False)
-        th.submit_task({"id": task_id, "type": "cus'tom\\", "payload": payload, "priority": 4})
+        task_id = "it's\\new\nline-é-${x}"
+        payload = json.dumps(
+            {"q": "'", "b": "\\", "n": "\n", "u": "héllo ✓", "e": "${env:HOME}", "x": "${x}"},
+            ensure_ascii=False,
+        )
+        th.submit_task({"id": task_id, "type": "cus'tom\\$", "payload": payload, "priority": 4})
         row = th.get_task_by_id(task_id)
         assert (row.id, row.type, row.payload, row.priority) == (
-            task_id, "cus'tom\\", payload, 4
+            task_id, "cus'tom\\$", payload, 4
         )
         with pytest.raises(ValueError):
             th.submit_task({"id": "bad-1", "type": "custom", "payload": {"not": "a string"}})

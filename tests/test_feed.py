@@ -63,7 +63,8 @@ def test_scratch_root_has_one_binding():
     import sys
 
     import task_hive_spark
-    from task_hive_spark.streaming import feed, lifecycle
+    from task_hive_spark import materialize
+    from task_hive_spark.streaming import lifecycle
 
     for m in pkgutil.walk_packages(task_hive_spark.__path__, "task_hive_spark."):
         importlib.import_module(m.name)
@@ -72,7 +73,7 @@ def test_scratch_root_has_one_binding():
         for name, mod in list(sys.modules.items())
         if name.startswith("task_hive_spark") and hasattr(mod, "_scratch_root")
     }
-    assert lifecycle._scratch_root is feed._scratch_root
+    assert lifecycle._scratch_root is materialize._scratch_root
     stray = sorted(n for n, f in bound.items() if f is not lifecycle._scratch_root)
     assert not stray, f"modules binding another _scratch_root: {stray}"
 
@@ -82,10 +83,9 @@ def test_clear_indexes_deletes_memo_work_dirs(spark, sf_dir):
     converged stream run) owns its directory: dropping the memo deletes
     it, so a long-lived driver's scratch holds only live sessions'
     work."""
-    from task_hive_spark.materialize import clear_indexes
+    from task_hive_spark.materialize import _scratch_root, clear_indexes
     from task_hive_spark.sources import textfiles
     from task_hive_spark.streaming import minhashstream
-    from task_hive_spark.streaming.feed import _scratch_root
 
     ingest = textfiles._ingest_dir(spark, sf_dir, "json")
     stream = os.path.dirname(minhashstream._ensure_run(spark, sf_dir))

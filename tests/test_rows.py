@@ -24,6 +24,8 @@ ROWS = [
     (-2147483648, 9223372036854775807, 5e-324, None, [], [], None),
     (None, 0, 1.7976931348623157e308, "", None, [None, "x"], -1),
     (0, 1, -2.5e-7, "plain", [None], None, 0),
+    # spark.sql substitutes ${...} in quoted literals too
+    (1, 2, 0.5, "${env:HOME}", None, ["${x}", "$", "\\u0024"], 3),
 ]
 
 
@@ -57,12 +59,12 @@ def test_empty_rows_are_a_local_relation(spark, tmp_path):
 
 
 def test_escaped_string_literals_take_the_checkpoint_path(spark):
-    rows = [("it's \\ here",)]
+    rows = [("it's \\ here",), ("${x}",)]
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
         df = R.rows_frame(spark, rows, "s string")
         assert "LogicalRDD" in _leaf(df)
-        assert df.collect()[0]["s"] == rows[0][0]
+        assert [r["s"] for r in df.collect()] == [r[0] for r in rows]
         # text without a quote or backslash needs no escape, so no conf read
         assert "LocalRelation" in _leaf(R.rows_frame(spark, [("plain",)], "s string"))
     finally:
