@@ -705,10 +705,9 @@ def served_pruned_probe() -> int:
 
         from task_hive_spark.operators.dedup import (
             corpus_df as _corpus,
-            dedup_index_debt,
-            recluster_dedup_index,
             update_dedup_index_clustered,
         )
+        from task_hive_spark.plans.catalog import level_debt, recluster_level
 
         for wave in (1, 2):
             batch = _corpus(spark, d).where(
@@ -724,14 +723,14 @@ def served_pruned_probe() -> int:
             and len(akept) <= LSH_BANDS + n_delta
             and aserved.collect() == unpruned(out, astats, probe).collect()
         )
-        mstats = recluster_dedup_index(spark, out, n_files=n_files)
+        mstats = recluster_level(spark, os.path.join(out, "buckets"), n_files, "bucket")
         _m, mkept, mtotal = dedup_served_pruned_of(spark, out, mstats, probe)
         fold_ok = 0 < len(mkept) <= LSH_BANDS < mtotal
         bad += 0 if (append_ok and fold_ok) else 1
         print(json.dumps({
             "probe": "dedup_index_lsm", "sf_dir": d,
             "delta_files": n_delta, "kept_after_append": len(akept),
-            "debt_after_append": round(dedup_index_debt(astats), 3),
+            "debt_after_append": round(level_debt(astats), 3),
             "kept_after_fold": len(mkept), "files_after_fold": mtotal,
             "bounds_ok": append_ok and fold_ok,
         }))

@@ -56,7 +56,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.rows import rows_frame
-from task_hive_spark.materialize import latest_committed_version
+from task_hive_spark.materialize import (
+    SNAPSHOT,
+    commit_version,
+    committed_versions,
+    latest_committed_version,
+)
 from task_hive_spark.operators.assign import STRATEGIES, bind
 from task_hive_spark.operators.processors import (
     BACKOFF_BASE_NS,
@@ -146,10 +151,11 @@ class TaskHive:
         existing = latest_committed_version(self.work_dir, "tasks_v")
         if existing is not None:
             self._version = existing
+            self._snapshot = committed_versions(self.work_dir, "tasks_v")[-1]
         else:
-            self._version = 0
+            self._version = -1
             # empty v0 so queries work pre-start
-            self._write_tasks(rows_frame(spark, [], _TASK_SCHEMA), first=True)
+            self._write_tasks(rows_frame(spark, [], _TASK_SCHEMA))
 
     # --- registries (taskhive.go:92-96, :252-255) -------------------------
 
@@ -166,32 +172,25 @@ class TaskHive:
 
     # --- state store ------------------------------------------------------
 
-    def _tasks_path(self, version: int) -> str:
-        return os.path.join(self.work_dir, f"tasks_v{version}")
-
-    def _write_tasks(self, df: DataFrame, first: bool = False) -> None:
-        v = 0 if first else self._version + 1
-        out = self._tasks_path(v)
-        (
-            df.select(*_TASK_COLS)
+    def _write_tasks(self, df: DataFrame) -> None:
+        """Commit the next snapshot version (materialize.commit_version)
+        and swap the read pointer to it. Snapshot retention keeps the
+        previous version too, so a DataFrame handed out just before the
+        swap stays readable for one more round."""
+        self._snapshot = commit_version(
+            self.work_dir,
+            "tasks_v",
+            self._version + 1,
+            lambda path: df.select(*_TASK_COLS)
             .repartition("status")
-            .write.mode("overwrite")
-            .partitionBy("status")
-            .parquet(out)
+            .write.partitionBy("status")
+            .parquet(path),
+            SNAPSHOT,
         )
-        self._version = v  # pointer swap AFTER the write landed
-        # GC snapshots older than v-1: v was just materialized from v-1,
-        # so only those two can still back a live reader; without this,
-        # disk grows O(drain rounds × table size). v-1 is kept so a
-        # DataFrame handed out just before the swap stays readable for
-        # one more round.
-        for old in range(v - 1):
-            stale = self._tasks_path(old)
-            if os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
+        self._version += 1
 
     def _tasks(self) -> DataFrame:
-        return self.spark.read.schema(_TASK_SCHEMA).parquet(self._tasks_path(self._version))
+        return self.spark.read.schema(_TASK_SCHEMA).parquet(self._snapshot)
 
     def _workers(self) -> DataFrame:
         return self.spark.read.schema(_WORKER_SCHEMA).parquet(

@@ -19,15 +19,32 @@ registry gives every entry the same two lifecycle paths: dead-session
 eviction and ``clear_indexes`` teardown. A memo that writes files
 (converged stream runs, ingests, serve indexes, catalog rewrites) is
 built by ``memoized_run`` in a fresh directory under ``_scratch_root()``
-and that directory is deleted when the entry is dropped.
+and that directory is deleted when the entry is dropped, at the latest
+when the process exits.
 
 The gram/shingle EXPLOSION is deliberately never cached: at corpus
 scale it is a multi-PB intermediate and recomputing it per consumer is
 cheaper than spilling it to storage.
+
+Versioned state (the task table, stream and sketch states, sink logs)
+has one commit protocol, ``commit_version``, standing in for the
+reference's etcd writes, which are visible whole or not at all:
+
+- version N lives in ``root/{prefix}N`` and is committed iff
+  ``_SUCCESS`` sits at its root, written after everything else;
+- a commit first clears a leftover ``root/{prefix}N``, so a replayed
+  micro-batch rewrites its version (stream sinks use N = batchId);
+- a ``write`` that makes several sub-writes commits them as one version;
+- readers take committed versions only (``committed_versions``): the
+  highest, or all below a batch id — the prior a replay of it reads;
+- retention is the only choice a caller makes: a snapshot keeps its
+  newest ``SNAPSHOT`` committed versions (a frame handed out just
+  before a commit stays readable one more round), a log keeps all.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -186,11 +203,17 @@ def memoized_run(spark: SparkSession, key: tuple, run: Callable[[str], T]) -> T:
     """``run(work)`` once per session and ``key`` ((kind, sf_dir, ...),
     the session_memo convention); ``work`` is a fresh directory under
     the scratch root, named after the kind. Dropping the entry
-    (``clear_indexes``, ``drop_memo``, dead-session eviction)
-    unpersists the value and deletes ``work``."""
+    (``clear_indexes``, ``drop_memo``, dead-session eviction, or the
+    ``clear_indexes`` registered to run at interpreter exit) unpersists
+    the value and deletes ``work``."""
     work: list[str] = []
 
     def build() -> T:
+        # a process that exits without teardown (a script, a bench run)
+        # still deletes every memo directory it made; unregister first
+        # so the hook is registered once
+        atexit.unregister(clear_indexes)
+        atexit.register(clear_indexes)
         work.append(tempfile.mkdtemp(prefix=f"{key[0]}_", dir=_scratch_root()))
         return run(work[0])
 
@@ -277,15 +300,49 @@ def session_index(
     return session_memo(spark, ("index", sf_dir, name), materialize)
 
 
+SNAPSHOT = 2  # committed versions a snapshot root keeps
+LOG = None  # a log root keeps every version
+
+
+def _versions(root: str, prefix: str) -> list[tuple[int, str, bool]]:
+    """(N, dir, committed) for every directory ``root/{prefix}N``,
+    ascending in N."""
+    names = os.listdir(root) if os.path.isdir(root) else []
+    ns = sorted(
+        int(d[len(prefix):]) for d in names if d.startswith(prefix) and d[len(prefix):].isdigit()
+    )
+    dirs = [os.path.join(root, f"{prefix}{n}") for n in ns]
+    return [(n, d, os.path.exists(os.path.join(d, "_SUCCESS"))) for n, d in zip(ns, dirs)]
+
+
+def committed_versions(root: str, prefix: str, below: int | None = None) -> list[str]:
+    """The committed version dirs ``root/{prefix}N``, oldest first; with
+    ``below``, only those with N < below (the prior a replay of batch
+    ``below`` reads)."""
+    return [d for n, d, done in _versions(root, prefix) if done and (below is None or n < below)]
+
+
 def latest_committed_version(root: str, prefix: str) -> int | None:
-    """Highest N such that ``root/{prefix}N`` holds the _SUCCESS marker
-    the parquet committer writes last, or None. A versioned snapshot
-    whose write was cut short has no marker and is never adopted."""
-    versions = [
-        int(d[len(prefix):])
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith(prefix)
-        and d[len(prefix):].isdigit()
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
-    return max(versions, default=None)
+    """Highest N such that ``root/{prefix}N`` is committed, or None."""
+    return max((n for n, _, done in _versions(root, prefix) if done), default=None)
+
+
+def commit_version(
+    root: str, prefix: str, n: int, write: Callable[[str], object], keep: int | None
+) -> str:
+    """Commit version ``n`` of the state under ``root`` (the protocol in
+    the module docstring) and return its directory: clear a leftover
+    ``root/{prefix}n``, let ``write(path)`` make everything in it, then
+    write the ``_SUCCESS`` marker. ``keep`` is ``SNAPSHOT`` or ``LOG``."""
+    path = os.path.join(root, f"{prefix}{n}")
+    shutil.rmtree(path, ignore_errors=True)
+    write(path)
+    os.makedirs(path, exist_ok=True)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    if keep is not None:
+        every = _versions(root, prefix)
+        oldest_kept = [m for m, _, done in every if done][-keep:][0]
+        for m, d, _ in every:
+            if m < oldest_kept:
+                shutil.rmtree(d, ignore_errors=True)
+    return path

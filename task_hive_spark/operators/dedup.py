@@ -605,7 +605,7 @@ def update_dedup_index_clustered(
     levels: clustered files keep tight disjoint ranges, delta files
     carry near-full-domain spans and are kept CONSERVATIVELY by every
     probe — correct immediately, at a growing read tax that
-    ``dedup_index_debt`` + ``recluster_dedup_index`` pay down (the
+    ``catalog.level_debt`` + ``catalog.recluster_level`` pay down (the
     catalog tier's recluster-debt policy applied to the serving
     index). The caller passes only the docs it KEPT, so tomorrow's
     batch dedups against them too. The two appends are not
@@ -636,57 +636,7 @@ def update_dedup_index_clustered(
     return summary
 
 
-def dedup_index_debt(stats: list[dict]) -> float:
-    """Loose-append share of the bucket index's file set, from the
-    manifest alone — catalog.recluster_debt evaluated over the full
-    bucket-hash domain (every file overlaps it, so the metric reduces
-    to: what fraction of ALL files does a probe keep conservatively)."""
-    from task_hive_spark.plans.catalog import recluster_debt
-
-    sized = [s for s in stats if s["min"] is not None]
-    if not sized:
-        return 1.0 if stats else 0.0
-    lo = min(s["min"] for s in sized)
-    hi = max(s["max"] for s in sized)
-    return recluster_debt(stats, lo, hi)
-
-
 DEDUP_INDEX_DEBT_THRESHOLD = 0.25  # recluster when 1/4 of files are loose
-
-
-def recluster_dedup_index(
-    spark: SparkSession, index_dir: str, n_files: int = DEDUP_INDEX_FILES
-) -> list[dict]:
-    """Pay the bucket index's append debt down: rewrite buckets/ as one
-    fresh range-clustered level (tight footer ranges again) and return
-    the new manifest. The rewrite stages into a sibling directory and
-    swaps; a crash during the staged write leaves the serving level
-    intact, and a crash between the two swap renames is self-healed by
-    ``recover_staged_swap`` on the next recluster or policy-serve call
-    (promote the completed staged level, else restore the retired
-    one)."""
-    import os as _os
-    import shutil as _shutil
-
-    from task_hive_spark.plans.catalog import file_column_stats, recover_staged_swap
-
-    bdir = _os.path.join(index_dir, "buckets")
-    recover_staged_swap(bdir)
-    staged = _os.path.join(index_dir, "buckets_reclustering")
-    (
-        spark.read.parquet(bdir)
-        .repartitionByRange(n_files, "bucket")
-        .sortWithinPartitions("bucket")
-        .write.mode("overwrite")
-        .parquet(staged)
-    )
-    old = _os.path.join(index_dir, "buckets_retired")
-    if _os.path.isdir(old):  # leftover from a crash between the renames
-        _shutil.rmtree(old)
-    _os.rename(bdir, old)
-    _os.rename(staged, bdir)
-    _shutil.rmtree(old)
-    return file_column_stats(bdir, "bucket")
 
 
 def serve_dedup_with_policy(
@@ -703,15 +653,21 @@ def serve_dedup_with_policy(
     the fold fired, kept/total and the live manifest."""
     import os as _os
 
-    from task_hive_spark.plans.catalog import file_column_stats, recover_staged_swap
+    from task_hive_spark.plans.catalog import (
+        file_column_stats,
+        level_debt,
+        recluster_level,
+        recover_staged_swap,
+    )
 
-    recover_staged_swap(_os.path.join(index_dir, "buckets"))
+    bdir = _os.path.join(index_dir, "buckets")
+    recover_staged_swap(bdir)
     if stats is None:
-        stats = file_column_stats(_os.path.join(index_dir, "buckets"), "bucket")
-    debt = dedup_index_debt(stats)
+        stats = file_column_stats(bdir, "bucket")
+    debt = level_debt(stats)
     folded = debt > threshold
     if folded:
-        stats = recluster_dedup_index(spark, index_dir)
+        stats = recluster_level(spark, bdir, DEDUP_INDEX_FILES, "bucket")
     out, kept, total = dedup_served_pruned_of(spark, index_dir, stats, batch)
     return out, {
         "debt": debt, "folded": folded, "kept": kept, "total": total,

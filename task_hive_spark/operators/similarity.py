@@ -1136,8 +1136,8 @@ def update_ann_index_clustered(
     one), and land the (cell, vec_id, sub, code) rows as a small UNCLUSTERED
     delta file set inside cellcodes/. The footer manifest keeps delta
     files conservatively, so probes see appended vectors immediately;
-    ``ann_index_debt`` + ``recluster_ann_index`` pay the read tax down
-    once loose files dominate."""
+    ``catalog.level_debt`` + ``catalog.recluster_level`` pay the read
+    tax down once loose files dominate."""
     import json as _json
     import os as _os
 
@@ -1182,50 +1182,6 @@ def update_ann_index_clustered(
 
 
 ANN_INDEX_DEBT_THRESHOLD = 0.25
-
-
-def ann_index_debt(stats: list[dict]) -> float:
-    """Loose-append share of the cellcodes file set, manifest-only
-    (the dedup_index_debt twin over the cell-id domain)."""
-    from task_hive_spark.plans.catalog import recluster_debt
-
-    sized = [s for s in stats if s["min"] is not None]
-    if not sized:
-        return 1.0 if stats else 0.0
-    lo = min(s["min"] for s in sized)
-    hi = max(s["max"] for s in sized)
-    return recluster_debt(stats, lo, hi)
-
-
-def recluster_ann_index(
-    spark: SparkSession, index_dir: str, n_files: int = ANN_CELL_FILES
-) -> list[dict]:
-    """Rewrite cellcodes/ as one fresh range-clustered level (staged
-    rewrite + directory swap — the recluster_dedup_index discipline;
-    a crash between the swap renames is self-healed by
-    ``recover_staged_swap`` on the next call)."""
-    import os as _os
-    import shutil as _shutil
-
-    from task_hive_spark.plans.catalog import file_column_stats, recover_staged_swap
-
-    cdir = _os.path.join(index_dir, "cellcodes")
-    recover_staged_swap(cdir)
-    staged = _os.path.join(index_dir, "cellcodes_reclustering")
-    (
-        spark.read.parquet(cdir)
-        .repartitionByRange(n_files, "cell")
-        .sortWithinPartitions("cell", "vec_id", "sub")
-        .write.mode("overwrite")
-        .parquet(staged)
-    )
-    old = _os.path.join(index_dir, "cellcodes_retired")
-    if _os.path.isdir(old):  # leftover from a crash between the renames
-        _shutil.rmtree(old)
-    _os.rename(cdir, old)
-    _os.rename(staged, cdir)
-    _shutil.rmtree(old)
-    return file_column_stats(cdir, "cell")
 
 
 def _ann_index_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:

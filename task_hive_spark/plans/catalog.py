@@ -28,7 +28,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from task_hive_spark.materialize import memoized_run, session_memo
+from task_hive_spark.materialize import (
+    SNAPSHOT,
+    commit_version,
+    latest_committed_version,
+    memoized_run,
+    session_memo,
+)
 from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
 
 DB = "task_hive"
@@ -439,6 +445,34 @@ def recover_staged_swap(live_dir: str) -> None:
         _os.rename(retired, live_dir)
 
 
+def recluster_level(
+    spark: SparkSession, live_dir: str, n_files: int, *sort_cols: str
+) -> list[dict]:
+    """Pay a serve index level's append debt down: rewrite ``live_dir``
+    as ``n_files`` files range-clustered on ``sort_cols[0]`` and sorted
+    by ``sort_cols`` (tight footer ranges again) through the staged
+    swap ``recover_staged_swap`` repairs, and return the new manifest
+    over ``sort_cols[0]``."""
+    import shutil
+
+    recover_staged_swap(live_dir)
+    staged = live_dir + "_reclustering"
+    (
+        spark.read.parquet(live_dir)
+        .repartitionByRange(n_files, sort_cols[0])
+        .sortWithinPartitions(*sort_cols)
+        .write.mode("overwrite")
+        .parquet(staged)
+    )
+    retired = live_dir + "_retired"
+    if os.path.isdir(retired):  # leftover from a crash between the renames
+        shutil.rmtree(retired)
+    os.rename(live_dir, retired)
+    os.rename(staged, live_dir)
+    shutil.rmtree(retired)
+    return file_column_stats(live_dir, sort_cols[0])
+
+
 def _utc(v):
     """Normalize a manifest stat / window bound for comparison.
 
@@ -637,29 +671,38 @@ def recluster_dirs(
 ) -> tuple[str, list[dict]]:
     """Fold any set of table levels into a fresh clustered level and
     rebuild the manifest — the generic debt-paydown core shared by the
-    fixture wrapper and the threshold policy. Returns (merged, stats)."""
+    fixture wrapper and the threshold policy. The merged level is the
+    next ``merged_v`` version beside the first input level
+    (materialize.commit_version, snapshot retention), so it goes away
+    with the directory that holds the levels. Returns (merged, stats)."""
     import shutil
     import tempfile
 
-    from task_hive_spark.streaming.lifecycle import _scratch_root
+    root = os.path.dirname(dirs[0])
 
-    root = tempfile.mkdtemp(prefix="reclus_", dir=_scratch_root())
-    merged = os.path.join(root, "merged")
-    staged = os.path.join(root, "staged")
-    # stage all levels as one input dir (file moves would do at scale;
-    # a copy keeps the fixture dirs immutable for the session cache)
-    os.makedirs(staged)
-    for src in dirs:
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                shutil.copy2(
-                    os.path.join(src, f),
-                    os.path.join(staged, f"{os.path.basename(src)}_{f}"),
-                )
-    compact_table(
-        spark, staged, merged,
-        target_bytes=target_bytes, cluster_by=[CLUSTER_COL],
-    )
+    def write(merged: str) -> None:
+        # stage all levels as one input dir (file moves would do at
+        # scale; a copy keeps the input levels immutable for the
+        # session cache), dropped once the clustered rewrite is done
+        staged = tempfile.mkdtemp(prefix="staged_", dir=root)
+        try:
+            for src in dirs:
+                for f in os.listdir(src):
+                    if f.endswith(".parquet"):
+                        shutil.copy2(
+                            os.path.join(src, f),
+                            os.path.join(staged, f"{os.path.basename(src)}_{f}"),
+                        )
+            compact_table(
+                spark, staged, merged,
+                target_bytes=target_bytes, cluster_by=[CLUSTER_COL],
+            )
+        finally:
+            shutil.rmtree(staged)
+
+    latest = latest_committed_version(root, "merged_v")
+    n = 0 if latest is None else latest + 1
+    merged = commit_version(root, "merged_v", n, write, SNAPSHOT)
     return merged, file_column_stats(merged, CLUSTER_COL)
 
 
@@ -717,6 +760,19 @@ def recluster_debt(stats: list[dict], lo, hi) -> float:
         or (s["max"] - s["min"]) > (dhi - dlo) * LOOSE_SPAN_SHARE
     ]
     return len(loose) / len(kept)
+
+
+def level_debt(stats: list[dict]) -> float:
+    """Loose-append share of a whole serve index level's file set, from
+    the manifest alone — recluster_debt evaluated over the level's full
+    key domain (every file overlaps it, so the metric reduces to: what
+    fraction of ALL files does a probe keep conservatively)."""
+    sized = [s for s in stats if s["min"] is not None]
+    if not sized:
+        return 1.0 if stats else 0.0
+    lo = min(s["min"] for s in sized)
+    hi = max(s["max"] for s in sized)
+    return recluster_debt(stats, lo, hi)
 
 
 def serve_window_with_policy(

@@ -5,16 +5,12 @@ table the one-shot batch MERGE produces.
 This is the Spark-native shape of a continuously-maintained snapshot
 (what a Delta/Hudi "streaming upsert" sink does): a file-source stream
 delivers change chunks in micro-batches; each trigger MERGEs its chunk
-into the persisted snapshot with copy-on-write: the merged table lands
-in a fresh ``state_v{n+1}`` directory and the version number IS the
-commit pointer (highest _SUCCESS-complete version wins; older versions
-are GC'd after the new one lands) — the same read-merge-write cycle a
-lakehouse table format runs per commit, minus the manifest layer. A
-crash at any point leaves at least one complete snapshot on disk: a
-partial v{n+1} has no _SUCCESS marker and recovery reads v{n}; once
-_SUCCESS lands the batch is durable even if the GC of v{n} is cut
-short. (The earlier rmtree-then-rename swap had a window where NO
-snapshot existed while the checkpoint recorded the chunk as applied.)
+into the persisted snapshot with copy-on-write: micro-batch ``bid``
+reads the snapshot committed before it and commits the merged table as
+version bid+1 (v0 is the seed) through ``materialize.commit_version``,
+whose replay rule makes a re-run batch rewrite its version from the
+same prior — the read-merge-write cycle a lakehouse table format runs
+per commit, minus the manifest layer.
 
 Why it converges to the batch answer (and is replay-safe): every change
 id occurs ONCE across the whole batch and carries ABSOLUTE values, so
@@ -34,11 +30,16 @@ table itself), not the state store, so stream state is O(1).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import latest_committed_version, memoized_run
+from task_hive_spark.materialize import (
+    SNAPSHOT,
+    commit_version,
+    committed_versions,
+    latest_committed_version,
+    memoized_run,
+)
 from task_hive_spark.operators.queries import (
     CHANGES_SQL,
     ORACLES as _Q_ORACLES,
@@ -81,47 +82,28 @@ def change_feed(
     return feed_dir
 
 
-def _state_path(work: str, version: int) -> str:
-    return os.path.join(work, f"state_v{version}")
-
-
-def _current_version(work: str) -> int | None:
-    """Highest COMPLETE snapshot version — the commit pointer.
-    Incomplete leftovers from a crashed write are simply not candidates."""
-    return latest_committed_version(work, "state_v")
-
-
 def run_stream(spark: SparkSession, work: str, feed: str) -> str:
     """Drain whatever the feed currently holds through the copy-on-write
     MERGE (checkpointed — a second call with more files resumes exactly
     where the first stopped); returns the current snapshot dir. The
     snapshot must already be seeded (run_once does; a restarted process
-    adopts the highest complete version)."""
+    adopts the highest committed version)."""
 
-    def merge_batch(batch_df: DataFrame, _bid: int) -> None:
-        v = _current_version(work)
-        cur = spark.read.parquet(_state_path(work, v))
-        merged = apply_merge(cur, batch_df)
-        # materialize v+1 fully (its _SUCCESS is the commit point), THEN
-        # drop older versions — at every instant a complete snapshot
-        # exists, so a crash + checkpoint replay re-reads a valid table
-        # (re-applying the chunk is idempotent by the merge contract)
-        merged.write.mode("overwrite").parquet(_state_path(work, v + 1))
-        for d in os.listdir(work):
-            if d.startswith("state_v") and d != f"state_v{v + 1}":
-                shutil.rmtree(os.path.join(work, d), ignore_errors=True)
+    def merge_batch(batch_df: DataFrame, bid: int) -> None:
+        prior = committed_versions(work, "state_v", below=bid + 1)[-1]
+        merged = apply_merge(spark.read.parquet(prior), batch_df)
+        commit_version(work, "state_v", bid + 1, merged.write.parquet, SNAPSHOT)
 
     drain(read_feed(spark, feed, _CHANGE_SCHEMA), merge_batch, os.path.join(work, "ckpt"))
-    return _state_path(work, _current_version(work))
+    return committed_versions(work, "state_v")[-1]
 
 
 def seed_state(spark: SparkSession, sf_dir: str, work: str) -> None:
-    """Write the v0 snapshot unless a complete version already exists
+    """Commit the v0 snapshot unless a committed version already exists
     (a crashed run resumes from its highest committed snapshot)."""
-    if _current_version(work) is None:
-        tasks_df(spark, sf_dir).select(
-            "id", "status", "priority", "worker_id"
-        ).write.mode("overwrite").parquet(_state_path(work, 0))
+    if latest_committed_version(work, "state_v") is None:
+        seed = tasks_df(spark, sf_dir).select("id", "status", "priority", "worker_id")
+        commit_version(work, "state_v", 0, seed.write.parquet, SNAPSHOT)
 
 
 def run_once(

@@ -35,6 +35,7 @@ from task_hive_spark.streaming.feed import (
     EVENT_SCHEMA,
     append_to,
     drain,
+    read_appended,
     read_feed,
     with_chunk,
     write_chunks,
@@ -158,7 +159,7 @@ def st_stream_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _op_profile(spark: SparkSession, out: str) -> DataFrame:
     return (
-        spark.read.parquet(out)
+        read_appended(spark, out, EVENT_SCHEMA)
         .groupBy("op")
         .agg(
             F.count("*").alias("n_events"),

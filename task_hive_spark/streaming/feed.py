@@ -11,7 +11,9 @@ One decision, owned here and nowhere else:
   (``read_feed``);
 - a fold consumes the source through ``foreachBatch`` with a
   checkpoint, by default as a Trigger.AvailableNow drain that stops
-  once the feed is exhausted (``start_fold``, ``drain``).
+  once the feed is exhausted (``start_fold``, ``drain``); a fold that
+  only keeps its batches commits each one as a log version
+  (``append_to``, read back by ``read_appended``).
 
 Three chunking rules fill the 1-based ``chunk`` column the writer
 splits on:
@@ -39,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from task_hive_spark.functions.prefix import bucketed_prefix
+from task_hive_spark.materialize import LOG, commit_version, committed_versions
 
 EVENT_SCHEMA = (
     "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
@@ -166,6 +169,13 @@ def drain(
 
 
 def append_to(path: str) -> Callable[[DataFrame, int], None]:
-    """The fold that appends each micro-batch to the parquet dir
-    ``path``."""
-    return lambda df, _bid: df.write.mode("append").parquet(path)
+    """The fold that commits micro-batch ``bid`` as version ``bid`` of
+    the log at ``path`` (materialize.commit_version): a replayed batch
+    rewrites its version instead of appending its rows again."""
+    return lambda df, bid: commit_version(path, "batch=", bid, df.write.parquet, LOG)
+
+
+def read_appended(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Every micro-batch ``append_to(path)`` committed, as one frame
+    with ``schema``'s columns."""
+    return spark.read.schema(schema).parquet(*committed_versions(path, "batch="))

@@ -24,8 +24,9 @@ MERGE-style DataFrame joins (``foreachBatch``):
   state + counter decrements (worker.go:136-160).
 - T8  retry state machine: retry_count caps at MaxRetries=3
   (constants.go:20); the 4th failure is terminal (worker.go:63-135).
-- T10 exactly-once: versioned state dirs make each batch's fold an
-  atomic, all-or-nothing transition WITHIN a run, and the recovery unit
+- T10 exactly-once: each batch's fold commits tasks + workers as ONE
+  state version (materialize.commit_version), an atomic,
+  all-or-nothing transition WITHIN a run, and the recovery unit
   is the whole run (the checkpoint is cleared with the state, so a
   restart redoes the deterministic feed rather than resuming a fold the
   counters can't replay idempotently). Checkpoint RESUME semantics are
@@ -40,8 +41,8 @@ MERGE-style DataFrame joins (``foreachBatch``):
 - A5  running per-worker counter: task_count folds ±1 per
   assign/complete/fail (worker.go:168-226).
 
-State is persisted as versioned parquet snapshots per batch (tiny state,
-lineage truncated every batch). On a production cluster the same
+State is persisted as one versioned parquet snapshot per batch (tiny
+state, lineage truncated every batch). On a production cluster the same
 foreachBatch body targets a Delta/Iceberg table MERGE — the state-fold
 logic is identical; only the sink swaps.
 
@@ -61,7 +62,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.materialize import (
+    LOG,
+    SNAPSHOT,
     _scratch_root,  # lazy importers and scratch-root redirects read it here
+    commit_version,
+    committed_versions,
     memoized_run,
 )
 from task_hive_spark.operators.processors import (
@@ -358,37 +363,40 @@ def start_lifecycle_stream(
     """Start the lifecycle fold over ANY streaming DataFrame with the
     EVENT_SCHEMA columns and return (query, paths). `paths` is the LIVE
     pointer dict the fold advances per micro-batch — callers can read
-    the current converged-so-far snapshot while the stream runs (the
-    pointer swaps only after a version is fully written, the same
-    read-validity discipline as the facade's snapshots). Default
-    trigger drains what is already in the feed (AvailableNow); pass
-    e.g. {"processingTime": "200 milliseconds"} for a LIVE feed a
-    producer appends to while the query runs. The converged state is
-    batch-boundary invariant (tests re-chunk the same feed), which is
-    what makes the file feed and the socket feed interchangeable
-    sources for one fold."""
+    the current converged-so-far snapshot while the stream runs. Batch
+    ``bid`` commits tasks and workers as one ``state_v`` version, bid+1
+    (v0 is the empty seed), and then points ``paths`` into it, so one
+    ``dict(paths)`` snapshot is always a matched pair; snapshot
+    retention keeps the previous version readable for one more round.
+    ``paths["assignments"]`` is the dispatch log, one committed version
+    per batch. Default trigger drains what is already in the feed
+    (AvailableNow); pass e.g. {"processingTime": "200 milliseconds"}
+    for a LIVE feed a producer appends to while the query runs. The
+    converged state is batch-boundary invariant (tests re-chunk the
+    same feed), which is what makes the file feed and the socket feed
+    interchangeable sources for one fold."""
     ckpt_dir = os.path.join(work_dir, "ckpt")
     state_dir = os.path.join(work_dir, "state")
-    os.makedirs(state_dir, exist_ok=True)
-    # state below resets to v0, so a leftover checkpoint must not let
-    # the source skip files the fresh state never saw: this runner's
-    # recovery unit is the whole run (redo from the feed), not the
-    # micro-batch — the versioned-fold-on-files design can't replay a
-    # half-applied batch idempotently, so a partial checkpoint + reset
-    # state would silently drop every already-committed chunk
+    # the state resets to v0, so a leftover checkpoint or state version
+    # must not survive: this runner's recovery unit is the whole run
+    # (redo from the feed), not the micro-batch — the counter folds
+    # can't replay a half-applied run idempotently, so a partial
+    # checkpoint + reset state would silently drop every
+    # already-committed chunk
     shutil.rmtree(ckpt_dir, ignore_errors=True)
+    shutil.rmtree(state_dir, ignore_errors=True)
 
-    version = {"n": 0}
-    paths = {
-        "tasks": os.path.join(state_dir, "tasks_v0"),
-        "workers": os.path.join(state_dir, "workers_v0"),
-        "assignments": os.path.join(state_dir, "assignments"),
-    }
-    _empty_task_state(spark).write.mode("overwrite").parquet(paths["tasks"])
-    _empty_worker_state(spark).write.mode("overwrite").parquet(paths["workers"])
-    _empty_task_state(spark).select("task_id").withColumn(
-        "assigned_worker", F.lit(None).cast("string")
-    ).write.mode("overwrite").parquet(paths["assignments"])
+    paths = {"assignments": os.path.join(state_dir, "assignments")}
+
+    def commit_state(n: int, tasks: DataFrame, workers: DataFrame) -> None:
+        def write(path: str) -> None:
+            tasks.write.parquet(os.path.join(path, "tasks"))
+            workers.write.parquet(os.path.join(path, "workers"))
+
+        v = commit_version(state_dir, "state_v", n, write, SNAPSHOT)
+        paths.update(tasks=os.path.join(v, "tasks"), workers=os.path.join(v, "workers"))
+
+    commit_state(0, _empty_task_state(spark), _empty_worker_state(spark))
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.cache()
@@ -396,8 +404,9 @@ def start_lifecycle_stream(
         if clock is None:  # empty batch
             ev.unpersist()
             return
-        prev_tasks = spark.read.parquet(paths["tasks"])
-        prev_workers = spark.read.parquet(paths["workers"])
+        prior = committed_versions(state_dir, "state_v", below=batch_id + 1)[-1]
+        prev_tasks = spark.read.parquet(os.path.join(prior, "tasks"))
+        prev_workers = spark.read.parquet(os.path.join(prior, "workers"))
 
         tasks = _apply_task_events(prev_tasks, ev)
         tasks = _requeue_dead(tasks, ev)
@@ -405,29 +414,10 @@ def start_lifecycle_stream(
         workers = _apply_worker_events(prev_workers, ev)
         assigns = _dispatch_assignments(ev)
 
-        version["n"] += 1
-        n = version["n"]
-        new_tasks = os.path.join(state_dir, f"tasks_v{n}")
-        new_workers = os.path.join(state_dir, f"workers_v{n}")
-        tasks.write.mode("overwrite").parquet(new_tasks)
-        workers.write.mode("overwrite").parquet(new_workers)
-        assigns.write.mode("append").parquet(paths["assignments"])
-        # publish BOTH pointers in one dict.update (atomic under the
-        # GIL): a live reader never sees tasks_vN paired with
-        # workers_v(N-1). Cross-table consistency for a reader is then
-        # one `dict(paths)` snapshot; the assignments log is append-only
-        # and rows for batch N become visible slightly before the state
-        # swap — readers joining it must tolerate that, as with any log.
-        paths.update(tasks=new_tasks, workers=new_workers)
-        # GC: keep v and v-1 (a frame handed out just before the swap
-        # stays readable one more round — the facade's _write_tasks
-        # discipline); without this the live processing-time mode grows
-        # two parquet dirs per non-empty batch until the disk fills
-        for old in range(n - 1):
-            for prefix in ("tasks", "workers"):
-                stale = os.path.join(state_dir, f"{prefix}_v{old}")
-                if os.path.isdir(stale):
-                    shutil.rmtree(stale, ignore_errors=True)
+        # the log's rows for this batch land just before the state swap
+        # — readers joining it must tolerate that, as with any log
+        commit_version(paths["assignments"], "batch=", batch_id, assigns.write.parquet, LOG)
+        commit_state(batch_id + 1, tasks, workers)
         ev.unpersist()
 
     return start_fold(stream, fold, ckpt_dir, trigger or AVAILABLE_NOW), paths
@@ -533,7 +523,7 @@ def st_dispatch_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1: the streaming dispatcher's submit→worker bindings."""
     s = converged_state(spark, sf_dir)
     return (
-        spark.read.parquet(s["assignments"])
+        spark.read.parquet(*committed_versions(s["assignments"], "batch="))
         .where(F.col("task_id").isNotNull())
         .select("task_id", "assigned_worker")
         .orderBy("task_id")

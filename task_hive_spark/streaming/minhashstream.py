@@ -21,6 +21,12 @@ Structured Streaming: the corpus arrives as chunked parquet files
 3. appends the batch's (doc_id, bucket) rows and (doc_id, sig) rows to
    the on-disk index.
 
+The index levels and the emitted pairs are logs: each micro-batch
+commits its rows as version ``bid`` of each root through
+``materialize.commit_version``, and the probe side reads the versions
+committed below ``bid`` — so a replayed batch rewrites its own
+versions and never probes against itself.
+
 Converged across the whole feed, the emitted pair set IS
 dd_minhash_lsh_pairs' answer — the oracle is literally the batch
 query's SQL, which is the strongest possible statement that the online
@@ -42,7 +48,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from task_hive_spark.materialize import (
+    LOG,
     _release_checkpoint,
+    commit_version,
+    committed_versions,
     memoized_run,
     warn_local_checkpoint,
 )
@@ -88,8 +97,9 @@ def run_once(
 def run_stream(spark: SparkSession, work: str, feed: str) -> str:
     """Drain whatever the feed currently holds through the indexer
     (checkpointed — a later call with more files resumes exactly where
-    this one stopped, and a replayed batch overwrites its own subdirs
-    instead of duplicating rows); returns the emitted-pairs dir."""
+    this one stopped, and a replayed batch rewrites its own versions
+    instead of duplicating rows); returns the emitted-pairs root, one
+    ``batch=`` version per micro-batch."""
     bucket_idx = os.path.join(work, "index_buckets")
     sig_idx = os.path.join(work, "index_sigs")
     out = os.path.join(work, "pairs")
@@ -97,12 +107,6 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
     warn_local_checkpoint(spark, "minhashstream batch signatures")
 
     def fold(batch_df: DataFrame, bid: int) -> None:
-        # All three sinks write OVERWRITE into a batch-scoped subdir
-        # (batch={bid}): a checkpoint replay after a mid-fold crash
-        # rewrites the same subdirs instead of appending duplicates —
-        # the same replay-idempotence discipline cdcmerge's versioned
-        # snapshots provide. Readers select columns explicitly so the
-        # discovered `batch` partition column never leaks out.
         batch = batch_df.repartition(n, "doc_id")
         # checkpoint LEAF, not cache: the signature frame is referenced
         # under TWO unions below (probe_side, all_sigs) and Spark 4.1's
@@ -113,23 +117,16 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
         # after the three writes.
         sigs = minhash_sigs_of(batch).localCheckpoint(eager=True)
         buckets = band_buckets_of(sigs)
-        # exclude this batch's own (possibly partial, pre-crash) subdir
-        # from the probe side on replay
-        def _prior(root: str, cols: list[str]) -> DataFrame | None:
-            subs = [
-                d for d in (os.listdir(root) if os.path.isdir(root) else [])
-                if d.startswith("batch=") and int(d.split("=", 1)[1]) < bid
-            ]
-            if not subs:
-                return None
-            return spark.read.parquet(*[os.path.join(root, d) for d in subs]).select(*cols)
-
-        old_buckets = _prior(bucket_idx, ["doc_id", "bucket"])
-        old_sigs = _prior(sig_idx, ["doc_id", "sig"])
-        probe_side = (
-            old_buckets.unionByName(buckets) if old_buckets is not None else buckets
-        )
-        all_sigs = old_sigs.unionByName(sigs) if old_sigs is not None else sigs
+        # the index committed by earlier batches, never this one's
+        old_buckets = committed_versions(bucket_idx, "batch=", below=bid)
+        old_sigs = committed_versions(sig_idx, "batch=", below=bid)
+        probe_side, all_sigs = buckets, sigs
+        if old_buckets:
+            probe_side = (
+                spark.read.parquet(*old_buckets).select("doc_id", "bucket").unionByName(buckets)
+            )
+        if old_sigs:
+            all_sigs = spark.read.parquet(*old_sigs).select("doc_id", "sig").unionByName(sigs)
         a = probe_side.alias("a")
         b = buckets.alias("b")
         cands = (
@@ -148,9 +145,11 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
             .join(sb, "doc_b")
             .select("doc_a", "doc_b", est_jaccard_col().alias("est_jaccard"))
         )
-        pairs.write.mode("overwrite").parquet(os.path.join(out, f"batch={bid}"))
-        buckets.write.mode("overwrite").parquet(os.path.join(bucket_idx, f"batch={bid}"))
-        sigs.write.mode("overwrite").parquet(os.path.join(sig_idx, f"batch={bid}"))
+        # index first, pairs last: committed pairs always have their
+        # docs in the committed index
+        commit_version(sig_idx, "batch=", bid, sigs.write.parquet, LOG)
+        commit_version(bucket_idx, "batch=", bid, buckets.write.parquet, LOG)
+        commit_version(out, "batch=", bid, pairs.write.parquet, LOG)
         _release_checkpoint(sigs)  # free the per-batch checkpoint blocks
 
     drain(read_feed(spark, feed, DOC_SCHEMA), fold, os.path.join(work, "ckpt"))
@@ -174,11 +173,11 @@ def clustered_index_from_stream(
 
     sig_idx = os.path.join(work, "index_sigs")
     bucket_idx = os.path.join(work, "index_buckets")
-    spark.read.parquet(sig_idx).select("doc_id", "sig").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "signatures"))
+    spark.read.parquet(*committed_versions(sig_idx, "batch=")).select(
+        "doc_id", "sig"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "signatures"))
     (
-        spark.read.parquet(bucket_idx)
+        spark.read.parquet(*committed_versions(bucket_idx, "batch="))
         .select("doc_id", "bucket")
         .repartitionByRange(DEDUP_INDEX_FILES, "bucket")
         .sortWithinPartitions("bucket")
@@ -201,7 +200,7 @@ def st_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle)."""
     out = _ensure_run(spark, sf_dir)
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(*committed_versions(out, "batch="))
         .select("doc_a", "doc_b", "est_jaccard")
         .orderBy("doc_a", "doc_b")
     )

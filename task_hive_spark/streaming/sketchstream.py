@@ -13,11 +13,14 @@ data. Two monoid classes are exercised deliberately:
   exactly the whole-corpus sketch.
 - CMS counter state merges by SUM — additive, NOT idempotent, so the
   replay discipline is load-bearing: a naively re-applied micro-batch
-  would double-count its tokens. The batch-scoped "read latest prior
-  (< bid), write full merged state into batch=bid" layout makes a
-  checkpoint replay REWRITE the same subdir from the same prior
-  instead of adding to it — exactly-once folding on an at-least-once
-  trigger (the re-drain test pins that no counter grows).
+  would double-count its tokens. Every fold reads the state committed
+  below its batch id and commits the full merged state as version
+  ``bid`` through ``materialize.commit_version``, whose replay rule
+  makes a re-run batch REWRITE its version from the same prior instead
+  of adding to it — exactly-once folding on an at-least-once trigger
+  (the re-drain test pins that no counter grows). Snapshot retention
+  keeps the newest two versions, so disk holds two copies of the
+  state, not one per batch.
 
 Both folds reuse the batch queries' state derivations verbatim
 (sketches.hll_registers / sketches.cms_grid — one implementation, no
@@ -34,7 +37,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import memoized_run
+from task_hive_spark.materialize import (
+    SNAPSHOT,
+    commit_version,
+    committed_versions,
+    memoized_run,
+)
 from task_hive_spark.operators.sketches import (
     ORACLES as _SK_ORACLES,
     hll_estimate,
@@ -96,20 +104,6 @@ def lineitem_feed(
     return write_chunks(with_range_chunk(li, "l_orderkey", n_chunks), feed_dir, n_chunks)
 
 
-def _latest_batch_dir(root: str, below: int | None = None) -> str | None:
-    """The highest batch=N subdir of a state root (optionally among
-    batches strictly below ``below`` — the replay-safe prior)."""
-    subs = [
-        d
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if d.startswith("batch=")
-        and (below is None or int(d.split("=", 1)[1]) < below)
-    ]
-    if not subs:
-        return None
-    return os.path.join(root, max(subs, key=lambda d: int(d.split("=", 1)[1])))
-
-
 # --- incremental HLL over the event stream -------------------------------
 
 
@@ -124,28 +118,23 @@ def run_stream(spark: SparkSession, work: str, feed: str) -> str:
         # exact, since register max commutes with grouping) and the
         # persisted daily store (stream_store_dir)
         merged = hll_registers(batch_df, ["day", "event_type"])
-        prior_dir = _latest_batch_dir(state_root, below=bid)
-        if prior_dir is not None:
-            prior = spark.read.parquet(prior_dir).select(
-                "day", "event_type", "j", "m"
-            )
+        prior = committed_versions(state_root, "batch=", below=bid)
+        if prior:
             merged = (
-                prior.unionByName(merged)
+                spark.read.parquet(prior[-1])
+                .select("day", "event_type", "j", "m")
+                .unionByName(merged)
                 .groupBy("day", "event_type", "j")
                 .agg(F.max("m").alias("m"))
             )
-        # full merged state into this batch's subdir: a checkpoint
-        # replay rewrites it from the same prior (< bid) — idempotent
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"batch={bid}")
-        )
+        commit_version(state_root, "batch=", bid, merged.write.parquet, SNAPSHOT)
 
     drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
     return state_root
 
 
 def latest_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return spark.read.parquet(_latest_batch_dir(state_root)).select(
+    return spark.read.parquet(committed_versions(state_root, "batch=")[-1]).select(
         "day", "event_type", "j", "m"
     )
 
@@ -196,12 +185,11 @@ def run_kmv_stream(spark: SparkSession, work: str, feed: str) -> str:
         # dedup=False: the union below ends in ONE distinct instead of
         # a per-batch distinct followed by a second one (review finding)
         merged = kmv_hashes(batch_df, dedup=False)
-        prior_dir = _latest_batch_dir(state_root, below=bid)
-        if prior_dir is not None:
-            prior = spark.read.parquet(prior_dir).select("event_type", "h")
-            merged = prior.unionByName(merged)
-        kmv_sketch(merged.distinct()).write.mode("overwrite").parquet(
-            os.path.join(state_root, f"batch={bid}")
+        prior = committed_versions(state_root, "batch=", below=bid)
+        if prior:
+            merged = spark.read.parquet(prior[-1]).select("event_type", "h").unionByName(merged)
+        commit_version(
+            state_root, "batch=", bid, kmv_sketch(merged.distinct()).write.parquet, SNAPSHOT
         )
 
     drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
@@ -230,7 +218,7 @@ def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from task_hive_spark.operators.sketches import kmv_estimate
 
     state_root = _ensure_kmv_run(spark, sf_dir)
-    sk = spark.read.parquet(_latest_batch_dir(state_root)).select(
+    sk = spark.read.parquet(committed_versions(state_root, "batch=")[-1]).select(
         "event_type", "h"
     )
     return kmv_estimate(sk)
@@ -239,16 +227,17 @@ def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- incremental count-min over the document token stream ----------------
 
 
-def run_cms_stream(spark: SparkSession, work: str, feed: str) -> tuple[str, str]:
+def run_cms_stream(spark: SparkSession, work: str, feed: str) -> str:
     """Drain the document feed through the CMS + vocab folds; returns
-    (cms_state_root, vocab_state_root). Candidates (the probe
-    vocabulary) ride the second state frame merged by distinct-union
-    (idempotent); the counter grid is the additive one."""
+    the state root. Each version holds two tables committed together:
+    ``grid``, the additive counter grid, and ``vocab``, the candidates
+    (the probe vocabulary) merged by distinct-union (idempotent) — a
+    crash between the two writes can never pair grid N with vocab
+    N-1."""
     from task_hive_spark.functions.text import ws_tokens
     from task_hive_spark.operators.sketches import cms_grid
 
-    cms_root = os.path.join(work, "cms_state")
-    vocab_root = os.path.join(work, "vocab_state")
+    state_root = os.path.join(work, "cms_state")
 
     def fold(batch_df: DataFrame, bid: int) -> None:
         # tokenization pinned to token_index's derivation (lowered
@@ -259,40 +248,41 @@ def run_cms_stream(spark: SparkSession, work: str, feed: str) -> tuple[str, str]
         )
         grid = cms_grid(occ)
         vocab = occ.distinct()
-        prior_cms = _latest_batch_dir(cms_root, below=bid)
-        if prior_cms is not None:
-            prior = spark.read.parquet(prior_cms).select("d", "col", "c")
+        prior = committed_versions(state_root, "batch=", below=bid)
+        if prior:
             grid = (
-                prior.unionByName(grid)
+                spark.read.parquet(os.path.join(prior[-1], "grid"))
+                .select("d", "col", "c")
+                .unionByName(grid)
                 .groupBy("d", "col")
                 .agg(F.sum("c").alias("c"))
             )
-        prior_vocab = _latest_batch_dir(vocab_root, below=bid)
-        if prior_vocab is not None:
             vocab = (
-                spark.read.parquet(prior_vocab)
+                spark.read.parquet(os.path.join(prior[-1], "vocab"))
                 .select("tok")
                 .unionByName(vocab)
                 .distinct()
             )
-        grid.write.mode("overwrite").parquet(os.path.join(cms_root, f"batch={bid}"))
-        vocab.write.mode("overwrite").parquet(
-            os.path.join(vocab_root, f"batch={bid}")
-        )
+
+        def write(path: str) -> None:
+            grid.write.parquet(os.path.join(path, "grid"))
+            vocab.write.parquet(os.path.join(path, "vocab"))
+
+        commit_version(state_root, "batch=", bid, write, SNAPSHOT)
 
     drain(read_feed(spark, feed, DOC_SCHEMA), fold, os.path.join(work, "ckpt"))
-    return cms_root, vocab_root
+    return state_root
 
 
 def run_cms_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_DOC_CHUNKS
-) -> tuple[str, str]:
+) -> str:
     return run_cms_stream(
         spark, work, doc_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
     )
 
 
-def _ensure_cms_run(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _ensure_cms_run(spark: SparkSession, sf_dir: str) -> str:
     return memoized_run(
         spark, ("cmsstream", sf_dir), lambda work: run_cms_once(spark, sf_dir, work)
     )
@@ -305,9 +295,9 @@ def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk_cms_heavy_hitters answer."""
     from task_hive_spark.operators.sketches import cms_heavy_hitters_from
 
-    cms_root, vocab_root = _ensure_cms_run(spark, sf_dir)
-    sketch = spark.read.parquet(_latest_batch_dir(cms_root)).select("d", "col", "c")
-    vocab = spark.read.parquet(_latest_batch_dir(vocab_root)).select("tok")
+    state = committed_versions(_ensure_cms_run(spark, sf_dir), "batch=")[-1]
+    sketch = spark.read.parquet(os.path.join(state, "grid")).select("d", "col", "c")
+    vocab = spark.read.parquet(os.path.join(state, "vocab")).select("tok")
     return cms_heavy_hitters_from(sketch, vocab)
 
 
@@ -316,9 +306,9 @@ def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_qsk_stream(spark: SparkSession, work: str, feed: str) -> str:
     """Drain the lineitem feed through the log-linear histogram fold —
-    additive counter state like CMS, so the same batch-scoped replay
-    discipline applies (a re-applied micro-batch would double-count its
-    rows; 'read latest prior < bid, overwrite batch=bid' makes replays
+    additive counter state like CMS, so the same replay discipline
+    applies (a re-applied micro-batch would double-count its rows;
+    committing version bid from the prior below bid makes replays
     rewrite instead of add). Returns the state root."""
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
 
@@ -332,17 +322,16 @@ def run_qsk_stream(spark: SparkSession, work: str, feed: str) -> str:
         merged = qsk_state(
             qsk_lineitem_vals(batch_df, F.col("m")), ["g", "m"]
         )
-        prior_dir = _latest_batch_dir(state_root, below=bid)
-        if prior_dir is not None:
-            prior = spark.read.parquet(prior_dir).select("g", "m", "lb", "cnt")
+        prior = committed_versions(state_root, "batch=", below=bid)
+        if prior:
             merged = (
-                prior.unionByName(merged)
+                spark.read.parquet(prior[-1])
+                .select("g", "m", "lb", "cnt")
+                .unionByName(merged)
                 .groupBy("g", "m", "lb")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"batch={bid}")
-        )
+        commit_version(state_root, "batch=", bid, merged.write.parquet, SNAPSHOT)
 
     drain(read_feed(spark, feed, _LINEITEM_SCHEMA), fold, os.path.join(work, "ckpt"))
     return state_root
@@ -370,7 +359,7 @@ def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state_root = _ensure_qsk_run(spark, sf_dir)
     state = (
-        spark.read.parquet(_latest_batch_dir(state_root))
+        spark.read.parquet(committed_versions(state_root, "batch=")[-1])
         .groupBy("g", "lb")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
@@ -406,7 +395,7 @@ def stream_store_dir(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(store, "hll_daily_registers")
         )
         qsk_root = _ensure_qsk_run(spark, sf_dir)
-        spark.read.parquet(_latest_batch_dir(qsk_root)).select(
+        spark.read.parquet(committed_versions(qsk_root, "batch=")[-1]).select(
             "g", "m", "lb", "cnt"
         ).write.mode("overwrite").parquet(os.path.join(store, "quantiles_monthly"))
         return store

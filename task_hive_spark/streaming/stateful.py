@@ -49,6 +49,7 @@ from task_hive_spark.streaming.feed import (
     AVAILABLE_NOW,
     EVENT_SCHEMA,
     append_to,
+    read_appended,
     read_feed,
 )
 from task_hive_spark.streaming.lifecycle import N_CHUNKS, event_feed, shared_feed
@@ -58,6 +59,7 @@ WINDOW_S = 60
 SESSION_GAP_S = 120  # worker-activity session: new session after 120 s idle
 DISPATCH_BOUND_S = 60  # assign must land within 60 s of its submit
 SLA_BOUND_S = 3  # fast-dispatch SLA: assign within 3 s of submit
+_COUNTER_SCHEMA = "worker_id STRING, task_count BIGINT, n_events BIGINT"
 
 
 def _update_counter(
@@ -140,7 +142,7 @@ def run_once(
         .groupBy("worker_id")
         .applyInPandasWithState(
             _update_counter,
-            "worker_id STRING, task_count BIGINT, n_events BIGINT",
+            _COUNTER_SCHEMA,
             "task_count BIGINT, n_events BIGINT",
             "update",
             GroupStateTimeout.NoTimeout,
@@ -280,7 +282,7 @@ def st_worker_counter_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _run_streams(spark, sf_dir)
     w = W.partitionBy("worker_id").orderBy(F.desc("n_events"))
     return (
-        spark.read.parquet(out["counter"])
+        read_appended(spark, out["counter"], _COUNTER_SCHEMA)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("worker_id", "task_count", "n_events")

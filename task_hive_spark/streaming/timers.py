@@ -73,6 +73,7 @@ from task_hive_spark.streaming.feed import (
     EVENT_SCHEMA,
     append_to,
     drain,
+    read_appended,
     read_feed,
 )
 from task_hive_spark.streaming.lifecycle import N_CHUNKS, event_feed, shared_feed
@@ -174,11 +175,7 @@ def st_timer_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("timers_run", sf_dir),
         lambda work: run_once(spark, sf_dir, work, N_CHUNKS, feed=shared_feed(spark, sf_dir)),
     )
-    return (
-        spark.read.schema(_OUT_SCHEMA)
-        .parquet(out)
-        .orderBy("task_id", "ready_s")
-    )
+    return read_appended(spark, out, _OUT_SCHEMA).orderBy("task_id", "ready_s")
 
 
 QUERIES = {"st_timer_requeue": st_timer_requeue}

@@ -423,6 +423,43 @@ def test_recluster_debt_policy_triggers_and_is_answer_invariant(spark, sf_dir, t
     assert cat_delta_prune(spark, sf_dir).count() > 0
 
 
+def test_policy_fold_writes_beside_its_levels(spark, sf_dir, tmp_path):
+    """The merged level a policy fold writes is the next committed
+    version in the directory that holds the levels, so it goes away
+    with that directory: nothing lands in the scratch root, and the
+    staging copy is gone once the rewrite is done."""
+    import datetime as dt
+    import os
+
+    from task_hive_spark.materialize import _scratch_root
+    from task_hive_spark.operators.taskmodel import tasks_df
+    from task_hive_spark.plans.catalog import (
+        CLUSTER_COL,
+        PRUNE_HI,
+        PRUNE_LO,
+        _delta_window_agg,
+        file_column_stats,
+        serve_window_with_policy,
+    )
+
+    t = tasks_df(spark, sf_dir)
+    levels = [str(tmp_path / "base"), str(tmp_path / "delta")]
+    t.repartition(2).write.parquet(levels[0])
+    t.limit(20).write.parquet(levels[1])
+    stats = file_column_stats(levels[0], CLUSTER_COL) + file_column_stats(levels[1], CLUSTER_COL)
+    lo = dt.datetime.fromisoformat(PRUNE_LO)
+    hi = dt.datetime.fromisoformat(PRUNE_HI)
+    before = set(os.listdir(_scratch_root()))
+    df, info = serve_window_with_policy(spark, levels, stats, lo, hi, threshold=-1.0)
+    both = spark.read.parquet(levels[0]).unionByName(spark.read.parquet(levels[1]))
+    assert info["folded"]
+    assert _delta_window_agg(df).collect() == _delta_window_agg(both).collect()
+    new = {e for e in set(os.listdir(_scratch_root())) - before if e.startswith("reclus_")}
+    assert not new, new
+    assert info["levels"] == [str(tmp_path / "merged_v0")]
+    assert sorted(os.listdir(tmp_path)) == ["base", "delta", "merged_v0"]
+
+
 def test_zorder_prunes_both_dimensions_multiplicatively(spark, sf_dir):
     """Z-order contract: (a) EACH column's manifest prunes to a strict
     minority on its own — the property the naive day-major interleave

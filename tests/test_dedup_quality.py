@@ -341,14 +341,13 @@ def test_clustered_dedup_index_append_debt_and_recluster(spark, sf_dir, tmp_path
         LSH_BANDS,
         NEW_OFFSET,
         PROBE_DOC_BASE,
-        dedup_index_debt,
         dedup_served_pruned_of,
         materialize_dedup_index_clustered,
         new_batch_df,
         serve_dedup_with_policy,
         update_dedup_index_clustered,
     )
-    from task_hive_spark.plans.catalog import file_column_stats
+    from task_hive_spark.plans.catalog import file_column_stats, level_debt
     from task_hive_spark.sources.fixtures import load_table
 
     out = str(tmp_path / "ddcidx_lsm")
@@ -392,14 +391,14 @@ def test_clustered_dedup_index_append_debt_and_recluster(spark, sf_dir, tmp_path
         )
         # the read tax: every loose delta file is in the kept set
         assert len(kept) <= LSH_BANDS + n_delta
-        debt = dedup_index_debt(stats)
+        debt = level_debt(stats)
         if debt > DEDUP_INDEX_DEBT_THRESHOLD:
             want = rows
             served2, info = serve_dedup_with_policy(spark, out, probe)
             assert info["folded"] and info["debt"] == debt
             assert served2.collect() == want  # fold is answer-invariant
             assert 0 < len(info["kept"]) <= LSH_BANDS < info["total"]
-            assert dedup_index_debt(info["stats"]) <= DEDUP_INDEX_DEBT_THRESHOLD
+            assert level_debt(info["stats"]) <= DEDUP_INDEX_DEBT_THRESHOLD
             fired = True
             break
     assert fired, f"append stream never crossed the debt threshold (debt={debt})"
@@ -456,14 +455,17 @@ def test_clustered_ann_index_append_debt_and_recluster(spark, sf_dir, tmp_path):
     from task_hive_spark.operators.similarity import (
         ANN_INDEX_DEBT_THRESHOLD,
         NPROBE,
+        ANN_CELL_FILES,
         PQ_M,
-        ann_index_debt,
         ann_served_pruned_of,
         materialize_ann_index_clustered,
-        recluster_ann_index,
         update_ann_index_clustered,
     )
-    from task_hive_spark.plans.catalog import file_column_stats
+    from task_hive_spark.plans.catalog import (
+        file_column_stats,
+        level_debt,
+        recluster_level,
+    )
     from task_hive_spark.sources.fixtures import load_table
 
     out = str(tmp_path / "anncidx_lsm")
@@ -507,12 +509,12 @@ def test_clustered_ann_index_append_debt_and_recluster(spark, sf_dir, tmp_path):
         served_all, _, _ = ann_served_pruned_of(spark, out, all_stats, n_probes=1)
         assert rows == served_all.collect()
         assert len(kept) <= NPROBE + n_delta
-        if ann_index_debt(stats) > ANN_INDEX_DEBT_THRESHOLD:
-            mstats = recluster_ann_index(spark, out)
+        if level_debt(stats) > ANN_INDEX_DEBT_THRESHOLD:
+            mstats = recluster_level(spark, cdir, ANN_CELL_FILES, "cell", "vec_id", "sub")
             mserved, mkept, mtotal = ann_served_pruned_of(spark, out, mstats, n_probes=1)
             assert mserved.collect() == rows  # fold is answer-invariant
             assert 0 < len(mkept) <= NPROBE < mtotal
-            assert ann_index_debt(mstats) <= ANN_INDEX_DEBT_THRESHOLD
+            assert level_debt(mstats) <= ANN_INDEX_DEBT_THRESHOLD
             fired = True
             break
     assert fired, "append stream never crossed the ANN index debt threshold"

@@ -53,6 +53,29 @@ def test_chunk_writes_and_feed_sources_only_in_feed_module():
     assert {rel for rel, _ in found} == {owner}, sorted(found)
 
 
+def test_versioned_paths_only_in_materialize():
+    """Naming a state version and picking one by listing its root are
+    the commit protocol's decision (materialize.commit_version and its
+    readers): a copy elsewhere would bring back its own idea of
+    "committed" (six such copies once held three)."""
+    patterns = {
+        "formats a versioned path": re.compile(r"_v\{|batch=\{"),
+        "lists a root to pick a version": re.compile(
+            r"startswith\(\s*f?[\"'][^\"']*(_v|batch=)[\"']|(_v|batch=)\(\\d"
+        ),
+    }
+    owner = os.path.join("task_hive_spark", "materialize.py")
+    found = []
+    for path in _source_files():
+        rel = os.path.relpath(path, REPO_ROOT)
+        if rel == owner or rel.startswith("tests" + os.sep):
+            continue  # tests name the versions they fabricate
+        with open(path) as f:
+            text = f.read()
+        found += [(rel, what) for what, p in patterns.items() if p.search(text)]
+    assert not found, sorted(found)
+
+
 def test_scratch_root_has_one_binding():
     """A scratch-root redirect (perfbench/env.redirect_scratch_root)
     replaces every module binding that IS lifecycle._scratch_root; a
@@ -93,3 +116,25 @@ def test_clear_indexes_deletes_memo_work_dirs(spark, sf_dir):
         assert os.path.dirname(d) == _scratch_root() and os.path.isdir(d), d
     clear_indexes(spark)
     assert not os.path.exists(ingest) and not os.path.exists(stream)
+
+
+def test_memo_dirs_are_deleted_at_interpreter_exit(tmp_path):
+    """A process that makes a memoized_run directory and exits without
+    any teardown (a script, a bench run) leaves no memo directory
+    behind: memoized_run registers clear_indexes to run at exit."""
+    import subprocess
+    import sys
+
+    out = tmp_path / "made.txt"
+    body = (
+        f"import sys; sys.path.insert(0, {REPO_ROOT!r})\n"
+        "from task_hive_spark.session import get_spark\n"
+        "from task_hive_spark.materialize import memoized_run\n"
+        "spark = get_spark('memo_atexit')\n"
+        "work = memoized_run(spark, ('atexit_probe', 'none'), lambda w: w)\n"
+        f"open({str(out)!r}, 'w').write(work)\n"
+    )
+    subprocess.run([sys.executable, "-c", body], cwd=REPO_ROOT, check=True, timeout=300)
+    made = out.read_text()
+    assert os.path.basename(made).startswith("atexit_probe_")
+    assert not os.path.exists(made), made

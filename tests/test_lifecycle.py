@@ -190,9 +190,9 @@ def test_failover_second_driver_takes_over_after_kill(spark, sf_dir):
     work_dir + feed and must converge to exactly the uninterrupted
     run's task state."""
     import os
-    import re
 
     from tests.conftest import VictimJVM
+    from task_hive_spark.materialize import latest_committed_version
     from task_hive_spark.streaming.lifecycle import event_feed
 
     work = tempfile.mkdtemp(prefix="lc_failover_", dir=_scratch_root())
@@ -210,14 +210,7 @@ def test_failover_second_driver_takes_over_after_kill(spark, sf_dir):
     state_dir = os.path.join(work, "state")
 
     def _committed_two() -> bool:
-        if not os.path.isdir(state_dir):
-            return False
-        versions = [
-            int(m.group(1))
-            for d in os.listdir(state_dir)
-            if (m := re.fullmatch(r"tasks_v(\d+)", d))
-        ]
-        return bool(versions) and max(versions) >= 2
+        return (latest_committed_version(state_dir, "state_v") or 0) >= 2
 
     try:
         victim.poll_until(_committed_two, "2 committed state versions",

@@ -233,17 +233,17 @@ def test_split_leakage_exact_pairs_reconcile(spark, sf_dir):
 def test_incremental_kmv_converges_to_batch_and_is_chunk_invariant(
     spark, sf_dir, tmp_path
 ):
+    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.sketches import kmv_estimate
-    from task_hive_spark.streaming.sketchstream import (
-        _latest_batch_dir,
-        run_kmv_once,
-    )
+    from task_hive_spark.streaming.sketchstream import run_kmv_once
 
     batch = sk_kmv_distinct(spark, sf_dir).collect()
     outs = []
     for n_chunks in (2, 4):
         root = run_kmv_once(spark, sf_dir, str(tmp_path / f"k{n_chunks}"), n_chunks)
-        sk = spark.read.parquet(_latest_batch_dir(root)).select("event_type", "h")
+        sk = spark.read.parquet(committed_versions(root, "batch=")[-1]).select(
+            "event_type", "h"
+        )
         outs.append(kmv_estimate(sk).collect())
     # bottom-K is a mergeable order statistic: any chunking folds to
     # the whole-corpus sketch
@@ -258,35 +258,32 @@ def test_incremental_cms_converges_and_never_double_counts(
     re-add any batch (the checkpoint + batch-scoped state contract)."""
     import os
 
+    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.textops import token_index
     from task_hive_spark.operators.sketches import cms_grid
-    from task_hive_spark.streaming.sketchstream import (
-        _latest_batch_dir,
-        run_cms_once,
-        run_cms_stream,
-    )
+    from task_hive_spark.streaming.sketchstream import run_cms_once, run_cms_stream
 
     occ = token_index(spark, sf_dir).select(F.explode("toks").alias("tok"))
     batch_grid = {
         (r["d"], r["col"]): r["c"] for r in cms_grid(occ).collect()
     }
+    def grid(root):
+        latest = committed_versions(root, "batch=")[-1]
+        return {
+            (r["d"], r["col"]): r["c"]
+            for r in spark.read.parquet(os.path.join(latest, "grid")).collect()
+        }
+
     states = []
     for n_chunks in (2, 4):
         work = str(tmp_path / f"c{n_chunks}")
-        cms_root, _ = run_cms_once(spark, sf_dir, work, n_chunks)
-        got = {
-            (r["d"], r["col"]): r["c"]
-            for r in spark.read.parquet(_latest_batch_dir(cms_root)).collect()
-        }
+        root = run_cms_once(spark, sf_dir, work, n_chunks)
+        got = grid(root)
         states.append(got)
         # re-drain the same exhausted feed: the additive state must not
         # grow (a double-applied batch would inflate every counter)
         run_cms_stream(spark, work, os.path.join(work, "feed"))
-        again = {
-            (r["d"], r["col"]): r["c"]
-            for r in spark.read.parquet(_latest_batch_dir(cms_root)).collect()
-        }
-        assert again == got
+        assert grid(root) == got
     assert states[0] == states[1] == batch_grid
 
 
@@ -332,12 +329,9 @@ def test_incremental_qsk_converges_and_never_double_counts(
     not re-add any batch."""
     import os
 
+    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
-    from task_hive_spark.streaming.sketchstream import (
-        _latest_batch_dir,
-        run_qsk_once,
-        run_qsk_stream,
-    )
+    from task_hive_spark.streaming.sketchstream import run_qsk_once, run_qsk_stream
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
@@ -351,7 +345,7 @@ def test_incremental_qsk_converges_and_never_double_counts(
         # additive merge is exact at any grouping, so summing over m
         # reproduces the per-flag grid
         out: dict = {}
-        for r in spark.read.parquet(_latest_batch_dir(root)).collect():
+        for r in spark.read.parquet(committed_versions(root, "batch=")[-1]).collect():
             k = (r["g"], r["lb"])
             out[k] = out.get(k, 0) + r["cnt"]
         return out
@@ -386,15 +380,12 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
     which overwrites rather than adds) and converge to exactly the
     whole-corpus sketch."""
     import os
-    import re
 
     from tests.conftest import VictimJVM
+    from task_hive_spark.materialize import committed_versions, latest_committed_version
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
     from task_hive_spark.streaming.feed import with_range_chunk, write_chunks
-    from task_hive_spark.streaming.sketchstream import (
-        _latest_batch_dir,
-        run_qsk_stream,
-    )
+    from task_hive_spark.streaming.sketchstream import run_qsk_stream
 
     work = str(tmp_path / "qsk_failover")
     feed = os.path.join(work, "feed")
@@ -413,34 +404,27 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
     )
     state_root = os.path.join(work, "qsk_state")
 
-    def _bids() -> list[int]:
-        if not os.path.isdir(state_root):
-            return []
-        return [
-            int(m.group(1))
-            for d in os.listdir(state_root)
-            if (m := re.fullmatch(r"batch=(\d+)", d))
-        ]
+    def _latest() -> int:
+        v = latest_committed_version(state_root, "batch=")
+        return -1 if v is None else v
 
     try:
         # ≥2 of 4 batches committed, the next in flight
-        victim.poll_until(
-            lambda: (b := _bids()) and max(b) >= 1, "a second committed batch"
-        )
+        victim.poll_until(lambda: _latest() >= 1, "a second committed batch")
     finally:
         victim.kill()
-    at_kill = _bids()
-    assert max(at_kill) < 3, (
+    at_kill = _latest()
+    assert at_kill < 3, (
         f"victim had already drained every batch ({at_kill}) — the kill "
         "was not mid-drain; widen the feed or tighten the poll"
     )
 
     # a second driver (this JVM) RESUMES the same checkpoint + feed
     run_qsk_stream(spark, work, feed)
-    assert max(_bids()) == 3, "resume did not process the remaining batches"
+    assert _latest() == 3, "resume did not process the remaining batches"
     got = {
         (r["g"], r["lb"]): r["cnt"]
-        for r in spark.read.parquet(_latest_batch_dir(state_root)).collect()
+        for r in spark.read.parquet(committed_versions(state_root, "batch=")[-1]).collect()
     }
     want = {
         (r["g"], r["lb"]): r["cnt"]
