@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import tempfile
 import time
@@ -780,103 +779,11 @@ def served_pruned_probe() -> int:
     return 1 if bad else 0
 
 
-def split_sources_probe() -> int:
-    """Pin the byte-range split readers' scale shape on ONE large file
-    each (the 100-TB posture: a big archive must fan out across tasks,
-    with per-task reads bounded by split geometry, and the driver's
-    planning reads bounded by metadata size):
-
-    - WARC (resync-by-validation): every split grid yields exactly the
-      whole-file rows; fan-out is real (>= half the cuts non-empty).
-    - Arrow file (footer blocks): a 64 KB TAIL fetch plans the splits;
-      per-split byte reads equal the block geometry, never the file.
-    """
-    import duckdb
-
-    from task_hive_spark.sources.textfiles import _TAIL
-    from task_hive_spark.sources.warc import _decode_warc_split, write_warc_gz
-    from task_hive_spark.sources.arrowipc import (
-        decode_arrow_block,
-        read_arrow_footer,
-        write_arrow_file,
-    )
-
-    rows = duckdb.sql(
-        "SELECT doc_id, lang, text FROM read_parquet('/root/testdata/sf0.1/"
-        "documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    recs = [
-        (i, la, t + " " + _TAIL if i % 5 == 0 else t) for i, la, t in rows
-    ]
-
-    tmp = tempfile.mkdtemp(prefix="split_probe_")
-    wp = os.path.join(tmp, "one.warc.gz")
-    write_warc_gz(wp, recs)
-    size = os.path.getsize(wp)
-    whole = sorted(_decode_warc_split(wp, 0, size))
-    assert whole == sorted(recs)
-    grids = {}
-    for nsplits in (4, 16, 64):
-        sb = max(size // nsplits, 1)
-        parts = [
-            _decode_warc_split(wp, s, min(s + sb, size)) for s in range(0, size, sb)
-        ]
-        assert sorted(r for p in parts for r in p) == whole, nsplits
-        grids[str(nsplits)] = {
-            "nonempty": sum(1 for p in parts if p),
-            "max_rows": max(len(p) for p in parts),
-        }
-    print(
-        json.dumps(
-            {
-                "probe": "warc_split",
-                "docs": len(recs),
-                "file_bytes": size,
-                "rows_equal_all_grids": True,
-                "grids": grids,
-            }
-        )
-    )
-
-    ap = os.path.join(tmp, "one.arrow")
-    raw = write_arrow_file(recs, batch_rows=256)
-    open(ap, "wb").write(raw)
-    with open(ap, "rb") as f:
-        f.seek(max(0, len(raw) - (1 << 16)))
-        blocks = read_arrow_footer(f.read())  # the driver-side tail fetch
-    got = []
-    max_span = 0
-    with open(ap, "rb") as f:
-        for off, mlen, blen in blocks:
-            f.seek(off)
-            chunk = f.read(mlen + blen)
-            max_span = max(max_span, len(chunk))
-            got.extend(decode_arrow_block(chunk, 0, mlen, blen))
-    assert got == recs
-    print(
-        json.dumps(
-            {
-                "probe": "arrow_file_split",
-                "docs": len(recs),
-                "file_bytes": len(raw),
-                "blocks": len(blocks),
-                "planning_read_bytes": min(1 << 16, len(raw)),
-                "max_split_read_bytes": max_span,
-                "rows_equal": True,
-            }
-        )
-    )
-    shutil.rmtree(tmp, ignore_errors=True)
-    return 0
-
-
 def main() -> int:
     from task_hive_spark.session import get_spark
 
     import __spark_entry__ as entrymod
 
-    if sys.argv[1:2] == ["--split-sources"]:
-        return split_sources_probe()
     if sys.argv[1:2] == ["--ivf-recall"]:
         return ivf_recall()
     if sys.argv[1:2] == ["--served-pruned"]:

@@ -64,11 +64,11 @@ from task_hive_spark.materialize import (
 )
 from task_hive_spark.operators.assign import STRATEGIES, bind
 from task_hive_spark.operators.processors import (
-    BACKOFF_BASE_NS,
     MAX_RETRIES,
     N_BUCKETS,
     _DISPATCH_SCHEMA,
     _dispatch_group,
+    backoff_ns,
     register_task_processor as _register_processor_global,
 )
 
@@ -375,13 +375,7 @@ class TaskHive:
                     F.when(retry, F.col("retry_count") + 1)
                     .otherwise(F.col("retry_count"))
                     .alias("retry_count"),
-                    F.when(
-                        retry,
-                        (
-                            F.lit(BACKOFF_BASE_NS)
-                            * F.pow(F.lit(2.0), F.col("retry_count").cast("double"))
-                        ).cast("long"),
-                    )
+                    F.when(retry, backoff_ns(F.col("retry_count") + 1))
                     .otherwise(F.col("retry_delay_ns"))
                     .alias("retry_delay_ns"),
                     F.coalesce(F.col("o_result"), F.col("result")).alias("result"),

@@ -40,7 +40,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from task_hive_spark.operators.taskmodel import oracle_cte, tasks_df
 
@@ -57,6 +57,16 @@ BACKOFF_BASE_NS = BACKOFF_BASE_S * 1_000_000_000
 TASK_TIMEOUT_S = 300  # common/constants.go:21 (5 minutes)
 BASE_WORK_S = 2  # worker.go:231 fixed delay
 N_BUCKETS = 64  # dispatch fan-out; bounded group size at any scale
+
+
+def backoff_ns(n: Column) -> Column:
+    """The delay before retry ``n`` (n ≥ 1), in nanoseconds."""
+    return (F.lit(BACKOFF_BASE_NS) * F.pow(F.lit(2.0), n - 1)).cast("long")
+
+
+def backoff_s(n: Column) -> Column:
+    """The delay before retry ``n`` (n ≥ 1), in whole seconds."""
+    return (F.lit(BACKOFF_BASE_S) * F.pow(F.lit(2.0), n - 1)).cast("long")
 
 
 def register_task_processor(task_type: str, processor: Callable[[dict], str]) -> None:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from task_hive_spark.functions.text import portable_hash32
-from task_hive_spark.operators.processors import BACKOFF_BASE_NS
+from task_hive_spark.operators.processors import backoff_ns
 from task_hive_spark.operators.taskmodel import (
     NOW_FIXTURE,
     oracle_cte,
@@ -233,7 +233,7 @@ def th_backoff_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     retry_delay_ns column against the recomputed formula."""
     t = tasks_df(spark, sf_dir)
     expected = F.when(F.col("retry_count") == 0, F.lit(0).cast("bigint")).otherwise(
-        (F.lit(BACKOFF_BASE_NS) * F.pow(F.lit(2), F.col("retry_count") - 1)).cast("bigint")
+        backoff_ns(F.col("retry_count"))
     )
     return (
         t.select(

@@ -26,24 +26,28 @@ against the reference implementation, not against a mirror of our own
 assumptions. The gated round-trip query then rides the stdlib path
 end to end under the shared profile oracle.
 
-Scale shape: one ``.arrows`` part file per partition (deterministic
-name + atomic rename), ``binaryFile`` + ``mapInPandas`` read — the
-protowire/avro discipline. Record batches are written at a bounded
-row count so a reader never materializes more than one batch's body
-per step; the stream format is not byte-range splittable (no sync
-markers — the FILE format's footer solves seekability instead),
-so parallelism comes from many part files, the same documented trade
-as the protobuf stream.
+Scale shape (``partfiles``): one ``.arrows`` part file per partition,
+published by rename, read back whole through ``binaryFile``. Record
+batches are written at a bounded row count so a reader never
+materializes more than one batch's body per step; the stream format
+is not byte-range splittable (no sync markers — the FILE format's
+footer solves seekability instead), so parallelism comes from many
+part files, the same documented trade as the protobuf stream.
 
 Reference tie: the ingestion family around tasks/spider.go:21-74.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import struct
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from task_hive_spark.sources.partfiles import read_parts, read_splits, write_parts
+from task_hive_spark.sources.textfiles import _PROFILE_SQL, codec_roundtrip
 
 _CONT = 0xFFFFFFFF
 # MessageHeader union tags (Message.fbs)
@@ -580,142 +584,71 @@ def read_arrow_file(content: bytes):
 
 
 def write_arrowfile_dir(df: DataFrame, out_dir: str, batch_rows: int = _BATCH_ROWS) -> int:
-    """One seekable ``.arrow`` FILE per partition (deterministic name +
-    atomic rename). Returns rows written."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        rows: list[tuple[int, str, str]] = []
-        for pdf in batches:
-            rows += list(zip(pdf["doc_id"].astype(int), pdf["lang"], pdf["text"]))
-        part_id = TaskContext.get().partitionId()
-        name = f"part-{part_id:05d}.arrow"
-        tmp = os.path.join(out_dir, f".part-{part_id:05d}-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(write_arrow_file(rows, batch_rows))
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n": [len(rows)]})
-
-    parts = df.select("doc_id", "lang", "text").mapInPandas(
-        write_part, schema="file string, n long"
+    """One seekable ``.arrow`` FILE per partition (the partfiles sink).
+    Returns rows written."""
+    return write_parts(
+        df,
+        out_dir,
+        ".arrow",
+        lambda tmp, rows, _pid: Path(tmp).write_bytes(write_arrow_file(rows, batch_rows)),
     )
-    return sum(r["n"] for r in parts.collect())
 
 
-def read_arrowfile_dir_split(
-    spark: SparkSession, in_dir: str, batches_per_split: int = 8
-) -> DataFrame:
-    """Distributed SPLITTABLE file-format source: the driver reads only
-    each file's FOOTER (a tail fetch — catalog-style metadata work, no
-    data reads) and cuts splits at exact batch boundaries; each task
-    seeks straight to its blocks. No resync scanning, no overlap, no
-    stragglers from unsplittable big files — the columnar seek path
-    the stream format cannot offer."""
-    import glob as _glob
+def _footer_blocks(path: str) -> list[tuple[int, int, int]]:
+    """The footer Block list of one file, from two exact tail fetches:
+    10 bytes for the footer length, then footer + trailer — correct at
+    ANY block count (a fixed 64 KB guess breaks past ~2700 batches per
+    file)."""
+    size = os.path.getsize(path)
+    if size < 10:
+        raise ValueError(f"{path}: too short to be an Arrow file")
+    with open(path, "rb") as f:
+        f.seek(size - 10)
+        flen = struct.unpack("<i", f.read(4))[0]
+        need = min(size, flen + 10)
+        f.seek(size - need)
+        return read_arrow_footer(f.read())
 
-    import pandas as pd
 
-    splits: list[tuple[str, int, int, int]] = []
-    for path in sorted(_glob.glob(os.path.join(in_dir, "*.arrow"))):
-        size = os.path.getsize(path)
-        with open(path, "rb") as f:
-            # two exact tail fetches: 10 bytes for the footer length,
-            # then footer+trailer — correct at ANY block count (a fixed
-            # 64 KB guess breaks past ~2700 batches per file)
-            if size < 10:
-                raise ValueError(f"{path}: too short to be an Arrow file")
-            f.seek(size - 10)
-            flen = struct.unpack("<i", f.read(4))[0]
-            need = min(size, flen + 10)
-            f.seek(size - need)
-            blocks = read_arrow_footer(f.read())
-        for off, mlen, blen in blocks:
-            splits.append((path, off, mlen, blen))
+def _decode_block_split(path: str, off: int, mlen: int, blen: int):
+    """Rows of the one record batch at footer Block ``(off, mlen, blen)``."""
+    with open(path, "rb") as f:
+        f.seek(off)
+        raw = f.read(mlen + blen)
+    return decode_arrow_block(raw, 0, mlen, blen)
 
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for path, off, mlen, blen in zip(
-                pdf["path"], pdf["start"], pdf["mlen"], pdf["blen"]
-            ):
-                with open(path, "rb") as f:
-                    f.seek(int(off))
-                    raw = f.read(int(mlen) + int(blen))
-                for doc_id, lang, text in decode_arrow_block(
-                    raw, 0, int(mlen), int(blen)
-                ):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
 
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sdf = spark.createDataFrame(splits, "path string, start long, mlen long, blen long")
-    return sdf.repartition(min(max(len(splits), 1), nshuf)).mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+def read_arrowfile_dir_split(spark: SparkSession, in_dir: str) -> DataFrame:
+    """SPLITTABLE file-format source: the driver reads only each file's
+    FOOTER (a tail fetch — metadata work, no data reads) and cuts one
+    split per record batch; each task seeks straight to its blocks. No
+    resync scanning, no overlap, no stragglers from unsplittable big
+    files — the columnar seek path the stream format cannot offer."""
+    splits = [
+        (path, *block)
+        for path in sorted(glob.glob(os.path.join(in_dir, "*.arrow")))
+        for block in _footer_blocks(path)
+    ]
+    return read_splits(spark, splits, _decode_block_split)
 
 
 # --- distributed source/sink ----------------------------------------------
 
 
 def write_arrowipc_dir(df: DataFrame, out_dir: str) -> int:
-    """One ``.arrows`` stream per partition, deterministic names via
-    temp + atomic rename (retry-idempotent). Returns rows written."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        rows: list[tuple[int, str, str]] = []
-        for pdf in batches:
-            rows += list(zip(pdf["doc_id"].astype(int), pdf["lang"], pdf["text"]))
-        part_id = TaskContext.get().partitionId()
-        name = f"part-{part_id:05d}.arrows"
-        tmp = os.path.join(out_dir, f".part-{part_id:05d}-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(write_arrow_stream(rows))
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n": [len(rows)]})
-
-    parts = df.select("doc_id", "lang", "text").mapInPandas(
-        write_part, schema="file string, n long"
+    """One ``.arrows`` stream per partition (the partfiles sink).
+    Returns rows written."""
+    return write_parts(
+        df,
+        out_dir,
+        ".arrows",
+        lambda tmp, rows, _pid: Path(tmp).write_bytes(write_arrow_stream(rows)),
     )
-    return sum(r["n"] for r in parts.collect())
 
 
 def read_arrowipc_dir(spark: SparkSession, in_dir: str) -> DataFrame:
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(os.path.join(in_dir, "*.arrows"))
-
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for content in pdf["content"]:
-                for doc_id, lang, text in read_arrow_stream(bytes(content)):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-    return files.select("content").mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+    """Every stream of ``in_dir``, decoded whole (partfiles)."""
+    return read_parts(spark, in_dir, ".arrows", read_arrow_stream)
 
 
 # --- round-trip query ------------------------------------------------------
@@ -726,23 +659,11 @@ def src_arrowipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stdlib flatbuffers writer and back through the stdlib reader,
     profiled per language against the shared profile SQL; pytest
     additionally pins BOTH interop directions against pyarrow."""
-    from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.materialize import memoized_run
-
-    def build(out: str) -> str:
-        write_arrowipc_dir(_derived(spark, sf_dir), out)
-        return out
-
-    return _profile(read_arrowipc_dir(spark, memoized_run(spark, ("arrowipc_ingest", sf_dir), build)))
+    return codec_roundtrip(
+        spark, sf_dir, "arrowipc_ingest", write_arrowipc_dir, read_arrowipc_dir
+    )
 
 
 QUERIES = {"src_arrowipc_roundtrip": src_arrowipc_roundtrip}
 
-
-def _oracles() -> dict[str, str]:
-    from task_hive_spark.sources.textfiles import _PROFILE_SQL
-
-    return {"src_arrowipc_roundtrip": _PROFILE_SQL}
-
-
-ORACLES = _oracles()
+ORACLES = {"src_arrowipc_roundtrip": _PROFILE_SQL}

@@ -12,15 +12,10 @@ ingest tier uses (long + strings) that is fully implementable with the
 stdlib — the sources/excel.py recipe (a real OOXML reader without
 openpyxl) applied to Avro.
 
-Distributed shape: the WRITER runs as one ``mapInPandas`` task per
-partition, each emitting an independent container file (exactly how a
-connector sink lays out part files); the READER lists the directory via
-Spark's ``binaryFile`` source and decodes each container in a
-``mapInPandas`` batch. Whole-file decode is the fixture-scale path; at
-cluster scale a splittable reader seeks sync markers inside large
-files — the same 16-byte markers this writer already emits per block,
-so the layout is split-ready even though the fixture reader doesn't
-need to split.
+Distributed shape (``partfiles``): one container file per partition,
+published by rename, read back whole through ``binaryFile``; at
+cluster scale the split reader seeks the 16-byte sync markers this
+writer emits per block, so one large container fans out across tasks.
 
 Codec support: ``null`` and ``deflate`` (raw DEFLATE, the spec's
 required pair). Corrupt sync markers, bad magic, unknown codecs and
@@ -32,14 +27,22 @@ from __future__ import annotations
 import io
 import json
 import os
-import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from task_hive_spark.sources.partfiles import (
+    byte_ranges,
+    part_name,
+    read_parts,
+    read_splits,
+    write_parts,
+)
+from task_hive_spark.sources.textfiles import _PROFILE_SQL, codec_roundtrip
+
 _MAGIC = b"Obj\x01"
 
-# the one record shape the ingest tier round-trips (textfiles._SCHEMA)
+# the one record shape the ingest tier round-trips (partfiles.DOC_SCHEMA)
 AVRO_SCHEMA = {
     "type": "record",
     "name": "doc",
@@ -205,74 +208,21 @@ def read_avro(content: bytes) -> list[tuple[int, str, str]]:
     return out
 
 
-def write_avro_dir(
-    df: DataFrame, out_dir: str, codec: str = "deflate"
-) -> int:
-    """Distributed Avro sink: every partition writes its own container
-    file (part-{partitionId}.avro) — the connector part-file layout.
-    The name is DETERMINISTIC per partition and the write goes through
-    a task-unique temp file + atomic rename, so a retried or
-    speculative task overwrites its own partition's container instead
-    of leaving a second decodable file that would double-count the
-    partition's records on read. Returns total records written (read
-    back from the returned counts)."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        rows: list[tuple[int, str, str]] = []
-        for pdf in batches:
-            rows += list(
-                zip(pdf["doc_id"].astype(int), pdf["lang"], pdf["text"])
-            )
-        part_id = TaskContext.get().partitionId()
-        name = f"part-{part_id:05d}.avro"
-        # hidden + non-.avro: invisible to read_avro_dir's glob even if
-        # a crashed attempt strands it
-        tmp = os.path.join(
-            out_dir, f".part-{part_id:05d}-{uuid.uuid4().hex[:8]}.tmp"
-        )
-        n = write_avro(tmp, rows, codec=codec, sync_name=name)
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n": [n]})
-
-    parts = df.select("doc_id", "lang", "text").mapInPandas(
-        write_part, schema="file string, n long"
+def write_avro_dir(df: DataFrame, out_dir: str) -> int:
+    """One deflate container per partition, ``part-NNNNN.avro`` (the
+    partfiles sink; the sync marker is seeded from the final name, so
+    a retried task rewrites identical bytes). Returns records written."""
+    return write_parts(
+        df,
+        out_dir,
+        ".avro",
+        lambda tmp, rows, pid: write_avro(tmp, rows, sync_name=part_name(pid, ".avro")),
     )
-    return sum(r["n"] for r in parts.collect())
 
 
 def read_avro_dir(spark: SparkSession, in_dir: str) -> DataFrame:
-    """Distributed Avro source: list containers via the binaryFile
-    source, decode each in an Arrow batch. (Fixture-scale whole-file
-    decode; the per-block sync markers make large files splittable for
-    a seeking reader.)"""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(
-        os.path.join(in_dir, "*.avro")
-    )
-
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for content in pdf["content"]:
-                for doc_id, lang, text in read_avro(bytes(content)):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-    return files.select("content").mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+    """Every container of ``in_dir``, decoded whole (partfiles)."""
+    return read_parts(spark, in_dir, ".avro", read_avro)
 
 
 # --- splittable range reader ------------------------------------------------
@@ -403,77 +353,31 @@ def _decode_split(path: str, start: int, end: int) -> list[tuple[int, str, str]]
 def read_avro_dir_split(
     spark: SparkSession, in_dir: str, split_bytes: int = 128 << 20
 ) -> DataFrame:
-    """Distributed SPLITTABLE Avro source: the driver lists containers
-    and cuts byte-range splits (catalog-style metadata work — no data
-    reads); each task seeks into its range, syncs forward to a block
-    boundary, and decodes only its blocks. Rows are identical to
+    """SPLITTABLE Avro source: the driver cuts byte-range splits (a
+    listing, no data reads); each task syncs forward into its range and
+    decodes only the blocks it owns. Rows are identical to
     read_avro_dir's at any split size; with split_bytes below the file
-    size a single large container genuinely fans out across tasks."""
-    import glob as _glob
-
-    import pandas as pd
-
-    splits: list[tuple[str, int, int]] = []
-    for path in sorted(_glob.glob(os.path.join(in_dir, "*.avro"))):
-        size = os.path.getsize(path)
-        for off in range(0, max(size, 1), split_bytes):
-            splits.append((path, off, min(off + split_bytes, size)))
-
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-                for doc_id, lang, text in _decode_split(path, int(start), int(end)):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sdf = spark.createDataFrame(splits, "path string, start long, end long")
-    return sdf.repartition(min(len(splits), nshuf) or 1).mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+    size a single large container fans out across tasks."""
+    return read_splits(spark, byte_ranges(in_dir, ".avro", split_bytes), _decode_split)
 
 
 # --- registered round-trip query -------------------------------------------
 
 
 def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Avro OCF ingest: derive the shared escaping-probe corpus
-    (textfiles._derived — ONE derivation for every src_ round-trip),
-    write it through the distributed container sink (deflate codec,
-    one container per partition, atomic deterministic names), read it
-    back through the binaryFile + mapInPandas decoder, and profile per
-    language. The oracle is the shared profile SQL over the derivation,
-    so a green hash proves the zigzag-varint / UTF-8 / raw-DEFLATE
-    encode → decode path is byte-lossless — like ORC, there is no text
-    escaping layer to hide behind. Distinct plan shape from the other
-    src_ queries: binaryFile scan → Arrow-batched whole-container
-    decode (the layout stays splittable at scale via the per-block
-    sync markers the writer emits).
+    """Avro OCF ingest: the shared escaping-probe corpus
+    (textfiles._derived — ONE derivation for every src_ round-trip)
+    through the deflate container sink and back through the binaryFile
+    whole-container decoder, profiled per language against the shared
+    profile SQL. A green hash proves the zigzag-varint / UTF-8 /
+    raw-DEFLATE encode → decode path is byte-lossless — like ORC, there
+    is no text escaping layer to hide behind.
 
     Reference tie: the ingestion family around tasks/spider.go:21-74 —
     Avro is the columnar-world analogue of its xlsx container."""
-    from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.materialize import memoized_run
-
-    def build(out: str) -> str:
-        write_avro_dir(_derived(spark, sf_dir), out, codec="deflate")
-        return out
-
-    return _profile(read_avro_dir(spark, memoized_run(spark, ("avro_ingest", sf_dir), build)))
+    return codec_roundtrip(spark, sf_dir, "avro_ingest", write_avro_dir, read_avro_dir)
 
 
 QUERIES = {"src_avro_roundtrip": src_avro_roundtrip}
 
-
-def _oracles() -> dict[str, str]:
-    from task_hive_spark.sources.textfiles import _PROFILE_SQL
-
-    return {"src_avro_roundtrip": _PROFILE_SQL}
-
-
-ORACLES = _oracles()
+ORACLES = {"src_avro_roundtrip": _PROFILE_SQL}

@@ -21,11 +21,9 @@ fixed32; the deprecated group types reject), wrong wire types for
 known fields reject, and proto3 default-value omission round-trips
 (doc_id 0 / empty strings are legal absent fields).
 
-Distributed shape: the WRITER is one ``mapInPandas`` task per
-partition emitting an independent part file (deterministic name +
-atomic rename — the Avro sink's retry-idempotence discipline); the
-READER lists part files via ``binaryFile`` and decodes whole files.
-Unlike Avro there are NO sync markers in this format, so a single
+Distributed shape (``partfiles``): one part file per partition,
+published by rename, read back whole through ``binaryFile``. Unlike
+Avro there are NO sync markers in this format, so a single
 stream is NOT byte-range splittable — parallelism comes from many part
 files, which is exactly how protobuf stream dumps ship in practice
 (and why the Avro container exists; documented trade, not a gap).
@@ -33,9 +31,10 @@ files, which is exactly how protobuf stream dumps ship in practice
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from task_hive_spark.sources.partfiles import read_parts, write_parts
+from task_hive_spark.sources.textfiles import _PROFILE_SQL, codec_roundtrip
 
 _WT_VARINT, _WT_FIXED64, _WT_LEN, _WT_SGROUP, _WT_EGROUP, _WT_FIXED32 = range(6)
 
@@ -165,57 +164,16 @@ def read_stream(content: bytes) -> list[tuple[int, str, str]]:
 
 
 def write_protowire_dir(df: DataFrame, out_dir: str) -> int:
-    """Distributed sink: one part file per partition, deterministic
-    names via temp + atomic rename (retry-idempotent, the Avro sink
-    discipline). Returns total records written."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        rows: list[tuple[int, str, str]] = []
-        for pdf in batches:
-            rows += list(zip(pdf["doc_id"].astype(int), pdf["lang"], pdf["text"]))
-        part_id = TaskContext.get().partitionId()
-        name = f"part-{part_id:05d}.pbs"
-        tmp = os.path.join(out_dir, f".part-{part_id:05d}-{uuid.uuid4().hex[:8]}.tmp")
-        n = write_stream(tmp, rows)
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n": [n]})
-
-    parts = df.select("doc_id", "lang", "text").mapInPandas(
-        write_part, schema="file string, n long"
-    )
-    return sum(r["n"] for r in parts.collect())
+    """One length-delimited stream per partition, ``part-NNNNN.pbs``
+    (the partfiles sink). Returns records written."""
+    return write_parts(df, out_dir, ".pbs", lambda tmp, rows, _pid: write_stream(tmp, rows))
 
 
 def read_protowire_dir(spark: SparkSession, in_dir: str) -> DataFrame:
-    """Distributed source: binaryFile over the part files, whole-file
-    decode per Arrow batch (no sync markers in this format — see the
-    module docstring for the splittability trade)."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(os.path.join(in_dir, "*.pbs"))
-
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for content in pdf["content"]:
-                for doc_id, lang, text in read_stream(bytes(content)):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-    return files.select("content").mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+    """Every stream of ``in_dir``, decoded whole (no sync markers in
+    this format — see the module docstring for the splittability
+    trade)."""
+    return read_parts(spark, in_dir, ".pbs", read_stream)
 
 
 # --- round-trip query ------------------------------------------------------
@@ -228,23 +186,11 @@ def src_protowire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     green hash proves the varint/UTF-8 wire encode → decode is
     byte-lossless, including proto3 default omission for the corpus's
     doc_id 0 row."""
-    from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.materialize import memoized_run
-
-    def build(out: str) -> str:
-        write_protowire_dir(_derived(spark, sf_dir), out)
-        return out
-
-    return _profile(read_protowire_dir(spark, memoized_run(spark, ("protowire_ingest", sf_dir), build)))
+    return codec_roundtrip(
+        spark, sf_dir, "protowire_ingest", write_protowire_dir, read_protowire_dir
+    )
 
 
 QUERIES = {"src_protowire_roundtrip": src_protowire_roundtrip}
 
-
-def _oracles() -> dict[str, str]:
-    from task_hive_spark.sources.textfiles import _PROFILE_SQL
-
-    return {"src_protowire_roundtrip": _PROFILE_SQL}
-
-
-ORACLES = _oracles()
+ORACLES = {"src_protowire_roundtrip": _PROFILE_SQL}

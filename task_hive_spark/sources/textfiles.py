@@ -21,10 +21,13 @@ written once per (session, sf_dir, format) and reused.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from task_hive_spark.materialize import memoized_run
 from task_hive_spark.sources.fixtures import load_table
+from task_hive_spark.sources.partfiles import DOC_SCHEMA
 
 # Shared derivation (one source of truth, mirrored in the oracle CTE):
 # every 5th doc gets a tail that needs real escaping in both formats —
@@ -38,8 +41,6 @@ _TAIL = 'tail,"quoted" back\\slash end'
 # their graded hashes). ONE derivation/profile definition, tail
 # parameterized — the module's one-source-of-truth contract.
 _XML_TAIL = 'x & y <angle> "attr" &amp; entity end'
-
-_SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
 
 
 def _derived(spark: SparkSession, sf_dir: str, tail: str = _TAIL) -> DataFrame:
@@ -93,12 +94,31 @@ def _profile(d: DataFrame) -> DataFrame:
     )
 
 
+def codec_roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    write: Callable[[DataFrame, str], int],
+    read: Callable[[SparkSession, str], DataFrame],
+) -> DataFrame:
+    """The derived corpus through a stdlib codec's part-file sink
+    (``write``, once per session and ``(kind, sf_dir)``), read back by
+    ``read`` and profiled — the shared body of the codec modules'
+    ``src_*`` round trips, whose oracle is ``_PROFILE_SQL``."""
+
+    def build(out: str) -> str:
+        write(_derived(spark, sf_dir), out)
+        return out
+
+    return _profile(read(spark, memoized_run(spark, (kind, sf_dir), build)))
+
+
 def src_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL ingest: distributed write → schema'd FAILFAST read →
     profile. The oracle aggregates the derivation directly, so the hash
     gate proves the JSON escaping round trip is lossless."""
     path = _ingest_dir(spark, sf_dir, "json")
-    d = spark.read.schema(_SCHEMA).option("mode", "FAILFAST").json(path)
+    d = spark.read.schema(DOC_SCHEMA).option("mode", "FAILFAST").json(path)
     return _profile(d)
 
 
@@ -107,7 +127,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAILFAST read with matching quote/escape options → profile."""
     path = _ingest_dir(spark, sf_dir, "csv")
     d = (
-        spark.read.schema(_SCHEMA)
+        spark.read.schema(DOC_SCHEMA)
         .option("mode", "FAILFAST")
         .option("header", True)
         .option("quote", '"')
@@ -124,7 +144,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     escaping layer, so the hash gate here proves the binary encode →
     decode path preserves every string byte-for-byte."""
     path = _ingest_dir(spark, sf_dir, "orc")
-    d = spark.read.schema(_SCHEMA).orc(path)
+    d = spark.read.schema(DOC_SCHEMA).orc(path)
     return _profile(d)
 
 
@@ -145,7 +165,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ingest_dir(spark, sf_dir, "xml")
     d = (
         spark.read.format("xml")
-        .schema(_SCHEMA)
+        .schema(DOC_SCHEMA)
         .option("rowTag", "doc")
         .option("ignoreSurroundingSpaces", "false")
         .option("mode", "FAILFAST")

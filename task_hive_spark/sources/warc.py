@@ -36,10 +36,8 @@ Format facts this module implements for real, not happy-path:
   layout); non-response record types (warcinfo, request, metadata) are
   fully validated but yield no rows.
 
-Distributed shape: the WRITER is one task per partition emitting an
-independent part file (deterministic name + atomic rename — the Avro
-sink's retry-idempotence discipline); the READER lists part files via
-``binaryFile`` and decodes whole files inside ``mapInPandas``. A
+Distributed shape (``partfiles``): one part file per partition,
+published by rename, read back whole through ``binaryFile``. A
 single ``.warc.gz`` stream is byte-range splittable only by scanning
 for gzip-member magic and validating a parse from the candidate
 offset (there are no Avro-style sync markers); parallelism here comes
@@ -57,6 +55,15 @@ import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+
+from task_hive_spark.sources.partfiles import (
+    byte_ranges,
+    read_parts,
+    read_splits,
+    stream_parts,
+    write_parts,
+)
+from task_hive_spark.sources.textfiles import _PROFILE_SQL, codec_roundtrip
 
 _VERSION = b"WARC/1.0"
 _CRLF = b"\r\n"
@@ -316,65 +323,23 @@ def write_warc_gz(path: str, records: list[tuple[int, str, str]], part_id: int =
 
 
 def write_warc_dir(df: DataFrame, out_dir: str) -> int:
-    """Distributed sink: one ``.warc.gz`` per partition, deterministic
-    names via temp + atomic rename (retry-idempotent, the Avro sink
-    discipline). Returns total response records written."""
-    import pandas as pd
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        rows: list[tuple[int, str, str]] = []
-        for pdf in batches:
-            rows += list(zip(pdf["doc_id"].astype(int), pdf["lang"], pdf["text"]))
-        part_id = TaskContext.get().partitionId()
-        name = f"part-{part_id:05d}.warc.gz"
-        tmp = os.path.join(out_dir, f".part-{part_id:05d}-{uuid.uuid4().hex[:8]}.tmp")
-        n = write_warc_gz(tmp, rows, part_id)
-        os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n": [n]})
-
-    parts = df.select("doc_id", "lang", "text").mapInPandas(
-        write_part, schema="file string, n long"
-    )
-    return sum(r["n"] for r in parts.collect())
+    """One ``.warc.gz`` per partition, ``part-NNNNN.warc.gz`` (the
+    partfiles sink). Returns response records written."""
+    return write_parts(df, out_dir, ".warc.gz", write_warc_gz)
 
 
-def _decode_content_batches(batches):
-    """mapInPandas closure decoding whole ``.warc.gz`` payloads to doc
-    rows — shared by the batch reader and the landing-zone stream."""
-    import pandas as pd
-
-    for pdf in batches:
-        ids: list[int] = []
-        langs: list[str] = []
-        texts: list[str] = []
-        for content in pdf["content"]:
-            for rec in iter_warc_gz(bytes(content)):
-                doc = extract_doc(rec)
-                if doc is not None:
-                    ids.append(doc[0])
-                    langs.append(doc[1])
-                    texts.append(doc[2])
-        yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-
-_DOC_SCHEMA = "doc_id long, lang string, text string"
-_BIN_SCHEMA = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
+def _warc_docs(content: bytes):
+    """The doc rows of one whole ``.warc.gz`` file."""
+    for rec in iter_warc_gz(content):
+        doc = extract_doc(rec)
+        if doc is not None:
+            yield doc
 
 
 def read_warc_dir(spark: SparkSession, in_dir: str) -> DataFrame:
-    """Distributed source: ``binaryFile`` over the part files, whole-
-    file member walk per task (see the module docstring for the
-    split-at-member-boundaries trade)."""
-    files = spark.read.format("binaryFile").load(os.path.join(in_dir, "*.warc.gz"))
-    return files.select("content").mapInPandas(_decode_content_batches, _DOC_SCHEMA)
+    """Every archive of ``in_dir``, member-walked whole (see the
+    module docstring for the split-at-member-boundaries trade)."""
+    return read_parts(spark, in_dir, ".warc.gz", _warc_docs)
 
 
 def ingest_warc_landing(
@@ -389,12 +354,7 @@ def ingest_warc_landing(
     drains whatever has landed and stops — the anti-entropy-sweep
     cadence (streaming/lifecycle.py's T4 discipline) applied to
     ingestion. Returns the finished query's last progress."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(_BIN_SCHEMA)
-        .load(os.path.join(landing_dir, "*.warc.gz"))
-    )
-    docs = files.select("content").mapInPandas(_decode_content_batches, _DOC_SCHEMA)
+    docs = stream_parts(spark, landing_dir, ".warc.gz", _warc_docs)
     q = (
         docs.writeStream.format("parquet")
         .option("path", out_dir)
@@ -494,38 +454,13 @@ def _decode_warc_split(path: str, start: int, end: int) -> list[tuple[int, str, 
 def read_warc_dir_split(
     spark: SparkSession, in_dir: str, split_bytes: int = 128 << 20
 ) -> DataFrame:
-    """Distributed SPLITTABLE WARC source: the driver lists files and
-    cuts byte-range splits (metadata-only); each task resyncs into its
-    range and decodes only the members it owns. Rows are identical to
+    """SPLITTABLE WARC source: the driver cuts byte-range splits (a
+    listing, no data reads); each task resyncs into its range and
+    decodes only the members it owns. Rows are identical to
     read_warc_dir's at any split size; with split_bytes below the file
-    size a single large archive genuinely fans out across tasks."""
-    import glob as _glob
-
-    import pandas as pd
-
-    splits: list[tuple[str, int, int]] = []
-    for path in sorted(_glob.glob(os.path.join(in_dir, "*.warc.gz"))):
-        size = os.path.getsize(path)
-        for off in range(0, max(size, 1), split_bytes):
-            splits.append((path, off, min(off + split_bytes, size)))
-
-    def decode(batches):
-        for pdf in batches:
-            ids: list[int] = []
-            langs: list[str] = []
-            texts: list[str] = []
-            for path, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                for doc_id, lang, text in _decode_warc_split(path, int(s), int(e)):
-                    ids.append(doc_id)
-                    langs.append(lang)
-                    texts.append(text)
-            yield pd.DataFrame({"doc_id": ids, "lang": langs, "text": texts})
-
-    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    sdf = spark.createDataFrame(splits, "path string, start long, end long")
-    return sdf.repartition(min(len(splits), nshuf) or 1).mapInPandas(
-        decode, schema="doc_id long, lang string, text string"
-    )
+    size a single large archive fans out across tasks."""
+    splits = byte_ranges(in_dir, ".warc.gz", split_bytes)
+    return read_splits(spark, splits, _decode_warc_split)
 
 
 # --- round-trip query ------------------------------------------------------
@@ -538,23 +473,9 @@ def src_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash proves the gzip-member + record-grammar + HTTP + utf-8 path
     is byte-lossless end to end, with BOTH spec digests verified on
     every record read."""
-    from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.materialize import memoized_run
-
-    def build(out: str) -> str:
-        write_warc_dir(_derived(spark, sf_dir), out)
-        return out
-
-    return _profile(read_warc_dir(spark, memoized_run(spark, ("warc_ingest", sf_dir), build)))
+    return codec_roundtrip(spark, sf_dir, "warc_ingest", write_warc_dir, read_warc_dir)
 
 
 QUERIES = {"src_warc_ingest": src_warc_ingest}
 
-
-def _oracles() -> dict[str, str]:
-    from task_hive_spark.sources.textfiles import _PROFILE_SQL
-
-    return {"src_warc_ingest": _PROFILE_SQL}
-
-
-ORACLES = _oracles()
+ORACLES = {"src_warc_ingest": _PROFILE_SQL}

@@ -73,6 +73,8 @@ from task_hive_spark.operators.processors import (
     BACKOFF_BASE_NS,
     BACKOFF_BASE_S,
     MAX_RETRIES,
+    backoff_ns,
+    backoff_s,
 )
 from task_hive_spark.streaming.events import events_df, oracle_events_cte
 from task_hive_spark.streaming.feed import (
@@ -168,9 +170,7 @@ def _apply_task_events(state: DataFrame, ev: DataFrame) -> DataFrame:
         .when(last_op == "assign", F.col("b.last.worker_id"))
         .otherwise(F.lit(None).cast("string"))
     )
-    delay_ns = F.when(rc_new == 0, F.lit(0).cast("long")).otherwise(
-        (F.lit(BACKOFF_BASE_NS) * F.pow(F.lit(2.0), rc_new - 1)).cast("long")
-    )
+    delay_ns = F.when(rc_new == 0, F.lit(0).cast("long")).otherwise(backoff_ns(rc_new))
     # timer armed only while delayed: ready = fail time + backoff
     # seconds. A carried task (no events this batch) KEEPS its armed
     # timer — recomputing from b.last here would null it out after one
@@ -180,8 +180,7 @@ def _apply_task_events(state: DataFrame, ev: DataFrame) -> DataFrame:
     ready = F.when(
         status == "delayed",
         F.when(last_op.isNull(), F.col("s.ready_s")).otherwise(
-            F.col("b.last.event_s")
-            + (F.lit(BACKOFF_BASE_S) * F.pow(F.lit(2.0), rc_new - 1)).cast("long")
+            F.col("b.last.event_s") + backoff_s(rc_new)
         ),
     ).otherwise(F.lit(None).cast("long"))
 

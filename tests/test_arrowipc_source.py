@@ -1,17 +1,18 @@
 """The stdlib Arrow IPC stream source/sink (sources/arrowipc.py):
 flatbuffers grammar round-trips, BOTH interop directions against
 pyarrow (the reference implementation as a third-party oracle), loud
-rejection of hostile streams, and the distributed path."""
+rejection of hostile streams and footers. The distributed sink and
+readers are tested in test_partfiles.py."""
 
 from __future__ import annotations
 
 import io
-import os
 import struct
 
 import pytest
 
 from task_hive_spark.plans.oracle import run_all
+
 
 RECS = [
     (i, "en" if i % 2 else "fr", f'doc {i} üñïçødé "quoted" back\\slash')
@@ -132,21 +133,6 @@ def test_arrowipc_rejects_hostile_streams():
         read_arrow_stream(s2.getvalue())
 
 
-def test_arrowipc_distributed_round_trip_is_lossless(spark, sf_dir, tmp_path):
-    from task_hive_spark.sources.arrowipc import read_arrowipc_dir, write_arrowipc_dir
-    from task_hive_spark.sources.textfiles import _derived, _profile
-
-    src = _derived(spark, sf_dir).repartition(4)
-    out = str(tmp_path / "aipc_ingest")
-    n = write_arrowipc_dir(src, out)
-    assert n == src.count() > 0
-    assert [f for f in os.listdir(out) if f.endswith(".arrows")]
-
-    got = _profile(read_arrowipc_dir(spark, out)).collect()
-    want = _profile(src).collect()
-    assert got == want
-
-
 def test_arrowipc_roundtrip_matches_profile_oracle(spark, sf_dir):
     (res,) = run_all(spark, sf_dir, only=["src_arrowipc_roundtrip"])
     assert res.ok, res.detail
@@ -208,56 +194,3 @@ def test_arrow_file_rejects_hostile_footers():
         decode_arrow_block(raw, off + 4, mlen, blen)
 
 
-def test_arrow_file_split_reader_distributed(spark, sf_dir, tmp_path):
-    """Footer-cut splits: the driver reads only file tails, every task
-    seeks straight to its blocks, and the union over any batch
-    granularity equals the whole read — no scanning, no overlap."""
-    from task_hive_spark.sources.arrowipc import (
-        read_arrowfile_dir_split,
-        write_arrowfile_dir,
-    )
-    from task_hive_spark.sources.textfiles import _derived, _profile
-
-    src = _derived(spark, sf_dir).repartition(2)
-    out = str(tmp_path / "arrow_file")
-    n = write_arrowfile_dir(src, out, batch_rows=64)  # many blocks per file
-    assert n == src.count() > 0
-
-    got = _profile(read_arrowfile_dir_split(spark, out)).collect()
-    want = _profile(src).collect()
-    assert got == want
-
-
-def test_arrowipc_sink_retry_overwrites_not_duplicates(spark, tmp_path):
-    """The avro/warc retry discipline for both Arrow sinks: a re-run
-    overwrites deterministically-named parts; stranded .tmp files are
-    invisible to the *.arrows / *.arrow reader globs."""
-    from task_hive_spark.sources.arrowipc import (
-        read_arrowfile_dir_split,
-        read_arrowipc_dir,
-        write_arrowfile_dir,
-        write_arrowipc_dir,
-    )
-
-    df = (
-        spark.range(0, 100)
-        .selectExpr("id AS doc_id", "'en' AS lang", "concat('t-', id) AS text")
-        .repartition(4)
-    )
-    for writer, reader, suffix in (
-        (write_arrowipc_dir, read_arrowipc_dir, ".arrows"),
-        (
-            lambda d, o: write_arrowfile_dir(d, o, batch_rows=16),
-            read_arrowfile_dir_split,
-            ".arrow",
-        ),
-    ):
-        out = str(tmp_path / f"sink{suffix.replace('.', '_')}")
-        n1 = writer(df, out)
-        files1 = sorted(f for f in os.listdir(out) if f.endswith(suffix))
-        open(os.path.join(out, ".part-00000-deadbeef.tmp"), "wb").write(b"junk")
-        n2 = writer(df, out)
-        files2 = sorted(f for f in os.listdir(out) if f.endswith(suffix))
-        assert n1 == n2 == 100
-        assert files1 == files2
-        assert reader(spark, out).count() == 100

@@ -1,6 +1,7 @@
 """The stdlib Avro container source/sink (sources/avro.py): encoding
-round-trips, loud rejection of corrupt containers, and the distributed
-write → read path pinned byte-lossless against the in-engine frame."""
+round-trips, loud rejection of corrupt containers, and the sync-marker
+split rule. The distributed sink and whole-file reader are tested in
+test_partfiles.py."""
 
 from __future__ import annotations
 
@@ -33,27 +34,6 @@ def test_avro_container_round_trips_hostile_values(tmp_path):
         read_avro(raw[: len(raw) // 2])  # truncated mid-block
     with pytest.raises(ValueError):
         read_avro(raw[:-16] + b"X" * 16)  # corrupt final sync
-
-
-def test_avro_distributed_round_trip_is_lossless(spark, sf_dir, tmp_path):
-    """Distributed sink (one container per partition) → binaryFile +
-    Arrow-batch reader: the read-back profile must equal the source
-    frame's profile exactly — same checksum discipline as the
-    JSONL/CSV/ORC/XML round trips."""
-    from task_hive_spark.sources.avro import read_avro_dir, write_avro_dir
-    from task_hive_spark.sources.textfiles import _derived, _profile
-
-    src = _derived(spark, sf_dir).repartition(4)
-    out = str(tmp_path / "avro_ingest")
-    n = write_avro_dir(src, out, codec="deflate")
-    assert n == src.count() > 0
-    parts = [f for f in os.listdir(out) if f.endswith(".avro")]
-    assert len(parts) >= 1  # part-file layout (empty partitions may merge)
-
-    back = read_avro_dir(spark, out)
-    want = _profile(src).collect()
-    got = _profile(back).collect()
-    assert got == want
 
 
 def test_avro_split_reader_owns_every_block_exactly_once(tmp_path):
@@ -93,7 +73,7 @@ def test_avro_split_reader_distributed_matches_whole_file(spark, tmp_path):
         "concat('body-', id, repeat('y', CAST(id % 23 AS INT))) AS text",
     ).repartition(3)
     out = str(tmp_path / "split_src")
-    write_avro_dir(df, out, codec="deflate")
+    write_avro_dir(df, out)
     whole = sorted(tuple(r) for r in read_avro_dir(spark, out).collect())
     split = read_avro_dir_split(spark, out, split_bytes=512)
     assert split.rdd.getNumPartitions() > 1

@@ -5,7 +5,6 @@ chunk count)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -16,34 +15,31 @@ def _profile_rows(spark, state):
     return [tuple(r) for r in merge_profile(spark.read.parquet(state)).collect()]
 
 
-def test_streaming_merge_equals_batch_and_chunk_invariant(spark):
+def test_streaming_merge_equals_batch_and_chunk_invariant(spark, tmp_path):
     """The converged incrementally-merged snapshot must equal the
     one-shot batch MERGE bit-for-bit, at ANY chunking of the change
     feed, despite every REPLAY_MOD-th change being delivered twice —
     the idempotence contract that makes at-least-once delivery safe."""
     from task_hive_spark.operators.queries import th_snapshot_merge
     from task_hive_spark.streaming import cdcmerge
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
     batch = [tuple(r) for r in th_snapshot_merge(spark, SF_DIR).collect()]
     for n_chunks in (2, 4):
-        work = tempfile.mkdtemp(prefix=f"cdc_t{n_chunks}_", dir=_scratch_root())
+        work = str(tmp_path / f"cdc_t{n_chunks}")
+        os.mkdir(work)
         state = cdcmerge.run_once(spark, SF_DIR, work, n_chunks=n_chunks)
         assert _profile_rows(spark, state) == batch, n_chunks
 
 
-def test_change_feed_replays_are_real(spark):
+def test_change_feed_replays_are_real(spark, tmp_path):
     """The feed must actually deliver re-deliveries (if the replay
     branch silently went empty, the idempotence claim would be
     vacuous): delivered rows > distinct change ids."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from task_hive_spark.streaming import cdcmerge
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    feed = tempfile.mkdtemp(prefix="cdc_feed_", dir=_scratch_root())
+    feed = str(tmp_path)
     cdcmerge.change_feed(spark, SF_DIR, feed, 4)
     d = spark.read.schema(cdcmerge._CHANGE_SCHEMA).parquet(os.path.join(feed, "*"))
     n_rows = d.count()
@@ -51,7 +47,7 @@ def test_change_feed_replays_are_real(spark):
     assert n_rows > n_ids > 0, (n_rows, n_ids)
 
 
-def test_streaming_merge_resumes_from_checkpoint(spark):
+def test_streaming_merge_resumes_from_checkpoint(spark, tmp_path):
     """Exactly-once across restarts: run the merge stream over the
     first half of the feed, stop, let the remaining chunks arrive, and
     run a SECOND stream against the SAME checkpoint. The resumed stream
@@ -61,9 +57,8 @@ def test_streaming_merge_resumes_from_checkpoint(spark):
 
     from task_hive_spark.operators.queries import th_snapshot_merge
     from task_hive_spark.streaming import cdcmerge
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
-    work = tempfile.mkdtemp(prefix="cdc_resume_", dir=_scratch_root())
+    work = str(tmp_path)
     feed = os.path.join(work, "feed")
     staged = os.path.join(work, "staged")
     cdcmerge.change_feed(spark, SF_DIR, staged, 4)

@@ -4,8 +4,6 @@ link-density rule, hostile-markup tolerance, and the profile oracle."""
 
 from __future__ import annotations
 
-import pytest
-
 from task_hive_spark.plans.oracle import run_all
 
 

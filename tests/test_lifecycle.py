@@ -6,12 +6,11 @@ in-flight tasks must re-enter pending."""
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from pyspark.sql import functions as F
 
 from task_hive_spark.streaming.lifecycle import (
-    _scratch_root,
     converged_state,
     run_lifecycle,
 )
@@ -25,11 +24,12 @@ def _final(spark, paths):
     )
 
 
-def test_converged_state_invariant_to_batching(spark, sf_dir):
+def test_converged_state_invariant_to_batching(spark, sf_dir, tmp_path):
     base = converged_state(spark, sf_dir)  # default 5 chunks (cached)
     ref = _final(spark, base)
     for n_chunks in (1, 3):
-        work = tempfile.mkdtemp(prefix=f"lc_chunks{n_chunks}_", dir=_scratch_root())
+        work = str(tmp_path / f"lc_chunks{n_chunks}")
+        os.mkdir(work)
         paths = run_lifecycle(spark, sf_dir, work, n_chunks=n_chunks)
         assert _final(spark, paths) == ref, f"divergence with {n_chunks} chunks"
 
@@ -113,7 +113,7 @@ def test_armed_timer_survives_eventless_batches(spark):
     assert fired["status"] == "pending" and fired["ready_s"] is None
 
 
-def test_live_feed_converges_to_scripted_state(spark, sf_dir):
+def test_live_feed_converges_to_scripted_state(spark, sf_dir, tmp_path):
     """Close the 'scripted chunks only' gap: drive the lifecycle from a
     directory that a producer thread appends chunk files to WHILE the
     stream runs on a processing-time trigger (no pre-written feed, no
@@ -136,7 +136,7 @@ def test_live_feed_converges_to_scripted_state(spark, sf_dir):
     chunks = sorted(f for f in os.listdir(staged) if f.endswith(".parquet"))
     assert len(chunks) >= 3
 
-    work = tempfile.mkdtemp(prefix="lc_live_", dir=_scratch_root())
+    work = str(tmp_path)
     feed = os.path.join(work, "feed")
     os.makedirs(feed)
 
@@ -173,7 +173,7 @@ def test_live_feed_converges_to_scripted_state(spark, sf_dir):
         q.stop()
 
 
-def test_failover_second_driver_takes_over_after_kill(spark, sf_dir):
+def test_failover_second_driver_takes_over_after_kill(spark, sf_dir, tmp_path):
     """The reference's leader-election story (tasks/leader.go:26-66,
     README 领导者选举): when the active driver dies mid-feed, a standby
     takes over and the system converges to the same state as an
@@ -195,7 +195,7 @@ def test_failover_second_driver_takes_over_after_kill(spark, sf_dir):
     from task_hive_spark.materialize import latest_committed_version
     from task_hive_spark.streaming.lifecycle import event_feed
 
-    work = tempfile.mkdtemp(prefix="lc_failover_", dir=_scratch_root())
+    work = str(tmp_path)
     feed = event_feed(spark, sf_dir, os.path.join(work, "feed"), 8)
 
     victim = VictimJVM(

@@ -1,7 +1,6 @@
-"""Round-13 additions: batched serves, swap-crash recovery, atomic Avro
-sink, tz-aware debt metric, MP3 side-info decode — plus FLAC PCM
-decode, SQ8 scalar-quantized ANN, content-defined chunking, and the
-sink retry-idempotence pins."""
+"""Round-13 additions: batched serves, swap-crash recovery, tz-aware
+debt metric, MP3 side-info decode — plus FLAC PCM decode, SQ8
+scalar-quantized ANN and content-defined chunking."""
 
 from __future__ import annotations
 
@@ -79,29 +78,6 @@ def test_recover_is_noop_when_live_level_present(tmp_path):
     _mk_level(live + "_reclustering")
     recover_staged_swap(live)
     assert os.path.isdir(live) and os.path.isdir(live + "_reclustering")
-
-
-# --- Avro sink atomicity ----------------------------------------------------
-
-
-def test_avro_sink_retry_overwrites_not_duplicates(spark, tmp_path):
-    """A re-run of the same partitioned write (the retry/speculation
-    stand-in) must overwrite each partition's container, not add a
-    second decodable file that double-counts on read."""
-    from task_hive_spark.sources.avro import read_avro_dir, write_avro_dir
-
-    df = spark.range(0, 100).selectExpr(
-        "id AS doc_id", "'en' AS lang", "concat('t-', id) AS text"
-    ).repartition(4)
-    out = str(tmp_path / "avro_sink")
-    n1 = write_avro_dir(df, out, codec="deflate")
-    files1 = sorted(f for f in os.listdir(out) if f.endswith(".avro"))
-    n2 = write_avro_dir(df, out, codec="deflate")
-    files2 = sorted(f for f in os.listdir(out) if f.endswith(".avro"))
-    assert n1 == n2 == 100
-    assert files1 == files2  # deterministic names: retry overwrote
-    assert read_avro_dir(spark, out).count() == 100
-    assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
 
 
 # --- serve_window_with_policy hardening -------------------------------------
@@ -648,32 +624,6 @@ def test_flac_constant_and_wasted_bits_subframes():
             bw3.put(0, 1)
         with pytest.raises(ValueError):
             _decode_flac_subframe(_FlacBitReader(bw3.done()), 1, 8)
-
-
-def test_protowire_sink_retry_overwrites_not_duplicates(spark, tmp_path):
-    """The avro/warc/arrow retry discipline for the protobuf stream
-    sink too: deterministic part names, stranded .tmp invisible."""
-    import os
-
-    from task_hive_spark.sources.protowire import (
-        read_protowire_dir,
-        write_protowire_dir,
-    )
-
-    df = (
-        spark.range(0, 100)
-        .selectExpr("id AS doc_id", "'en' AS lang", "concat('t-', id) AS text")
-        .repartition(4)
-    )
-    out = str(tmp_path / "pw_sink")
-    n1 = write_protowire_dir(df, out)
-    files1 = sorted(f for f in os.listdir(out) if f.endswith(".pbs"))
-    open(os.path.join(out, ".part-00002-deadbeef.tmp"), "wb").write(b"junk")
-    n2 = write_protowire_dir(df, out)
-    files2 = sorted(f for f in os.listdir(out) if f.endswith(".pbs"))
-    assert n1 == n2 == 100
-    assert files1 == files2
-    assert read_protowire_dir(spark, out).count() == 100
 
 
 # --- SQ8 scalar-quantized ANN ----------------------------------------------

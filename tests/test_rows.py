@@ -138,20 +138,19 @@ def _sql_calls(tree: ast.AST) -> list[ast.Call]:
 
 
 def test_driver_rows_enter_plans_only_through_rows_frame():
-    """createDataFrame( is written only in rows.py and the three
-    split-list sources (their parallelize spreads the work); no
+    """createDataFrame( is written only in rows.py and in
+    sources/partfiles.py (the split list's parallelize spreads the
+    work); no
     spark.sql call splices driver values after a VALUES keyword, and
     only rows.py reads escapedStringLiterals. DuckDB oracle SQL may
     splice static VALUES tables: it never reaches spark.sql."""
     rows_py = os.path.join("task_hive_spark", "functions", "rows.py")
-    split_sources = {
-        os.path.join("task_hive_spark", "sources", f"{m}.py") for m in ("avro", "arrowipc", "warc")
-    }
+    partfiles_py = os.path.join("task_hive_spark", "sources", "partfiles.py")
     stray = []
     for rel, text in _engine_files():
         if rel == rows_py:
             continue
-        if "createDataFrame(" in text and rel not in split_sources:
+        if "createDataFrame(" in text and rel != partfiles_py:
             stray.append((rel, "createDataFrame("))
         if "escapedStringLiterals" in text:
             stray.append((rel, "escapedStringLiterals"))

@@ -6,7 +6,6 @@ fold."""
 
 from __future__ import annotations
 
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -22,7 +21,7 @@ def _rows(spark, path, cols):
     return sorted(tuple(r) for r in spark.read.parquet(path).select(*cols).collect())
 
 
-def test_socket_feed_converges_to_scripted_state(spark, sf_dir):
+def test_socket_feed_converges_to_scripted_state(spark, sf_dir, tmp_path):
     from task_hive_spark.streaming.events import events_df
 
     oracle = L.converged_state(spark, sf_dir)
@@ -44,7 +43,7 @@ def test_socket_feed_converges_to_scripted_state(spark, sf_dir):
     assert len(lines) > 50
 
     server = EventSocketServer()
-    work_dir = tempfile.mkdtemp(prefix="socklife_", dir=L._scratch_root())
+    work_dir = str(tmp_path)
     q, paths = start_lifecycle_socket(spark, work_dir, server.host, server.port)
     try:
         # push in three live slices — events arrive while the query runs
@@ -70,7 +69,7 @@ def test_socket_feed_converges_to_scripted_state(spark, sf_dir):
         server.close()
 
 
-def test_kafka_transport_contract(spark, sf_dir):
+def test_kafka_transport_contract(spark, sf_dir, tmp_path):
     """Broker-backed transport contract: when KAFKA_BOOTSTRAP points at
     a live broker (and the spark-sql-kafka connector is on the
     classpath), the topic-fed lifecycle must converge to the scripted
@@ -113,7 +112,7 @@ def test_kafka_transport_contract(spark, sf_dir):
         .save()
     )
 
-    work_dir = tempfile.mkdtemp(prefix="kafkalife_", dir=L._scratch_root())
+    work_dir = str(tmp_path)
     q, paths = start_lifecycle_kafka(
         spark, work_dir, bootstrap, topic, trigger={"availableNow": True}
     )

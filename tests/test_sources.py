@@ -73,16 +73,16 @@ def test_jsonl_and_csv_roundtrip_lossless(spark, sf_dir):
         for r in textfiles._derived(spark, sf_dir).collect()
     }
     for fmt, reader in (
-        ("json", lambda p: spark.read.schema(textfiles._SCHEMA).json(p)),
+        ("json", lambda p: spark.read.schema(textfiles.DOC_SCHEMA).json(p)),
         (
             "csv",
-            lambda p: spark.read.schema(textfiles._SCHEMA)
+            lambda p: spark.read.schema(textfiles.DOC_SCHEMA)
             .option("header", True)
             .option("quote", '"')
             .option("escape", '"')
             .csv(p),
         ),
-        ("orc", lambda p: spark.read.schema(textfiles._SCHEMA).orc(p)),
+        ("orc", lambda p: spark.read.schema(textfiles.DOC_SCHEMA).orc(p)),
     ):
         path = textfiles._ingest_dir(spark, sf_dir, fmt)
         got = {r["doc_id"]: r["text"] for r in reader(path).collect()}
@@ -123,7 +123,7 @@ def test_sheet0_target_resolves_absolute_opc_paths(tmp_path):
     assert sheet_matrix(str(path)) == [["hello", "7"]]
 
 
-def test_xml_roundtrip_lossless(spark, sf_dir):
+def test_xml_roundtrip_lossless(spark, sf_dir, tmp_path):
     """The native-XML connector must round-trip the markup-hostile
     derivation byte-losslessly: raw & < > and quotes written as
     entities must read back as the original characters, row-for-row."""
@@ -152,7 +152,7 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
     got = {
         r["doc_id"]: r["text"]
         for r in spark.read.format("xml")
-        .schema(textfiles._SCHEMA)
+        .schema(textfiles.DOC_SCHEMA)
         .option("rowTag", "doc")
         .option("ignoreSurroundingSpaces", "false")
         .load(path)
@@ -163,12 +163,8 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
     # surrounding-whitespace regression: the reader TRIMS element
     # whitespace unless ignoreSurroundingSpaces=false — the fixtures
     # contain no padded texts, so pin the hazard directly
-    import shutil
-    import tempfile
-
-    one = spark.createDataFrame([(1, "en", "  padded  ")], textfiles._SCHEMA)
-    out2 = tempfile.mkdtemp()
-    shutil.rmtree(out2)
+    one = spark.createDataFrame([(1, "en", "  padded  ")], textfiles.DOC_SCHEMA)
+    out2 = str(tmp_path / "padded")
     (
         one.write.format("xml")
         .option("rootTag", "docs")
@@ -177,11 +173,10 @@ def test_xml_roundtrip_lossless(spark, sf_dir):
     )
     back = (
         spark.read.format("xml")
-        .schema(textfiles._SCHEMA)
+        .schema(textfiles.DOC_SCHEMA)
         .option("rowTag", "doc")
         .option("ignoreSurroundingSpaces", "false")
         .load(out2)
         .collect()[0]["text"]
     )
     assert back == "  padded  "
-    shutil.rmtree(out2, ignore_errors=True)

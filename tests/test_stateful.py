@@ -9,12 +9,10 @@ chunks are time-ordered).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window as W, functions as F
 
 from task_hive_spark.streaming import stateful
-from task_hive_spark.streaming.lifecycle import _scratch_root
 
 
 def _converged_counter(spark, out_dir):
@@ -35,10 +33,11 @@ def _session_set(spark, out_dir):
     }
 
 
-def test_counter_invariant_to_batching(spark, sf_dir):
+def test_counter_invariant_to_batching(spark, sf_dir, tmp_path):
     counters, sessions, latencies, slas = [], [], [], []
     for n_chunks in (1, 5):
-        work = tempfile.mkdtemp(prefix=f"stateful_test{n_chunks}_", dir=_scratch_root())
+        work = str(tmp_path / f"stateful_test{n_chunks}")
+        os.mkdir(work)
         out = stateful.run_once(spark, sf_dir, work, n_chunks)
         counters.append(_converged_counter(spark, out["counter"]))
         sessions.append(_session_set(spark, out["sessions"]))
@@ -93,7 +92,7 @@ def test_unmatched_submits_eviction_semantics(spark, sf_dir):
     assert "lt-stuck" not in rows
 
 
-def test_unmatched_submits_watermark_boundary(spark):
+def test_unmatched_submits_watermark_boundary(spark, tmp_path):
     """Pin the eviction comparator the oracle mirrors: a submit whose
     SLA window ends EXACTLY on the final combined watermark is still in
     join state (a boundary assign would not be late), so it must NOT
@@ -101,7 +100,6 @@ def test_unmatched_submits_watermark_boundary(spark):
     103 == min(max submit 133, max assign 500) − 30; 'ctl' ends at
     93 < 103 and must emit as a proven miss."""
     import os
-    import tempfile
 
     rows = [
         (90, "submit", "ctl", None, None),
@@ -113,7 +111,7 @@ def test_unmatched_submits_watermark_boundary(spark):
         rows,
         "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING",
     )
-    work = tempfile.mkdtemp(prefix="wm_boundary_", dir=_scratch_root())
+    work = str(tmp_path)
     feed = os.path.join(work, "feed")
     df.coalesce(1).write.parquet(feed)
     out = stateful.run_once(spark, None, work, 0, feed=feed, only=("sla",))
@@ -145,17 +143,14 @@ def test_windowed_throughput_watermark_cutoff(spark, sf_dir):
     assert all(r["n"] > 0 for r in rows)
 
 
-def test_incremental_minhash_chunk_invariant_and_matches_batch(spark):
+def test_incremental_minhash_chunk_invariant_and_matches_batch(spark, tmp_path):
     """The online MinHash indexer's converged pair set must equal the
     offline dd_minhash_lsh_pairs answer at ANY chunking of the
     ingestion feed — in-batch duplicates are caught by the self-probe,
     cross-batch ones by the index probe, so the split point can't
     matter."""
-    import tempfile
-
     from task_hive_spark.operators.dedup import dd_minhash_lsh_pairs
     from task_hive_spark.streaming import minhashstream
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
     sf = "/root/testdata/sf0.001"
     batch = {
@@ -164,7 +159,8 @@ def test_incremental_minhash_chunk_invariant_and_matches_batch(spark):
     }
     assert batch
     for n_chunks in (1, 3):
-        work = tempfile.mkdtemp(prefix=f"mh_t{n_chunks}_", dir=_scratch_root())
+        work = str(tmp_path / f"mh_t{n_chunks}")
+        os.mkdir(work)
         out = minhashstream.run_once(spark, sf, work, n_chunks=n_chunks)
         got = {
             (r.doc_a, r.doc_b, r.est_jaccard)
@@ -173,7 +169,7 @@ def test_incremental_minhash_chunk_invariant_and_matches_batch(spark):
         assert got == batch, n_chunks
 
 
-def test_incremental_minhash_resumes_from_checkpoint(spark):
+def test_incremental_minhash_resumes_from_checkpoint(spark, tmp_path):
     """Restart safety: run the indexer over the first half of the
     ingestion, stop, let the remaining chunks arrive, run a SECOND
     stream on the SAME checkpoint — already-processed batches must not
@@ -181,14 +177,12 @@ def test_incremental_minhash_resumes_from_checkpoint(spark):
     converged pair set must still equal the batch answer."""
     import os
     import shutil
-    import tempfile
 
     from task_hive_spark.operators.dedup import dd_minhash_lsh_pairs
     from task_hive_spark.streaming import minhashstream
-    from task_hive_spark.streaming.lifecycle import _scratch_root
 
     sf = "/root/testdata/sf0.001"
-    work = tempfile.mkdtemp(prefix="mh_resume_", dir=_scratch_root())
+    work = str(tmp_path)
     staged = os.path.join(work, "staged")
     minhashstream.doc_feed(spark, sf, staged, 4)
     chunks = sorted(os.listdir(staged))

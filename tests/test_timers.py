@@ -8,10 +8,9 @@ watermark passed it) — both yield {armed | ready ≤ final watermark}.
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 from task_hive_spark.streaming import timers
-from task_hive_spark.streaming.lifecycle import _scratch_root
 
 
 def _fired(spark, out_dir):
@@ -21,16 +20,17 @@ def _fired(spark, out_dir):
     }
 
 
-def test_fired_set_invariant_to_batching(spark, sf_dir):
+def test_fired_set_invariant_to_batching(spark, sf_dir, tmp_path):
     results = []
     for n_chunks in (1, 3, 5):
-        work = tempfile.mkdtemp(prefix=f"timers_test{n_chunks}_", dir=_scratch_root())
+        work = str(tmp_path / f"timers_test{n_chunks}")
+        os.mkdir(work)
         results.append(_fired(spark, timers.run_once(spark, sf_dir, work, n_chunks)))
     assert results[0] == results[1] == results[2]
 
 
-def test_scripted_leases(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="timers_script_", dir=_scratch_root())
+def test_scripted_leases(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     fired = _fired(spark, timers.run_once(spark, sf_dir, work, 5))
     # lt-retry: three leases fire at fail+2/4/8 (F7); the 4th failure is
     # terminal and never arms (worker.go:113-135)
@@ -45,7 +45,7 @@ def test_scripted_leases(spark, sf_dir):
     assert not any(t == "lt-stuck" for (t, _, _) in fired)
 
 
-def test_timer_fires_with_non_fail_tail(spark):
+def test_timer_fires_with_non_fail_tail(spark, tmp_path):
     """The watermark must advance on EVERY event, not just fails: a
     lease armed by an early fail must fire even when all trailing
     traffic is successes. Catalyst pushes a plain deterministic
@@ -57,7 +57,7 @@ def test_timer_fires_with_non_fail_tail(spark):
 
     from task_hive_spark.streaming.feed import EVENT_SCHEMA, write_chunks
 
-    work = tempfile.mkdtemp(prefix="timers_tail_", dir=_scratch_root())
+    work = str(tmp_path)
     rows = [
         (1, 100, "fail", "t1", None, None),  # arms ready = 102
         (2, 200, "complete", "t2", None, None),

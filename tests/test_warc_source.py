@@ -1,7 +1,8 @@
 """The stdlib WARC web-archive source/sink (sources/warc.py): record
 grammar round-trips, digest verification catching structurally-valid
-corruption, loud rejection of hostile framing, and the distributed
-write → read path pinned byte-lossless against the in-engine frame."""
+corruption, loud rejection of hostile framing, the split rule and the
+landing-zone stream. The distributed sink and whole-file reader are
+tested in test_partfiles.py."""
 
 from __future__ import annotations
 
@@ -158,26 +159,6 @@ def test_warc_http_layer_is_checked():
         _parse_http_response(b"HTTP/1.1 200 OK\r\nno-blank-line")
 
 
-def test_warc_distributed_round_trip_is_lossless(spark, sf_dir, tmp_path):
-    """Distributed sink (one .warc.gz per partition) → binaryFile +
-    member-walk reader: read-back profile equals the source frame's
-    profile exactly — the JSONL/CSV/Avro/protowire checksum
-    discipline."""
-    from task_hive_spark.sources.textfiles import _derived, _profile
-    from task_hive_spark.sources.warc import read_warc_dir, write_warc_dir
-
-    src = _derived(spark, sf_dir).repartition(4)
-    out = str(tmp_path / "warc_ingest")
-    n = write_warc_dir(src, out)
-    assert n == src.count() > 0
-    parts = [f for f in os.listdir(out) if f.endswith(".warc.gz")]
-    assert len(parts) >= 1
-
-    got = _profile(read_warc_dir(spark, out)).collect()
-    want = _profile(src).collect()
-    assert got == want
-
-
 def test_warc_ingest_matches_profile_oracle(spark, sf_dir):
     (res,) = run_all(spark, sf_dir, only=["src_warc_ingest"])
     assert res.ok, res.detail
@@ -265,35 +246,6 @@ def test_warc_split_distributed_matches_whole_file(spark, sf_dir, tmp_path):
     got = _profile(read_warc_dir_split(spark, out, split_bytes=4096)).collect()
     want = _profile(src).collect()
     assert got == want
-
-
-def test_warc_sink_retry_overwrites_not_duplicates(spark, tmp_path):
-    """Re-running the partitioned write (the retry/speculation
-    stand-in) must overwrite each partition's archive, not add a
-    second decodable file that double-counts on read — and a stranded
-    hidden .tmp from a failed attempt must be invisible to readers."""
-    from task_hive_spark.sources.warc import (
-        read_warc_dir,
-        read_warc_dir_split,
-        write_warc_dir,
-    )
-
-    df = (
-        spark.range(0, 100)
-        .selectExpr("id AS doc_id", "'en' AS lang", "concat('t-', id) AS text")
-        .repartition(4)
-    )
-    out = str(tmp_path / "warc_sink")
-    n1 = write_warc_dir(df, out)
-    files1 = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
-    # a stranded temp from a crashed attempt
-    open(os.path.join(out, ".part-00001-deadbeef.tmp"), "wb").write(b"junk")
-    n2 = write_warc_dir(df, out)
-    files2 = sorted(f for f in os.listdir(out) if f.endswith(".warc.gz"))
-    assert n1 == n2 == 100
-    assert files1 == files2  # deterministic names: retry overwrote
-    assert read_warc_dir(spark, out).count() == 100
-    assert read_warc_dir_split(spark, out, split_bytes=1024).count() == 100
 
 
 def test_warc_landing_stream_ingests_each_file_exactly_once(spark, sf_dir, tmp_path):
