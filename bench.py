@@ -96,7 +96,8 @@ HEADLINE = [
     # manifest intersect, pruned scan of ≤ LSH_BANDS / ≤ NPROBE files,
     # score. The DuckDB oracle recomputes the full pipeline, so the
     # ratio prices index serving against recompute; the Spark side's
-    # read is O(probe) at any index size (scale_probe --served-pruned).
+    # read is O(probe) at any index size (commit 85eee34 recorded kept
+    # files at sf0.01/sf0.1/sf1; tests/test_dedup_quality.py pins it).
     "dd_dedup_served_pruned",
     "sim_topk_pq_served_pruned",
     # round-12: the honest-decode step past the container probes — the

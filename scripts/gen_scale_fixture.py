@@ -1,4 +1,4 @@
-"""Synthesize an sf1-scale fixture directory for the scale probe.
+"""Synthesize an sf1-scale fixture directory for scale profiles.
 
 The driver's fixtures stop at sf0.1; the dedup/ANN scale questions
 (candidate-pair growth vs the MAX_DF/LSH bounds, IVF recall drift) need
@@ -13,15 +13,17 @@ deterministic.
 Output: /root/repo/.scratch/sf1_synth/{documents,embeddings,events,
 lineitem}.parquet at 10x sf0.1 cardinality, plus the other six fixture
 tables copied from sf0.001 (fixture-view registration reads all ten;
-the probe queries never touch the copies). events scales the USER
-domain 10x too (resampled rows with fresh user draws over a 10x id
-range, timestamps uniform over the observed span) so distinct-count
-sketches face genuinely larger cardinalities; lineitem resamples rows
-with ±5% price jitter so the quantile histogram is not just ten copies
-of the sf0.1 bucket set.
+the dedup, similarity, text and sketch queries never touch the
+copies). events scales the USER domain 10x too (resampled rows with
+fresh user draws over a 10x id range, timestamps uniform over the
+observed span) so distinct-count sketches face genuinely larger
+cardinalities; lineitem resamples rows with ±5% price jitter so the
+quantile histogram is not just ten copies of the sf0.1 bucket set.
 
 Usage: python scripts/gen_scale_fixture.py  (idempotent per
-FIXTURE_VERSION; ~seconds)
+FIXTURE_VERSION; ~seconds; prints the output dir last). Profile it with
+SPARK_GRAFT_SF_DIR=<that dir> python scripts/profiler.py <query ...>
+and compare against the same names at sf0.1 with profiler.py --compare.
 """
 
 from __future__ import annotations

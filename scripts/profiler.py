@@ -2,12 +2,14 @@
 through the benchmark's tracer (perfbench/spans.py).
 
     SPARK_GRAFT_SF_DIR=<fixture dir> python scripts/profiler.py [name ...]
+    python scripts/profiler.py --compare A.jsonl B.jsonl
 
 Run it from the repo root, as bench.py is; SPARK_GRAFT_SF_DIR is
 required. A name is a registered query or one of the drains below. With
 no names it profiles bench.py's HEADLINE queries, then every drain. It
-prints one JSON line per query, then one per drain; perfbench/spans.py
-says what each Tracer figure means.
+prints a header line ``{"calibration_s", "sf_dir"}`` (bench._calibrate's
+box-speed probe), then one JSON line per query, then one per drain;
+perfbench/spans.py says what each Tracer figure means.
 
 Query line — bench.py's warm-up, then N_RUNS measured runs, each a
 tracer span with a child ``build`` span around plan construction; the
@@ -24,6 +26,7 @@ line is the fastest run's:
     exchanges bcast py_eval smj bhj
                  operator counts in the frame's physical plan (AQE's
                  initial plan: the noop write re-plans a copy)
+    rows         output rows, one untimed count after the measured runs
 
 Drain line — the feed is built untimed, then the drain runs from a
 fresh work dir inside one span; the work dirs and feeds are removed
@@ -34,6 +37,13 @@ afterwards:
     batches jobs_per_batch add_batch_ms query_planning_ms wal_commit_ms
     state_commit_ms state_rows state_bytes
                  Tracer.stream_figures of the span
+
+--compare reads two such outputs (say, parent and change, or one
+fixture dir and the next one up) and starts no Spark. Per query or
+drain in both it prints the wall ratio B/A (``wall_s``, or ``drain_s``
+for a drain), that ratio divided by B's calibration_s over A's, the
+B − A deltas of jobs, stages and shuffle_bytes, and the rows ratio
+B/A; a name found in one file only is reported with that file.
 """
 
 from __future__ import annotations
@@ -122,6 +132,9 @@ def query_record(spark, runs: list) -> dict:
         "py4j_calls": run.attrs["py4j_calls"],
         "stages": sum(len(j.stageIds) for j in jobs if j is not None),
         **{k: len(re.findall(rf"^\(\d+\) (?:{p})\b", plan, re.M)) for k, p in PLAN_NODES.items()},
+        # the last run's frame: a memo a later run's pre_run dropped may
+        # have taken an earlier frame's checkpoint files with it
+        "rows": runs[-1][2].count(),
     }
 
 
@@ -210,7 +223,46 @@ def profile_drains(spark, tracer: Tracer, sf_dir: str, names: list[str]):
             shutil.rmtree(d, ignore_errors=True)
 
 
+def read_profile(path: str) -> tuple[float, dict]:
+    """(calibration_s, name -> line) of one profiler output."""
+    with open(path, encoding="utf-8") as f:
+        lines = [json.loads(line) for line in f if line.strip()]
+    header, *records = lines
+    return header["calibration_s"], {r.get("q", r.get("drain")): r for r in records}
+
+
+def compare(path_a: str, path_b: str):
+    """Yield one line per query or drain of the two profiler outputs."""
+    cal_a, a = read_profile(path_a)
+    cal_b, b = read_profile(path_b)
+    for name in {**a, **b}:
+        ra, rb = a.get(name), b.get(name)
+        key, wall = ("q", "wall_s") if "q" in (ra or rb) else ("drain", "drain_s")
+        if ra is None or rb is None:
+            yield {key: name, "only_in": path_a if ra else path_b}
+            continue
+        ratio = rb[wall] / ra[wall]
+        rec = {key: name, "wall_ratio": ratio, "norm_wall_ratio": ratio / (cal_b / cal_a)}
+        rec.update({f"{f}_delta": rb[f] - ra[f] for f in ("jobs", "stages", "shuffle_bytes") if f in ra})
+        if "rows" in ra:
+            rec["rows_ratio"] = rb["rows"] / ra["rows"] if ra["rows"] else None
+        yield rec
+
+
+def emit(rec: dict) -> None:
+    rec = {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
+    print(json.dumps(rec), flush=True)
+
+
 def main() -> int:
+    if sys.argv[1:2] == ["--compare"]:
+        if len(sys.argv) != 4:
+            print("usage: profiler.py --compare A.jsonl B.jsonl", file=sys.stderr)
+            return 2
+        for rec in compare(sys.argv[2], sys.argv[3]):
+            emit(rec)
+        return 0
+
     from task_hive_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -230,13 +282,13 @@ def main() -> int:
     query_names = [n for n in names if n in qs] if names else [n for n in bench.HEADLINE if n in qs]
     drain_names = [n for n in names if n in drains] if names else list(drains)
 
+    emit({"calibration_s": bench._calibrate(spark), "sf_dir": sf_dir})
     tracer = Tracer(spark, True)
     for rec in itertools.chain(
         profile_queries(spark, tracer, qs, sf_dir, query_names),
         profile_drains(spark, tracer, sf_dir, drain_names),
     ):
-        rec = {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
-        print(json.dumps(rec), flush=True)
+        emit(rec)
     return 0
 
 

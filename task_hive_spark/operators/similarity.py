@@ -430,8 +430,8 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str, nprobe: int = NPROBE) -> Data
     k-means, IVF_TRAIN_ITERS Lloyd rounds — _ivf_centroids) assigns
     every vector to its nearest-centroid cell; a probe searches only
     its nprobe nearest cells with exact cosine re-rank (default NPROBE;
-    scripts/scale_probe.py --ivf-recall sweeps the knob and pins recall
-    per scale factor).
+    commit 1e7bc76 recorded recall per nprobe and scale factor, and
+    tests/test_dedup_quality.py pins the NPROBE recall floor).
 
     Scale shape: centroids are a broadcast dim (K rows); assignment is
     one map stage (K dot products per vector); the cell id becomes the
@@ -577,8 +577,8 @@ def dd_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first; the production knob is capping oversized cells (sampling or
     re-clustering), the same remedy as the LSH hot-bucket cap. The
     self-join keys on cell, so a cell is one shuffle partition —
-    bounded by the quantizer's balance, which scripts/scale_probe.py
-    tracks per sf.
+    bounded by the quantizer's balance (commit 2e28843 recorded a
+    max/mean cell ratio of 1.10-1.12 at sf0.001-sf0.1).
 
     Output: (rep_id, vec_id, cell, cluster_size, keep) for every vector
     in a dup group (singletons are not duplicates and don't appear);

@@ -150,62 +150,10 @@ def write_avro(
 
 
 def read_avro(content: bytes) -> list[tuple[int, str, str]]:
-    """Decode one container's records; rejects bad magic, unknown
-    codecs, corrupt sync markers and truncated blocks loudly."""
-    if content[:4] != _MAGIC:
-        raise ValueError(f"not an Avro container: {content[:4]!r}")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    while True:
-        n, pos = _zigzag_decode(content, pos)
-        if n == 0:
-            break
-        if n < 0:
-            # negative map-block counts (with a byte-size long) are
-            # legal Avro but never written here — reject rather than
-            # silently half-parse a foreign file
-            raise ValueError("negative metadata map block count unsupported")
-        for _ in range(n):
-            k, pos = _dec_str(content, pos)
-            ln, pos = _zigzag_decode(content, pos)
-            if ln < 0 or pos + ln > len(content):
-                raise ValueError("truncated metadata value")
-            meta[k] = content[pos : pos + ln]
-            pos += ln
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec not in ("null", "deflate"):
-        raise ValueError(f"unsupported codec {codec!r}")
-    schema = json.loads(meta["avro.schema"])
-    want = [f["name"] for f in AVRO_SCHEMA["fields"]]
-    got = [f["name"] for f in schema.get("fields", [])]
-    if got != want:
-        raise ValueError(f"unexpected schema fields {got} (want {want})")
-    if pos + 16 > len(content):
-        raise ValueError("truncated header sync")
-    sync = content[pos : pos + 16]
-    pos += 16
-    out: list[tuple[int, str, str]] = []
-    while pos < len(content):
-        count, pos = _zigzag_decode(content, pos)
-        size, pos = _zigzag_decode(content, pos)
-        if count < 0 or size < 0 or pos + size + 16 > len(content):
-            raise ValueError("truncated block")
-        payload = content[pos : pos + size]
-        pos += size
-        if content[pos : pos + 16] != sync:
-            raise ValueError("sync marker mismatch (corrupt or split block)")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, wbits=-15)
-        bp = 0
-        for _ in range(count):
-            doc_id, bp = _zigzag_decode(payload, bp)
-            lang, bp = _dec_str(payload, bp)
-            text, bp = _dec_str(payload, bp)
-            out.append((doc_id, lang, text))
-        if bp != len(payload):
-            raise ValueError(f"{len(payload) - bp} undecoded bytes in block")
-    return out
+    """Decode one container's records (the split decoder over the whole
+    range); rejects bad magic, unknown codecs, corrupt sync markers and
+    truncated blocks loudly."""
+    return _decode_range(io.BytesIO(content), 0, len(content))
 
 
 def write_avro_dir(df: DataFrame, out_dir: str) -> int:
@@ -226,17 +174,17 @@ def read_avro_dir(spark: SparkSession, in_dir: str) -> DataFrame:
 
 
 # --- splittable range reader ------------------------------------------------
-# The whole-file reader above is the fixture-scale path; this is the
-# cluster-scale one — the actual Hadoop/Avro split algorithm over the
-# sync markers the writer already emits, so one multi-GB container
-# fans out across tasks instead of pinning one. Contract (the
-# DataFileReader.sync/pastSync rule): a split [start, end) first scans
-# FORWARD from `start` for the 16-byte sync marker (a marker
-# straddling `start` is invisible — it belongs to the previous split's
-# scan), then decodes every block whose start offset is < end + 16;
-# the +16 slack is what makes a block whose sync straddles `end`
-# belong to exactly one split (no gaps, no double-reads — fuzzed over
-# split sizes in tests/test_avro_source.py).
+# One decoder serves both readers: read_avro runs it over a whole
+# in-memory container, the split reader over a byte range of a file on
+# disk — the actual Hadoop/Avro split algorithm over the sync markers
+# the writer already emits, so one multi-GB container fans out across
+# tasks instead of pinning one. Contract (the DataFileReader.sync/
+# pastSync rule): a split [start, end) first scans FORWARD from `start`
+# for the 16-byte sync marker (a marker straddling `start` is invisible
+# — it belongs to the previous split's scan), then decodes every block
+# whose start offset is < end + 16; the +16 slack is what makes a block
+# whose sync straddles `end` belong to exactly one split (no gaps, no
+# double-reads — fuzzed over split sizes in tests/test_avro_source.py).
 
 _SYNC_LEN = 16
 
@@ -258,9 +206,17 @@ def _file_varint(f) -> int:
     return (acc >> 1) ^ -(acc & 1)
 
 
-def _read_header_from_file(f) -> tuple[str, bytes, int]:
-    """Parse the container header off an open file: returns
-    (codec, sync marker, first block start offset)."""
+def _take(f, n: int, size: int) -> bytes:
+    """Exactly ``n`` bytes off ``f`` (of ``size`` bytes); a length
+    running past the end is checked before any read is sized by it."""
+    if n < 0 or f.tell() + n > size:
+        raise ValueError("truncated container")
+    return f.read(n)
+
+
+def _read_header(f, size: int) -> tuple[str, bytes]:
+    """Parse the container header off ``f``: returns (codec, sync
+    marker), leaving ``f`` at the first block."""
     if f.read(4) != _MAGIC:
         raise ValueError("not an Avro container")
     meta: dict[str, bytes] = {}
@@ -269,15 +225,13 @@ def _read_header_from_file(f) -> tuple[str, bytes, int]:
         if n == 0:
             break
         if n < 0:
+            # negative map-block counts (with a byte-size long) are
+            # legal Avro but never written here — reject rather than
+            # silently half-parse a foreign file
             raise ValueError("negative metadata map block count unsupported")
         for _ in range(n):
-            klen = _file_varint(f)
-            k = f.read(klen).decode("utf-8")
-            vlen = _file_varint(f)
-            v = f.read(vlen)
-            if len(v) != vlen:
-                raise ValueError("truncated metadata value")
-            meta[k] = v
+            k = _take(f, _file_varint(f), size).decode("utf-8")
+            meta[k] = _take(f, _file_varint(f), size)
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported codec {codec!r}")
@@ -286,10 +240,7 @@ def _read_header_from_file(f) -> tuple[str, bytes, int]:
     got = [fld["name"] for fld in schema.get("fields", [])]
     if got != want:
         raise ValueError(f"unexpected schema fields {got} (want {want})")
-    sync = f.read(_SYNC_LEN)
-    if len(sync) != _SYNC_LEN:
-        raise ValueError("truncated header sync")
-    return codec, sync, f.tell()
+    return codec, _take(f, _SYNC_LEN, size)
 
 
 def _scan_sync(f, sync: bytes, from_pos: int) -> int | None:
@@ -313,41 +264,41 @@ def _scan_sync(f, sync: bytes, from_pos: int) -> int | None:
             buf = buf[-(_SYNC_LEN - 1):]
 
 
-def _decode_split(path: str, start: int, end: int) -> list[tuple[int, str, str]]:
-    """Decode the blocks a split [start, end) owns (module-level so the
-    fuzz test can drive it directly)."""
+def _decode_range(f, start: int, end: int) -> list[tuple[int, str, str]]:
+    """Decode the blocks the split [start, end) of the container open
+    as ``f`` owns."""
+    size = f.seek(0, os.SEEK_END)
+    f.seek(0)
+    codec, sync = _read_header(f, size)
     out: list[tuple[int, str, str]] = []
-    with open(path, "rb") as f:
-        codec, sync, first_block = _read_header_from_file(f)
-        file_size = os.fstat(f.fileno()).st_size
-        if start == 0:
-            block_start = first_block
-        else:
-            found = _scan_sync(f, sync, start)
-            if found is None:
-                return out
-            block_start = found
-        while block_start < min(end + _SYNC_LEN, file_size):
-            f.seek(block_start)
-            count = _file_varint(f)
-            size = _file_varint(f)
-            if count < 0 or size < 0:
-                raise ValueError("corrupt block lengths")
-            payload = f.read(size)
-            if len(payload) != size or f.read(_SYNC_LEN) != sync:
-                raise ValueError("truncated block or sync mismatch")
-            if codec == "deflate":
-                payload = zlib.decompress(payload, wbits=-15)
-            bp = 0
-            for _ in range(count):
-                doc_id, bp = _zigzag_decode(payload, bp)
-                lang, bp = _dec_str(payload, bp)
-                text, bp = _dec_str(payload, bp)
-                out.append((doc_id, lang, text))
-            if bp != len(payload):
-                raise ValueError(f"{len(payload) - bp} undecoded bytes in block")
-            block_start = f.tell()
+    block_start = f.tell() if start == 0 else _scan_sync(f, sync, start)
+    while block_start is not None and block_start < min(end + _SYNC_LEN, size):
+        f.seek(block_start)
+        count = _file_varint(f)
+        payload = _take(f, _file_varint(f), size)
+        if count < 0:
+            raise ValueError("corrupt block count")
+        if _take(f, _SYNC_LEN, size) != sync:
+            raise ValueError("sync marker mismatch (corrupt or split block)")
+        if codec == "deflate":
+            payload = zlib.decompress(payload, wbits=-15)
+        bp = 0
+        for _ in range(count):
+            doc_id, bp = _zigzag_decode(payload, bp)
+            lang, bp = _dec_str(payload, bp)
+            text, bp = _dec_str(payload, bp)
+            out.append((doc_id, lang, text))
+        if bp != len(payload):
+            raise ValueError(f"{len(payload) - bp} undecoded bytes in block")
+        block_start = f.tell()
     return out
+
+
+def _decode_split(path: str, start: int, end: int) -> list[tuple[int, str, str]]:
+    """Decode the blocks a split [start, end) of the file at ``path``
+    owns (module-level so the fuzz test can drive it directly)."""
+    with open(path, "rb") as f:
+        return _decode_range(f, start, end)
 
 
 def read_avro_dir_split(

@@ -270,13 +270,17 @@ def iter_warc_gz(content: bytes):
         block = d.decompress(buf)
         if not d.eof:
             raise ValueError("truncated gzip member")
-        tail = d.unused_data
         # flush() after eof returns nothing; member fully decoded
-        pos = 0
-        while pos < len(block):
-            rec, pos = parse_record(block, pos)
-            yield rec
-        buf = tail
+        yield from member_records(block)
+        buf = d.unused_data
+
+
+def member_records(block: bytes):
+    """Yield every record of one decompressed gzip member."""
+    pos = 0
+    while pos < len(block):
+        rec, pos = parse_record(block, pos)
+        yield rec
 
 
 def extract_doc(rec: dict) -> tuple[int, str, str] | None:
@@ -330,10 +334,7 @@ def write_warc_dir(df: DataFrame, out_dir: str) -> int:
 
 def _warc_docs(content: bytes):
     """The doc rows of one whole ``.warc.gz`` file."""
-    for rec in iter_warc_gz(content):
-        doc = extract_doc(rec)
-        if doc is not None:
-            yield doc
+    return filter(None, map(extract_doc, iter_warc_gz(content)))
 
 
 def read_warc_dir(spark: SparkSession, in_dir: str) -> DataFrame:
@@ -440,14 +441,8 @@ def _decode_warc_split(path: str, start: int, end: int) -> list[tuple[int, str, 
             got = _try_member(f, off)
             if got is None:
                 raise ValueError(f"corrupt gzip member at offset {off}")
-            block, nxt = got
-            pos = 0
-            while pos < len(block):
-                rec, pos = parse_record(block, pos)
-                doc = extract_doc(rec)
-                if doc is not None:
-                    out.append(doc)
-            off = nxt
+            block, off = got
+            out += filter(None, map(extract_doc, member_records(block)))
     return out
 
 

@@ -545,11 +545,13 @@ def test_dedup_served_probes_index_without_rescanning_history(spark, sf_dir, tmp
     assert os.path.isfile(os.path.join(out, "summary.json"))
 
     stats = file_column_stats(os.path.join(out, "buckets"), "bucket")
-    served, _kept, _total = dedup_served_pruned_of(
-        spark, out, stats, new_batch_df(spark, sf_dir)
-    )
+    batch = new_batch_df(spark, sf_dir)
+    served, _kept, _total = dedup_served_pruned_of(spark, out, stats, batch)
     rows = served.collect()
     assert rows, "re-crawled batch must collide with history"
+    # candidates grow with the batch (each re-crawl meets its base, the
+    # base's copies and some banding noise), never with batch x history
+    assert len(rows) <= 8 * batch.count()
     by_new: dict[int, list] = {}
     for r in rows:
         assert r["new_doc_id"] >= NEW_OFFSET

@@ -16,7 +16,8 @@ from task_hive_spark.plans.oracle import run_all
 
 def test_dd_served_batch_prunes_to_batch_bound(spark, sf_dir):
     """kept files ≤ |batch| · LSH_BANDS — the serve reads O(batch) for a
-    re-crawl batch of every 104th new doc."""
+    re-crawl batch of every 104th new doc — and the pruned answer is
+    the answer of the serve that reads every bucket file."""
     from pyspark.sql import functions as F
 
     from task_hive_spark.operators.dedup import (
@@ -32,8 +33,11 @@ def test_dd_served_batch_prunes_to_batch_bound(spark, sf_dir):
         (F.col("doc_id") - NEW_OFFSET) % 104 == 0
     )
     n_probe = probe.count()
-    _out, kept, total = dedup_served_pruned_of(spark, idx, stats, probe)
-    assert len(kept) <= min(n_probe * LSH_BANDS, total)
+    out, kept, total = dedup_served_pruned_of(spark, idx, stats, probe)
+    assert 0 < len(kept) <= min(n_probe * LSH_BANDS, total)
+    everything = [dict(s, min=None, max=None) for s in stats]
+    unpruned = dedup_served_pruned_of(spark, idx, everything, probe)[0]
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, unpruned.collect()))
 
 
 # --- staged-swap crash recovery --------------------------------------------

@@ -1,6 +1,9 @@
 """Sketch-operator invariants the oracle hash gate cannot express:
 KMV estimation accuracy vs the exact distinct count, CMS one-sided
-error, and the Bloom filter's zero-false-negative guarantee."""
+error, the Bloom filter's zero-false-negative guarantee, and state
+sizes bounded by the sketch parameters, not the data (checked on
+inputs wide enough to fill every sketch; the fixtures' 15 users per
+event type and 31-token vocabulary fill none)."""
 
 from __future__ import annotations
 
@@ -9,12 +12,16 @@ from pyspark.sql import functions as F
 from task_hive_spark.operators.sketches import (
     BLOOM_K,
     CMS_D,
+    CMS_W,
     HLL_M,
     KMV_K,
     THETA_SIDE_A,
     THETA_SIDE_B,
     bloom_positions,
     cms_cells,
+    hll_registers,
+    kmv_hashes,
+    kmv_sketch,
     sk_bloom_semi_join,
     sk_cms_heavy_hitters,
     sk_hll_distinct,
@@ -24,7 +31,17 @@ from task_hive_spark.operators.sketches import (
 from task_hive_spark.sources.fixtures import load_table
 
 
+def _wide_events(spark):
+    """(event_type, user_id) rows with 10,000 distinct users in each of
+    two groups: enough to fill every KMV slot and HLL register."""
+    return spark.range(20_000).select(
+        (F.col("id") % 2).cast("string").alias("event_type"), F.col("id").alias("user_id")
+    )
+
+
 def test_kmv_estimate_tracks_exact(spark, sf_dir):
+    # sketch state rows <= K per group, however many users a group has
+    assert kmv_sketch(kmv_hashes(_wide_events(spark))).count() <= KMV_K * 2
     est = {
         r["event_type"]: r
         for r in sk_kmv_distinct(spark, sf_dir).collect()
@@ -52,6 +69,8 @@ def test_kmv_estimate_tracks_exact(spark, sf_dir):
 
 
 def test_hll_estimate_tracks_exact(spark, sf_dir):
+    # register rows <= m per group, however many users a group has
+    assert hll_registers(_wide_events(spark)).count() <= HLL_M * 2
     est = {r["event_type"]: r for r in sk_hll_distinct(spark, sf_dir).collect()}
     exact = {
         r["event_type"]: r["n"]
@@ -296,8 +315,18 @@ def test_quantile_sketch_brackets_exact_percentiles(spark, sf_dir):
         QSK_QS,
         QSK_SUB_BITS,
         qsk_lineitem_vals,
+        qsk_state,
         sk_quantiles,
     )
+
+    # buckets per group <= the log-linear grid: every value below
+    # 2^(S+1) exactly, then (62 - S) octaves of 2^S sub-buckets; the
+    # log-uniform values reach every octave of a non-negative BIGINT
+    wide = spark.range(100_000).select(
+        F.lit("g").alias("g"), F.floor(F.pow(F.lit(2.0), F.rand(7) * 62)).alias("v")
+    )
+    grid = (1 << (QSK_SUB_BITS + 1)) + (62 - QSK_SUB_BITS) * (1 << QSK_SUB_BITS)
+    assert qsk_state(wide).count() <= grid
 
     got = {r["l_returnflag"]: r for r in sk_quantiles(spark, sf_dir).collect()}
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -535,3 +564,6 @@ def test_weighted_cms_grid_equals_occurrence_stream_grid(spark, sf_dir):
         for r in cms_grid_weighted(unigram_vocab(spark, sf_dir)).collect()
     }
     assert a == b and a
+    # the grid holds at most D x W counters, however many tokens stream in
+    wide = spark.range(20_000).select(F.col("id").cast("string").alias("tok"))
+    assert cms_grid(wide).count() <= CMS_D * CMS_W
