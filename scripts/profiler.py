@@ -147,7 +147,7 @@ def profile_queries(spark, tracer: Tracer, qs: dict, sf_dir: str, names: list[st
 
 def drain_table(spark, sf_dir: str) -> tuple[dict, dict]:
     """(feed -> its builder, called as builder(spark, sf_dir, feed_dir);
-    drain -> (feed, untimed setup(work) or None, drain(work, feed_dir)))."""
+    drain -> (feed, drain(work, feed_dir)))."""
     from task_hive_spark.streaming import (
         cdcmerge,
         dedupstream,
@@ -164,31 +164,22 @@ def drain_table(spark, sf_dir: str) -> tuple[dict, dict]:
         "replay": dedupstream.replay_feed,
         "changes": cdcmerge.change_feed,
         "docs": minhashstream.doc_feed,
-        "sketch_events": sketchstream.event_feed,
-        "sketch_docs": sketchstream.doc_feed,
-        "lineitem": sketchstream.lineitem_feed,
+        **{f"sketch_{b.__name__}": b for b, *_ in sketchstream.SKETCHES.values()},
     }
     drains = {
-        "lifecycle": (
-            "events", None, lambda w, f: lifecycle.run_lifecycle(spark, sf_dir, w, feed_dir=f)
-        ),
-        "stateful": ("events", None, lambda w, f: stateful.run_once(spark, sf_dir, w, n, feed=f)),
-        "timers": ("events", None, lambda w, f: timers.run_once(spark, sf_dir, w, n, feed=f)),
-        "dedupstream": (
-            "replay", None, lambda w, f: dedupstream.run_once(spark, sf_dir, w, n, feed=f)
-        ),
-        "cdcmerge": (
-            "changes",
-            lambda w: cdcmerge.seed_state(spark, sf_dir, w),
-            lambda w, f: cdcmerge.run_stream(spark, w, f),
-        ),
-        "minhashstream": ("docs", None, lambda w, f: minhashstream.run_stream(spark, w, f)),
-        "sketch_hll": ("sketch_events", None, lambda w, f: sketchstream.run_stream(spark, w, f)),
-        "sketch_kmv": (
-            "sketch_events", None, lambda w, f: sketchstream.run_kmv_stream(spark, w, f)
-        ),
-        "sketch_cms": ("sketch_docs", None, lambda w, f: sketchstream.run_cms_stream(spark, w, f)),
-        "sketch_qsk": ("lineitem", None, lambda w, f: sketchstream.run_qsk_stream(spark, w, f)),
+        "lifecycle": ("events", lambda w, f: lifecycle.run_lifecycle(spark, sf_dir, w, feed_dir=f)),
+        "stateful": ("events", lambda w, f: stateful.run_once(spark, sf_dir, w, n, feed=f)),
+        "timers": ("events", lambda w, f: timers.run_once(spark, sf_dir, w, n, feed=f)),
+        "dedupstream": ("replay", lambda w, f: dedupstream.run_once(spark, sf_dir, w, n, feed=f)),
+        "cdcmerge": ("changes", lambda w, f: cdcmerge.run_stream(spark, sf_dir, w, f)),
+        "minhashstream": ("docs", lambda w, f: minhashstream.run_stream(spark, w, f)),
+        **{
+            f"sketch_{sk}": (
+                f"sketch_{b.__name__}",
+                lambda w, f, sk=sk: sketchstream.run_stream(spark, sk, w, f),
+            )
+            for sk, (b, *_) in sketchstream.SKETCHES.items()
+        },
     }
     return feeds, drains
 
@@ -202,14 +193,12 @@ def profile_drains(spark, tracer: Tracer, sf_dir: str, names: list[str]):
     built: dict[str, str] = {}  # feed -> the scratch dir holding it
     try:
         for name in names:
-            feed, setup, drain = drains[name]
+            feed, drain = drains[name]
             if feed not in built:
                 built[feed] = tempfile.mkdtemp(prefix=f"profile_feed_{feed}_", dir=_scratch_root())
                 feeds[feed](spark, sf_dir, os.path.join(built[feed], "feed"))
             work = tempfile.mkdtemp(prefix=f"profile_drain_{name}_", dir=_scratch_root())
             try:
-                if setup is not None:
-                    setup(work)
                 with tracer.span(f"streaming.{name}") as span:
                     drain(work, os.path.join(built[feed], "feed"))
                 tracer.resolve()

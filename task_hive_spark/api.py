@@ -60,7 +60,7 @@ from task_hive_spark.materialize import (
     SNAPSHOT,
     commit_version,
     committed_versions,
-    latest_committed_version,
+    resume_or_seed,
 )
 from task_hive_spark.operators.assign import STRATEGIES, bind
 from task_hive_spark.operators.processors import (
@@ -71,6 +71,7 @@ from task_hive_spark.operators.processors import (
     backoff_ns,
     register_task_processor as _register_processor_global,
 )
+from task_hive_spark.schemas import TASK_STATUSES
 
 DEFAULT_LIST_LIMIT = 100  # api/server.go:36-41
 LIVENESS_THRESHOLD_S = 30  # tasks/api.go:263
@@ -114,6 +115,13 @@ _WORKER_SCHEMA = (
 )
 
 
+def _tasks_writer(df: DataFrame) -> Callable[[str], None]:
+    """Write ``df`` as one status-partitioned task snapshot."""
+    return lambda path: (
+        df.select(*_TASK_COLS).repartition("status").write.partitionBy("status").parquet(path)
+    )
+
+
 @dataclass
 class TaskHiveConfig:
     """DefaultConfig (taskhive.go:48-55)."""
@@ -145,17 +153,11 @@ class TaskHive:
         self._stopped = False
         self._server = None  # lazy HTTP layer (serve() / config.api_port)
         # a work_dir that already holds snapshots is RESUMED, not reset
-        # (the reference's etcd state outlives the process): adopt the
-        # highest committed version — a snapshot whose write was cut
-        # short is not one; only a dir without any gets the empty v0
-        existing = latest_committed_version(self.work_dir, "tasks_v")
-        if existing is not None:
-            self._version = existing
-            self._snapshot = committed_versions(self.work_dir, "tasks_v")[-1]
-        else:
-            self._version = -1
-            # empty v0 so queries work pre-start
-            self._write_tasks(rows_frame(spark, [], _TASK_SCHEMA))
+        # (the reference's etcd state outlives the process); only a dir
+        # without any gets the empty v0, so queries work pre-start
+        empty = rows_frame(spark, [], _TASK_SCHEMA)
+        self._version = resume_or_seed(self.work_dir, "tasks_v", _tasks_writer(empty))
+        self._snapshot = committed_versions(self.work_dir, "tasks_v")[-1]
 
     # --- registries (taskhive.go:92-96, :252-255) -------------------------
 
@@ -178,14 +180,7 @@ class TaskHive:
         previous version too, so a DataFrame handed out just before the
         swap stays readable for one more round."""
         self._snapshot = commit_version(
-            self.work_dir,
-            "tasks_v",
-            self._version + 1,
-            lambda path: df.select(*_TASK_COLS)
-            .repartition("status")
-            .write.partitionBy("status")
-            .parquet(path),
-            SNAPSHOT,
+            self.work_dir, "tasks_v", self._version + 1, _tasks_writer(df), SNAPSHOT
         )
         self._version += 1
 
@@ -442,10 +437,7 @@ class TaskHive:
             r["status"]: r["n"]
             for r in self._tasks().groupBy("status").agg(F.count("*").alias("n")).collect()
         }
-        stats = {
-            s: int(counts.get(s, 0))
-            for s in ("pending", "processing", "completed", "failed", "delayed")
-        }
+        stats = {s: int(counts.get(s, 0)) for s in TASK_STATUSES}
         stats["total"] = sum(stats.values())
         return stats
 

@@ -39,7 +39,9 @@ reference's etcd writes, which are visible whole or not at all:
   highest, or all below a batch id — the prior a replay of it reads;
 - retention is the only choice a caller makes: a snapshot keeps its
   newest ``SNAPSHOT`` committed versions (a frame handed out just
-  before a commit stays readable one more round), a log keeps all.
+  before a commit stays readable one more round), a log keeps all;
+- a snapshot starts from its highest committed version, or from a
+  seed committed as version 0 when it has none (``resume_or_seed``).
 """
 
 from __future__ import annotations
@@ -346,3 +348,15 @@ def commit_version(
             if m < oldest_kept:
                 shutil.rmtree(d, ignore_errors=True)
     return path
+
+
+def resume_or_seed(root: str, prefix: str, write: Callable[[str], object]) -> int:
+    """The version a snapshot under ``root`` starts from: the highest
+    committed one (a restarted process resumes it; a version whose
+    write was cut short is not one), else version 0, committed here by
+    ``write(path)``."""
+    n = latest_committed_version(root, prefix)
+    if n is None:
+        commit_version(root, prefix, 0, write, SNAPSHOT)
+        n = 0
+    return n

@@ -86,6 +86,19 @@ def _isolated_store_dirs() -> tuple[str, str]:
     return out[0], out[1]
 
 
+def default_driver_memory() -> str:
+    """A quarter of the machine's memory (MemTotal in /proc/meminfo),
+    capped at 8g, so a test run and a verify run fit on one machine
+    side by side; 8g where the figure cannot be read.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "8g"
+    return f"{min(kb // 4 // 1024, 8 * 1024)}m"
+
+
 def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) the SparkSession.
 
@@ -110,7 +123,10 @@ def get_spark(app_name: str = "task_hive_spark", extra_conf: dict | None = None)
         # tail of a long suite)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # Persistent catalog (plans/catalog.py): warehouse + derby
         # metastore under the repo (so saveAsTable works from any cwd),
         # keyed per PROCESS — see _isolated_store_dirs.

@@ -5,12 +5,13 @@ table the one-shot batch MERGE produces.
 This is the Spark-native shape of a continuously-maintained snapshot
 (what a Delta/Hudi "streaming upsert" sink does): a file-source stream
 delivers change chunks in micro-batches; each trigger MERGEs its chunk
-into the persisted snapshot with copy-on-write: micro-batch ``bid``
-reads the snapshot committed before it and commits the merged table as
-version bid+1 (v0 is the seed) through ``materialize.commit_version``,
-whose replay rule makes a re-run batch rewrite its version from the
-same prior — the read-merge-write cycle a lakehouse table format runs
-per commit, minus the manifest layer.
+into the persisted snapshot with copy-on-write. The MERGE is the
+``step`` of a state fold (feed.fold_state): the fold seeds the snapshot
+with the task table, hands each batch the snapshot committed before
+it, and commits the merged table as the next version, so a re-run
+batch rewrites its version from the same prior — the read-merge-write
+cycle a lakehouse table format runs per commit, minus the manifest
+layer.
 
 Why it converges to the batch answer (and is replay-safe): every change
 id occurs ONCE across the whole batch and carries ABSOLUTE values, so
@@ -33,13 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import (
-    SNAPSHOT,
-    commit_version,
-    committed_versions,
-    latest_committed_version,
-    memoized_run,
-)
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.operators.queries import (
     CHANGES_SQL,
     ORACLES as _Q_ORACLES,
@@ -48,7 +43,7 @@ from task_hive_spark.operators.queries import (
 )
 from task_hive_spark.operators.taskmodel import tasks_df
 from task_hive_spark.streaming.feed import (
-    drain,
+    fold_state,
     read_feed,
     with_hash_chunk,
     write_chunks,
@@ -82,38 +77,30 @@ def change_feed(
     return feed_dir
 
 
-def run_stream(spark: SparkSession, work: str, feed: str) -> str:
+def run_stream(spark: SparkSession, sf_dir: str, work: str, feed: str) -> str:
     """Drain whatever the feed currently holds through the copy-on-write
     MERGE (checkpointed — a second call with more files resumes exactly
-    where the first stopped); returns the current snapshot dir. The
-    snapshot must already be seeded (run_once does; a restarted process
-    adopts the highest committed version)."""
-
-    def merge_batch(batch_df: DataFrame, bid: int) -> None:
-        prior = committed_versions(work, "state_v", below=bid + 1)[-1]
-        merged = apply_merge(spark.read.parquet(prior), batch_df)
-        commit_version(work, "state_v", bid + 1, merged.write.parquet, SNAPSHOT)
-
-    drain(read_feed(spark, feed, _CHANGE_SCHEMA), merge_batch, os.path.join(work, "ckpt"))
-    return committed_versions(work, "state_v")[-1]
-
-
-def seed_state(spark: SparkSession, sf_dir: str, work: str) -> None:
-    """Commit the v0 snapshot unless a committed version already exists
-    (a crashed run resumes from its highest committed snapshot)."""
-    if latest_committed_version(work, "state_v") is None:
-        seed = tasks_df(spark, sf_dir).select("id", "status", "priority", "worker_id")
-        commit_version(work, "state_v", 0, seed.write.parquet, SNAPSHOT)
+    where the first stopped; a restarted process resumes the highest
+    committed snapshot); returns the current snapshot's path."""
+    seed = tasks_df(spark, sf_dir).select("id", "status", "priority", "worker_id")
+    query, paths = fold_state(
+        read_feed(spark, feed, _CHANGE_SCHEMA),
+        work,
+        {"snapshot": seed},
+        lambda batch_df, prior, _bid: {"snapshot": apply_merge(prior["snapshot"], batch_df)},
+        os.path.join(work, "ckpt"),
+    )
+    query.awaitTermination()
+    return paths["snapshot"]
 
 
 def run_once(
     spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_CHANGE_CHUNKS
 ) -> str:
-    """Seed the snapshot, stream the change chunks through a
-    foreachBatch copy-on-write MERGE, return the converged table dir."""
+    """Stream the change chunks through a foreachBatch copy-on-write
+    MERGE of the task table; return the converged table's path."""
     feed = change_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
-    seed_state(spark, sf_dir, work)
-    return run_stream(spark, work, feed)
+    return run_stream(spark, sf_dir, work, feed)
 
 
 def st_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

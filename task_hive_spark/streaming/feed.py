@@ -13,7 +13,12 @@ One decision, owned here and nowhere else:
   checkpoint, by default as a Trigger.AvailableNow drain that stops
   once the feed is exhausted (``start_fold``, ``drain``); a fold that
   only keeps its batches commits each one as a log version
-  (``append_to``, read back by ``read_appended``).
+  (``append_to``, read back by ``read_appended``);
+- a fold that carries state forward is a state fold (``fold_state``,
+  read back by ``read_state``): micro-batch ``bid`` reads the state
+  committed below version bid+1, merges the batch in, and commits the
+  result as version bid+1 on a seeded version 0, so a replayed batch
+  rewrites its version from the same prior.
 
 Three chunking rules fill the 1-based ``chunk`` column the writer
 splits on:
@@ -25,9 +30,10 @@ splits on:
 - ``with_hash_chunk``: id hash, for change batches whose ids carry no
   order.
 
-Each stream module keeps its fold and its feed builder (the frame, its
-chunking rule and how the frame is persisted while the chunks are
-written) and takes the rest from here.
+Each stream module keeps its fold (for a state fold, its ``step``)
+and its feed builder (the frame, its chunking rule and how the frame
+is persisted while the chunks are written) and takes the rest from
+here.
 """
 
 from __future__ import annotations
@@ -41,7 +47,13 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from task_hive_spark.functions.prefix import bucketed_prefix
-from task_hive_spark.materialize import LOG, commit_version, committed_versions
+from task_hive_spark.materialize import (
+    LOG,
+    SNAPSHOT,
+    commit_version,
+    committed_versions,
+    resume_or_seed,
+)
 
 EVENT_SCHEMA = (
     "event_s BIGINT, op STRING, task_id STRING, worker_id STRING, task_json STRING"
@@ -179,3 +191,65 @@ def read_appended(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Every micro-batch ``append_to(path)`` committed, as one frame
     with ``schema``'s columns."""
     return spark.read.schema(schema).parquet(*committed_versions(path, "batch="))
+
+
+STATE = "state_v"  # the version prefix of every state fold's root
+
+
+def state_paths(root: str, below: int | None = None) -> dict[str, str]:
+    """{table: path} of the highest committed state version under
+    ``root``; with ``below``, of the highest one below that version."""
+    v = committed_versions(root, STATE, below=below)[-1]
+    return {t: os.path.join(v, t) for t in os.listdir(v) if os.path.isdir(os.path.join(v, t))}
+
+
+def read_state(spark: SparkSession, root: str) -> dict[str, DataFrame]:
+    """The tables of the state ``fold_state`` last committed at ``root``."""
+    return {t: spark.read.parquet(p) for t, p in state_paths(root).items()}
+
+
+def fold_state(
+    stream: DataFrame,
+    root: str,
+    seed: dict[str, DataFrame],
+    step: Callable[[DataFrame, dict[str, DataFrame], int], dict[str, DataFrame] | None],
+    checkpoint: str,
+    trigger: dict = AVAILABLE_NOW,
+) -> tuple[StreamingQuery, dict[str, str]]:
+    """Start folding ``stream`` into the versioned state at ``root`` and
+    return (query, paths).
+
+    The state starts from its highest committed version, or from
+    ``seed``'s tables committed as version 0
+    (materialize.resume_or_seed). Micro-batch ``bid`` reads the tables
+    of the highest version below bid+1, calls ``step(batch_df, prior,
+    bid)`` and commits the tables it returns as version bid+1, one
+    ``SNAPSHOT`` version; a step that returns None commits nothing. A
+    replayed batch therefore reads the prior its first run read, so
+    even an additive merge converges exactly once. A step may cache
+    ``batch_df`` for its writes; it is released after the commit.
+
+    ``paths`` is live: it maps each table to its file in the newest
+    version this query committed, so one ``dict(paths)`` copy is always
+    a matched set."""
+
+    def write(tables: dict[str, DataFrame]) -> Callable[[str], None]:
+        def write_all(path: str) -> None:
+            for t, df in tables.items():
+                df.write.parquet(os.path.join(path, t))
+
+        return write_all
+
+    resume_or_seed(root, STATE, write(seed))
+    paths = state_paths(root)
+
+    def fold(batch_df: DataFrame, bid: int) -> None:
+        spark = batch_df.sparkSession
+        prior = {t: spark.read.parquet(p) for t, p in state_paths(root, below=bid + 1).items()}
+        tables = step(batch_df, prior, bid)
+        if tables is not None:
+            v = commit_version(root, STATE, bid + 1, write(tables), SNAPSHOT)
+            paths.update({t: os.path.join(v, t) for t in tables})
+        batch_df.unpersist()
+
+    return start_fold(stream, fold, checkpoint, trigger), paths

@@ -25,7 +25,7 @@ MERGE-style DataFrame joins (``foreachBatch``):
 - T8  retry state machine: retry_count caps at MaxRetries=3
   (constants.go:20); the 4th failure is terminal (worker.go:63-135).
 - T10 exactly-once: each batch's fold commits tasks + workers as ONE
-  state version (materialize.commit_version), an atomic,
+  state version (the state fold, feed.fold_state), an atomic,
   all-or-nothing transition WITHIN a run, and the recovery unit
   is the whole run (the checkpoint is cleared with the state, so a
   restart redoes the deterministic feed rather than resuming a fold the
@@ -63,7 +63,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from task_hive_spark.functions.rows import rows_frame
 from task_hive_spark.materialize import (
     LOG,
-    SNAPSHOT,
     _scratch_root,  # lazy importers and scratch-root redirects read it here
     commit_version,
     committed_versions,
@@ -80,8 +79,8 @@ from task_hive_spark.streaming.events import events_df, oracle_events_cte
 from task_hive_spark.streaming.feed import (
     AVAILABLE_NOW,
     EVENT_SCHEMA,
+    fold_state,
     read_feed,
-    start_fold,
     with_chunk,
     write_chunks,
 )
@@ -362,15 +361,16 @@ def start_lifecycle_stream(
     """Start the lifecycle fold over ANY streaming DataFrame with the
     EVENT_SCHEMA columns and return (query, paths). `paths` is the LIVE
     pointer dict the fold advances per micro-batch — callers can read
-    the current converged-so-far snapshot while the stream runs. Batch
-    ``bid`` commits tasks and workers as one ``state_v`` version, bid+1
-    (v0 is the empty seed), and then points ``paths`` into it, so one
-    ``dict(paths)`` snapshot is always a matched pair; snapshot
-    retention keeps the previous version readable for one more round.
-    ``paths["assignments"]`` is the dispatch log, one committed version
-    per batch. Default trigger drains what is already in the feed
-    (AvailableNow); pass e.g. {"processingTime": "200 milliseconds"}
-    for a LIVE feed a producer appends to while the query runs. The
+    the current converged-so-far snapshot while the stream runs. The
+    fold is a state fold (feed.fold_state) seeded with empty tables:
+    each batch commits tasks and workers as one version and then points
+    ``paths`` into it, so one ``dict(paths)`` snapshot is always a
+    matched pair; snapshot retention keeps the previous version
+    readable for one more round. ``paths["assignments"]`` is the
+    dispatch log, one committed version per batch. Default trigger
+    drains what is already in the feed (AvailableNow); pass e.g.
+    {"processingTime": "200 milliseconds"} for a LIVE feed a producer
+    appends to while the query runs. The
     converged state is batch-boundary invariant (tests re-chunk the
     same feed), which is what makes the file feed and the socket feed
     interchangeable sources for one fold."""
@@ -384,42 +384,27 @@ def start_lifecycle_stream(
     # already-committed chunk
     shutil.rmtree(ckpt_dir, ignore_errors=True)
     shutil.rmtree(state_dir, ignore_errors=True)
+    assignments = os.path.join(state_dir, "assignments")
 
-    paths = {"assignments": os.path.join(state_dir, "assignments")}
-
-    def commit_state(n: int, tasks: DataFrame, workers: DataFrame) -> None:
-        def write(path: str) -> None:
-            tasks.write.parquet(os.path.join(path, "tasks"))
-            workers.write.parquet(os.path.join(path, "workers"))
-
-        v = commit_version(state_dir, "state_v", n, write, SNAPSHOT)
-        paths.update(tasks=os.path.join(v, "tasks"), workers=os.path.join(v, "workers"))
-
-    commit_state(0, _empty_task_state(spark), _empty_worker_state(spark))
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        ev = batch_df.cache()
+    def step(batch_df: DataFrame, prior: dict, batch_id: int) -> dict | None:
+        ev = batch_df.cache()  # fold_state releases it after the commit
         clock = ev.agg(F.max("event_s")).collect()[0][0]
         if clock is None:  # empty batch
-            ev.unpersist()
-            return
-        prior = committed_versions(state_dir, "state_v", below=batch_id + 1)[-1]
-        prev_tasks = spark.read.parquet(os.path.join(prior, "tasks"))
-        prev_workers = spark.read.parquet(os.path.join(prior, "workers"))
-
-        tasks = _apply_task_events(prev_tasks, ev)
+            return None
+        tasks = _apply_task_events(prior["tasks"], ev)
         tasks = _requeue_dead(tasks, ev)
         tasks = _fire_timers(tasks, clock)
-        workers = _apply_worker_events(prev_workers, ev)
-        assigns = _dispatch_assignments(ev)
-
         # the log's rows for this batch land just before the state swap
         # — readers joining it must tolerate that, as with any log
-        commit_version(paths["assignments"], "batch=", batch_id, assigns.write.parquet, LOG)
-        commit_state(batch_id + 1, tasks, workers)
-        ev.unpersist()
+        commit_version(
+            assignments, "batch=", batch_id, _dispatch_assignments(ev).write.parquet, LOG
+        )
+        return {"tasks": tasks, "workers": _apply_worker_events(prior["workers"], ev)}
 
-    return start_fold(stream, fold, ckpt_dir, trigger or AVAILABLE_NOW), paths
+    seed = {"tasks": _empty_task_state(spark), "workers": _empty_worker_state(spark)}
+    query, paths = fold_state(stream, state_dir, seed, step, ckpt_dir, trigger or AVAILABLE_NOW)
+    paths["assignments"] = assignments
+    return query, paths
 
 
 def run_lifecycle(

@@ -1,33 +1,39 @@
 """Incrementally maintained sketches over arriving data: HyperLogLog
-cardinalities (event stream) and count-min heavy hitters (document
-token stream).
+and KMV distinct counts (event stream), count-min heavy hitters
+(document token stream) and log-linear quantile histograms (lineitem
+stream).
 
 The batch sketches (operators/sketches.py) summarize a corpus that
 already exists; the production companion is the ingest-time form —
 every arriving micro-batch folds into bounded sketch state, and the
 live estimate is readable at any instant without touching historical
-data. Two monoid classes are exercised deliberately:
+data. Three monoid classes are exercised deliberately:
 
 - HLL register state merges by MAX — commutative AND idempotent, so
   incremental folds in any batching (even a replayed one) converge to
   exactly the whole-corpus sketch.
-- CMS counter state merges by SUM — additive, NOT idempotent, so the
-  replay discipline is load-bearing: a naively re-applied micro-batch
-  would double-count its tokens. Every fold reads the state committed
-  below its batch id and commits the full merged state as version
-  ``bid`` through ``materialize.commit_version``, whose replay rule
-  makes a re-run batch REWRITE its version from the same prior instead
-  of adding to it — exactly-once folding on an at-least-once trigger
-  (the re-drain test pins that no counter grows). Snapshot retention
-  keeps the newest two versions, so disk holds two copies of the
-  state, not one per batch.
+- KMV state is an order statistic: merge = bottom-K of the union,
+  commutative and idempotent like HLL's max but over SETS of rows.
+- CMS counters and quantile histogram counts merge by SUM — additive,
+  NOT idempotent, so the replay discipline is load-bearing: a naively
+  re-applied micro-batch would double-count its rows.
 
-Both folds reuse the batch queries' state derivations verbatim
-(sketches.hll_registers / sketches.cms_grid — one implementation, no
-drift), so converged state ≡ the whole-corpus sketch and each oracle
-is the batch query's own SQL (the st_minhash_incremental discipline).
-State is sketch-sized (≤ m·|groups| / D·W rows), so the
-"read latest, write merged" loop costs O(sketch) per trigger, never
+Each sketch is one state fold (feed.fold_state): a per-batch
+``partial`` and a ``merge`` of the prior state with it. The fold reads
+the state committed below the batch's version, so a replayed batch
+REWRITES its version from the same prior instead of adding to it —
+exactly-once folding on an at-least-once trigger (the fault-injection
+and re-drain tests pin that no counter grows). The seed is the partial
+of an empty batch, so its schema is the fold's own. Snapshot retention
+keeps the newest two versions, so disk holds two copies of the state,
+not one per batch.
+
+Every fold reuses the batch queries' state derivations verbatim
+(sketches.hll_registers / kmv_sketch / cms_grid / qsk_state — one
+implementation, no drift), so converged state ≡ the whole-corpus sketch
+and each oracle is the batch query's own SQL (the
+st_minhash_incremental discipline). State is sketch-sized, so the
+"read prior, write merged" loop costs O(sketch) per trigger, never
 O(history) — at 100 TB of events per day the state file never grows.
 """
 
@@ -35,24 +41,33 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from task_hive_spark.materialize import (
-    SNAPSHOT,
-    commit_version,
-    committed_versions,
-    memoized_run,
-)
+from task_hive_spark.functions.rows import rows_frame
+from task_hive_spark.functions.text import ws_tokens
+from task_hive_spark.materialize import memoized_run
 from task_hive_spark.operators.sketches import (
     ORACLES as _SK_ORACLES,
+    QSK_QS,
+    cms_grid,
+    cms_heavy_hitters_from,
     hll_estimate,
     hll_registers,
+    kmv_estimate,
+    kmv_hashes,
+    kmv_sketch,
+    qsk_estimate,
+    qsk_lineitem_vals,
+    qsk_state,
+    sk_hll_daily_served,
+    sk_quantiles_served,
 )
 from task_hive_spark.sources.fixtures import load_table
 from task_hive_spark.streaming.feed import (
     DOC_SCHEMA,
-    drain,
+    fold_state,
     read_feed,
+    read_state,
     with_range_chunk,
     write_chunks,
 )
@@ -61,16 +76,14 @@ _EVENT_SCHEMA = "event_id BIGINT, user_id BIGINT, event_type STRING, day DATE"
 _LINEITEM_SCHEMA = (
     "l_orderkey BIGINT, l_returnflag STRING, l_extendedprice DOUBLE, m DATE"
 )
-N_EVENT_CHUNKS = 4
-N_DOC_CHUNKS = 4
-N_LINEITEM_CHUNKS = 4
+N_CHUNKS = 4
 
 
 # --- feed builders: each table as id-ranged chunks (the ingest order) ------
 
 
 def event_feed(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_EVENT_CHUNKS
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHUNKS
 ) -> str:
     """The events table as event_id-ranged chunk files."""
     # day rides the feed so the register state keeps the store's grain
@@ -82,7 +95,7 @@ def event_feed(
 
 
 def doc_feed(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_DOC_CHUNKS
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHUNKS
 ) -> str:
     """The documents table as doc_id-ranged chunk files."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -90,7 +103,7 @@ def doc_feed(
 
 
 def lineitem_feed(
-    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_LINEITEM_CHUNKS
+    spark: SparkSession, sf_dir: str, feed_dir: str, n_chunks: int = N_CHUNKS
 ) -> str:
     """The lineitem table as l_orderkey-ranged chunk files."""
     # the ingest month rides the feed so the histogram state keeps the
@@ -104,53 +117,113 @@ def lineitem_feed(
     return write_chunks(with_range_chunk(li, "l_orderkey", n_chunks), feed_dir, n_chunks)
 
 
-# --- incremental HLL over the event stream -------------------------------
+# --- the four folds: per-batch partial, merge with the prior -------------
 
 
-def run_stream(spark: SparkSession, work: str, feed: str) -> str:
-    """Drain the event feed through the HLL register fold; returns the
-    state root dir."""
-    state_root = os.path.join(work, "hll_state")
-
-    def fold(batch_df: DataFrame, bid: int) -> None:
-        # store-grain state (day, event_type, j, m): the same fold
-        # serves both the live per-type estimate (coarsened by max —
-        # exact, since register max commutes with grouping) and the
-        # persisted daily store (stream_store_dir)
-        merged = hll_registers(batch_df, ["day", "event_type"])
-        prior = committed_versions(state_root, "batch=", below=bid)
-        if prior:
-            merged = (
-                spark.read.parquet(prior[-1])
-                .select("day", "event_type", "j", "m")
-                .unionByName(merged)
-                .groupBy("day", "event_type", "j")
-                .agg(F.max("m").alias("m"))
-            )
-        commit_version(state_root, "batch=", bid, merged.write.parquet, SNAPSHOT)
-
-    drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
-    return state_root
+def _regroup(prior: DataFrame, part: DataFrame, keys: list[str], agg: Column) -> DataFrame:
+    return prior.unionByName(part).groupBy(*keys).agg(agg)
 
 
-def latest_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return spark.read.parquet(committed_versions(state_root, "batch=")[-1]).select(
-        "day", "event_type", "j", "m"
+def _hll_partial(ev: DataFrame) -> dict[str, DataFrame]:
+    # store-grain state (day, event_type, j, m): the same fold serves
+    # both the live per-type estimate (coarsened by max — exact, since
+    # register max commutes with grouping) and the persisted daily
+    # store (stream_store_dir)
+    return {"registers": hll_registers(ev, ["day", "event_type"])}
+
+
+def _hll_merge(prior: dict, part: dict) -> dict[str, DataFrame]:
+    keys = ["day", "event_type", "j"]
+    return {"registers": _regroup(prior["registers"], part["registers"], keys, F.max("m").alias("m"))}
+
+
+def _kmv_partial(ev: DataFrame) -> dict[str, DataFrame]:
+    # dedup=False: the merge ends in ONE distinct instead of a
+    # per-batch distinct followed by a second one
+    return {"sketch": kmv_hashes(ev, dedup=False)}
+
+
+def _kmv_merge(prior: dict, part: dict) -> dict[str, DataFrame]:
+    return {"sketch": kmv_sketch(prior["sketch"].unionByName(part["sketch"]).distinct())}
+
+
+def _cms_partial(docs: DataFrame) -> dict[str, DataFrame]:
+    """``grid``, the additive counter grid, and ``vocab``, the
+    candidates (the probe vocabulary) — committed together, so grid N
+    is never paired with vocab N-1."""
+    # tokenization pinned to token_index's derivation (lowered
+    # whitespace tokens over non-empty docs)
+    occ = docs.where(F.length(F.trim("text")) > 0).select(
+        F.explode(ws_tokens(F.lower("text"))).alias("tok")
     )
+    return {"grid": cms_grid(occ), "vocab": occ.distinct()}
+
+
+def _cms_merge(prior: dict, part: dict) -> dict[str, DataFrame]:
+    return {
+        "grid": _regroup(prior["grid"], part["grid"], ["d", "col"], F.sum("c").alias("c")),
+        "vocab": prior["vocab"].unionByName(part["vocab"]).distinct(),
+    }
+
+
+def _qsk_partial(li: DataFrame) -> dict[str, DataFrame]:
+    # store-grain state (g, m, lb, cnt): the additive merge is exact at
+    # any grouping, so one monthly-partial fold serves both the live
+    # per-flag estimate (coarsened by sum) and the persisted monthly
+    # store (stream_store_dir)
+    return {"histogram": qsk_state(qsk_lineitem_vals(li, F.col("m")), ["g", "m"])}
+
+
+def _qsk_merge(prior: dict, part: dict) -> dict[str, DataFrame]:
+    cnt = F.sum("cnt").cast("bigint").alias("cnt")
+    return {"histogram": _regroup(prior["histogram"], part["histogram"], ["g", "m", "lb"], cnt)}
+
+
+# sketch -> (feed builder, feed schema, partial, merge)
+SKETCHES = {
+    "hll": (event_feed, _EVENT_SCHEMA, _hll_partial, _hll_merge),
+    "kmv": (event_feed, _EVENT_SCHEMA, _kmv_partial, _kmv_merge),
+    "cms": (doc_feed, DOC_SCHEMA, _cms_partial, _cms_merge),
+    "qsk": (lineitem_feed, _LINEITEM_SCHEMA, _qsk_partial, _qsk_merge),
+}
+
+
+def run_stream(spark: SparkSession, sketch: str, work: str, feed: str) -> str:
+    """Drain ``feed`` through ``sketch``'s fold (checkpointed under
+    ``work`` — a second call resumes where the first stopped); returns
+    the state root, read with feed.read_state."""
+    _, schema, partial, merge = SKETCHES[sketch]
+    root = os.path.join(work, f"{sketch}_state")
+    query, _ = fold_state(
+        read_feed(spark, feed, schema),
+        root,
+        partial(rows_frame(spark, [], schema)),
+        lambda batch_df, prior, _bid: merge(prior, partial(batch_df)),
+        os.path.join(work, "ckpt"),
+    )
+    query.awaitTermination()
+    return root
 
 
 def run_once(
-    spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_EVENT_CHUNKS
+    spark: SparkSession, sketch: str, sf_dir: str, work: str, n_chunks: int = N_CHUNKS
 ) -> str:
-    return run_stream(
-        spark, work, event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
-    )
+    """Write ``sketch``'s feed of ``sf_dir`` under ``work`` and drain
+    it; returns the state root."""
+    feed = SKETCHES[sketch][0](spark, sf_dir, os.path.join(work, "feed"), n_chunks)
+    return run_stream(spark, sketch, work, feed)
 
 
-def _ensure_run(spark: SparkSession, sf_dir: str) -> str:
-    return memoized_run(
-        spark, ("hllstream", sf_dir), lambda work: run_once(spark, sf_dir, work)
+def sketch_state(spark: SparkSession, sketch: str, sf_dir: str) -> dict[str, DataFrame]:
+    """The converged state tables of ``sketch`` over ``sf_dir``, from
+    one run per session."""
+    root = memoized_run(
+        spark, (f"{sketch}stream", sf_dir), lambda work: run_once(spark, sketch, sf_dir, work)
     )
+    return read_state(spark, root)
+
+
+# --- the live estimates ---------------------------------------------------
 
 
 def st_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,54 +233,12 @@ def st_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The daily-grain state coarsens to per-type registers by MAX —
     idempotent, so this is exactly the registers a day-free fold would
     have built."""
-    state_root = _ensure_run(spark, sf_dir)
     regs = (
-        latest_state(spark, state_root)
+        sketch_state(spark, "hll", sf_dir)["registers"]
         .groupBy("event_type", "j")
         .agg(F.max("m").alias("m"))
     )
     return hll_estimate(spark, regs)
-
-
-# --- incremental KMV over the event stream -------------------------------
-
-
-def run_kmv_stream(spark: SparkSession, work: str, feed: str) -> str:
-    """Drain the event feed through the KMV bottom-K fold (the third
-    monoid class: an order statistic — merge = bottom-K of the union,
-    commutative and idempotent like HLL's max but over SETS of rows);
-    returns the state root."""
-    from task_hive_spark.operators.sketches import kmv_hashes, kmv_sketch
-
-    state_root = os.path.join(work, "kmv_state")
-
-    def fold(batch_df: DataFrame, bid: int) -> None:
-        # dedup=False: the union below ends in ONE distinct instead of
-        # a per-batch distinct followed by a second one (review finding)
-        merged = kmv_hashes(batch_df, dedup=False)
-        prior = committed_versions(state_root, "batch=", below=bid)
-        if prior:
-            merged = spark.read.parquet(prior[-1]).select("event_type", "h").unionByName(merged)
-        commit_version(
-            state_root, "batch=", bid, kmv_sketch(merged.distinct()).write.parquet, SNAPSHOT
-        )
-
-    drain(read_feed(spark, feed, _EVENT_SCHEMA), fold, os.path.join(work, "ckpt"))
-    return state_root
-
-
-def run_kmv_once(
-    spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_EVENT_CHUNKS
-) -> str:
-    return run_kmv_stream(
-        spark, work, event_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
-    )
-
-
-def _ensure_kmv_run(spark: SparkSession, sf_dir: str) -> str:
-    return memoized_run(
-        spark, ("kmvstream", sf_dir), lambda work: run_kmv_once(spark, sf_dir, work)
-    )
 
 
 def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,77 +246,7 @@ def st_kmv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the converged bottom-K state equals the whole-corpus sketch, so the
     output is exactly the batch sk_kmv_distinct answer (shared
     oracle)."""
-    from task_hive_spark.operators.sketches import kmv_estimate
-
-    state_root = _ensure_kmv_run(spark, sf_dir)
-    sk = spark.read.parquet(committed_versions(state_root, "batch=")[-1]).select(
-        "event_type", "h"
-    )
-    return kmv_estimate(sk)
-
-
-# --- incremental count-min over the document token stream ----------------
-
-
-def run_cms_stream(spark: SparkSession, work: str, feed: str) -> str:
-    """Drain the document feed through the CMS + vocab folds; returns
-    the state root. Each version holds two tables committed together:
-    ``grid``, the additive counter grid, and ``vocab``, the candidates
-    (the probe vocabulary) merged by distinct-union (idempotent) — a
-    crash between the two writes can never pair grid N with vocab
-    N-1."""
-    from task_hive_spark.functions.text import ws_tokens
-    from task_hive_spark.operators.sketches import cms_grid
-
-    state_root = os.path.join(work, "cms_state")
-
-    def fold(batch_df: DataFrame, bid: int) -> None:
-        # tokenization pinned to token_index's derivation (lowered
-        # whitespace tokens over non-empty docs)
-        occ = (
-            batch_df.where(F.length(F.trim("text")) > 0)
-            .select(F.explode(ws_tokens(F.lower("text"))).alias("tok"))
-        )
-        grid = cms_grid(occ)
-        vocab = occ.distinct()
-        prior = committed_versions(state_root, "batch=", below=bid)
-        if prior:
-            grid = (
-                spark.read.parquet(os.path.join(prior[-1], "grid"))
-                .select("d", "col", "c")
-                .unionByName(grid)
-                .groupBy("d", "col")
-                .agg(F.sum("c").alias("c"))
-            )
-            vocab = (
-                spark.read.parquet(os.path.join(prior[-1], "vocab"))
-                .select("tok")
-                .unionByName(vocab)
-                .distinct()
-            )
-
-        def write(path: str) -> None:
-            grid.write.parquet(os.path.join(path, "grid"))
-            vocab.write.parquet(os.path.join(path, "vocab"))
-
-        commit_version(state_root, "batch=", bid, write, SNAPSHOT)
-
-    drain(read_feed(spark, feed, DOC_SCHEMA), fold, os.path.join(work, "ckpt"))
-    return state_root
-
-
-def run_cms_once(
-    spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_DOC_CHUNKS
-) -> str:
-    return run_cms_stream(
-        spark, work, doc_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
-    )
-
-
-def _ensure_cms_run(spark: SparkSession, sf_dir: str) -> str:
-    return memoized_run(
-        spark, ("cmsstream", sf_dir), lambda work: run_cms_once(spark, sf_dir, work)
-    )
+    return kmv_estimate(sketch_state(spark, "kmv", sf_dir)["sketch"])
 
 
 def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,73 +254,16 @@ def st_cms_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded — the converged additive state equals the whole-corpus CMS
     grid, so the output (and its oracle) is exactly the batch
     sk_cms_heavy_hitters answer."""
-    from task_hive_spark.operators.sketches import cms_heavy_hitters_from
-
-    state = committed_versions(_ensure_cms_run(spark, sf_dir), "batch=")[-1]
-    sketch = spark.read.parquet(os.path.join(state, "grid")).select("d", "col", "c")
-    vocab = spark.read.parquet(os.path.join(state, "vocab")).select("tok")
-    return cms_heavy_hitters_from(sketch, vocab)
-
-
-# --- incremental quantile histogram over the lineitem stream -------------
-
-
-def run_qsk_stream(spark: SparkSession, work: str, feed: str) -> str:
-    """Drain the lineitem feed through the log-linear histogram fold —
-    additive counter state like CMS, so the same replay discipline
-    applies (a re-applied micro-batch would double-count its rows;
-    committing version bid from the prior below bid makes replays
-    rewrite instead of add). Returns the state root."""
-    from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
-
-    state_root = os.path.join(work, "qsk_state")
-
-    def fold(batch_df: DataFrame, bid: int) -> None:
-        # store-grain state (g, m, lb, cnt): the additive merge is
-        # exact at any grouping, so one monthly-partial fold serves
-        # both the live per-flag estimate (coarsened by sum) and the
-        # persisted monthly store (stream_store_dir)
-        merged = qsk_state(
-            qsk_lineitem_vals(batch_df, F.col("m")), ["g", "m"]
-        )
-        prior = committed_versions(state_root, "batch=", below=bid)
-        if prior:
-            merged = (
-                spark.read.parquet(prior[-1])
-                .select("g", "m", "lb", "cnt")
-                .unionByName(merged)
-                .groupBy("g", "m", "lb")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        commit_version(state_root, "batch=", bid, merged.write.parquet, SNAPSHOT)
-
-    drain(read_feed(spark, feed, _LINEITEM_SCHEMA), fold, os.path.join(work, "ckpt"))
-    return state_root
-
-
-def run_qsk_once(
-    spark: SparkSession, sf_dir: str, work: str, n_chunks: int = N_LINEITEM_CHUNKS
-) -> str:
-    return run_qsk_stream(
-        spark, work, lineitem_feed(spark, sf_dir, os.path.join(work, "feed"), n_chunks)
-    )
-
-
-def _ensure_qsk_run(spark: SparkSession, sf_dir: str) -> str:
-    return memoized_run(
-        spark, ("qskstream", sf_dir), lambda work: run_qsk_once(spark, sf_dir, work)
-    )
+    state = sketch_state(spark, "cms", sf_dir)
+    return cms_heavy_hitters_from(state["grid"], state["vocab"])
 
 
 def st_quantiles_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live p50/p90/p99 after the whole lineitem feed has folded — the
     converged additive histogram equals the whole-corpus sketch, so the
     output is exactly the batch sk_quantiles answer (shared oracle)."""
-    from task_hive_spark.operators.sketches import QSK_QS, qsk_estimate
-
-    state_root = _ensure_qsk_run(spark, sf_dir)
     state = (
-        spark.read.parquet(committed_versions(state_root, "batch=")[-1])
+        sketch_state(spark, "qsk", sf_dir)["histogram"]
         .groupBy("g", "lb")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
@@ -390,14 +294,12 @@ def stream_store_dir(spark: SparkSession, sf_dir: str) -> str:
     are the incremental runs' checkpointed state files."""
 
     def build(store: str) -> str:
-        hll_root = _ensure_run(spark, sf_dir)
-        latest_state(spark, hll_root).write.mode("overwrite").parquet(
+        sketch_state(spark, "hll", sf_dir)["registers"].write.mode("overwrite").parquet(
             os.path.join(store, "hll_daily_registers")
         )
-        qsk_root = _ensure_qsk_run(spark, sf_dir)
-        spark.read.parquet(committed_versions(qsk_root, "batch=")[-1]).select(
-            "g", "m", "lb", "cnt"
-        ).write.mode("overwrite").parquet(os.path.join(store, "quantiles_monthly"))
+        sketch_state(spark, "qsk", sf_dir)["histogram"].write.mode("overwrite").parquet(
+            os.path.join(store, "quantiles_monthly")
+        )
         return store
 
     return memoized_run(spark, ("stream_sketch_store", sf_dir), build)
@@ -407,8 +309,6 @@ def sk_quantiles_stream_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sk_quantiles_served answered from the STREAM-built store: the
     monthly histogram partials accumulated by st_quantiles_incremental,
     served by the shared batch serving path."""
-    from task_hive_spark.operators.sketches import sk_quantiles_served
-
     return sk_quantiles_served(
         spark, sf_dir, store_dir=stream_store_dir(spark, sf_dir)
     )
@@ -418,8 +318,6 @@ def sk_hll_daily_stream_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sk_hll_daily_served answered from the STREAM-built store: the
     daily register state accumulated by st_hll_incremental, served by
     the shared batch serving path."""
-    from task_hive_spark.operators.sketches import sk_hll_daily_served
-
     return sk_hll_daily_served(
         spark, sf_dir, store_dir=stream_store_dir(spark, sf_dir)
     )

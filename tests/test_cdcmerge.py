@@ -68,12 +68,11 @@ def test_streaming_merge_resumes_from_checkpoint(spark, tmp_path):
     for c in chunks[:2]:
         shutil.copy2(os.path.join(staged, c), os.path.join(feed, c))
 
-    cdcmerge.seed_state(spark, SF_DIR, work)
-    cdcmerge.run_stream(spark, work, feed)  # first half only
+    cdcmerge.run_stream(spark, SF_DIR, work, feed)  # seeds, then the first half only
     for c in chunks[2:]:
         shutil.copy2(os.path.join(staged, c), os.path.join(feed, c))
-    # resume: same checkpoint, must not re-apply chunks 0-1
-    state = cdcmerge.run_stream(spark, work, feed)
+    # resume: same checkpoint and snapshot, must not re-apply chunks 0-1
+    state = cdcmerge.run_stream(spark, SF_DIR, work, feed)
 
     got = _profile_rows(spark, state)
     batch = [tuple(r) for r in th_snapshot_merge(spark, SF_DIR).collect()]

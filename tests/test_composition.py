@@ -5,6 +5,8 @@ corpus and must reconcile row-for-row."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -203,6 +205,20 @@ print("RESULT " + json.dumps({{
         "before": 3, "after": 0, "was_cached": True, "idx_cached": False,
         "ckpt_freed": True, "released": True,
     }, got
+
+
+def test_driver_memory_defaults_to_a_capped_quarter_of_the_machine(spark):
+    """Without SPARK_GRAFT_DRIVER_MEM a driver takes at most a quarter
+    of the machine's memory and at most 8g, so two drivers fit side by
+    side; the variable still overrides the default."""
+    from task_hive_spark.session import default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        total_mb = next(int(x.split()[1]) for x in f if x.startswith("MemTotal:")) // 1024
+    mb = int(default_driver_memory().removesuffix("m"))
+    assert 0 < mb <= 8 * 1024 and 4 * mb <= total_mb
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
 
 
 def test_crawl_to_corpus_pipeline(spark, tmp_path):

@@ -57,22 +57,38 @@ def test_versioned_paths_only_in_materialize():
     """Naming a state version and picking one by listing its root are
     the commit protocol's decision (materialize.commit_version and its
     readers): a copy elsewhere would bring back its own idea of
-    "committed" (six such copies once held three)."""
+    "committed" (six such copies once held three). Within the streams,
+    committing a snapshot version is the state fold's decision
+    (feed.fold_state): a stream that commits its own would bring back
+    its own prior lookup and version numbering."""
+    materialize = os.path.join("task_hive_spark", "materialize.py")
+    streaming = os.path.join("task_hive_spark", "streaming")
+    # what -> (pattern, the files it applies to, the one file allowed it)
     patterns = {
-        "formats a versioned path": re.compile(r"_v\{|batch=\{"),
-        "lists a root to pick a version": re.compile(
-            r"startswith\(\s*f?[\"'][^\"']*(_v|batch=)[\"']|(_v|batch=)\(\\d"
+        "formats a versioned path": (re.compile(r"_v\{|batch=\{"), "", materialize),
+        "lists a root to pick a version": (
+            re.compile(r"startswith\(\s*f?[\"'][^\"']*(_v|batch=)[\"']|(_v|batch=)\(\\d"),
+            "",
+            materialize,
+        ),
+        "commits a snapshot outside the state fold": (
+            re.compile(r"commit_version\((?:[^()]|\([^()]*\))*\bSNAPSHOT\b"),
+            streaming + os.sep,
+            os.path.join(streaming, "feed.py"),
         ),
     }
-    owner = os.path.join("task_hive_spark", "materialize.py")
     found = []
     for path in _source_files():
         rel = os.path.relpath(path, REPO_ROOT)
-        if rel == owner or rel.startswith("tests" + os.sep):
+        if rel.startswith("tests" + os.sep):
             continue  # tests name the versions they fabricate
         with open(path) as f:
             text = f.read()
-        found += [(rel, what) for what, p in patterns.items() if p.search(text)]
+        found += [
+            (rel, what)
+            for what, (p, scope, owner) in patterns.items()
+            if rel.startswith(scope) and rel != owner and p.search(text)
+        ]
     assert not found, sorted(found)
 
 

@@ -82,7 +82,7 @@ def test_profile_records(spark, sf_dir, tracer):
         "query_planning_ms", "wal_commit_ms", "state_commit_ms",
         "state_rows", "state_bytes",
     ]
-    assert drain["batches"] == sketchstream.N_EVENT_CHUNKS
+    assert drain["batches"] == sketchstream.N_CHUNKS
     assert set(os.listdir(_scratch_root())) - before == set()
 
 

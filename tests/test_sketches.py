@@ -173,20 +173,18 @@ def test_bloom_no_false_negatives(spark, sf_dir):
 def test_incremental_hll_converges_to_batch_and_is_chunk_invariant(
     spark, sf_dir, tmp_path
 ):
-    from task_hive_spark.streaming.sketchstream import (
-        latest_state,
-        run_once,
-    )
+    from task_hive_spark.streaming.feed import read_state
+    from task_hive_spark.streaming.sketchstream import run_once
     from task_hive_spark.operators.sketches import hll_estimate
 
     batch = sk_hll_distinct(spark, sf_dir).collect()
     outs = []
     for n_chunks in (2, 4):
-        root = run_once(spark, sf_dir, str(tmp_path / f"c{n_chunks}"), n_chunks)
+        root = run_once(spark, "hll", sf_dir, str(tmp_path / f"c{n_chunks}"), n_chunks)
         # state is day-grained (the store's grain); coarsen by max —
         # idempotent, so this IS the per-type register state
         regs = (
-            latest_state(spark, root)
+            read_state(spark, root)["registers"]
             .groupBy("event_type", "j")
             .agg(F.max("m").alias("m"))
         )
@@ -252,18 +250,15 @@ def test_split_leakage_exact_pairs_reconcile(spark, sf_dir):
 def test_incremental_kmv_converges_to_batch_and_is_chunk_invariant(
     spark, sf_dir, tmp_path
 ):
-    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.sketches import kmv_estimate
-    from task_hive_spark.streaming.sketchstream import run_kmv_once
+    from task_hive_spark.streaming.feed import read_state
+    from task_hive_spark.streaming.sketchstream import run_once
 
     batch = sk_kmv_distinct(spark, sf_dir).collect()
     outs = []
     for n_chunks in (2, 4):
-        root = run_kmv_once(spark, sf_dir, str(tmp_path / f"k{n_chunks}"), n_chunks)
-        sk = spark.read.parquet(committed_versions(root, "batch=")[-1]).select(
-            "event_type", "h"
-        )
-        outs.append(kmv_estimate(sk).collect())
+        root = run_once(spark, "kmv", sf_dir, str(tmp_path / f"k{n_chunks}"), n_chunks)
+        outs.append(kmv_estimate(read_state(spark, root)["sketch"]).collect())
     # bottom-K is a mergeable order statistic: any chunking folds to
     # the whole-corpus sketch
     assert outs[0] == outs[1] == batch
@@ -277,31 +272,30 @@ def test_incremental_cms_converges_and_never_double_counts(
     re-add any batch (the checkpoint + batch-scoped state contract)."""
     import os
 
-    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.textops import token_index
     from task_hive_spark.operators.sketches import cms_grid
-    from task_hive_spark.streaming.sketchstream import run_cms_once, run_cms_stream
+    from task_hive_spark.streaming.feed import read_state
+    from task_hive_spark.streaming.sketchstream import run_once, run_stream
 
     occ = token_index(spark, sf_dir).select(F.explode("toks").alias("tok"))
     batch_grid = {
         (r["d"], r["col"]): r["c"] for r in cms_grid(occ).collect()
     }
     def grid(root):
-        latest = committed_versions(root, "batch=")[-1]
         return {
             (r["d"], r["col"]): r["c"]
-            for r in spark.read.parquet(os.path.join(latest, "grid")).collect()
+            for r in read_state(spark, root)["grid"].collect()
         }
 
     states = []
     for n_chunks in (2, 4):
         work = str(tmp_path / f"c{n_chunks}")
-        root = run_cms_once(spark, sf_dir, work, n_chunks)
+        root = run_once(spark, "cms", sf_dir, work, n_chunks)
         got = grid(root)
         states.append(got)
         # re-drain the same exhausted feed: the additive state must not
         # grow (a double-applied batch would inflate every counter)
-        run_cms_stream(spark, work, os.path.join(work, "feed"))
+        run_stream(spark, "cms", work, os.path.join(work, "feed"))
         assert grid(root) == got
     assert states[0] == states[1] == batch_grid
 
@@ -358,9 +352,9 @@ def test_incremental_qsk_converges_and_never_double_counts(
     not re-add any batch."""
     import os
 
-    from task_hive_spark.materialize import committed_versions
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
-    from task_hive_spark.streaming.sketchstream import run_qsk_once, run_qsk_stream
+    from task_hive_spark.streaming.feed import read_state
+    from task_hive_spark.streaming.sketchstream import run_once, run_stream
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice"
@@ -374,7 +368,7 @@ def test_incremental_qsk_converges_and_never_double_counts(
         # additive merge is exact at any grouping, so summing over m
         # reproduces the per-flag grid
         out: dict = {}
-        for r in spark.read.parquet(committed_versions(root, "batch=")[-1]).collect():
+        for r in read_state(spark, root)["histogram"].collect():
             k = (r["g"], r["lb"])
             out[k] = out.get(k, 0) + r["cnt"]
         return out
@@ -382,10 +376,10 @@ def test_incremental_qsk_converges_and_never_double_counts(
     states = []
     for n_chunks in (2, 4):
         work = str(tmp_path / f"q{n_chunks}")
-        root = run_qsk_once(spark, sf_dir, work, n_chunks)
+        root = run_once(spark, "qsk", sf_dir, work, n_chunks)
         got = coarse_grid(root)
         states.append(got)
-        run_qsk_stream(spark, work, os.path.join(work, "feed"))
+        run_stream(spark, "qsk", work, os.path.join(work, "feed"))
         assert coarse_grid(root) == got
     assert states[0] == states[1] == batch_grid
 
@@ -411,10 +405,15 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
     import os
 
     from tests.conftest import VictimJVM
-    from task_hive_spark.materialize import committed_versions, latest_committed_version
+    from task_hive_spark.materialize import latest_committed_version
     from task_hive_spark.operators.sketches import qsk_lineitem_vals, qsk_state
-    from task_hive_spark.streaming.feed import with_range_chunk, write_chunks
-    from task_hive_spark.streaming.sketchstream import run_qsk_stream
+    from task_hive_spark.streaming.feed import (
+        STATE,
+        read_state,
+        with_range_chunk,
+        write_chunks,
+    )
+    from task_hive_spark.streaming.sketchstream import run_stream
 
     work = str(tmp_path / "qsk_failover")
     feed = os.path.join(work, "feed")
@@ -426,34 +425,35 @@ def test_incremental_sketch_checkpoint_resumes_across_jvms(
 
     victim = VictimJVM(
         "from task_hive_spark.session import get_spark\n"
-        "from task_hive_spark.streaming.sketchstream import run_qsk_stream\n"
+        "from task_hive_spark.streaming.sketchstream import run_stream\n"
         "spark = get_spark('qsk_victim')\n"
-        f"run_qsk_stream(spark, {work!r}, {feed!r})\n",
+        f"run_stream(spark, 'qsk', {work!r}, {feed!r})\n",
         os.path.join(work, "victim.log"),
     )
     state_root = os.path.join(work, "qsk_state")
 
     def _latest() -> int:
-        v = latest_committed_version(state_root, "batch=")
+        # version 0 is the seed; version n holds batches 0..n-1
+        v = latest_committed_version(state_root, STATE)
         return -1 if v is None else v
 
     try:
         # ≥2 of 4 batches committed, the next in flight
-        victim.poll_until(lambda: _latest() >= 1, "a second committed batch")
+        victim.poll_until(lambda: _latest() >= 2, "a second committed batch")
     finally:
         victim.kill()
     at_kill = _latest()
-    assert at_kill < 3, (
+    assert at_kill < 4, (
         f"victim had already drained every batch ({at_kill}) — the kill "
         "was not mid-drain; widen the feed or tighten the poll"
     )
 
     # a second driver (this JVM) RESUMES the same checkpoint + feed
-    run_qsk_stream(spark, work, feed)
-    assert _latest() == 3, "resume did not process the remaining batches"
+    run_stream(spark, "qsk", work, feed)
+    assert _latest() == 4, "resume did not process the remaining batches"
     got = {
         (r["g"], r["lb"]): r["cnt"]
-        for r in spark.read.parquet(committed_versions(state_root, "batch=")[-1]).collect()
+        for r in read_state(spark, state_root)["histogram"].collect()
     }
     want = {
         (r["g"], r["lb"]): r["cnt"]

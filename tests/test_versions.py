@@ -1,8 +1,10 @@
 """The commit protocol for versioned state (materialize.commit_version):
 a version is committed iff ``_SUCCESS`` sits at its root, written last;
 a replay rewrites its version from scratch; readers see committed
-versions only. The first tests drive the helper with plain-Python
-writes, the rest drive the stream folds that use it."""
+versions only; a snapshot resumes its highest committed version or
+commits a seed as version 0. The first tests drive the helpers with
+plain-Python writes, the rest drive the stream folds that use them
+(feed.fold_state)."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ from task_hive_spark.materialize import (
     commit_version,
     committed_versions,
     latest_committed_version,
+    resume_or_seed,
 )
 
 
@@ -91,16 +94,107 @@ def test_snapshot_keeps_two_and_log_keeps_all(tmp_path):
     ]
 
 
+def test_resume_or_seed_commits_the_seed_only_once(tmp_path):
+    """An empty root gets the seed as version 0; a root with a committed
+    version resumes the highest one and writes nothing; a version whose
+    write was cut short does not count."""
+    root = str(tmp_path)
+    os.makedirs(os.path.join(root, "v0"))  # a seed write cut short
+    assert resume_or_seed(root, "v", _write_lines("seed")) == 0
+    assert _rows(committed_versions(root, "v")[-1]) == ["seed"]
+    commit_version(root, "v", 1, _write_lines("next"), SNAPSHOT)
+
+    def unused(path: str) -> None:
+        raise AssertionError("a committed root was seeded again")
+
+    assert resume_or_seed(root, "v", unused) == 1
+    assert _rows(committed_versions(root, "v")[-1]) == ["next"]
+
+
 def test_partial_sketch_version_is_never_read(spark, sf_dir, tmp_path):
     """A crash mid-write of batch N+1 leaves only the committer's
     staging dir; the sketch state read afterwards (and the prior a
     resumed fold merges into) is state N."""
-    from task_hive_spark.streaming.sketchstream import latest_state, run_once
+    from task_hive_spark.streaming.feed import read_state
+    from task_hive_spark.streaming.sketchstream import run_once
 
-    root = run_once(spark, sf_dir, str(tmp_path / "hll"), 2)
-    want = sorted(latest_state(spark, root).collect())
-    os.makedirs(os.path.join(root, "batch=2", "_temporary", "0"))
-    assert sorted(latest_state(spark, root).collect()) == want
+    root = run_once(spark, "hll", sf_dir, str(tmp_path / "hll"), 2)
+    want = sorted(read_state(spark, root)["registers"].collect())
+    # two batches commit versions 1 and 2 on the seed; 3 is the next
+    os.makedirs(os.path.join(root, "state_v3", "_temporary", "0"))
+    assert sorted(read_state(spark, root)["registers"].collect()) == want
+
+
+def _drain_fold(spark, fold: str, sf_dir: str, work: str) -> str:
+    """Drain ``fold``'s feed (written under ``work`` on first use) on
+    the checkpoint in ``work``; returns the state root."""
+    from task_hive_spark.streaming import cdcmerge, sketchstream
+
+    feed = os.path.join(work, "feed")
+    if fold == "cdcmerge":
+        if not os.path.isdir(feed):
+            cdcmerge.change_feed(spark, sf_dir, feed, 4)
+        cdcmerge.run_stream(spark, sf_dir, work, feed)
+        return work
+    if not os.path.isdir(feed):
+        sketchstream.SKETCHES[fold][0](spark, sf_dir, feed, 4)
+    return sketchstream.run_stream(spark, fold, work, feed)
+
+
+def _state_rows(spark, root: str) -> dict[str, list]:
+    from task_hive_spark.streaming.feed import read_state
+
+    return {t: sorted(df.collect(), key=repr) for t, df in read_state(spark, root).items()}
+
+
+# additive counters: (table, column) — a double-applied batch grows them
+_COUNTERS = {"cms": ("grid", "c"), "qsk": ("histogram", "cnt")}
+
+
+@pytest.mark.parametrize("fold", ["hll", "kmv", "cms", "qsk", "cdcmerge"])
+def test_state_fold_converges_through_injected_faults(spark, sf_dir, tmp_path, monkeypatch, fold):
+    """Every state fold, one fault harness (feed.fold_state): the write
+    of version 2 lands its tables and then raises, so the drain fails
+    with version 2 uncommitted; the next drain on the same checkpoint
+    replays batch 1, then crashes just after version 3 is committed,
+    before the checkpoint records batch 2. A third drain replays batch
+    2, which must merge into version 2 again, not into the version 3 it
+    already wrote. The converged state equals an uninterrupted run's,
+    and no additive counter grew."""
+    from task_hive_spark.streaming import feed
+
+    want = _state_rows(spark, _drain_fold(spark, fold, sf_dir, str(tmp_path / "clean")))
+
+    real = feed.commit_version
+    faults = ["write", "after_commit"]
+
+    def flaky(root, prefix, n, write, keep):
+        if prefix == feed.STATE and n == 2 and "write" in faults:
+            faults.remove("write")
+
+            def write_then_raise(path: str) -> None:
+                write(path)
+                raise RuntimeError("injected: the write of state_v2 failed")
+
+            return real(root, prefix, n, write_then_raise, keep)
+        path = real(root, prefix, n, write, keep)
+        if prefix == feed.STATE and n == 3 and "after_commit" in faults:
+            faults.remove("after_commit")
+            raise RuntimeError("injected: crash after state_v3 was committed")
+        return path
+
+    monkeypatch.setattr(feed, "commit_version", flaky)
+    work = str(tmp_path / "faulty")
+    for _ in faults[:]:
+        with pytest.raises(Exception, match="injected"):
+            _drain_fold(spark, fold, sf_dir, work)
+    assert not faults, f"faults never fired: {faults}"
+    got = _state_rows(spark, _drain_fold(spark, fold, sf_dir, work))
+
+    assert got == want
+    if fold in _COUNTERS:
+        table, col = _COUNTERS[fold]
+        assert sum(r[col] for r in got[table]) == sum(r[col] for r in want[table])
 
 
 def test_append_to_replay_keeps_rows_once(spark, tmp_path):
